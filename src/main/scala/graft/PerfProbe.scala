@@ -90,10 +90,9 @@ object PerfProbe {
     // terciles are non-trivial); the SAME corpus runs through (a) the
     // joined engine — bigramLmFitByClass (one pass fits ALL models) +
     // the long-model ccnet overload (one scan, one model join) — and
-    // (b) the per-class engine — C sequential bigramLmFit calls (each
-    // with its vocab driver action) + the lmFor overload's C-branch
-    // filter/union. Outputs must agree on (count, Σbucket, Σid·bucket);
-    // the wall-clock gap is the point.
+    // (b) the per-class engine — C sequential bigramLmFit calls + the
+    // lmFor overload's C-branch filter/union. Outputs must agree on
+    // (count, Σbucket, Σid·bucket); the wall-clock gap is the point.
     val ccnetN = sys.env.getOrElse("SPARK_GRAFT_CCNET_N", "0").toLong
     if (ccnetN > 0) {
       val c = sys.env.getOrElse("SPARK_GRAFT_CCNET_CLASSES", "40").toInt
@@ -126,18 +125,10 @@ object PerfProbe {
             biases).as("pred_class"))
         .cache()
       pred.count() // materialize: both engines fit from this cache
-      // SPARK_GRAFT_CCNET_TRIGRAM=1: the TRIGRAM engines on the same
-      // corpus — trigramLmFitByClass + the five-join trigramLmApplyJoined
-      // vs C sequential trigramLmFit/trigramLmApply chains. Scores (not
-      // the tercile tail) are the compared output: (row count, scored
-      // count, Σ lm_nll within 1e-3) — the apply plan is the claim under
-      // test, and it must stay flat in C.
       // SPARK_GRAFT_CCNET_ORDER=n (n>3): the ORDER-N joined engine's
       // flat-in-C timing (fit + 2n-1-join apply) — run at 10 and 40
       // classes to confirm the generic engine inherits the class-count
-      // invariance (correctness is gate-pinned by tx_lm_5gram_perlang;
-      // order 3 bit-equals the trigram engines, so the trigram probe's
-      // joined-vs-per-class comparison covers the generic shape too)
+      // invariance (correctness is gate-pinned by tx_lm_5gram_perlang)
       // SPARK_GRAFT_CCNET_KN=1 swaps in the modified-KN engines (same
       // probe contract: the joined apply must stay flat in C).
       // SPARK_GRAFT_LM_MINCOUNT sets the count floor (default 2) and the
@@ -175,41 +166,6 @@ object PerfProbe {
           f"joined=$secs%.1f s rows=${r.getLong(0)} " +
           s"scored=${r.getLong(1)} " +
           s"modelRows=${modelRows.mkString("+")}=${modelRows.sum}")
-        spark.stop()
-        return
-      }
-      if (sys.env.getOrElse("SPARK_GRAFT_CCNET_TRIGRAM", "0") == "1") {
-        def aggT(df: org.apache.spark.sql.DataFrame) = {
-          val r = df.agg(count(lit(1)), count(col("lm_nll")),
-            sum(col("lm_nll"))).head()
-          // sum is NULL when zero rows scored — report 0.0, not an NPE
-          // (the scored count already distinguishes the empty case)
-          (r.getLong(0), r.getLong(1),
-            if (r.isNullAt(2)) 0.0 else r.getDouble(2))
-        }
-        val tj0 = System.nanoTime()
-        val lmJ = TextAnalysis.trigramLmFitByClass(pred, "text", "doc_id",
-          "pred_class")
-        val aj = aggT(TextAnalysis.trigramLmApplyJoined(lmJ, pred, "text",
-          "doc_id", "pred_class"))
-        val tJoined = (System.nanoTime() - tj0) / 1e9
-        StageCaches.unpersistAll(blocking = true)
-        val tp0 = System.nanoTime()
-        val ap = aggT(classes.map { k =>
-          val part = pred.filter(col("pred_class") === k)
-          TextAnalysis.trigramLmApply(
-              TextAnalysis.trigramLmFit(part, "text", "doc_id"),
-              part, "text", "doc_id")
-            .select(col("doc_id"), lit(k).as("pred_class"), col("lm_nll"))
-        }.reduce(_ unionByName _))
-        val tPerClass = (System.nanoTime() - tp0) / 1e9
-        StageCaches.unpersistAll(blocking = true)
-        val eq = aj._1 == ap._1 && aj._2 == ap._2 &&
-          math.abs(aj._3 - ap._3) < 1e-3
-        println(f"ccnet-trigram probe: n=$ccnetN classes=$c " +
-          f"joined=$tJoined%.1f s perClass=$tPerClass%.1f s " +
-          f"speedup=${tPerClass / tJoined}%.1fx scored=${aj._2} " +
-          s"MATCH=$eq")
         spark.stop()
         return
       }

@@ -67,7 +67,7 @@ object QueriesPipeline {
     sqlTrigramNllFor(p, fitSrc, scoreSrc, 1)
 
   /** `minCount` > 1 adds the SAME HAVING floor to all three count CTEs
-    * that trigramLmFit(ByClass)'s pruning applies (n, v stay the full
+    * that ngramLmFit(ByClass)'s pruning applies (n, v stay the full
     * fit-corpus totals) — the pruned-model mirror. */
   private def sqlTrigramNllFor(p: String, fitSrc: String,
       scoreSrc: String, minCount: Int): String =
@@ -1383,16 +1383,18 @@ object QueriesPipeline {
       TextAnalysis.bigramLmApply(lm, docs.filter(col("doc_id") >= 250))
         .orderBy(col("doc_id"))
     }),
-    // Trigram LM with STUPID BACKOFF (Brants et al. 2007) — the opt-in
-    // higher-order upgrade of the bigram model, same fit/apply split:
-    // the reference slice (doc_id < 250) estimates the counts, held-out
-    // docs score through all three backoff levels (unseen trigram → α ·
-    // bigram; unseen bigram → α² · add-one unigram — the held-out docs
-    // exercise every branch, value-checked against the DuckDB mirror).
+    // Trigram LM with STUPID BACKOFF (Brants et al. 2007; the order-n
+    // engine at order 3) — the higher-order upgrade of the bigram
+    // model, same fit/apply split: the reference slice (doc_id < 250)
+    // estimates the counts, held-out docs score through all three
+    // backoff levels (unseen trigram → α · bigram; unseen bigram → α² ·
+    // add-one unigram — the held-out docs exercise every branch,
+    // value-checked against the DuckDB mirror).
     "tx_lm_trigram" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val lm = TextAnalysis.trigramLmFit(docs.filter(col("doc_id") < 250))
-      TextAnalysis.trigramLmApply(lm, docs.filter(col("doc_id") >= 250))
+      val lm = TextAnalysis.ngramLmFit(docs.filter(col("doc_id") < 250),
+        order = 3)
+      TextAnalysis.ngramLmApply(lm, docs.filter(col("doc_id") >= 250))
         .orderBy(col("doc_id"))
     }),
     // HELD-OUT modified-KN: fit a global order-3 KN model on the first
@@ -1467,12 +1469,12 @@ object QueriesPipeline {
     // al. 2019 fit one KenLM per language) — here each class's model is
     // FITTED on its predicted partition then applied through the
     // fit/apply split the library operator consumes; a many-language
-    // production run loads persisted BigramLm models instead. Classes
-    // are bounded, so per-class fits grow the plan linearly.
+    // production run loads persisted BigramLmByClass models instead.
+    // Classes are bounded, so per-class fits grow the plan linearly.
     "pl_ccnet_perlang" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // cache: three per-class FITS consume this frame (model counts +
-      // vocab action each) — uncached, the classifier column re-runs
+      // vocab sizes each) — uncached, the classifier column re-runs
       // over the whole corpus per consuming job
       val pred = docs.select(col("doc_id"), col("text"),
           TextAnalysis.linearClassifyLabel(col("text"), LangIdClasses,
@@ -1542,7 +1544,7 @@ object QueriesPipeline {
 
     // the COMPOSED trigram CCNet: predicted-language trigram scoring
     // through the joined engine, then the window-free tercile/mix tail
-    // (ccnetPreClassified on the TrigramLmByClass overload) — CCNet at
+    // (ccnetPreClassified on the order-3 NgramLmByClass) — CCNet at
     // the n-gram order its published pipeline ran, every model side
     // distributed
     "pl_ccnet_trigram" -> ((s, dir) => {
@@ -1551,8 +1553,8 @@ object QueriesPipeline {
           TextAnalysis.linearClassifyLabel(col("text"), LangIdClasses,
             LangIdWeights, LangIdBiases).as("pred_class"))
         .cache().transform(graft.pipeline.StageCaches.track)
-      val lm = TextAnalysis.trigramLmFitByClass(pred, "text", "doc_id",
-        "pred_class")
+      val lm = TextAnalysis.ngramLmFitByClass(pred, "text", "doc_id",
+        "pred_class", order = 3)
       graft.pipeline.Pipelines.ccnetPreClassified(pred, "text", "doc_id",
           "pred_class", lm, 500)
         .orderBy(col("doc_id"))
@@ -1595,22 +1597,23 @@ object QueriesPipeline {
 
     // per-language TRIGRAM scoring through the JOINED engine: all
     // per-class stupid-backoff models fit in three aggregates
-    // (trigramLmFitByClass), every doc scored against its predicted
-    // language's model in one five-join pass (trigramLmApplyJoined) —
-    // the n-gram-order step toward Wenzek et al.'s per-language KenLM
-    // with every model side distributed. Oracle fits one parameterized
-    // trigram chain per predicted-language subset.
+    // (ngramLmFitByClass at order 3), every doc scored against its
+    // predicted language's model in one five-join pass
+    // (ngramLmApplyJoined) — the n-gram-order step toward Wenzek et
+    // al.'s per-language KenLM with every model side distributed.
+    // Oracle fits one parameterized trigram chain per predicted-language
+    // subset.
     "tx_lm_trigram_perlang" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // cache: the one-pass fit reads it three times (tri/bi/uni) and
+      // cache: the fit reads it three times (one per order) and
       // the apply once more — classify must not re-run per pass
       val pred = docs.select(col("doc_id"), col("text"),
           TextAnalysis.linearClassifyLabel(col("text"), LangIdClasses,
             LangIdWeights, LangIdBiases).as("pred_class"))
         .cache().transform(graft.pipeline.StageCaches.track)
-      val lm = TextAnalysis.trigramLmFitByClass(pred, "text", "doc_id",
-        "pred_class")
-      TextAnalysis.trigramLmApplyJoined(lm, pred, "text", "doc_id",
+      val lm = TextAnalysis.ngramLmFitByClass(pred, "text", "doc_id",
+        "pred_class", order = 3)
+      TextAnalysis.ngramLmApplyJoined(lm, pred, "text", "doc_id",
           "pred_class")
         .orderBy(col("doc_id"))
     }),
@@ -1629,9 +1632,9 @@ object QueriesPipeline {
           TextAnalysis.linearClassifyLabel(col("text"), LangIdClasses,
             LangIdWeights, LangIdBiases).as("pred_class"))
         .cache().transform(graft.pipeline.StageCaches.track)
-      val lm = TextAnalysis.trigramLmFitByClass(pred, "text", "doc_id",
-        "pred_class", minCount = 2)
-      TextAnalysis.trigramLmApplyJoined(lm, pred, "text", "doc_id",
+      val lm = TextAnalysis.ngramLmFitByClass(pred, "text", "doc_id",
+        "pred_class", order = 3, minCount = 2)
+      TextAnalysis.ngramLmApplyJoined(lm, pred, "text", "doc_id",
           "pred_class")
         .orderBy(col("doc_id"))
     }),

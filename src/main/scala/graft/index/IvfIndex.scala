@@ -2200,9 +2200,6 @@ class IvfIndex(
   }
   def serveFilterColumns(): Seq[String] = filterColsDecl
 
-  /** Rows resident in the scalar (filter-column) serving cache. */
-  def servingResidentScalarRows(): Long = synchronized { scalarRowsResident }
-
   /** One pruned job collecting `missing` clusters' declared filter columns.
     * Scalar rows are a few dozen bytes each, so a driver-side pack of the
     * collected Rows is fine (the executor-side packing the VECTOR loads
@@ -3819,43 +3816,7 @@ object IvfIndex {
     // keeps up to nClusters parquet writers open (tasks x clusters small
     // files + writer churn was 70s of a 73s build at 500k rows)
     val bc = spark.sparkContext.broadcast(cents)
-    // per-cluster row counts (serving cardinality guard) + ball radii
-    // (recall-targeted probe bound, probeSetForRecall) ride the WRITE
-    // JOB ITSELF as observed metrics (r19; was a one-pass read-back of
-    // the fresh layout, itself collapsed from two passes in r18): the
-    // write already evaluates every row, each row's centroid is the
-    // in-memory array the assignment just used, and 2·nClusters
-    // conditional aggregates are cheap per row. Values are identical to
-    // the read-back: parquet round-trips floats exactly, and the counts
-    // are of the same rows the write commits. Dot product has no
-    // triangle inequality — no radii, auto-probe declines — so it
-    // observes counts only.
-    //
-    // SCALE GUARD: CollectMetrics evaluates its aggregates through an
-    // interpreted accumulator, so 2·nClusters conditional updates per
-    // row grow linearly with the cluster count. Up to ~64 clusters they
-    // are cheaper than re-reading every vector byte; past that the
-    // distributed one-pass read-back (codegen'd scan + hash aggregate,
-    // the r18 shape) wins — keep both paths and pick by nClusters.
-    val withRadii = metric != MetricType.DotProduct
-    val obsFused = cents.length <= 64
-    // per-row distance to the assigned centroid, STAGED as one column so
-    // the nClusters conditional max aggregates read an attribute instead
-    // of each re-running the O(dim) distance; the centroid lookup is the
-    // same in-memory float array the assignment used (parquet
-    // round-trips floats exactly, so this equals the old read-back's
-    // value bit for bit)
-    val rCol = sqrt(graft.functions.l2sqr_distance(col(vecCol),
-      element_at(typedlit(cents.map(_.toSeq).toSeq), col("cluster") + 1)))
-    val obsAggs: Seq[Column] =
-      cIds.map(i => sum(when(col("cluster") === i, 1L).otherwise(0L))
-        .as(s"cnt_$i")).toSeq ++
-      (if (withRadii)
-        cIds.map(i => max(when(col("cluster") === i, col("__r"))).as(s"r_$i"))
-          .toSeq
-      else Nil)
-    val obs = new org.apache.spark.sql.Observation("ivf_build_stats")
-    val staged = withQuantized(indexed, vecCol)
+    withQuantized(indexed, vecCol)
       .withColumn("cluster", nearestClusterCol(metric, col(vecCol), bc.value))
       .withColumn("__pqcode",
         pq_encode_res(col(vecCol), col("cluster"), pqCb, cIds, centsFlat))
@@ -3865,59 +3826,41 @@ object IvfIndex {
       // argmin)
       .withColumn("__pqerr", pq_rec_err_res(col(vecCol), col("__pqcode"),
         col("cluster"), pqCb, cIds, centsFlat))
-    (if (obsFused && withRadii) staged.withColumn("__r", rCol)
-        .observe(obs, obsAggs.head, obsAggs.tail: _*).drop("__r")
-      else if (obsFused) staged.observe(obs, obsAggs.head, obsAggs.tail: _*)
-      else staged)
       .repartition(col("cluster"))
       .write.mode(SaveMode.Overwrite).partitionBy("cluster").parquet(s"$path/clustered")
-    __lap(if (obsFused) "clustered write (stats observed)" else "clustered write")
+    __lap("clustered write")
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cluster", "centroid")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    // fan the observed ≤ nClusters values out as the same two tiny
-    // single-file artifacts as before (empty clusters: no row — the
-    // read-back's groupBy produced none for them; their observed count
-    // is 0 and max radius NULL)
-    val obsCounts: Seq[(Int, Long)] = if (obsFused) {
-      val om = obs.get
-      val cnts = cIds.map(i => (i, om(s"cnt_$i").asInstanceOf[Long]))
-        .filter(_._2 > 0L).toSeq
-      cnts.toDF("cluster", "cnt")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/cluster_stats")
-      if (withRadii) {
-        cIds.flatMap(i => Option(om(s"r_$i"))
-            .map(r => (i, r.asInstanceOf[Double]))).toSeq
-          .toDF("cluster", "r")
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/cluster_radii")
-      }
-      cnts
-    } else if (withRadii) {
-      // large-nClusters path: the r18 one-pass read-back (codegen'd)
-      val statsRadii = spark.read.parquet(s"$path/clustered")
-        .select(col("cluster").cast("int").as("cluster"), col(vecCol))
-        .join(broadcast(spark.read.parquet(s"$path/centroids")), Seq("cluster"))
+    // per-cluster row counts (serving cardinality guard) + ball radii
+    // (recall-targeted probe bound, probeSetForRecall) from ONE read-back
+    // of the committed layout (codegen'd scan + hash aggregate): it
+    // counts only the rows the write committed, so a retried or
+    // speculative write task cannot double-count. Dot product has no
+    // triangle inequality — no radii, auto-probe declines — so it
+    // counts rows only. Empty clusters get no row.
+    val withRadii = metric != MetricType.DotProduct
+    val clustered = spark.read.parquet(s"$path/clustered")
+      .select(col("cluster").cast("int").as("cluster"), col(vecCol))
+    // each row's centroid is looked up in the in-memory array the
+    // assignment used (parquet round-trips floats exactly, so this equals
+    // a join against the written centroids bit for bit)
+    val layoutStats = (if (withRadii) clustered
         .select(col("cluster"),
-          sqrt(graft.functions.l2sqr_distance(col(vecCol), col("centroid")))
+          sqrt(graft.functions.l2sqr_distance(col(vecCol),
+            element_at(typedlit(cents.map(_.toSeq).toSeq), col("cluster") + 1)))
             .as("r"))
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("cnt"), max(col("r")).as("r"))
-        .collect()
-      val cnts = statsRadii.map(r => (r.getInt(0), r.getLong(1))).toSeq
-      cnts.toDF("cluster", "cnt")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/cluster_stats")
-      statsRadii.map(r => (r.getInt(0), r.getDouble(2))).toSeq
+      else clustered.groupBy(col("cluster")).agg(count(lit(1)).as("cnt")))
+      .collect()
+    val counts = layoutStats.map(r => (r.getInt(0), r.getLong(1))).toSeq
+    counts.toDF("cluster", "cnt")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/cluster_stats")
+    if (withRadii) {
+      layoutStats.map(r => (r.getInt(0), r.getDouble(2))).toSeq
         .toDF("cluster", "r")
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/cluster_radii")
-      cnts
-    } else {
-      val cnts = spark.read.parquet(s"$path/clustered")
-        .groupBy(col("cluster").cast("int").as("cluster"))
-        .agg(count(lit(1)).as("cnt"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      cnts.toDF("cluster", "cnt")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/cluster_stats")
-      cnts
     }
     __lap("stats+radii fan-out")
     // a FULL build bumps the generation: serving residency must flush
@@ -3934,7 +3877,7 @@ object IvfIndex {
     // locally before anyone serves from it
     splitOversized(spark, path, vecCol, idCol, metric,
       maxRows = math.max(4L * n / math.max(1, nClusters), MinimalIndexSize.toLong),
-      knownCounts = Some(obsCounts.toMap))
+      knownCounts = Some(counts.toMap))
     __lap("splitOversized")
     new IvfIndex(spark, path, idCol, metric)
   }

@@ -172,11 +172,6 @@ object Dedup {
       .select(col("id"), TextAnalysis.shingleHashesFromTokenHashes(col("th"), shingleLen).as("hs"))
       .select(col("id"), minhashSignatureFromHashes(col("hs"), k).as("sig"))
 
-  /** Single-column convenience (tests / small data): k affine minimums with
-    * the md5 stage inlined. Prefer `minhashSignatures` in pipelines. */
-  def minhashSignature(text: Column, k: Int = 64, shingleLen: Int = 3): Column =
-    minhashSignatureFromHashes(shingleHashes(text, shingleLen), k)
-
   /** LSH candidate pairs from banded minhash signatures.
     * bands * rowsPerBand must equal the signature length.
     * Output: (id_a, id_b) with id_a < id_b, distinct.
@@ -391,7 +386,7 @@ object Dedup {
     // read twice (bloom build + exact join) — cache the distinct set too
     val benchSet = benchHs.select(explode(col("hs")).as("h")).distinct()
       .cache().transform(StageCaches.track)
-    // one driver scalar to size the filter (bigramLmFit's vocab-size
+    // one driver scalar to size the filter (topTermsTfIdf's doc-count
     // class); the filter itself is built by a distributed aggregate
     val expected = math.max(benchSet.count(), 1L)
     val bloom = benchSet.stat.bloomFilter("h", expected, fpp)

@@ -69,21 +69,6 @@ object Multimodal {
       } finally in.close()
     } catch { case _: Exception => None }
 
-  /** Magic-byte sniff (PNG/JPEG/GIF/BMP): gate the ImageIO reader probe —
-    * spinning up reader discovery per row on a corpus of NON-media
-    * payloads would dominate the extraction cost. */
-  def looksLikeImage(b: Array[Byte]): Boolean = b.length >= 4 && (
-    ((b(0) & 0xff) == 0x89 && b(1) == 'P'.toByte) ||            // PNG
-    ((b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) ||         // JPEG
-    (b(0) == 'G'.toByte && b(1) == 'I'.toByte && b(2) == 'F'.toByte) || // GIF
-    (b(0) == 'B'.toByte && b(1) == 'M'.toByte))                 // BMP
-
-  /** Magic-byte sniff (RIFF/WAVE, FORM/AIFF, .snd AU). */
-  def looksLikeAudio(b: Array[Byte]): Boolean = b.length >= 4 && (
-    (b(0) == 'R'.toByte && b(1) == 'I'.toByte && b(2) == 'F'.toByte && b(3) == 'F'.toByte) ||
-    (b(0) == 'F'.toByte && b(1) == 'O'.toByte && b(2) == 'R'.toByte && b(3) == 'M'.toByte) ||
-    (b(0) == '.'.toByte && b(1) == 's'.toByte && b(2) == 'n'.toByte && b(3) == 'd'.toByte))
-
   /** Magic-byte format classification, including formats we RECOGNIZE but
     * the stock JDK cannot decode (webp, mp3, mp4/mov video): those must
     * surface as typed rejections, never as the stub's fake dimensions.
@@ -368,22 +353,6 @@ object Multimodal {
       }
     }
     spark.createDataFrame(rows, schema)
-  }
-
-  /** Deterministic fixed-dim fake embedding from payload bytes — the shape
-    * of an image-embedding stage without the model. */
-  def fakeEmbedding(dim: Int = 8)(bytes: Array[Byte]): Array[Float] = {
-    val out = new Array[Float](dim)
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) { h = h * 31 + (bytes(i) & 0xff); i += 1 }
-    var j = 0
-    while (j < dim) {
-      h ^= h << 13; h ^= h >>> 7; h ^= h << 17
-      out(j) = ((h % 1000).toFloat / 1000.0f)
-      j += 1
-    }
-    out
   }
 
   /** Frame-sampling plumbing stub: emits every `stride`-th chunk of the

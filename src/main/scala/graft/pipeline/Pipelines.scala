@@ -388,9 +388,10 @@ object Pipelines {
   /** The COMPOSED CCNet pipeline (Wenzek et al. 2019, public method) as
     * a library operator: fastText-style language ID -> each document
     * scored by ITS OWN language's reference LM (`lmFor`, usually
-    * [[TextAnalysis.BigramLm.load]] of per-language models fitted on
-    * clean reference text) -> per-language perplexity terciles by
-    * broadcast value cutoffs ([[quantileBuckets]] — no skewed window)
+    * [[TextAnalysis.BigramLmByClass.load]] of per-language
+    * [[TextAnalysis.bigramLmFit]] models fitted on clean reference
+    * text) -> per-language perplexity terciles by broadcast value
+    * cutoffs ([[quantileBuckets]] — no skewed window)
     * -> keep head / hash-sample middle / drop tail ([[ccnetMix]]).
     * Returns (idCol, pred_class, bucket) for the kept rows.
     *
@@ -401,7 +402,7 @@ object Pipelines {
     * so the per-class union grows the PLAN linearly, not the data. */
   def ccnet(docs: DataFrame, textCol: String, idCol: String,
       classes: Seq[String], weights: Map[String, Seq[Double]],
-      biases: Seq[Double], lmFor: String => TextAnalysis.BigramLm,
+      biases: Seq[Double], lmFor: String => TextAnalysis.BigramLmByClass,
       midKeepPermille: Int = 500): DataFrame = {
     // cache: every class's apply chain filters this frame (classify is
     // the expensive column) — uncached, the classifier would re-run
@@ -435,7 +436,7 @@ object Pipelines {
     * pins the composed equality under that convention). */
   def ccnet(docs: DataFrame, textCol: String, idCol: String,
       weightsDf: DataFrame, classBiases: Seq[(String, Double)],
-      lmFor: String => TextAnalysis.BigramLm,
+      lmFor: String => TextAnalysis.BigramLmByClass,
       midKeepPermille: Int): DataFrame = {
     val classes = classBiases.map(_._1)
     // LabelJoined projects the text away; join it back on the unique id
@@ -521,23 +522,11 @@ object Pipelines {
     ccnetTail(TextAnalysis.bigramLmApplyJoined(lm, docs, textCol, idCol,
       classCol), idCol, classCol, midKeepPermille)
 
-  /** [[ccnetPreClassified]] with per-language STUPID-BACKOFF TRIGRAM
-    * models ([[TextAnalysis.TrigramLmByClass]]) — the n-gram order
-    * CCNet's published pipeline actually ran (per-language KenLM;
-    * Brants et al.'s backoff is its large-corpus cousin): same
-    * one-pass scoring shape (five joins against the long model,
-    * broadcast per-class totals), same window-free tercile/mix tail. */
-  def ccnetPreClassified(docs: DataFrame, textCol: String, idCol: String,
-      classCol: String, lm: TextAnalysis.TrigramLmByClass,
-      midKeepPermille: Int): DataFrame =
-    ccnetTail(TextAnalysis.trigramLmApplyJoined(lm, docs, textCol, idCol,
-      classCol), idCol, classCol, midKeepPermille)
-
   /** [[ccnetPreClassified]] with per-language ORDER-N stupid-backoff
-    * models ([[TextAnalysis.NgramLmByClass]]) — at order 5 on a pruned
-    * count set this is Wenzek et al.'s actual configuration (per
-    * language, 5-gram KenLM, model pruned to stay fixed-size); same
-    * window-free tercile/mix tail. */
+    * models ([[TextAnalysis.NgramLmByClass]]) — order 3 is the trigram
+    * model; at order 5 on a pruned count set this is Wenzek et al.'s
+    * actual configuration (per language, 5-gram KenLM, model pruned to
+    * stay fixed-size); same window-free tercile/mix tail. */
   def ccnetPreClassified(docs: DataFrame, textCol: String, idCol: String,
       classCol: String, lm: TextAnalysis.NgramLmByClass,
       midKeepPermille: Int): DataFrame =
@@ -557,8 +546,8 @@ object Pipelines {
 
   /** The shared CCNet tail over an already-scored (idCol, classCol,
     * lm_nll) frame: drop unscorable rows, per-class broadcast-cutoff
-    * terciles, keep/sample/drop — ONE copy so the bigram and trigram
-    * flows cannot silently diverge. */
+    * terciles, keep/sample/drop — ONE copy so the per-smoothing flows
+    * cannot silently diverge. */
   private def ccnetTail(scored: DataFrame, idCol: String, classCol: String,
       midKeepPermille: Int): DataFrame =
     ccnetMix(quantileBuckets(scored.filter(col("lm_nll").isNotNull),
@@ -570,7 +559,7 @@ object Pipelines {
     * model covers the mix; buckets still cut PER predicted language. */
   def ccnetGlobalLm(docs: DataFrame, textCol: String, idCol: String,
       classes: Seq[String], weights: Map[String, Seq[Double]],
-      biases: Seq[Double], lm: TextAnalysis.BigramLm,
+      biases: Seq[Double], lm: TextAnalysis.BigramLmByClass,
       midKeepPermille: Int = 500): DataFrame = {
     val pred = docs.select(col(idCol),
       TextAnalysis.linearClassifyLabel(col(textCol), classes, weights,

@@ -1159,47 +1159,23 @@ object TextAnalysis {
     *   lm_nll(doc) = −(Σ m·ln P) / Σ m   over the doc's DISTINCT bigrams
     *                                     with multiplicity m
     *
-    * Plan shape, chosen for 100 TB: tokens are capped at `capTokens` (the
-    * per-row cost is constant); per-doc bigrams are COMPRESSED to
-    * (doc, bigram, multiplicity) first [shuffle 1], which bounds the
-    * model-join fan-in under zipfian bigrams ("buy now" ×10⁴ in one spam
-    * doc joins once, not 10⁴ times) and is also what makes the fp story
-    * mirrorable (m·ln p is one multiply on both engines, not m re-ordered
-    * additions); the bigram/left-context count tables derive from the
-    * compressed form [shuffles 2,3 — map-side partial aggs] and join back
-    * on their own keys, so the model side arrives pre-partitioned; the
-    * final per-doc reduce [shuffle 4] sums ≤capTokens terms. ln differs
-    * between libm implementations in the last ulp → the score is rounded
-    * to 4 places (oracle-fp discipline), and min/max/count over the
-    * rounded score are exact downstream. */
+    * Self-scoring is [[bigramLmApply]] over [[bigramLmFit]] of the same
+    * frame, so the add-k math exists once (in [[bigramLmApplyJoined]]).
+    * ln differs between libm implementations in the last ulp → the score
+    * is rounded to 4 places (oracle-fp discipline), and min/max/count
+    * over the rounded score are exact downstream. Every input doc
+    * appears; < 2-token docs carry a NULL score. */
   def bigramLmScore(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", capTokens: Int = 512,
-      k: Double = 0.5): DataFrame = {
-    val id = col(idCol)
-    val tok = df.select(id, cappedTokens(col(textCol), capTokens).as("toks"))
-    val docBg = docBigrams(tok, id)
-    val bgc = docBg.groupBy(col("bg")).agg(sum(col("m")).as("c_bg"))
-    val lc = docBg.groupBy(col("w1")).agg(sum(col("m")).as("c_left"))
-    val vocab = tok.select(explode(col("toks")).as("w"))
-      .agg(countDistinct(col("w")).as("v"))
-    val scored = docBg
-      .join(bgc, "bg").join(lc, "w1")
-      .crossJoin(broadcast(vocab))
-      .select(id, (col("m") *
-        log((col("c_bg") + k) / (col("c_left") + lit(k) * col("v")))).as("lp"),
-        col("m"))
-      .groupBy(id)
-      .agg((-sum(col("lp")) / sum(col("m"))).as("nll"))
-    // every input doc appears; <2-token docs carry a NULL score
-    df.select(id).join(scored, Seq(idCol), "left")
-      .select(id, round(col("nll"), 4).as("lm_nll"))
-  }
+      k: Double = 0.5): DataFrame =
+    bigramLmApply(bigramLmFit(df, textCol, idCol, capTokens, k), df,
+      textCol, idCol)
 
   private def cappedTokens(text: Column, capTokens: Int): Column =
     slice(tokens(text), 1, capTokens)
 
   /** The bigram string array of a staged `toks` column — the shared
-    * bigram enumeration of every LM fit/apply path. Whitespace tokens
+    * bigram enumeration of the bigram fit/apply. Whitespace tokens
     * cannot contain spaces, so "w1 w2" is an injective bigram key and
     * the left context w1 derives from it by splitting — the compress
     * shuffles one string per row, not two. */
@@ -1216,112 +1192,17 @@ object TextAnalysis {
     * compress aggregate. */
   private def bigramW1: Column = element_at(split(col("bg"), " "), 1).as("w1")
 
-  /** Per-doc COMPRESSED bigrams: (id, bg, w1, m). */
-  private def docBigrams(tok: DataFrame, id: Column): DataFrame =
-    tok.select(id, explode(bigramStrings).as("bg"))
-      .groupBy(id, col("bg"))
-      .agg(count(lit(1)).as("m"))
-      .select(id, col("bg"), bigramW1, col("m"))
-
-  /** A FITTED bigram LM: the add-k model of `bigramLmScore`, separated
-    * into fit/apply so the model can be estimated on a clean REFERENCE
-    * corpus and applied to the crawl — the actual CCNet deployment shape
-    * (the reference model is wiki-grade text; the crawl never contaminates
-    * its own quality measure). The model is one bigram-count DataFrame
-    * (left-context counts derive from it by a groupBy at apply time) plus
-    * the training vocab size; persistable via save/load. */
-  final case class BigramLm(model: DataFrame, vocabSize: Long,
-      k: Double, capTokens: Int) {
-    def save(dir: String): Unit = {
-      val spark = model.sparkSession
-      model.write.mode("overwrite").parquet(s"$dir/bigrams.parquet")
-      import spark.implicits._
-      Seq((vocabSize, k, capTokens)).toDF("vocab_size", "k", "cap_tokens")
-        .write.mode("overwrite").parquet(s"$dir/meta.parquet")
-    }
-  }
-
-  object BigramLm {
-    def load(spark: org.apache.spark.sql.SparkSession, dir: String): BigramLm = {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").head()
-      BigramLm(spark.read.parquet(s"$dir/bigrams.parquet"),
-        meta.getAs[Long]("vocab_size"), meta.getAs[Double]("k"),
-        meta.getAs[Int]("cap_tokens"))
-    }
-  }
-
-  /** Estimate the bigram model on a training corpus. The single driver
-    * action is the vocab-size scalar (same class as topTermsTfIdf's doc
-    * count); the count table itself stays distributed.
-    *
-    * `minCount` > 1 PRUNES model rows whose count is below the floor
-    * AFTER the aggregate (KenLM's standard count-pruning recipe; the
-    * in-repo precedent is `bpeFit.minWordCount`) — without it the model
-    * itself grows corpus-sized on crawl-scale reference corpora (the
-    * zipfian tail is almost entirely count-1 bigrams). Pruned bigrams
-    * fall through the EXISTING OOV branch at apply time (coalesce to
-    * count 0 → k/(c_left + k·V)); left-context totals derive from the
-    * pruned table (the only counts the model still holds), and V stays
-    * the full training vocab so the smoothing mass is unchanged. No new
-    * math — minCount=1 is bit-identical to the unpruned fit. */
-  def bigramLmFit(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", capTokens: Int = 512,
-      k: Double = 0.5, minCount: Int = 1): BigramLm = {
-    require(minCount >= 1, "minCount must be >= 1")
-    val id = col(idCol)
-    val tok = df.select(id, cappedTokens(col(textCol), capTokens).as("toks"))
-    // cache: every apply consumes the model twice (the bigram join +
-    // the left-context groupBy) — uncached, the fit corpus's whole
-    // tokenize/count lineage re-executes per consumer
-    val model = docBigrams(tok, id)
-      .groupBy(col("bg"), col("w1")).agg(sum(col("m")).as("c_bg"))
-      .filter(col("c_bg") >= minCount)
-      .cache().transform(StageCaches.track)
-    val v = tok.select(explode(col("toks")).as("w"))
-      .agg(countDistinct(col("w")).as("v")).head().getLong(0)
-    BigramLm(model, v, k, capTokens)
-  }
-
-  /** Score documents under a fitted model. Out-of-vocabulary mass is where
-    * fit/apply genuinely differs from self-scoring: an unseen bigram
-    * coalesces to count 0 and an unseen left context to total 0, so the
-    * smoothed probability degrades to k/(c_left + k·V) and finally 1/V —
-    * never a NULL or a log of zero. Same plan shape as bigramLmScore
-    * (compressed doc bigrams, model joins on its own keys, per-doc
-    * reduce); the model side of the joins is the fitted table, so scoring
-    * a 100 TB crawl against a fixed reference model shuffles only the
-    * crawl's compressed bigrams. */
-  def bigramLmApply(lm: BigramLm, df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val id = col(idCol)
-    val tok = df.select(id, cappedTokens(col(textCol), lm.capTokens).as("toks"))
-    val docBg = docBigrams(tok, id)
-    val lc = lm.model.groupBy(col("w1")).agg(sum(col("c_bg")).as("c_left"))
-    val kv = lm.k * lm.vocabSize // exact: integer-valued double times 0.5
-    val scored = docBg
-      .join(lm.model.select(col("bg"), col("c_bg")), Seq("bg"), "left")
-      .join(lc, Seq("w1"), "left")
-      .select(id, (col("m") *
-        log((coalesce(col("c_bg"), lit(0L)) + lm.k) /
-            (coalesce(col("c_left"), lit(0L)) + kv))).as("lp"),
-        col("m"))
-      .groupBy(id)
-      .agg((-sum(col("lp")) / sum(col("m"))).as("nll"))
-    df.select(id).join(scored, Seq(idCol), "left")
-      .select(id, round(col("nll"), 4).as("lm_nll"))
-  }
-
-  /** ALL per-class bigram LMs in ONE long model frame — the
-    * many-language form of [[BigramLm]] (Wenzek et al. 2019 fit one LM
-    * per language; at the ~100 languages of a real crawl, 100 driver-side
-    * [[BigramLm]] objects mean 100 sequential fit jobs and a 100-branch
-    * apply union — this keeps the whole model set distributed instead):
-    * `model` is (class, bg, w1, c_bg), `vocab` is (class, v). Fit is one
-    * `groupBy(class, bg, w1)` pass, apply is one join on (class, bg) —
-    * both independent of class count. Per-class counts and vocab sizes
-    * are EXACTLY those of [[bigramLmFit]] run on each class partition
-    * ([[bigramLmApplyJoined]] scores bit-equal to the per-class
-    * [[bigramLmApply]]); persistable via save/load. */
+  /** ALL per-class add-k bigram LMs in ONE long model frame: `model` is
+    * (class, bg, w1, c_bg), `vocab` is (class, v). Fit/apply is split
+    * so the model can be estimated on a clean REFERENCE corpus and
+    * applied to the crawl — the actual CCNet deployment shape (the
+    * reference model is wiki-grade text; the crawl never contaminates
+    * its own quality measure). Wenzek et al. 2019 fit one LM per
+    * language; at the ~100 languages of a real crawl this keeps the
+    * whole model set distributed: fit is one `groupBy(class, bg)` pass,
+    * apply is one join on (class, bg) — both independent of class
+    * count. The classless [[bigramLmFit]] is this model with one
+    * constant class. Persistable via save/load. */
   final case class BigramLmByClass(model: DataFrame, vocab: DataFrame,
       k: Double, capTokens: Int) {
     def save(dir: String): Unit = {
@@ -1345,14 +1226,25 @@ object TextAnalysis {
   }
 
   /** Fit ONE bigram LM PER CLASS in a single pass over the corpus —
-    * class-partition counts via `groupBy(class, bg, w1)` (a partial-merge
+    * class-partition counts via `groupBy(class, bg)` (a partial-merge
     * aggregate: heavy (class, bigram) cells collapse map-side, so the
     * skewed-language crawl never floods one task) and per-class vocab
-    * sizes via one `countDistinct` aggregate. No driver action at all
-    * (the per-class V lives in the model's `vocab` frame, unlike
-    * [[bigramLmFit]]'s scalar), and no per-class job: fitting 100
-    * languages costs the same two aggregates as fitting 3. Rows with a
-    * NULL class are excluded (they belong to no model). */
+    * sizes via one `countDistinct` aggregate. No driver action (the
+    * per-class V lives in the model's `vocab` frame) and no per-class
+    * job: fitting 100 languages costs the same two aggregates as
+    * fitting 3. Rows with a NULL class are excluded (they belong to no
+    * model).
+    *
+    * `minCount` > 1 PRUNES model rows whose count is below the floor
+    * AFTER the aggregate (KenLM's standard count-pruning recipe; the
+    * in-repo precedent is `bpeFit.minWordCount`) — without it the model
+    * itself grows corpus-sized on crawl-scale reference corpora (the
+    * zipfian tail is almost entirely count-1 bigrams). Pruned bigrams
+    * fall through the OOV branch at apply time (coalesce to count 0 →
+    * k/(c_left + k·V)); left-context totals derive from the pruned
+    * table (the only counts the model still holds), and V stays the
+    * full training vocab so the smoothing mass is unchanged. No new
+    * math — minCount=1 is bit-identical to the unpruned fit. */
   def bigramLmFitByClass(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", classCol: String = "class",
       capTokens: Int = 512, k: Double = 0.5,
@@ -1361,43 +1253,58 @@ object TextAnalysis {
     val tok = df.filter(col(classCol).isNotNull)
       .select(col(classCol).cast("string").as("class"),
         cappedTokens(col(textCol), capTokens).as("toks"))
-    // total occurrence count per (class, bg, w1) — integer-equal to
-    // bigramLmFit's per-doc-compress-then-sum on the class partition.
-    // minCount prunes AFTER the aggregate ([[bigramLmFit]]'s recipe,
-    // applied per class): pruned bigrams fall through the OOV branch at
-    // apply time; per-class V stays the full training vocab
     val model = tok.select(col("class"), explode(bigramStrings).as("bg"))
       .groupBy(col("class"), col("bg"))
       .agg(count(lit(1)).as("c_bg"))
       .filter(col("c_bg") >= minCount)
       .select(col("class"), col("bg"), bigramW1, col("c_bg"))
       // cache: every apply consumes the model twice (the bigram join +
-      // the left-context groupBy) — same pin as bigramLmFit's model
+      // the left-context groupBy) — uncached, the fit corpus's whole
+      // tokenize/count lineage re-executes per consumer
       .cache().transform(StageCaches.track)
     val vocab = tok.select(col("class"), explode(col("toks")).as("w"))
       .groupBy(col("class")).agg(countDistinct(col("w")).as("v"))
+      // cache: one row per class, read by every apply. The pin also
+      // hides the constant class of [[bigramLmFit]] from constant
+      // folding, which would turn the apply's broadcast k·V hash join
+      // on class into a nested-loop cross join
+      .cache().transform(StageCaches.track)
     BigramLmByClass(model, vocab, k, capTokens)
   }
 
-  /** Score every document against ITS OWN class's model in ONE pass —
-    * the joined twin of per-class [[bigramLmApply]] chains (the
-    * two-engines-one-contract discipline of
-    * [[linearClassifyScoresJoined]]): one staged tokenize, one
-    * (id, class, bg) compress, one join against the long model on
-    * (class, bg), one against the derived left-context counts on
-    * (class, w1), a BROADCAST of the per-class smoothing mass k·V (one
-    * row per class), one per-doc reduce. A 100 TB crawl shuffles only
-    * its compressed bigrams ONCE, regardless of how many languages the
-    * model holds — vs the C-way filter/union that re-scans the
-    * prediction frame per class. Bit-equal to [[bigramLmApply]] on each
-    * class partition: identical smoothing chain with k·V as an exact
-    * 0.5·integer double, OOV bigrams/contexts coalescing to 0, and the
-    * same round-4 output. Docs with < 2 tokens — or whose class has no
-    * fitted model — carry NULL `lm_nll` (including the degenerate
-    * zero-token fit partition: no vocab row ⇒ NULL, where the
-    * per-class chain's k·V = 0 floor degenerates to −Infinity — NULL
-    * is this engine's contract). Returns
-    * (idCol, classCol, lm_nll). */
+  /** Global (classless) bigram fit — [[bigramLmFitByClass]] with one
+    * constant class, so the add-k model exists exactly once; score with
+    * [[bigramLmApply]]. */
+  def bigramLmFit(df: DataFrame, textCol: String = "text",
+      idCol: String = "doc_id", capTokens: Int = 512,
+      k: Double = 0.5, minCount: Int = 1): BigramLmByClass =
+    bigramLmFitByClass(df.withColumn("__one", lit("")), textCol, idCol,
+      "__one", capTokens, k, minCount)
+
+  /** Score under a [[bigramLmFit]]-fitted global model; returns
+    * (idCol, lm_nll). */
+  def bigramLmApply(lm: BigramLmByClass, df: DataFrame,
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    bigramLmApplyJoined(lm, df.withColumn("__one", lit("")), textCol,
+      idCol, "__one").drop("__one")
+
+  /** Score every document against ITS OWN class's model in ONE pass:
+    * one staged tokenize, one (id, class, bg) compress [shuffle 1 —
+    * bounds the model-join fan-in under zipfian bigrams: "buy now" ×10⁴
+    * in one spam doc joins once, not 10⁴ times, and m·ln p is one
+    * multiply on both engines, not m re-ordered additions], one join
+    * against the long model on (class, bg), one against the derived
+    * left-context counts on (class, w1), a BROADCAST of the per-class
+    * smoothing mass k·V (one row per class), one per-doc reduce. A
+    * 100 TB crawl shuffles only its compressed bigrams ONCE, regardless
+    * of how many languages the model holds. Out-of-vocabulary mass: an
+    * unseen bigram coalesces to count 0 and an unseen left context to
+    * total 0, so the smoothed probability degrades to k/(c_left + k·V)
+    * and finally 1/V — never a log of zero. k·V is an exact
+    * 0.5·integer double; the output is rounded to 4 places. Docs with
+    * < 2 tokens — or whose class has no fitted model, including a fit
+    * partition with zero tokens (no vocab row) — carry NULL `lm_nll`.
+    * Returns (idCol, classCol, lm_nll). */
   def bigramLmApplyJoined(lm: BigramLmByClass, df: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       classCol: String = "class"): DataFrame = {
@@ -1434,301 +1341,26 @@ object TextAnalysis {
       .select(id, col("__cls").as(classCol), round(col("nll"), 4).as("lm_nll"))
   }
 
-  /** A FITTED trigram LM with STUPID BACKOFF (Brants et al. 2007, "Large
-    * Language Models in Machine Translation" §4 — the public
-    * large-corpus recipe CCNet's KenLM descends from): relative
-    * frequencies with a fixed backoff multiplier α (0.4 in the paper),
-    * no normalization —
+  /** ALL per-class order-n STUPID-BACKOFF LMs in one long model (Brants
+    * et al. 2007, "Large Language Models in Machine Translation" §4 —
+    * the public large-corpus recipe CCNet's KenLM descends from):
+    * relative frequencies with a fixed backoff multiplier α (0.4 in the
+    * paper), no normalization —
     *
-    *   S(w3|w1 w2) = c(w1 w2 w3)/c(w1 w2)            if the trigram is seen
-    *               = α · S(w3|w2)                     otherwise
-    *   S(w3|w2)    = c(w2 w3)/c(w2)                   if the bigram is seen
-    *               = α · S(w3)                        otherwise
-    *   S(w3)       = (c(w3) + 1)/(N + V)
+    *   S_1 = (c1(w_n) + 1)/(N + V)
+    *   S_k = c_k(suffix_k)/c_{k-1}(prefix of suffix_k)  if suffix_k seen
+    *       = α · S_{k-1}                                 otherwise
     *
     * The terminal unigram is add-one smoothed over the training vocab (a
     * documented deviation — pure stupid backoff gives an OOV token score
-    * 0 ⇒ ln 0; the same never-NULL floor discipline as the bigram
-    * model). Seen branches never divide by zero: a seen trigram implies
-    * its (w1 w2) prefix is seen, a seen (w2 w3) implies w2 is seen.
-    * Model = three count tables + (N, V); scoring a 100 TB crawl against
-    * a fixed reference model shuffles only the crawl's COMPRESSED
-    * trigrams (the same zipfian-fan-in bound as the bigram plan). */
-  final case class TrigramLm(tri: DataFrame, bi: DataFrame, uni: DataFrame,
-      totalTokens: Long, vocabSize: Long, alpha: Double, capTokens: Int) {
-    def save(dir: String): Unit = {
-      val spark = tri.sparkSession
-      tri.write.mode("overwrite").parquet(s"$dir/trigrams.parquet")
-      bi.write.mode("overwrite").parquet(s"$dir/bigrams.parquet")
-      uni.write.mode("overwrite").parquet(s"$dir/unigrams.parquet")
-      import spark.implicits._
-      Seq((totalTokens, vocabSize, alpha, capTokens))
-        .toDF("total_tokens", "vocab_size", "alpha", "cap_tokens")
-        .write.mode("overwrite").parquet(s"$dir/meta.parquet")
-    }
-  }
-
-  object TrigramLm {
-    def load(spark: org.apache.spark.sql.SparkSession, dir: String): TrigramLm = {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").head()
-      TrigramLm(spark.read.parquet(s"$dir/trigrams.parquet"),
-        spark.read.parquet(s"$dir/bigrams.parquet"),
-        spark.read.parquet(s"$dir/unigrams.parquet"),
-        meta.getAs[Long]("total_tokens"), meta.getAs[Long]("vocab_size"),
-        meta.getAs[Double]("alpha"), meta.getAs[Int]("cap_tokens"))
-    }
-  }
-
-  /** The trigram string array of a staged `toks` column — shared by
-    * every trigram fit/apply path. Whitespace tokens cannot contain
-    * spaces, so the joined trigram is an injective key and every
-    * backoff key (bg12, bg23, w2, w3) derives from it by splitting. */
-  private def trigramStrings: Column = {
-    val nT = size(col("toks"))
-    def w(i: Column, o: Int) = element_at(col("toks"), i + o)
-    when(nT >= 3,
-      transform(sequence(lit(1), nT - 2),
-        i => concat_ws(" ", w(i, 0), w(i, 1), w(i, 2))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** The trigram backoff keys, derived from a `tg` column AFTER the
-    * compress aggregate — the shuffle carries one string + m per row
-    * instead of five overlapping substrings. */
-  private def trigramBackoffKeys: Seq[Column] = {
-    val ws = split(col("tg"), " ")
-    Seq(concat_ws(" ", slice(ws, 1, 2)).as("bg12"),
-      concat_ws(" ", slice(ws, 2, 2)).as("bg23"),
-      element_at(ws, 2).as("w2"), element_at(ws, 3).as("w3"))
-  }
-
-  /** Per-doc COMPRESSED trigram occurrences with the backoff keys the
-    * apply joins need: (id, tg, bg12, bg23, w2, w3, m). */
-  private def docTrigrams(tok: DataFrame, id: Column): DataFrame =
-    tok.select(id, explode(trigramStrings).as("tg"))
-      .groupBy(id, col("tg"))
-      .agg(count(lit(1)).as("m"))
-      .select((Seq(id, col("tg")) ++ trigramBackoffKeys :+ col("m")): _*)
-
-  /** Estimate the stupid-backoff trigram model. Two driver scalars (N, V)
-    * in one action; the count tables stay distributed.
-    *
-    * `minCount` > 1 PRUNES all three count tables at the same floor
-    * AFTER their aggregates (KenLM's count-pruning recipe) — the model
-    * of a crawl-scale reference corpus is otherwise corpus-sized (the
-    * zipfian tail is count-1 n-grams). Pruned n-grams fall through the
-    * EXISTING backoff branches (a pruned trigram scores as α·S(w3|w2), a
-    * pruned bigram as α²·S(w3), a pruned unigram hits the add-one floor
-    * with count 0) — no new math. The SAME floor on every order keeps
-    * the seen-branch invariants: a kept trigram's bg12 count ≥ c3 ≥
-    * minCount survives, a kept bigram's w2 count likewise — seen
-    * branches still never divide by zero. (N, V) stay the FULL corpus
-    * totals so the smoothing floor is unchanged; minCount=1 is
-    * bit-identical to the unpruned fit. */
-  def trigramLmFit(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", capTokens: Int = 512,
-      alpha: Double = 0.4, minCount: Int = 1): TrigramLm = {
-    require(minCount >= 1, "minCount must be >= 1")
-    val id = col(idCol)
-    val tok = df.select(id, cappedTokens(col(textCol), capTokens).as("toks"))
-    val tri = docTrigrams(tok, id)
-      .groupBy(col("tg")).agg(sum(col("m")).as("c3"))
-      .filter(col("c3") >= minCount)
-    val bi = docBigrams(tok, id)
-      .groupBy(col("bg")).agg(sum(col("m")).as("c2"))
-      .filter(col("c2") >= minCount)
-    val uniAll = tok.select(explode(col("toks")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-      // cache: consumed by the (N, V) action AND the pruned view below
-      .cache().transform(StageCaches.track)
-    val nv = uniAll.agg(sum(col("c1")), count(lit(1))).head()
-    TrigramLm(tri, bi, uniAll.filter(col("c1") >= minCount),
-      if (nv.isNullAt(0)) 0L else nv.getLong(0), nv.getLong(1),
-      alpha, capTokens)
-  }
-
-  /** Score documents under a fitted stupid-backoff model:
-    * lm_nll = −(Σ m·ln S)/Σ m over the doc's compressed trigrams; docs
-    * with < 3 tokens carry NULL. Plan shape: one compress shuffle on the
-    * scored side, five left joins against the model's own pre-aggregated
-    * keys, one per-doc reduce — the model tables are the small/fixed
-    * side, so crawl-scale scoring never re-shuffles the model. */
-  def trigramLmApply(lm: TrigramLm, df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val id = col(idCol)
-    val tok = df.select(id, cappedTokens(col(textCol), lm.capTokens).as("toks"))
-    val a = lm.alpha
-    val floor = (coalesce(col("c1_w3"), lit(0L)) + lit(1.0)) /
-      lit(lm.totalTokens + lm.vocabSize).cast("double")
-    val s = when(col("c3").isNotNull,
-        col("c3").cast("double") / col("c2_12"))
-      .otherwise(lit(a) * when(col("c2_23").isNotNull,
-          col("c2_23").cast("double") / col("c1_w2"))
-        .otherwise(lit(a) * floor))
-    val scored = docTrigrams(tok, id)
-      .join(lm.tri, Seq("tg"), "left")
-      .join(lm.bi.select(col("bg").as("bg12"), col("c2").as("c2_12")),
-        Seq("bg12"), "left")
-      .join(lm.bi.select(col("bg").as("bg23"), col("c2").as("c2_23")),
-        Seq("bg23"), "left")
-      .join(lm.uni.select(col("w").as("w2"), col("c1").as("c1_w2")),
-        Seq("w2"), "left")
-      .join(lm.uni.select(col("w").as("w3"), col("c1").as("c1_w3")),
-        Seq("w3"), "left")
-      .select(id, (col("m") * log(s)).as("lp"), col("m"))
-      .groupBy(id)
-      .agg((-sum(col("lp")) / sum(col("m"))).as("nll"))
-    df.select(id).join(scored, Seq(idCol), "left")
-      .select(id, round(col("nll"), 4).as("lm_nll"))
-  }
-
-  /** ALL per-class stupid-backoff trigram LMs in one long model — the
-    * higher-order sibling of [[BigramLmByClass]] (Wenzek et al. score
-    * with one KenLM PER language; this is the n-gram-order step toward
-    * that shape with every model side distributed): three count frames
-    * keyed by class — (class, tg, c3), (class, bg, c2), (class, w, c1)
-    * — plus a (class, n, v) totals table. Fit and apply are both
-    * independent of class count; per-class counts are EXACTLY those of
-    * [[trigramLmFit]] on each class partition. Persistable. */
-  final case class TrigramLmByClass(tri: DataFrame, bi: DataFrame,
-      uni: DataFrame, totals: DataFrame, alpha: Double, capTokens: Int) {
-    def save(dir: String): Unit = {
-      val spark = tri.sparkSession
-      tri.write.mode("overwrite").parquet(s"$dir/trigrams.parquet")
-      bi.write.mode("overwrite").parquet(s"$dir/bigrams.parquet")
-      uni.write.mode("overwrite").parquet(s"$dir/unigrams.parquet")
-      totals.write.mode("overwrite").parquet(s"$dir/totals.parquet")
-      import spark.implicits._
-      Seq((alpha, capTokens)).toDF("alpha", "cap_tokens")
-        .write.mode("overwrite").parquet(s"$dir/meta.parquet")
-    }
-  }
-
-  object TrigramLmByClass {
-    def load(spark: org.apache.spark.sql.SparkSession, dir: String)
-        : TrigramLmByClass = {
-      val meta = spark.read.parquet(s"$dir/meta.parquet").head()
-      TrigramLmByClass(spark.read.parquet(s"$dir/trigrams.parquet"),
-        spark.read.parquet(s"$dir/bigrams.parquet"),
-        spark.read.parquet(s"$dir/unigrams.parquet"),
-        spark.read.parquet(s"$dir/totals.parquet"),
-        meta.getAs[Double]("alpha"), meta.getAs[Int]("cap_tokens"))
-    }
-  }
-
-  /** Fit one stupid-backoff trigram LM PER CLASS in three partial-merge
-    * aggregates over one staged tokenize — no per-class jobs, no driver
-    * action (the per-class (N, V) live in the `totals` frame). Rows
-    * with a NULL class are excluded. `minCount` prunes all three count
-    * frames at the same floor AFTER their aggregates ([[trigramLmFit]]'s
-    * recipe per class: pruned n-grams fall through the existing backoff
-    * branches; per-class (N, V) stay the FULL partition totals so the
-    * smoothing floor is unchanged; minCount=1 is bit-identical) —
-    * without it the "model side stays small/fixed" claim of the joined
-    * apply only holds for bounded reference corpora. */
-  def trigramLmFitByClass(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", classCol: String = "class",
-      capTokens: Int = 512, alpha: Double = 0.4,
-      minCount: Int = 1): TrigramLmByClass = {
-    require(minCount >= 1, "minCount must be >= 1")
-    val tok = df.filter(col(classCol).isNotNull)
-      .select(col(classCol).cast("string").as("class"),
-        cappedTokens(col(textCol), capTokens).as("toks"))
-      // cache: three enumerations (tri/bi/uni) read the staged tokens —
-      // uncached, the upstream lineage (often a classifier) runs thrice
-      .cache().transform(StageCaches.track)
-    val tri = tok.select(col("class"), explode(trigramStrings).as("tg"))
-      .groupBy(col("class"), col("tg"))
-      .agg(count(lit(1)).as("c3"))
-      .filter(col("c3") >= minCount)
-    val bi = tok.select(col("class"), explode(bigramStrings).as("bg"))
-      .groupBy(col("class"), col("bg"))
-      .agg(count(lit(1)).as("c2"))
-      .filter(col("c2") >= minCount)
-      // cache: the apply joins bi TWICE (bg12 + bg23) — the largest of
-      // the three count frames must not re-aggregate per join
-      .cache().transform(StageCaches.track)
-    val uniAll = tok.select(col("class"), explode(col("toks")).as("w"))
-      .groupBy(col("class"), col("w")).agg(count(lit(1)).as("c1"))
-      // cache: consumed by totals (UNPRUNED — the full-corpus smoothing
-      // floor) and by the pruned view the apply's two unigram joins read
-      .cache().transform(StageCaches.track)
-    val totals = uniAll.groupBy(col("class"))
-      .agg(sum(col("c1")).as("n"), count(lit(1)).as("v"))
-    TrigramLmByClass(tri, bi, uniAll.filter(col("c1") >= minCount),
-      totals, alpha, capTokens)
-  }
-
-  /** Score every document against ITS OWN class's stupid-backoff model
-    * in ONE pass — the joined twin of per-class [[trigramLmApply]]
-    * chains: one (id, class) trigram compress, five left joins against
-    * the long model's own keys, a BROADCAST of the per-class (N, V)
-    * totals, one per-doc reduce. Bit-equal to [[trigramLmApply]] on
-    * each class partition (identical backoff chain; N + V summed in
-    * exact integers either way). Docs with < 3 tokens — or whose class
-    * has no fitted model — carry NULL `lm_nll`. One documented edge
-    * where the engines differ: a class whose FIT partition held ZERO
-    * tokens has no totals row here ⇒ NULL scores ("no fitted model"),
-    * while the per-class chain's N = V = 0 degenerates its smoothing
-    * floor to a division by zero ⇒ −Infinity scores; NULL is this
-    * engine's contract (the same edge exists in the bigram twin).
-    * Returns
-    * (idCol, classCol, lm_nll). */
-  def trigramLmApplyJoined(lm: TrigramLmByClass, df: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      classCol: String = "class"): DataFrame = {
-    val id = col(idCol)
-    // cache: consumed twice (trigram compress + the id/class join-back)
-    val tok = df
-      .select(id, col(classCol).cast("string").as("__cls"),
-        cappedTokens(col(textCol), lm.capTokens).as("toks"))
-      .cache().transform(StageCaches.track)
-    // compress on the full trigram only; backoff keys derive from it
-    // post-shuffle (one string + m per shuffle row, not five)
-    val docTg = tok.select(id, col("__cls"), explode(trigramStrings).as("tg"))
-      .groupBy(id, col("__cls"), col("tg"))
-      .agg(count(lit(1)).as("m"))
-      .select((Seq(id, col("__cls"), col("tg")) ++
-        trigramBackoffKeys :+ col("m")): _*)
-    val a = lm.alpha
-    val floor = (coalesce(col("c1_w3"), lit(0L)) + lit(1.0)) /
-      (col("__n") + col("__v")).cast("double")
-    val s = when(col("c3").isNotNull,
-        col("c3").cast("double") / col("c2_12"))
-      .otherwise(lit(a) * when(col("c2_23").isNotNull,
-          col("c2_23").cast("double") / col("c1_w2"))
-        .otherwise(lit(a) * floor))
-    val scored = docTg
-      .join(lm.tri.select(col("class").as("__cls"), col("tg"), col("c3")),
-        Seq("__cls", "tg"), "left")
-      .join(lm.bi.select(col("class").as("__cls"), col("bg").as("bg12"),
-        col("c2").as("c2_12")), Seq("__cls", "bg12"), "left")
-      .join(lm.bi.select(col("class").as("__cls"), col("bg").as("bg23"),
-        col("c2").as("c2_23")), Seq("__cls", "bg23"), "left")
-      .join(lm.uni.select(col("class").as("__cls"), col("w").as("w2"),
-        col("c1").as("c1_w2")), Seq("__cls", "w2"), "left")
-      .join(lm.uni.select(col("class").as("__cls"), col("w").as("w3"),
-        col("c1").as("c1_w3")), Seq("__cls", "w3"), "left")
-      .join(broadcast(lm.totals.select(col("class").as("__cls"),
-        col("n").as("__n"), col("v").as("__v"))), Seq("__cls"), "left")
-      .select(id, (col("m") * log(s)).as("lp"), col("m"))
-      .groupBy(id)
-      .agg((-sum(col("lp")) / sum(col("m"))).as("nll"))
-    tok.select(id, col("__cls")).join(scored, Seq(idCol), "left")
-      .select(id, col("__cls").as(classCol), round(col("nll"), 4).as("lm_nll"))
-  }
-
-  /** ALL per-class order-n stupid-backoff LMs in one long model — the
-    * generalization of [[TrigramLmByClass]] to arbitrary order (Wenzek
-    * et al.'s actual configuration is 5-gram KenLM): one count frame
-    * per order k = 1..n, each (class, gram, c) with `gram` the
-    * space-joined k tokens, plus the (class, n, v) totals. Fit is n
-    * partial-merge aggregates over ONE staged tokenize; apply is
-    * 2n−1 left joins + a broadcast totals join — both independent of
-    * class count. `minCount` prunes every order at the same floor
-    * (totals stay full-corpus); at order=3 the engines are BIT-EQUAL
-    * to [[trigramLmFitByClass]]/[[trigramLmApplyJoined]]
-    * (Round17Spec). Persistable. */
+    * 0 ⇒ ln 0). Order 3 is the trigram model; Wenzek et al.'s actual
+    * configuration is 5-gram KenLM. The model is one count frame per
+    * order k = 1..n, each (class, gram, c) with `gram` the space-joined
+    * k tokens, plus the (class, n, v) totals. Fit is n partial-merge
+    * aggregates over ONE staged tokenize; apply is 2n−1 left joins + a
+    * broadcast totals join — both independent of class count. The
+    * classless [[ngramLmFit]] is this model with one constant class.
+    * Persistable. */
   final case class NgramLmByClass(order: Int, counts: Seq[DataFrame],
       totals: DataFrame, alpha: Double, capTokens: Int) {
     require(counts.length == order, "one count frame per order 1..n")
@@ -1758,9 +1390,19 @@ object TextAnalysis {
 
   /** Fit one order-n stupid-backoff LM per class: one partial-merge
     * `groupBy(class, gram)` aggregate PER ORDER over one staged
-    * tokenize, no per-class jobs, no driver action. `minCount` prunes
-    * every order at the same floor AFTER the aggregates; (N, V) stay
-    * the full partition totals ([[trigramLmFit]]'s pruning recipe).
+    * tokenize, no per-class jobs, no driver action. Rows with a NULL
+    * class are excluded.
+    *
+    * `minCount` > 1 PRUNES every order at the same floor AFTER the
+    * aggregates (KenLM's count-pruning recipe) — the model of a
+    * crawl-scale reference corpus is otherwise corpus-sized (the
+    * zipfian tail is count-1 n-grams). Pruned n-grams fall through the
+    * EXISTING backoff branches (a pruned trigram scores as α·S(w3|w2),
+    * a pruned bigram as α²·S(w3), a pruned unigram hits the add-one
+    * floor with count 0) — no new math. The SAME floor on every order
+    * keeps the seen-branch invariants (see [[ngramLmApplyJoined]]).
+    * (N, V) stay the FULL partition totals so the smoothing floor is
+    * unchanged; minCount=1 is bit-identical to the unpruned fit.
     *
     * Measured design note: a single-pass variant (emit (k, gram)
     * structs for all orders from one explode into ONE
@@ -1811,11 +1453,11 @@ object TextAnalysis {
     NgramLmByClass(order, counts, totals, alpha, capTokens)
   }
 
-  /** Global (classless) order-n fit — the [[trigramLmFit]]-shaped form
-    * for corpora scored by ONE reference model: a thin adapter over the
-    * per-class engine with a single constant class (the class key adds
-    * one constant column to each join — broadcast-irrelevant), so the
-    * order-n math exists exactly once. */
+  /** Global (classless) order-n fit — for corpora scored by ONE
+    * reference model: a thin adapter over the per-class engine with a
+    * single constant class (the class key adds one constant column to
+    * each join — broadcast-irrelevant), so the order-n math exists
+    * exactly once. */
   def ngramLmFit(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", order: Int = 5, capTokens: Int = 512,
       alpha: Double = 0.4, minCount: Int = 1): NgramLmByClass =
@@ -1833,16 +1475,14 @@ object TextAnalysis {
     * model in one pass: one (id, class) n-gram compress carrying all
     * 2n−1 backoff keys, then for k = n..2 a left join on the k-suffix
     * (numerator) and the (k−1)-denominator (the suffix's own prefix),
-    * the unigram floor join, and a broadcast (N, V) join —
-    *
-    *   S_1 = (c1(w_n) + 1)/(N + V)
-    *   S_k = c_k(suffix_k)/c_{k-1}(prefix of suffix_k)  if suffix_k seen
-    *       = α · S_{k-1}                                 otherwise
-    *
+    * the unigram floor join, and a broadcast (N, V) join, then the
+    * backoff chain of [[NgramLmByClass]]. The model side is the
+    * small/fixed side, so crawl-scale scoring never re-shuffles it.
     * Seen branches never divide by zero/NULL at any `minCount`: a kept
     * k-suffix's (k−1)-prefix count ≥ the suffix count ≥ the floor, so
     * the denominator row survives the same pruning. Docs with < n
-    * tokens — or an unfitted class — carry NULL `lm_nll`. Returns
+    * tokens — or an unfitted class, including a fit partition with
+    * zero tokens (no totals row) — carry NULL `lm_nll`. Returns
     * (idCol, classCol, lm_nll). */
   def ngramLmApplyJoined(lm: NgramLmByClass, df: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",

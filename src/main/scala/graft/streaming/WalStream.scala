@@ -187,13 +187,6 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 
-  /** Sliding-window event rate. */
-  def slidingRate(events: DataFrame): DataFrame =
-    graft.EventTime.tsTimestamp(events)
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
-      .agg(count(lit(1)).as("n"))
-
   case class SessionState(count: Long, firstEvent: Long, lastTsNs: Long)
   case class SessionOut(user_id: Long, n_events: Long, first_event: Long)
 

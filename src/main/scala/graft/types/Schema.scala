@@ -127,42 +127,4 @@ case class TableSchema(name: String, fields: Seq[FieldSchema],
     require(field(ix.src).fieldType == FieldType.Str, s"index ${ix.name}: src must be STRING")
     require(FieldType.isVector(field(ix.tgt).fieldType), s"index ${ix.name}: tgt must be a vector")
   }
-  /** Fields callers must supply at insert: index target vectors are
-    * auto-filled (web_controller.hpp:434-507 validation). */
-  def requiredAtInsert: Seq[FieldSchema] =
-    fields.filterNot(f => indices.exists(_.tgt == f.name))
-}
-
-object TableSchema {
-  /** Reconstruct from a StructType written by toStructField metadata. */
-  def fromStructType(name: String, st: StructType): TableSchema = TableSchema(
-    name,
-    st.fields.toSeq.map { f =>
-      val m = f.metadata
-      val ft =
-        if (m.contains("graft.fieldType")) FieldType.withName(m.getString("graft.fieldType"))
-        else f.dataType match {
-          case ByteType => FieldType.TinyInt
-          case ShortType => FieldType.SmallInt
-          case IntegerType => FieldType.Int4
-          case LongType => FieldType.BigInt
-          case FloatType => FieldType.Float4
-          case DoubleType => FieldType.Double8
-          case BooleanType => FieldType.Bool
-          case StringType => FieldType.Str
-          case ArrayType(FloatType, _) => FieldType.VectorFloat
-          case t: StructType if t.fieldNames.sameElements(Array("indices", "values")) =>
-            FieldType.SparseVectorFloat
-          case t: StructType if t.fieldNames.sameElements(Array("latitude", "longitude")) =>
-            FieldType.GeoPoint
-          case other => throw new IllegalArgumentException(s"unmappable type $other")
-        }
-      FieldSchema(
-        f.name, ft,
-        primaryKey = m.contains("graft.primaryKey") && m.getBoolean("graft.primaryKey"),
-        dimensions = if (m.contains("graft.dimensions")) m.getLong("graft.dimensions").toInt else 0,
-        metric =
-          if (m.contains("graft.metricType")) MetricType.withName(m.getString("graft.metricType"))
-          else MetricType.Euclidean)
-    })
 }

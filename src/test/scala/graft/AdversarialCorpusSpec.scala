@@ -83,8 +83,8 @@ class AdversarialCorpusSpec extends SparkSpec {
     assert(bg(0L).nonEmpty && bg(300L).nonEmpty && bg(304L).nonEmpty)
     assert(bg(0L) == bg(1L), "identical docs must score identically")
 
-    val lm = TextAnalysis.trigramLmFit(family)
-    val tri = TextAnalysis.trigramLmApply(lm, family)
+    val lm = TextAnalysis.ngramLmFit(family, order = 3)
+    val tri = TextAnalysis.ngramLmApply(lm, family)
       .collect().map(x => x.getLong(0) -> Option(x.get(1))).toMap
     assert(tri(303L).isEmpty && tri(301L).isEmpty && tri(200L).isEmpty,
       "docs with < 3 tokens must carry NULL trigram scores")

@@ -272,43 +272,6 @@ class PipelineSpec extends SparkSpec {
     assert(got == want, s"$got vs $want")
   }
 
-  test("trigramLm stupid backoff: every branch hand-computed; save/load roundtrip") {
-    // train: doc1 "a b c a b c", doc2 "a b d"
-    //   N=9 tokens, V=4 ({a,b,c,d})
-    //   c3: "a b c"=2, "b c a"=1, "c a b"=1, "a b d"=1
-    //   c2: "a b"=3, "b c"=2, "c a"=1, "b d"=1
-    //   c1: a=3, b=3, c=2, d=1
-    val train = Seq((1L, "a b c a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val lm = TextAnalysis.trigramLmFit(train)
-    assert(lm.totalTokens == 9L && lm.vocabSize == 4L, (lm.totalTokens, lm.vocabSize).toString)
-    val apply = Seq(
-      (10L, "a b c"),       // seen trigram: S = c3/c2("a b") = 2/3
-      (11L, "b b c"),       // unseen trigram, seen "b c": S = α·(2/3)
-      (12L, "c b x"),       // unseen everything, OOV w3: S = α²·(0+1)/(N+V)
-      (13L, "a"),           // < 3 tokens -> NULL
-      (14L, "a b c a b c")  // multiplicity: -(2·ln(2/3)+ln(1/2)+ln(1))/4
-    ).toDF("doc_id", "text")
-    def r4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val r = TextAnalysis.trigramLmApply(lm, apply).collect()
-      .map(x => x.getLong(0) -> (if (x.isNullAt(1)) null
-        else java.lang.Double.valueOf(x.getDouble(1)))).toMap
-    assert(r(10L) == r4(-math.log(2.0 / 3)), String.valueOf(r(10L)))
-    assert(r(11L) == r4(-math.log(0.4 * 2.0 / 3)), String.valueOf(r(11L)))
-    assert(r(12L) == r4(-math.log(0.4 * 0.4 * 1.0 / 13)), String.valueOf(r(12L)))
-    assert(r(13L) == null, String.valueOf(r(13L)))
-    assert(r(14L) == r4(-(2 * math.log(2.0 / 3) + math.log(0.5)) / 4),
-      String.valueOf(r(14L)))
-    // persisted model scores identically
-    val dir = tmpDir("trigram_lm_model")
-    lm.save(dir)
-    val loaded = TextAnalysis.TrigramLm.load(spark, dir)
-    val r2 = TextAnalysis.trigramLmApply(loaded, apply).collect()
-      .map(x => x.getLong(0) -> (if (x.isNullAt(1)) null
-        else java.lang.Double.valueOf(x.getDouble(1)))).toMap
-    assert(r2 == r, s"$r2 vs $r")
-  }
-
   test("bigramLmScore: add-k smoothed corpus bigram NLL, hand-computed") {
     val lmDocs = Seq(
       (1L, "a b a b"), // bigrams: "a b" x2, "b a" x1
@@ -330,12 +293,12 @@ class PipelineSpec extends SparkSpec {
     val train = Seq((1L, "a b a b")).toDF("doc_id", "text")
     // model: c("a b")=2, c("b a")=1; left a=2, b=1; V={a,b}=2, k=0.5, kV=1
     val lm = TextAnalysis.bigramLmFit(train)
-    assert(lm.vocabSize == 2L)
+    assert(lm.vocab.select(col("v")).head().getLong(0) == 2L)
     val held = Seq(
       (10L, "a b c x"), // "a b": 2.5/3   "b c": 0.5/2   "c x" (OOV left): 0.5/1
       (11L, "solo")     // no bigrams -> NULL
     ).toDF("doc_id", "text")
-    def scores(m: TextAnalysis.BigramLm) =
+    def scores(m: TextAnalysis.BigramLmByClass) =
       TextAnalysis.bigramLmApply(m, held).collect()
         .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
     val r = scores(lm)
@@ -344,16 +307,16 @@ class PipelineSpec extends SparkSpec {
     assert(r(11L).isEmpty, r(11L).toString)
     val dir = tmpDir("lm_model")
     lm.save(dir)
-    val loaded = TextAnalysis.BigramLm.load(spark, dir)
-    assert(loaded.vocabSize == lm.vocabSize && loaded.k == lm.k &&
-      loaded.capTokens == lm.capTokens)
+    val loaded = TextAnalysis.BigramLmByClass.load(spark, dir)
+    assert(loaded.vocab.collect().toSet == lm.vocab.collect().toSet &&
+      loaded.k == lm.k && loaded.capTokens == lm.capTokens)
     assert(scores(loaded) == r)
   }
 
   test("ccnet: end-to-end from a loaded weight file and persisted per-language LMs") {
     // the production shape the library operator exists for: a trained
     // (token, class, weight) model FILE + per-language reference LMs
-    // persisted with BigramLm.save, composed by Pipelines.ccnet
+    // persisted with BigramLmByClass.save, composed by Pipelines.ccnet
     val classes = Seq("aa", "bb", "cc")
     val weightsDf = Seq(
       ("alpha", "aa", 5.0), ("beta", "bb", 5.0), ("gamma", "cc", 5.0)
@@ -377,7 +340,7 @@ class PipelineSpec extends SparkSpec {
       val fit = TextAnalysis.bigramLmFit(corpus.filter(
         col("doc_id") >= ci * 100 && col("doc_id") < ci * 100 + 12))
       fit.save(s"$tmp/$c")
-      c -> TextAnalysis.BigramLm.load(spark, s"$tmp/$c")
+      c -> TextAnalysis.BigramLmByClass.load(spark, s"$tmp/$c")
     }.toMap
     // head tercile only (midKeepPermille = 0): output must be exactly the
     // per-class lowest-NLL value-tercile under the counted-cutoff rule

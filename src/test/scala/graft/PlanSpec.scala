@@ -27,11 +27,6 @@ class PlanSpec extends SparkSpec {
     Set("dd_jaccard_pairs", "dd_embed_cosine", "r1_knn_join",
       "tx_bm25_topk", "tx_bm25_batch", "hy_rrf_fusion",
       "hy_rrf_filtered", // same 1-row BM25 stats attach as hy_rrf_fusion
-      // bigramLmScore crossJoins a broadcast ONE-ROW vocab-size frame into
-      // the scoring pass — the same map-side constant attach as BM25
-      // pl_ccnet_perlang carries one such 1-row attach PER language chain
-      "tx_lm_score", "pl_lm_buckets", "pl_lm_mix", "pl_ccnet",
-      "pl_ccnet_perlang",
       // the Zipf gate crossJoins two ONE-ROW aggregates (totals × slope)
       "tx_zipf_stats",
       // the joined-model classifier fans each doc out over the BOUNDED

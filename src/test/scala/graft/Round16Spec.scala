@@ -89,46 +89,6 @@ class Round16Spec extends SparkSpec {
     } finally { pred.unpersist(); graft.pipeline.StageCaches.unpersistAll() }
   }
 
-  test("trigramLmApplyJoined equals per-class trigramLmApply (all backoff branches)") {
-    val pred = predFrame.cache()
-    try {
-      // fit on a SUBSET per class (doc_id <= 7) and score everything —
-      // held-out docs exercise the unseen-trigram and unseen-bigram
-      // backoff branches and the add-one unigram floor
-      val fitPart = pred.filter(col("doc_id") <= 7)
-      val perClass = Classes.map { c =>
-        val part = pred.filter(col("pred_class") === c)
-        TextAnalysis.trigramLmApply(
-            TextAnalysis.trigramLmFit(
-              fitPart.filter(col("pred_class") === c), "text", "doc_id"),
-            part, "text", "doc_id")
-          .withColumn("pred_class", lit(c))
-      }.reduce(_.unionByName(_))
-        .collect().map(r => r.getLong(0) ->
-          (r.getString(2), Option(r.get(1)))).toMap
-      val lm = TextAnalysis.trigramLmFitByClass(fitPart, "text", "doc_id",
-        "pred_class")
-      val joined = TextAnalysis.trigramLmApplyJoined(lm, pred, "text",
-          "doc_id", "pred_class")
-        .collect().map(r => r.getLong(0) ->
-          (r.getString(1), Option(r.get(2)))).toMap
-      assert(joined.keySet == perClass.keySet)
-      val drift = perClass.keys.filter(k => joined(k) != perClass(k))
-      assert(drift.isEmpty,
-        s"scores drifted: ${drift.map(k => (k, perClass(k), joined(k))).mkString(", ")}")
-      // short docs carry NULL through both engines
-      assert(perClass(9L)._2.isEmpty && perClass(10L)._2.isEmpty)
-      // save/load roundtrip
-      val dir = tmpDir("trilmbyclass")
-      lm.save(dir)
-      val loaded = TextAnalysis.TrigramLmByClass.load(spark, dir)
-      val reloaded = TextAnalysis.trigramLmApplyJoined(loaded, pred, "text",
-          "doc_id", "pred_class")
-        .collect().map(r => r.getLong(0) -> Option(r.get(2))).toMap
-      assert(reloaded == joined.view.mapValues(_._2).toMap)
-    } finally { pred.unpersist(); graft.pipeline.StageCaches.unpersistAll() }
-  }
-
   test("BigramLmByClass save/load roundtrip scores identically") {
     val pred = predFrame
     val lm = TextAnalysis.bigramLmFitByClass(pred, "text", "doc_id",

@@ -174,12 +174,13 @@ class Round17Spec extends SparkSpec {
       (2L, "x", "d a b"),
       (3L, "y", "p q r p q r"),
       (4L, "y", "q r p")).toDF("doc_id", "cls", "text")
-    val lm0 = TextAnalysis.trigramLmFitByClass(docs, "text", "doc_id", "cls")
-    val lm1 = TextAnalysis.trigramLmFitByClass(docs, "text", "doc_id", "cls",
-      minCount = 1)
-    val a = TextAnalysis.trigramLmApplyJoined(lm0, docs, "text", "doc_id", "cls")
+    val lm0 = TextAnalysis.ngramLmFitByClass(docs, "text", "doc_id", "cls",
+      order = 3)
+    val lm1 = TextAnalysis.ngramLmFitByClass(docs, "text", "doc_id", "cls",
+      order = 3, minCount = 1)
+    val a = TextAnalysis.ngramLmApplyJoined(lm0, docs, "text", "doc_id", "cls")
       .orderBy("doc_id").collect().toSeq
-    val b = TextAnalysis.trigramLmApplyJoined(lm1, docs, "text", "doc_id", "cls")
+    val b = TextAnalysis.ngramLmApplyJoined(lm1, docs, "text", "doc_id", "cls")
       .orderBy("doc_id").collect().toSeq
     assert(a == b, "minCount=1 drifted from the unpruned fit")
     graft.pipeline.StageCaches.unpersistAll()
@@ -191,14 +192,14 @@ class Round17Spec extends SparkSpec {
     //   unigrams: a*3 b*3 c*2 d*1; N=9 V=4
     // minCount=2 prunes: trigram abd, bigram bd, unigram d
     val fit = Seq((0L, "x", "a b c a b c a b d")).toDF("doc_id", "cls", "text")
-    val lm = TextAnalysis.trigramLmFitByClass(fit, "text", "doc_id", "cls",
-      minCount = 2)
+    val lm = TextAnalysis.ngramLmFitByClass(fit, "text", "doc_id", "cls",
+      order = 3, minCount = 2)
     val score = Seq(
       (10L, "x", "b c a"), // kept trigram: s = c3(bca)/c2(bc) = 2/2 = 1
       (11L, "x", "d a b"), // unseen trigram, kept bg23=ab: s = 0.4*3/3
       (12L, "x", "a b d")) // PRUNED trigram abd, PRUNED bg23=bd, PRUNED uni d
       .toDF("doc_id", "cls", "text") // -> floor: 0.4*0.4*(0+1)/(9+4)
-    val got = TextAnalysis.trigramLmApplyJoined(lm, score, "text", "doc_id",
+    val got = TextAnalysis.ngramLmApplyJoined(lm, score, "text", "doc_id",
         "cls")
       .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
@@ -235,15 +236,16 @@ class Round17Spec extends SparkSpec {
       (3L, "y", "p q r p q r s t"),
       (4L, "y", "q r p"),
       (5L, "y", "s t u")).toDF("doc_id", "cls", "text")
-    val joined = TextAnalysis.trigramLmApplyJoined(
-        TextAnalysis.trigramLmFitByClass(docs, "text", "doc_id", "cls",
-          minCount = 2),
+    val joined = TextAnalysis.ngramLmApplyJoined(
+        TextAnalysis.ngramLmFitByClass(docs, "text", "doc_id", "cls",
+          order = 3, minCount = 2),
         docs, "text", "doc_id", "cls")
       .orderBy("doc_id").collect().toSeq
     val perClass = Seq("x", "y").map { c =>
       val part = docs.filter(col("cls") === c)
-      val lm = TextAnalysis.trigramLmFit(part, "text", "doc_id", minCount = 2)
-      TextAnalysis.trigramLmApply(lm, part, "text", "doc_id")
+      val lm = TextAnalysis.ngramLmFit(part, "text", "doc_id", order = 3,
+        minCount = 2)
+      TextAnalysis.ngramLmApply(lm, part, "text", "doc_id")
         .select(col("doc_id"), lit(c).as("cls"), col("lm_nll"))
     }.reduce(_ unionByName _).orderBy("doc_id").collect().toSeq
     assert(joined == perClass,
@@ -252,31 +254,6 @@ class Round17Spec extends SparkSpec {
   }
 
   // ---------- order-n stupid backoff (ngramLm*) ----------
-
-  test("order-3 ngram engine is bit-equal to the trigram engines (minCount 1 and 2)") {
-    val docs = Seq(
-      (0L, "x", "a b c a b c a b d"),
-      (1L, "x", "b c a d a b"),
-      (2L, "x", "d a b"),
-      (3L, "y", "p q r p q r s t"),
-      (4L, "y", "q r p"),
-      (5L, "y", "s t u"),
-      (6L, "y", "p q")).toDF("doc_id", "cls", "text")
-    for (mc <- Seq(1, 2)) {
-      val tri = TextAnalysis.trigramLmApplyJoined(
-          TextAnalysis.trigramLmFitByClass(docs, "text", "doc_id", "cls",
-            minCount = mc),
-          docs, "text", "doc_id", "cls")
-        .orderBy("doc_id").collect().toSeq
-      val ng = TextAnalysis.ngramLmApplyJoined(
-          TextAnalysis.ngramLmFitByClass(docs, "text", "doc_id", "cls",
-            order = 3, minCount = mc),
-          docs, "text", "doc_id", "cls")
-        .orderBy("doc_id").collect().toSeq
-      assert(ng == tri, s"order-3 ngram drifted from trigram at minCount=$mc")
-    }
-    graft.pipeline.StageCaches.unpersistAll()
-  }
 
   test("5-gram backoff: hand-computed fixture through every branch incl. pruned fallthrough") {
     // fit (class x): a b c d e a b c d e a b c d f — counts:
@@ -307,24 +284,6 @@ class Round17Spec extends SparkSpec {
     assert(got(14L) == round4(-math.log(a * a * a * a * 4.0 / 21)))
     assert(got(15L) == round4(-math.log(a * a * a * a * 1.0 / 21)),
       s"pruned 5-gram did not fall through every backoff order: $got")
-    graft.pipeline.StageCaches.unpersistAll()
-  }
-
-  test("global ngram fit/apply at order 3 equals trigramLmFit/Apply") {
-    val docs = Seq(
-      (0L, "a b c a b c a b d"),
-      (1L, "b c a d a b"),
-      (2L, "d a b x y")).toDF("doc_id", "text")
-    val tri = TextAnalysis.trigramLmApply(
-        TextAnalysis.trigramLmFit(docs, "text", "doc_id", minCount = 2),
-        docs, "text", "doc_id")
-      .orderBy("doc_id").collect().toSeq
-    val ng = TextAnalysis.ngramLmApply(
-        TextAnalysis.ngramLmFit(docs, "text", "doc_id", order = 3,
-          minCount = 2),
-        docs, "text", "doc_id")
-      .orderBy("doc_id").collect().toSeq
-    assert(ng == tri, s"global order-3 drifted from trigram:\n$ng\nvs\n$tri")
     graft.pipeline.StageCaches.unpersistAll()
   }
 

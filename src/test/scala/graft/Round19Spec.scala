@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.index.IvfIndex
 import graft.types.MetricType
 
-/** Round 19: IvfIndex.build's per-cluster stats/radii now ride the
-  * clustered-write job as observed metrics instead of a read-back pass
-  * (nClusters ≤ 64), with the codegen'd read-back kept for larger
-  * cluster counts. These tests pin the contract the change rests on:
-  * the persisted artifacts are value-identical to a read-back of the
-  * written layout, on both the fused and the fallback path. */
+/** IvfIndex.build's per-cluster stats/radii: every build derives them
+  * from one codegen'd read-back of the committed layout, at any
+  * cluster count. These tests pin the contract: the persisted
+  * artifacts are value-identical to a read-back of the written layout,
+  * at small and large cluster counts and for dot product. */
 class Round19Spec extends SparkSpec {
   import spark.implicits._
 
@@ -21,7 +20,7 @@ class Round19Spec extends SparkSpec {
   private def emb(n: Int) =
     (0 until n).map(i => (i.toLong, vecOf(i))).toDF("vec_id", "embedding")
 
-  /** The pre-r19 read-back formula, verbatim: counts + max ‖x − c‖₂ per
+  /** A test-side read-back: counts + max ‖x − c‖₂ per
     * cluster from the WRITTEN layout joined to the WRITTEN centroids. */
   private def readBack(path: String): Map[Int, (Long, Double)] =
     spark.read.parquet(s"$path/clustered")
@@ -34,7 +33,7 @@ class Round19Spec extends SparkSpec {
       .agg(count(lit(1)).as("cnt"), max(col("r")).as("r"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2))).toMap
 
-  test("observed build stats/radii equal a layout read-back (fused path, nClusters <= 64)") {
+  test("build stats/radii equal a layout read-back (nClusters <= 64)") {
     val path = tmpDir("r19_obs_stats")
     IvfIndex.build(spark, emb(600), "embedding", "vec_id", path,
       MetricType.Euclidean, nClusters = 8, maxIter = 3)
@@ -48,10 +47,10 @@ class Round19Spec extends SparkSpec {
         s"expected=${expected.keySet}")
     expected.foreach { case (cid, (cnt, r)) =>
       assert(stats(cid) == cnt, s"count drifted for cluster $cid")
-      // bit-exact: the observed metric computes the same double formula
-      // over the same float inputs the read-back decodes from parquet
+      // bit-exact: the build computes the same double formula over the
+      // same float inputs the read-back decodes from parquet
       assert(radii(cid) == r, s"radius drifted for cluster $cid: " +
-        s"observed=${radii(cid)} read-back=$r")
+        s"persisted=${radii(cid)} read-back=$r")
     }
     assert(stats.values.sum == 600L, "counts must cover every written row")
   }
@@ -72,7 +71,7 @@ class Round19Spec extends SparkSpec {
     assert(stats.values.sum == 800L, "counts must cover every written row")
   }
 
-  test("dot-product build persists counts only (no radii), fused path") {
+  test("dot-product build persists counts only (no radii)") {
     val path = tmpDir("r19_dot_stats")
     IvfIndex.build(spark, emb(300), "embedding", "vec_id", path,
       MetricType.DotProduct, nClusters = 4, maxIter = 2)
