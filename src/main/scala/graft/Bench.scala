@@ -97,7 +97,8 @@ object Bench {
     // per-query diagnostics (query_min_max) bloated the line past any
     // capture window and sbt's own "[success] Total time" trailer displaced
     // it from the last line. So: (1) the full diagnostics now go to a
-    // SIDECAR file ($SPARK_GRAFT_BENCH_OUT, default bench_out.json) and to
+    // SIDECAR file ($SPARK_GRAFT_BENCH_OUT, default bench_out.json in the
+    // project directory — see `projectDir`) and to
     // stderr, BEFORE the contract line; (2) stdout's final line is the
     // compact contract JSON only (metric/value/unit/queries/sf/runs, the
     // pre-r18 shape) with the scalar totals REPEATED at the end of the
@@ -106,7 +107,8 @@ object Bench {
     // the last stdout line. Semantics of every pre-existing field are
     // unchanged; per-query values are the same min-of-N seconds as r16+.
     val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"pass_totals":$passTotals,"query_min_max":$qmm,"max_spread":$maxSpread%.2f}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      new java.io.File(projectDir, "bench_out.json").getPath)
     try {
       val w = new java.io.PrintWriter(outPath, "UTF-8")
       try w.println(fullJson) finally w.close()
@@ -118,5 +120,18 @@ object Bench {
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"pass_totals":$passTotals,"max_spread":$maxSpread%.2f,"total_sec":$total%.3f,"n_queries":${results.size}}""")
     System.out.flush()
     spark.stop()
+  }
+
+  /** The project directory: the nearest ancestor of this class's code
+    * location that holds `build.sbt` (the classes directory sits under
+    * it), so the sidecar lands in the same gitignored place whatever
+    * directory the JVM was started from. Falls back to the working
+    * directory when the classes do not sit in a checkout. */
+  private def projectDir: java.io.File = {
+    val start = scala.util.Try(new java.io.File(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)).toOption
+    Iterator.iterate(start.orNull)(_.getParentFile).takeWhile(_ != null)
+      .find(d => new java.io.File(d, "build.sbt").isFile)
+      .getOrElse(new java.io.File(System.getProperty("user.dir")))
   }
 }

@@ -123,23 +123,25 @@ class GraftDb(val spark: SparkSession, val root: String,
     * index cardinality guards). In the in-cap case both stale legs ride
     * one kind-tagged, shuffle-free RDD union collect — a plan `limit`
     * here would re-split the action into several jobs under AQE. A
-    * still-fresh tombCache entry skips its leg; an in-cap probe leaves
-    * tombCache fresh for the current version, so the serve paths'
-    * tombstoneSet read right after is a pure cache hit. Returns Left(())
+    * tombstone mask already cached by the store skips its leg; otherwise
+    * the probe fills the store's mask cache for this snapshot, so the
+    * serve paths' tombstoneSet read right after, and every job-path read
+    * of the same tombstone version, is a pure cache hit. Returns Left(())
     * when the tail is over `tailCap`; tail rows come back as
     * (kind=0, id, fieldValue). */
   private def servingProbe(st: TableStore, field: String, wm: Long,
       tailCap: Int, scalarCols: Seq[String] = Nil)
       : Either[Unit, Array[org.apache.spark.sql.Row]] = {
     import org.apache.spark.sql.functions.{col, lit, struct}
-    val ver = st.snapshot().map(_.version).getOrElse(-1L)
-    val tombFresh = tombCache.get(st.schema.name).exists(_._1 == ver)
-    val storeWm = st.snapshot().map(_.watermark).getOrElse(0L)
+    // ONE snapshot for both legs: the tail rows and the tombstone ids
+    // come from the same manifest
+    val sn = st.snapshot()
+    val storeWm = sn.map(_.watermark).getOrElse(0L)
     if (storeWm - wm > tailCap) return Left(()) // over cap, zero jobs
     // rawRead, NOT read(): the serve kernels mask tombstoned ids via
-    // `exclude` (tail rows included), and the live-rows anti-join would
-    // cost a broadcast-exchange job per probe
-    val read = st.rawRead()
+    // `exclude` (tail rows included), and the live-rows mask would cost
+    // a tombstone collect of its own on a version move
+    val read = st.rawRead(sn)
     // declared filter columns ride as a 4th struct column (null on the
     // tombstone leg; a null INT placeholder when none are declared, so
     // both legs always share one schema)
@@ -158,33 +160,27 @@ class GraftDb(val spark: SparkSession, val root: String,
           col(field).as("__pv"), psCol)
         .rdd)
     val tombCap = maxServeTombstones
-    val tombLeg =
-      if (tombFresh) None
-      else st.tombstoneIds() match {
-        case None =>
-          tombCache(st.schema.name) = (ver, Some(Set.empty[Long]))
-          None
-        case Some(df) =>
-          // per-partition cap: tombstone files are control-plane sized,
-          // and the total cap is re-checked on the collected rows
-          Some(df.select(lit(1).as("__pk"),
-            col(df.columns.head).cast("long").as("__pid"),
-            lit(null).cast(read.schema(field).dataType).as("__pv"),
-            lit(null).cast(psType).as("__ps"))
-            .rdd.mapPartitions(_.take(tombCap + 1)))
-      }
+    val tombLeg = sn.filterNot(st.tombstoneMaskCached(_, tombCap)).map { s =>
+      // per-partition cap: tombstone files are control-plane sized, and
+      // the total cap is re-checked on the collected rows
+      val df = st.tombstoneDf(s)
+      df.select(lit(1).as("__pk"),
+        col(df.columns.head).cast("long").as("__pid"),
+        lit(null).cast(read.schema(field).dataType).as("__pv"),
+        lit(null).cast(psType).as("__ps"))
+        .rdd.mapPartitions(_.take(tombCap + 1))
+    }
     val rows: Array[org.apache.spark.sql.Row] = (tailLeg, tombLeg) match {
       case (None, None) => Array.empty
       case (Some(a), None) => a.collect()
       case (None, Some(b)) => b.collect()
       case (Some(a), Some(b)) => a.union(b).collect()
     }
-    if (tombLeg.isDefined) {
-      val tombRows = rows.filter(_.getInt(0) == 1)
-      tombCache(st.schema.name) = (ver,
-        if (tombRows.length > tombCap) None
-        else Some(tombRows.map(_.getLong(1)).toSet))
-    }
+    // fills the store's mask cache, so the serve paths' tombstoneMask
+    // read right after — and the job-path reads — cost no job
+    if (tombLeg.isDefined)
+      st.offerTombstoneIds(sn.get,
+        rows.filter(_.getInt(0) == 1).map(_.getLong(1)), tombCap)
     val tailRows = rows.filter(_.getInt(0) == 0)
     if (tailRows.length > tailCap) Left(()) else Right(tailRows)
   }
@@ -396,36 +392,27 @@ class GraftDb(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Serving tombstone cap, the symmetric twin of `maxServeTailRows`: the
-    * driver-resident delete mask is bounded, and a delete-heavy table
-    * falls back to the job path (distributed anti-join) instead of
-    * pinning millions of ids on the driver. A tail this large also means
-    * the purge-compaction is overdue. */
-  @volatile var maxServeTombstones: Int = 1000000
-
-  // tombstone ids as a driver Set, re-collected only when the snapshot
-  // version moves (tombstones are control-plane sized; serving must not
-  // run a Spark job per query to learn them). None = over the cap.
-  private val tombCache =
-    scala.collection.concurrent.TrieMap[String, (Long, Option[Set[Long]])]()
-  private def tombstoneSet(st: TableStore): Option[Set[Long]] = {
-    val ver = st.snapshot().map(_.version).getOrElse(-1L)
-    tombCache.get(st.schema.name) match {
-      // the cap applies to cached sets too (it can be lowered live)
-      case Some((v, s)) if v == ver =>
-        if (s.exists(_.size > maxServeTombstones)) None else s
-      case _ =>
-        val s = st.tombstoneIds() match {
-          case None => Some(Set.empty[Long])
-          case Some(df) =>
-            val rows = df.limit(maxServeTombstones + 1).collect()
-            if (rows.length > maxServeTombstones) None
-            else Some(rows.map(_.getLong(0)).toSet)
-        }
-        tombCache(st.schema.name) = (ver, s)
-        s
-    }
+  /** Tombstone mask cap, the symmetric twin of `maxServeTailRows`: the
+    * driver-resident delete mask is bounded. Above it a delete-heavy table
+    * serves from the job path, and every read anti-joins the tombstone
+    * files (see TableStore.maskCap) instead of pinning millions of ids on
+    * the driver. A mask this large also means the purge-compaction is
+    * overdue. Setting it applies to every open table. */
+  @volatile private var tombCap: Int = TableStore.DefaultMaskCap
+  def maxServeTombstones: Int = tombCap
+  def maxServeTombstones_=(n: Int): Unit = {
+    tombCap = n
+    stores.values.foreach(_.maskCap = n)
   }
+
+  /** The latest snapshot's tombstone mask, from the store's per-version
+    * cache (serving must not run a Spark job per query to learn it).
+    * None = over the cap. */
+  private def tombstoneSet(st: TableStore): Option[graft.store.TombstoneMask] =
+    st.snapshot() match {
+      case Some(sn) => st.tombstoneMask(sn, maxServeTombstones)
+      case None => Some(graft.store.TombstoneMask.empty(spark))
+    }
 
   def createTable(schemaJson: String): TableSchema = {
     val schema = SchemaJson.read(schemaJson)
@@ -434,7 +421,7 @@ class GraftDb(val spark: SparkSession, val root: String,
     if (listTables().size >= quotaMaxTables)
       throw new IllegalStateException(
         s"table quota exceeded: database allows $quotaMaxTables tables")
-    stores(schema.name) = TableStore.create(spark, tablePath(schema.name), schema)
+    stores(schema.name) = withMaskCap(TableStore.create(spark, tablePath(schema.name), schema))
     schema
   }
 
@@ -446,7 +433,6 @@ class GraftDb(val spark: SparkSession, val root: String,
     sparseIndexes.keySet.filter(_._1 == name).foreach(sparseIndexes.remove)
     tailCache.keySet.filter(_._1 == name).foreach(tailCache.remove)
     sparseTailCache.keySet.filter(_._1 == name).foreach(sparseTailCache.remove)
-    tombCache.remove(name)
     declaredServeFilterCols.keySet.filter(_._1 == name)
       .foreach(declaredServeFilterCols.remove)
     statsFragCache.keySet.filter(_._1 == name).foreach(statsFragCache.remove)
@@ -471,7 +457,9 @@ class GraftDb(val spark: SparkSession, val root: String,
     }
 
   def store(name: String): TableStore =
-    stores.getOrElseUpdate(name, TableStore.open(spark, tablePath(name)))
+    stores.getOrElseUpdate(name, withMaskCap(TableStore.open(spark, tablePath(name))))
+
+  private def withMaskCap(st: TableStore): TableStore = { st.maskCap = tombCap; st }
 
   /** POST /data/insert analog: `{"table": t, "data": [...], "upsert": bool}`.
     * Returns `{"inserted": n, "skipped": m}`. */
@@ -2201,7 +2189,6 @@ class GraftDb(val spark: SparkSession, val root: String,
     bm25Indexes.clear()
     tailCache.clear()
     sparseTailCache.clear()
-    tombCache.clear()
   }
 
   /** POST /api/dump analog (web_controller.hpp:202-234 → db_server.cpp:82
@@ -2711,26 +2698,35 @@ class GraftDb(val spark: SparkSession, val root: String,
     case _ => Nil
   }
 
-  /** Bounded JSON rendering: rows stream through `toLocalIterator` (one
-    * partition on the driver at a time, never the whole result), and the
-    * row count is capped at `maxRenderRows` unless the request set
-    * `"unbounded": true`. The reference happily serializes the whole table
-    * through one response (limit default 1<<30); at 100 TB that is a
-    * driver OOM, so the cap makes the caller choose the DataFrame surface
-    * deliberately. */
+  /** Bounded JSON rendering. A capped request takes at most
+    * `maxRenderRows + 1` rows, each projected to one `to_json(struct(*))`
+    * string (byte-identical to `toJSON`), in ONE collect: over a sorted
+    * result that plans as a single-stage TakeOrderedAndProject, so a read
+    * is one Spark job. Seeing the extra row means the result exceeds the
+    * cap. `"unbounded": true` streams through `toLocalIterator` instead
+    * (one partition on the driver at a time, never the whole result). The
+    * reference happily serializes the whole table through one response
+    * (limit default 1<<30); at 100 TB that is a driver OOM, so the cap
+    * makes the caller choose the DataFrame surface deliberately. */
   private def render(out: DataFrame, facetDfs: Seq[DataFrame], facets: Seq[Facet],
       unbounded: Boolean = false): String = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    val rows: Iterator[String] =
+      if (unbounded) out.toJSON.toLocalIterator().asScala
+      else {
+        val take = math.min(maxRenderRows.toLong + 1, Int.MaxValue).toInt
+        val capped = out.limit(take).select(to_json(struct(col("*")))).collect()
+        if (capped.length > maxRenderRows)
+          throw new IllegalStateException(
+            s"result exceeds maxRenderRows=$maxRenderRows; pass \"unbounded\":true " +
+              "or use the DataFrame API (queryDataFrame/getDataFrame)")
+        capped.iterator.map(_.getString(0))
+      }
     val sb = new java.lang.StringBuilder("{\"result\":[")
-    val it = out.toJSON.toLocalIterator()
-    var n = 0L
     var first = true
-    while (it.hasNext) {
-      if (!unbounded && n >= maxRenderRows)
-        throw new IllegalStateException(
-          s"result exceeds maxRenderRows=$maxRenderRows; pass \"unbounded\":true " +
-            "or use the DataFrame API (queryDataFrame/getDataFrame)")
+    rows.foreach { r =>
       if (!first) sb.append(',')
-      sb.append(it.next()); first = false; n += 1
+      sb.append(r); first = false
     }
     sb.append(']')
     if (facets.nonEmpty) {

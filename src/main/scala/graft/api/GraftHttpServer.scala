@@ -42,6 +42,7 @@ class GraftHttpServer(val catalog: GraftCatalog, port: Int) {
     }, port)
   }
 
+  GraftHttpServer.noDelay()
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
 
@@ -243,4 +244,18 @@ class GraftHttpServer(val catalog: GraftCatalog, port: Int) {
       case org.json4s.JString(s) => s
       case _ => throw new IllegalArgumentException("missing table")
     }
+}
+
+object GraftHttpServer {
+  // The JDK server flushes a response's headers, then writes its body as
+  // a second small segment; under Nagle that segment waits for the
+  // client's delayed ACK (up to 40 ms a request). The server reads this
+  // property once per JVM, when it creates its first server, so it is set
+  // here — before any GraftHttpServer creates one — unless the user
+  // already chose a value.
+  private lazy val setNoDelay: Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def noDelay(): Unit = setNoDelay
 }

@@ -54,6 +54,12 @@ package object functions {
       bf: org.apache.spark.util.sketch.BloomFilter): Column =
     col(BloomMightContainLong(ex(c), bf))
 
+  /** True iff the row id is not among the broadcast's sorted tombstone ids
+    * (see NotTombstoned); `count` is the array's length, for explain. */
+  def not_tombstoned(rowId: Column,
+      ids: org.apache.spark.broadcast.Broadcast[Array[Long]], count: Int): Column =
+    col(NotTombstoned(ex(rowId), ids, count))
+
   /** k affine minhash minimums in one pass over an array<long> column. */
   def minhash_signature(c: Column, a: Array[Long], b: Array[Long], p: Long): Column =
     col(MinHashSignature(ex(c), a, b, p))

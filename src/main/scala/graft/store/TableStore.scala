@@ -45,8 +45,10 @@ case class DeleteResult(deleted: Long)
   *
   * Scale notes: appends are pure file additions (no shuffle); PK dedup is a
   * broadcast-or-shuffle left-anti join on the PK (what Delta MERGE does);
-  * tombstone application is a broadcast anti-join while tombstones are small,
-  * with periodic `compact()` folding them into the base files.
+  * tombstones are applied as a driver-cached mask shipped once per
+  * tombstone version (a broadcast membership filter, no join) up to
+  * `maskCap` ids and as a broadcast anti-join above it, with periodic
+  * `compact()` folding them into the base files.
   */
 class TableStore(val spark: SparkSession, val path: String, val schema: TableSchema) {
   import TableStore._
@@ -158,12 +160,69 @@ class TableStore(val spark: SparkSession, val path: String, val schema: TableSch
   // skips the per-read parquet footer-inference job
   private val tombSchema = StructType(Seq(StructField(RowId, LongType)))
 
+  private[graft] def tombstoneDf(sn: Snapshot): DataFrame =
+    spark.read.schema(tombSchema).parquet(sn.tombs: _*)
+
+  /** Most tombstone ids the driver holds as a mask. Above it a read
+    * anti-joins the tombstone files instead (GraftDb routes its
+    * `maxServeTombstones` here). */
+  @volatile private[graft] var maskCap: Int = DefaultMaskCap
+
+  // the mask of ONE tombstone version, keyed by the snapshot's tomb-dir
+  // list: tomb dirs are immutable and only ever appended (compact() resets
+  // the list to Nil), so an equal list means equal ids. `cap` is the cap
+  // the entry was judged under; None = more ids than that cap.
+  private final case class MaskEntry(tombs: Seq[String], cap: Int,
+      mask: Option[TombstoneMask])
+  @volatile private var maskEntry: Option[MaskEntry] = None
+  private val maskLock = new Object
+
+  private def maskHit(sn: Snapshot, cap: Int): Option[Option[TombstoneMask]] =
+    if (sn.tombs.isEmpty) Some(Some(TombstoneMask.empty(spark)))
+    else maskEntry.filter(_.tombs == sn.tombs).flatMap {
+      // the cap applies to cached masks too (it can be lowered live)
+      case MaskEntry(_, _, Some(m)) => Some(if (m.size > cap) None else Some(m))
+      case MaskEntry(_, c, None) => if (cap <= c) Some(None) else None
+    }
+
+  /** True when `tombstoneMask(sn, cap)` answers without a Spark job. */
+  private[graft] def tombstoneMaskCached(sn: Snapshot, cap: Int): Boolean =
+    maskHit(sn, cap).isDefined
+
+  /** The tombstoned row ids of `sn` as a driver-side mask, collected once
+    * per tombstone version (one job) and cached; None when there are more
+    * than `cap` of them — the caller then anti-joins `tombstoneDf(sn)`. */
+  private[graft] def tombstoneMask(sn: Snapshot, cap: Int = maskCap)
+      : Option[TombstoneMask] =
+    maskHit(sn, cap).getOrElse(maskLock.synchronized {
+      maskHit(sn, cap).getOrElse {
+        // per-partition take: one job, and the total is re-checked below
+        val ids = tombstoneDf(sn).rdd.mapPartitions(_.take(cap + 1).map(_.getLong(0)))
+          .collect()
+        offerTombstoneIds(sn, ids, cap)
+      }
+    })
+
+  /** Record ids collected elsewhere for `sn` (the serving probe's union
+    * leg, which holds at most `cap + 1` per partition) as its mask. */
+  private[graft] def offerTombstoneIds(sn: Snapshot, ids: Array[Long],
+      cap: Int): Option[TombstoneMask] = {
+    val mask = if (ids.length > cap) None else Some(TombstoneMask(spark, ids))
+    maskEntry = Some(MaskEntry(sn.tombs, cap, mask))
+    mask
+  }
+
+  /** Live rows: tombstoned ids masked by a broadcast membership filter
+    * (no job, no exchange) while the mask fits `maskCap`; above it, a
+    * broadcast anti-join against the tombstone files. */
   private def readSnapshot(s: Option[Snapshot]): DataFrame = s match {
     case Some(sn) if sn.data.nonEmpty =>
       val raw = rawRead(s)
       if (sn.tombs.isEmpty) raw
-      else raw.join(broadcast(spark.read.schema(tombSchema).parquet(sn.tombs: _*)),
-        Seq(RowId), "left_anti")
+      else tombstoneMask(sn) match {
+        case Some(m) => if (m.size == 0) raw else raw.filter(m.live(col(RowId)))
+        case None => raw.join(broadcast(tombstoneDf(sn)), Seq(RowId), "left_anti")
+      }
     case _ => emptyDf
   }
 
@@ -486,10 +545,27 @@ class TableStore(val spark: SparkSession, val path: String, val schema: TableSch
   /** Tombstoned row ids of the latest snapshot (None when there are none).
     * Tiny relative to data — callers broadcast it in anti-joins. */
   def tombstoneIds(): Option[DataFrame] = snapshot() match {
-    case Some(sn) if sn.tombs.nonEmpty =>
-      Some(spark.read.schema(tombSchema).parquet(sn.tombs: _*))
+    case Some(sn) if sn.tombs.nonEmpty => Some(tombstoneDf(sn))
     case _ => None
   }
+}
+
+/** The tombstoned row ids of one snapshot, sorted and distinct, on the
+  * driver. Serving tests membership directly; reads filter with
+  * `live`, whose broadcast is created on first use and then shared by
+  * every read of this tombstone version. */
+final class TombstoneMask private (spark: SparkSession, ids: Array[Long]) {
+  def size: Int = ids.length
+  def contains(id: Long): Boolean = java.util.Arrays.binarySearch(ids, id) >= 0
+  private lazy val shipped = spark.sparkContext.broadcast(ids)
+  /** Predicate: the row id column is not tombstoned. */
+  def live(rowId: Column): Column = graft.functions.not_tombstoned(rowId, shipped, size)
+}
+
+object TombstoneMask {
+  def apply(spark: SparkSession, ids: Array[Long]): TombstoneMask =
+    new TombstoneMask(spark, ids.distinct.sorted)
+  def empty(spark: SparkSession): TombstoneMask = new TombstoneMask(spark, Array.emptyLongArray)
 }
 
 object TableStore {
@@ -500,6 +576,9 @@ object TableStore {
     * cross-process writer creates its dirs before committing the manifest
     * that references them. */
   val DefaultVacuumGraceMs: Long = 15L * 60 * 1000
+
+  /** Default `maskCap`: tombstone ids a driver-side mask may hold. */
+  val DefaultMaskCap: Int = 1000000
 
   /** Target rows per partition for ingest shuffles/writes. */
   val IngestRowsPerPartition: Long = 500000L

@@ -114,10 +114,19 @@ class ApiSpec extends SparkSpec {
         |{"name":"ID","dataType":"BIGINT","primaryKey":true},
         |{"name":"Doc","dataType":"STRING","primaryKey":false}]}""".stripMargin)
     capped.store("Big").insert((1L to 500L).map(i => (i, s"doc$i")).toDF("ID", "Doc"))
+    val capMessage = "result exceeds maxRenderRows=50; pass \"unbounded\":true " +
+      "or use the DataFrame API (queryDataFrame/getDataFrame)"
     val e = intercept[IllegalStateException] {
       capped.get("""{"table":"Big"}""")
     }
-    assert(e.getMessage.contains("maxRenderRows"))
+    assert(e.getMessage == capMessage)
+    // the cap is exact: maxRenderRows rows render, one more refuses
+    assert(JsonMethods.parse(capped.get("""{"table":"Big","limit":50}"""))
+      .\("result").asInstanceOf[JArray].arr.size == 50)
+    val over = intercept[IllegalStateException] {
+      capped.get("""{"table":"Big","limit":51}""")
+    }
+    assert(over.getMessage == capMessage)
     // explicit opt-out matches the reference's unbounded default
     val all = JsonMethods.parse(capped.get("""{"table":"Big","unbounded":true}"""))
     assert((all \ "result").asInstanceOf[JArray].arr.size == 500)

@@ -47,6 +47,18 @@ class HttpApiSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert((JsonMethods.parse(body) \ "message") == JString("Server is online!"))
   }
 
+  test("small responses are not held back by Nagle: median GET /state round trip < 30 ms") {
+    get("/state") // connection + handler warm-up
+    // with Nagle on, the body segment waits for the client's delayed ACK
+    // of the header segment, so every round trip took >= 40 ms
+    val ms = (1 to 21).map { _ =>
+      val t0 = System.nanoTime()
+      assert(get("/state")._1 == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(10) < 30.0, s"median ${ms(10)} ms over ${ms.mkString(", ")}")
+  }
+
   test("five-city golden flow over HTTP: create, insert(dup), query, filter, delete, stats") {
     val (cc, cb) = post("/api/default/schema/tables",
       """{"name":"MyTable","fields":[

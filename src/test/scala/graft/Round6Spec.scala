@@ -186,35 +186,21 @@ class Round6Spec extends SparkSpec {
     // watermark; the serve cache must NOT flush (gen unchanged) — the new
     // row arrives via the fresh tail above the serving pin
     db.insert("""{"table":"T","data":[{"ID":9000,"V":[0.5,0.5,0.5,0.5]}]}""")
-    var jobs = 0
-    val stageDetails = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs += 1
-        js.stageInfos.foreach(si => stageDetails.add(si.details))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val served = db.query(q)
-      assert(served.contains("\"served\":true"), served)
-      // the fresh row is the exact query point: distance 0, rank 1
-      val top = "\"__row_id\":(\\d+)".r.findFirstMatchIn(served).get.group(1).toLong
-      assert(top == 601L, s"appended row must serve from the tail: $served")
-      Thread.sleep(300)
-      // ONLY the tail re-collect may run (CollectLimit scale-up can split
-      // it into a few jobs) — no cluster reload, no centroid re-read (the
-      // regression this test pins: append used to flush all residency)
-      val offenders = stageDetails.toArray(Array.empty[String])
-        .filter(d => d.contains("loadClusters") || d.contains("centroids"))
-      assert(offenders.isEmpty,
-        s"append flushed serving residency:\n${offenders.mkString("\n").take(800)}")
-      jobs = 0
-      val again = db.query(q)
-      assert(again.contains("\"served\":true"))
-      Thread.sleep(300)
-      assert(jobs == 0, s"fully warm serve ran $jobs job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (served, jobs) = countJobs(db.query(q))
+    assert(served.contains("\"served\":true"), served)
+    // the fresh row is the exact query point: distance 0, rank 1
+    val top = "\"__row_id\":(\\d+)".r.findFirstMatchIn(served).get.group(1).toLong
+    assert(top == 601L, s"appended row must serve from the tail: $served")
+    // ONLY the tail re-collect may run (CollectLimit scale-up can split
+    // it into a few jobs) — no cluster reload, no centroid re-read (the
+    // regression this test pins: append used to flush all residency)
+    val offenders = jobs.stageDetails
+      .filter(d => d.contains("loadClusters") || d.contains("centroids"))
+    assert(offenders.isEmpty,
+      s"append flushed serving residency:\n${offenders.mkString("\n").take(800)}")
+    val (again, warm) = countJobs(db.query(q))
+    assert(again.contains("\"served\":true"))
+    assert(warm.n == 0, s"fully warm serve ran ${warm.n} job(s)")
     // a FULL rebuild (gen bump) must flush and re-pin: force via drift
     val data = (9001 to 9500).map(i =>
       s"""{"ID":$i,"V":[${(i % 83) / 83.0f},0.1,0.1,0.1]}""").mkString("[", ",", "]")

@@ -362,22 +362,10 @@ class Round9Spec extends SparkSpec {
     val before = idx.quantRerankCount()
     idx.servePointQuantizedDetail("vec", q, 10, nProbe = np,
       certify = true) // warm residency (this one reranks too)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (hits, reranked) =
-      try {
-        val r = idx.servePointQuantizedDetail("vec", q, 10, nProbe = np,
-          certify = true).get
-        Thread.sleep(300)
-        assert(jobs.get() == 1,
-          s"warm near-tie serve must cost exactly ONE rerank job, ran ${jobs.get()}")
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val ((hits, reranked), jobs) = countJobs(
+      idx.servePointQuantizedDetail("vec", q, 10, nProbe = np, certify = true).get)
+    assert(jobs.n == 1,
+      s"warm near-tie serve must cost exactly ONE rerank job, ran ${jobs.n}")
     assert(reranked > 0, "near-tie boundary must trigger the float rerank")
     assert(idx.quantRerankCount() >= before + 2) // warm call reranked too
     assert(hits.map(_._1).toSeq == exact.map(_._1).toSeq,
@@ -405,23 +393,12 @@ class Round9Spec extends SparkSpec {
     val q = Array(0.01f, 0f, 0f, 0f)
     idx.servePointQuantized("vec", q, 10, nProbe = np) // warm residency
     val before = idx.quantRerankCount()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (hits, reranked) =
-        idx.servePointQuantizedDetail("vec", q, 10, nProbe = np,
-          certify = true).get
-      Thread.sleep(300)
-      assert(jobs.get() == 0, s"certified warm serve ran ${jobs.get()} job(s)")
-      assert(reranked == 0, "separated data must certify without a rerank")
-      assert(hits.map(_._1).toSeq ==
-        idx.servePoint("vec", q, 10, nProbe = np).get.map(_._1).toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val ((hits, reranked), jobs) = countJobs(
+      idx.servePointQuantizedDetail("vec", q, 10, nProbe = np, certify = true).get)
+    assert(jobs.n == 0, s"certified warm serve ran ${jobs.n} job(s)")
+    assert(reranked == 0, "separated data must certify without a rerank")
+    assert(hits.map(_._1).toSeq ==
+      idx.servePoint("vec", q, 10, nProbe = np).get.map(_._1).toSeq)
     assert(idx.quantRerankCount() == before)
   }
 
@@ -468,32 +445,19 @@ class Round9Spec extends SparkSpec {
     assert(db.query(q).contains("\"served\":true")) // warm residency+tail+tombs
     // ONE snapshot move: an insert (auto-appended above the serving pin)
     db.insert("""{"table":"T","data":[{"ID":9000,"V":[0.5,0.5,0.5,0.5]}]}""")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val details = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        details.add(js.stageInfos.map(_.details.linesIterator.take(3).mkString(" | "))
-          .mkString("<<", " >> ", ">>"))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val served = db.query(q)
-      assert(served.contains("\"served\":true"), served)
-      // the appended exact-match row serves from the tail of that one probe
-      val top = "\"__row_id\":(\\d+)".r.findFirstMatchIn(served).get.group(1).toLong
-      assert(top == 601L, s"appended row must serve from the tail: $served")
-      Thread.sleep(300)
-      assert(jobs.get() == 1,
-        s"a version move must cost exactly ONE probe job (tail+tombs), ran ${jobs.get()}:\n" +
-          details.toArray(Array.empty[String]).mkString("\n").take(2000))
-      // fully warm serve stays job-free
-      jobs.set(0)
-      assert(db.query(q).contains("\"served\":true"))
-      Thread.sleep(300)
-      assert(jobs.get() == 0, s"fully warm serve ran ${jobs.get()} job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (served, jobs) = countJobs(db.query(q))
+    assert(served.contains("\"served\":true"), served)
+    // the appended exact-match row serves from the tail of that one probe
+    val top = "\"__row_id\":(\\d+)".r.findFirstMatchIn(served).get.group(1).toLong
+    assert(top == 601L, s"appended row must serve from the tail: $served")
+    assert(jobs.n == 1,
+      s"a version move must cost exactly ONE probe job (tail+tombs), ran ${jobs.n}:\n" +
+        jobs.stageDetails.map(_.linesIterator.take(3).mkString(" | "))
+          .mkString("\n").take(2000))
+    // fully warm serve stays job-free
+    val (again, warm) = countJobs(db.query(q))
+    assert(again.contains("\"served\":true"))
+    assert(warm.n == 0, s"fully warm serve ran ${warm.n} job(s)")
     // the tombstone mask refreshed through the coalesced probe still bites:
     // deleted pks never serve
     val nearDeleted = db.query(

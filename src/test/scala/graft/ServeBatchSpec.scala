@@ -69,31 +69,21 @@ class ServeBatchSpec extends SparkSpec {
   test("cold-batch job count does not scale with batch width; warm batch is job-free") {
     // the batch contract: Q queries cost the SAME cold jobs as one query
     // (centroid/stat construction + ONE union load), not Q loads
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    def countJobs(f: => Unit): Int = {
-      jobs = 0
-      spark.sparkContext.addSparkListener(listener)
-      try { f; Thread.sleep(300); jobs }
-      finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def jobsOf(f: => Unit): Int = countJobs(f)._2.n
     val queries = Seq(5, 150, 333, 512).map(i => (i.toLong, corpus(i)._2)).toArray
     val idxSingle = freshIndex("sb_jobs1")
-    val jSingle = countJobs {
+    val jSingle = jobsOf {
       assert(idxSingle.servePointBatch("embedding", queries.take(1),
         k = 5, nProbe = 2).head._2.isDefined)
     }
     val idxBatch = freshIndex("sb_jobs4")
-    val jBatch = countJobs {
+    val jBatch = jobsOf {
       assert(idxBatch.servePointBatch("embedding", queries,
         k = 5, nProbe = 2).forall(_._2.isDefined))
     }
     assert(jBatch <= jSingle + 1, // +1: the wider union may split its stats read
       s"4-query cold batch ran $jBatch jobs vs $jSingle for 1 query — loads scale with Q")
-    val jWarm = countJobs {
+    val jWarm = jobsOf {
       idxBatch.servePointBatch("embedding", queries, k = 5, nProbe = 2)
     }
     assert(jWarm == 0, s"warm batch ran $jWarm jobs")

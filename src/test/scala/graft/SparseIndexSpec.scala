@@ -172,18 +172,9 @@ class SparseIndexSpec extends SparkSpec {
     val served = idx.servePointDot(qIdx, qVal, 10).get.toSeq
     assert(served == expected)
     // warm re-serve: no job may start
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val warm = idx.servePointDot(qIdx, qVal, 10).get.toSeq
-      assert(warm == expected)
-      Thread.sleep(300)
-      assert(jobs == 0, s"warm sparse serve ran $jobs Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (warm, jobs) = countJobs(idx.servePointDot(qIdx, qVal, 10).get.toSeq)
+    assert(warm == expected)
+    assert(jobs.n == 0, s"warm sparse serve ran ${jobs.n} Spark job(s)")
     // exclusion mask + fresh tail merge on the serve path
     val dead = expected.head._1
     val servedMasked = idx.servePointDot(qIdx, qVal, 10, exclude = _ == dead).get.toSeq
@@ -236,18 +227,10 @@ class SparseIndexSpec extends SparkSpec {
       assert(math.abs(a - b) < 1e-9, s"$a vs $b")
     }
     // warm re-serve: no job may start
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
     val expectedWarm = exact(60)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(idx.servePointEuclid(qIdx, qVal, 60).get.map(_._1).toSeq == expectedWarm)
-      Thread.sleep(300)
-      assert(jobs == 0, s"warm sparse Euclid serve ran $jobs Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (warm, jobs) = countJobs(idx.servePointEuclid(qIdx, qVal, 60).get.map(_._1).toSeq)
+    assert(warm == expectedWarm)
+    assert(jobs.n == 0, s"warm sparse Euclid serve ran ${jobs.n} Spark job(s)")
     // tombstone mask
     val dead = exact(5).head
     val masked = idx.servePointEuclid(qIdx, qVal, 20, exclude = _ == dead)
@@ -481,35 +464,22 @@ class SparseIndexSpec extends SparkSpec {
       s"""{"ID":$i,"SV":{"indices":[${qIdx.mkString(",")}],"values":[${qVal.mkString(",")}]}}"""
     }.mkString("[", ",", "]")
     db.insert(s"""{"table":"SpWarm","data":$fresh}""")
-    var jobs = 0
-    val stageDetails = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs += 1
-        js.stageInfos.foreach(si => stageDetails.add(si.details))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val served = db.query(q)
-      assert(served.contains("\"served\":true"), served)
-      // the 5 fresh rows equal the query vector: distance 0, top ranks
-      val ids = "\"__row_id\":(\\d+)".r.findAllMatchIn(served)
-        .map(_.group(1).toLong).toSeq
-      assert(ids.take(5) == Seq(201L, 202L, 203L, 204L, 205L),
-        s"fresh rows must serve from the tail: $served")
-      Thread.sleep(300)
-      // ONLY the tail re-collect may run (CollectLimit scale-up can split
-      // it) — no posting-list reload, no min-norm re-read
-      val offenders = stageDetails.toArray(Array.empty[String])
-        .filter(d => d.contains("loadDimPostings") || d.contains("residentMinNorms"))
-      assert(offenders.isEmpty,
-        s"append flushed sparse serving residency:\n${offenders.mkString("\n").take(800)}")
-      jobs = 0
-      assert(db.query(q).contains("\"served\":true"))
-      Thread.sleep(300)
-      assert(jobs == 0, s"fully warm sparse serve ran $jobs job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (served, jobs) = countJobs(db.query(q))
+    assert(served.contains("\"served\":true"), served)
+    // the 5 fresh rows equal the query vector: distance 0, top ranks
+    val ids = "\"__row_id\":(\\d+)".r.findAllMatchIn(served)
+      .map(_.group(1).toLong).toSeq
+    assert(ids.take(5) == Seq(201L, 202L, 203L, 204L, 205L),
+      s"fresh rows must serve from the tail: $served")
+    // ONLY the tail re-collect may run (CollectLimit scale-up can split
+    // it) — no posting-list reload, no min-norm re-read
+    val offenders = jobs.stageDetails
+      .filter(d => d.contains("loadDimPostings") || d.contains("residentMinNorms"))
+    assert(offenders.isEmpty,
+      s"append flushed sparse serving residency:\n${offenders.mkString("\n").take(800)}")
+    val (again, warm) = countJobs(db.query(q))
+    assert(again.contains("\"served\":true"))
+    assert(warm.n == 0, s"fully warm sparse serve ran ${warm.n} job(s)")
   }
 
   test("concurrent JSON inserts never double-append postings") {
