@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.index.IvfIndex
+import graft.index.{IvfIndex, ServeProbe, ServeTier, Served}
 import graft.types.MetricType
 
 /** ANN-vs-exact benchmark (the BASELINE.md contract: ANN measured
@@ -252,8 +252,18 @@ object AnnBench {
     // timed loop measures the warm serving tier — at 1M x 960 a single
     // cold load collects ~240 MB, and leaving 19 of them inside the timed
     // window reports cold-load latency as if it were serve throughput
+    // every serve row is one IvfIndex.serve shape: a single query, or the
+    // whole query set as one batch
+    def serveOne(q: Array[Float], tier: ServeTier, probe: ServeProbe,
+        conds: Seq[graft.filter.SimpleConjuncts.Cond]): Option[Served] =
+      idx.serve("embedding", Array(q), 10, tier, probe, conds, _ => false, None).head
+    def serveAll(tier: ServeTier, probe: ServeProbe,
+        conds: Seq[graft.filter.SimpleConjuncts.Cond]): Array[Option[Served]] =
+      idx.serve("embedding", queries, 10, tier, probe, conds, _ => false, None)
+    val near8 = ServeProbe.Nearest(8)
+    val exact1 = ServeProbe.Recall(1.0, 0L)
     val tw = System.nanoTime()
-    queries.foreach(q => idx.servePoint("embedding", q, 10, nProbe = 8))
+    queries.foreach(q => serveOne(q, ServeTier.Float, near8, Nil))
     val coldSec = (System.nanoTime() - tw) / 1e9
     // time-boxed: whole passes over the query set until ~10 s elapsed
     // (fixed iteration counts are wildly off across dims/sizes)
@@ -264,14 +274,14 @@ object AnnBench {
     while (serveQueries == 0L || System.nanoTime() < serveDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        served = idx.servePoint("embedding", queries(qi), 10, nProbe = 8).get
+        served = serveOne(queries(qi), ServeTier.Float, near8, Nil).get.hits
         qi += 1
       }
       serveQueries += queries.length
     }
     val serveSec = (System.nanoTime() - t2) / 1e9
     val serveRecall = exact.zip(queries.map(q =>
-      idx.servePoint("embedding", q, 10, nProbe = 8).get.map(_._1).toSeq)).map {
+      serveOne(q, ServeTier.Float, near8, Nil).get.hits.map(_._1).toSeq)).map {
       case (e, a) => e.toSet.intersect(a.toSet).size.toDouble / e.size
     }.sum / exact.length
 
@@ -280,18 +290,17 @@ object AnnBench {
     // every query probing its cluster (dense serving at high dim is
     // bandwidth-bound, so the shared sweep is the serving-side analog of
     // the job-mode batch scan)
-    val batchServeQs = queries.zipWithIndex.map { case (q, i) => (i.toLong, q) }
     val t2b = System.nanoTime()
     val bserveDeadline = t2b + 10L * 1000 * 1000 * 1000
     var bserveQueries = 0L
-    var bserveGot: Array[(Long, Option[Array[(Long, Double)]])] = null
+    var bserveGot: Array[Option[Served]] = null
     while (bserveQueries == 0L || System.nanoTime() < bserveDeadline) {
-      bserveGot = idx.servePointBatch("embedding", batchServeQs, 10, nProbe = 8)
-      bserveQueries += batchServeQs.length
+      bserveGot = serveAll(ServeTier.Float, near8, Nil)
+      bserveQueries += queries.length
     }
     val bserveSec = (System.nanoTime() - t2b) / 1e9
     val bserveRecall = exact.zipWithIndex.map { case (e, i) =>
-      val a = bserveGot(i)._2.map(_.map(_._1).toSeq).getOrElse(Nil)
+      val a = bserveGot(i).map(_.hits.map(_._1).toSeq).getOrElse(Nil)
       e.toSet.intersect(a.toSet).size.toDouble / e.size
     }.sum / exact.length
 
@@ -304,21 +313,22 @@ object AnnBench {
     // recall), then the CERTIFIED mode whose recall is 1.0 by
     // construction — interval-certified id sets, boundary-ambiguous
     // queries float-rerank one pruned job (qserve_reranks counts them).
-    queries.foreach(q => idx.servePointQuantized("embedding", q, 10, nProbe = 8))
+    val quant16 = ServeTier.Quantized(certify = false)
+    queries.foreach(q => serveOne(q, quant16, near8, Nil))
     val t2q = System.nanoTime()
     val qserveDeadline = t2q + 10L * 1000 * 1000 * 1000
     var qserveQueries = 0L
     while (qserveQueries == 0L || System.nanoTime() < qserveDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        idx.servePointQuantized("embedding", queries(qi), 10, nProbe = 8).get
+        serveOne(queries(qi), quant16, near8, Nil).get
         qi += 1
       }
       qserveQueries += queries.length
     }
     val qserveSec = (System.nanoTime() - t2q) / 1e9
     val qserveRecall = exact.zip(queries.map(q =>
-      idx.servePointQuantized("embedding", q, 10, nProbe = 8).get.map(_._1).toSeq)).map {
+      serveOne(q, quant16, near8, Nil).get.hits.map(_._1).toSeq)).map {
       case (e, a) => e.toSet.intersect(a.toSet).size.toDouble / e.size
     }.sum / exact.length
 
@@ -333,8 +343,8 @@ object AnnBench {
     while (qcertQueries == 0L || System.nanoTime() < qcertDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        if (idx.servePointQuantizedDetail("embedding", queries(qi), 10,
-          nProbe = 8, certify = true).isEmpty) qcertDeclines += 1
+        if (serveOne(queries(qi), ServeTier.Quantized(certify = true), near8,
+          Nil).isEmpty) qcertDeclines += 1
         qi += 1
       }
       qcertQueries += queries.length
@@ -342,8 +352,8 @@ object AnnBench {
     val qcertSec = (System.nanoTime() - t2c) / 1e9
     val qcertRecall = {
       val per = exact.zip(queries.map(q =>
-        idx.servePointQuantizedDetail("embedding", q, 10, nProbe = 8,
-          certify = true).map(_._1.map(_._1).toSeq))).collect {
+        serveOne(q, ServeTier.Quantized(certify = true), near8, Nil)
+          .map(_.hits.map(_._1).toSeq))).collect {
         case (e, Some(a)) => e.toSet.intersect(a.toSet).size.toDouble / e.size
       }
       if (per.isEmpty) -1.0 else per.sum / per.length
@@ -357,7 +367,8 @@ object AnnBench {
     // proven-exact id sets off the persisted reconstruction-error bounds
     // (recall 1.0 by construction, reranks counted).
     val tpq0 = System.nanoTime()
-    queries.foreach(q => idx.servePointPq("embedding", q, 10, nProbe = 8))
+    val pqRaw = ServeTier.Pq(certify = false)
+    queries.foreach(q => serveOne(q, pqRaw, near8, Nil))
     val pqColdSec = (System.nanoTime() - tpq0) / 1e9
     val t2p = System.nanoTime()
     val pqServeDeadline = t2p + 10L * 1000 * 1000 * 1000
@@ -365,7 +376,7 @@ object AnnBench {
     while (pqServeQueries == 0L || System.nanoTime() < pqServeDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        idx.servePointPq("embedding", queries(qi), 10, nProbe = 8)
+        serveOne(queries(qi), pqRaw, near8, Nil)
         qi += 1
       }
       pqServeQueries += queries.length
@@ -373,8 +384,8 @@ object AnnBench {
     val pqServeSec = (System.nanoTime() - t2p) / 1e9
     val pqServeRecall = {
       val per = exact.zip(queries.map(q =>
-        idx.servePointPq("embedding", q, 10, nProbe = 8)
-          .map(_.map(_._1).toSeq))).collect {
+        serveOne(q, pqRaw, near8, Nil)
+          .map(_.hits.map(_._1).toSeq))).collect {
         case (e, Some(a)) => e.toSet.intersect(a.toSet).size.toDouble / e.size
       }
       if (per.isEmpty) -1.0 else per.sum / per.length
@@ -386,8 +397,8 @@ object AnnBench {
     while (pqCertQueries == 0L || System.nanoTime() < pqCertDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        if (idx.servePointPqDetail("embedding", queries(qi), 10,
-          nProbe = 8, certify = true).isEmpty) pqCertDeclines += 1
+        if (serveOne(queries(qi), ServeTier.Pq(certify = true), near8,
+          Nil).isEmpty) pqCertDeclines += 1
         qi += 1
       }
       pqCertQueries += queries.length
@@ -395,8 +406,8 @@ object AnnBench {
     val pqCertSec = (System.nanoTime() - t2pc) / 1e9
     val pqCertRecall = {
       val per = exact.zip(queries.map(q =>
-        idx.servePointPqDetail("embedding", q, 10, nProbe = 8,
-          certify = true).map(_._1.map(_._1).toSeq))).collect {
+        serveOne(q, ServeTier.Pq(certify = true), near8, Nil)
+          .map(_.hits.map(_._1).toSeq))).collect {
         case (e, Some(a)) => e.toSet.intersect(a.toSet).size.toDouble / e.size
       }
       if (per.isEmpty) -1.0 else per.sum / per.length
@@ -409,34 +420,32 @@ object AnnBench {
     val tqb = System.nanoTime()
     val bqserveDeadline = tqb + 10L * 1000 * 1000 * 1000
     var bqserveQueries = 0L
-    var bqGot: Array[(Long, Option[(Array[(Long, Double)], Int)])] = null
+    var bqGot: Array[Option[Served]] = null
     while (bqserveQueries == 0L || System.nanoTime() < bqserveDeadline) {
-      bqGot = idx.servePointQuantizedBatchDetail("embedding", batchServeQs,
-        10, nProbe = 8)
-      bqserveQueries += batchServeQs.length
+      bqGot = serveAll(quant16, near8, Nil)
+      bqserveQueries += queries.length
     }
     val bqserveSec = (System.nanoTime() - tqb) / 1e9
     val bqserveRecall = exact.zipWithIndex.map { case (e, i) =>
-      val a = bqGot(i)._2.map(_._1.map(_._1).toSeq).getOrElse(Nil)
+      val a = bqGot(i).map(_.hits.map(_._1).toSeq).getOrElse(Nil)
       e.toSet.intersect(a.toSet).size.toDouble / e.size
     }.sum / exact.length
     val tpb = System.nanoTime()
     val bpqserveDeadline = tpb + 10L * 1000 * 1000 * 1000
     var bpqserveQueries = 0L
-    var bpqGot: Array[(Long, Option[(Array[(Long, Double)], Int)])] = null
+    var bpqGot: Array[Option[Served]] = null
     while (bpqserveQueries == 0L || System.nanoTime() < bpqserveDeadline) {
-      bpqGot = idx.servePointPqBatchDetail("embedding", batchServeQs,
-        10, nProbe = 8)
-      bpqserveQueries += batchServeQs.length
+      bpqGot = serveAll(pqRaw, near8, Nil)
+      bpqserveQueries += queries.length
     }
     val bpqserveSec = (System.nanoTime() - tpb) / 1e9
     val bpqserveRecall = exact.zipWithIndex.map { case (e, i) =>
-      val a = bpqGot(i)._2.map(_._1.map(_._1).toSeq).getOrElse(Nil)
+      val a = bpqGot(i).map(_.hits.map(_._1).toSeq).getOrElse(Nil)
       e.toSet.intersect(a.toSet).size.toDouble / e.size
     }.sum / exact.length
 
     // ATTRIBUTE-FILTERED serving: `label >= 5` evaluated exactly in the
-    // sweep off the resident scalar column (servePointFiltered); recall is
+    // sweep off the resident scalar column (a filtered serve); recall is
     // measured against the FILTERED exact top-10. The first serve pays the
     // scalar cold load + passing-set build; repeats hit the passing-set
     // cache — both inside the timed window, like the other serve rows.
@@ -448,23 +457,22 @@ object AnnBench {
         .withColumn("d", l2sqr_distance(col("embedding"), lit(q)))
         .orderBy(col("d").asc, col("vec_id").asc).limit(10)
         .select("vec_id").collect().map(_.getLong(0)).toSeq)
-    queries.foreach(q =>
-      idx.servePointFiltered("embedding", q, 10, nProbe = 8, fconds))
+    queries.foreach(q => serveOne(q, ServeTier.Float, near8, fconds))
     val tf = System.nanoTime()
     val fserveDeadline = tf + 10L * 1000 * 1000 * 1000
     var fserveQueries = 0L
     while (fserveQueries == 0L || System.nanoTime() < fserveDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        idx.servePointFiltered("embedding", queries(qi), 10, nProbe = 8, fconds).get
+        serveOne(queries(qi), ServeTier.Float, near8, fconds).get
         qi += 1
       }
       fserveQueries += queries.length
     }
     val fserveSec = (System.nanoTime() - tf) / 1e9
     val fserveRecall = exactFiltered.zip(queries.map(q =>
-      idx.servePointFiltered("embedding", q, 10, nProbe = 8, fconds)
-        .get.map(_._1).toSeq)).map {
+      serveOne(q, ServeTier.Float, near8, fconds)
+        .get.hits.map(_._1).toSeq)).map {
       case (e, a) => e.toSet.intersect(a.toSet).size.toDouble / math.max(e.size, 1)
     }.sum / exactFiltered.length
 
@@ -473,15 +481,14 @@ object AnnBench {
     val tfb = System.nanoTime()
     val bfserveDeadline = tfb + 10L * 1000 * 1000 * 1000
     var bfserveQueries = 0L
-    var bfGot: Array[(Long, Option[Array[(Long, Double)]])] = null
+    var bfGot: Array[Option[Served]] = null
     while (bfserveQueries == 0L || System.nanoTime() < bfserveDeadline) {
-      bfGot = idx.servePointFilteredBatch("embedding", batchServeQs, 10,
-        nProbe = 8, fconds)
-      bfserveQueries += batchServeQs.length
+      bfGot = serveAll(ServeTier.Float, near8, fconds)
+      bfserveQueries += queries.length
     }
     val bfserveSec = (System.nanoTime() - tfb) / 1e9
     val bfserveRecall = exactFiltered.zipWithIndex.map { case (e, i) =>
-      val a = bfGot(i)._2.map(_.map(_._1).toSeq).getOrElse(Nil)
+      val a = bfGot(i).map(_.hits.map(_._1).toSeq).getOrElse(Nil)
       e.toSet.intersect(a.toSet).size.toDouble / math.max(e.size, 1)
     }.sum / exactFiltered.length
 
@@ -495,7 +502,7 @@ object AnnBench {
     // geometry) — count them instead of crashing the run, like the
     // certified rows; recall is measured over the SERVED queries
     def codeRow(oracle: Seq[Seq[Long]],
-        serve: Array[Float] => Option[(Array[(Long, Double)], Int)])
+        serve: Array[Float] => Option[Served])
         : (Double, Double, Long) = {
       queries.foreach(serve(_))
       val t0 = System.nanoTime()
@@ -512,7 +519,7 @@ object AnnBench {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       val recalls = oracle.zip(queries.map(q =>
-        serve(q).map(_._1.map(_._1).toSeq))).collect {
+        serve(q).map(_.hits.map(_._1).toSeq))).collect {
         case (e, Some(a)) =>
           e.toSet.intersect(a.toSet).size.toDouble / math.max(e.size, 1)
       }
@@ -520,18 +527,15 @@ object AnnBench {
       ((attempts - declines) / sec, recall, declines)
     }
     val (fqserveQps, fqserveRecall, fqserveDecl) = codeRow(exactFiltered, q =>
-      idx.servePointQuantizedFilteredDetail("embedding", q, 10, nProbe = 8,
-        fconds))
+      serveOne(q, quant16, near8, fconds))
     val (fpqserveQps, fpqserveRecall, fpqserveDecl) = codeRow(exactFiltered,
-      q => idx.servePointPqFilteredDetail("embedding", q, 10, nProbe = 8,
-        fconds))
+      q => serveOne(q, pqRaw, near8, fconds))
 
     // PROVEN-recall filtered serving (passing-count ball cover, target
     // 1.0 ⇒ exact over the filtered universe): the cover re-derives per
     // serve from the resident radii/counts + the cached pass set
     val (frserveQps, frserveRecall, frserveDecl) = codeRow(exactFiltered,
-      q => idx.servePointFilteredRecall("embedding", q, 10, 1.0, fconds)
-        .map((_, 0)))
+      q => serveOne(q, ServeTier.Float, exact1, fconds))
 
     // PROVEN-recall serving on the CODE tiers (round 11): geometric cover
     // × FORCED certification — the floor is proven at code-tier memory
@@ -540,43 +544,37 @@ object AnnBench {
     // UNFILTERED exact top-10 must read 1.0 (any deficit is a bug, not
     // tier lossiness — these rows carry a proof)
     val (rqserveQps, rqserveRecall, rqserveDecl) = codeRow(exact, q =>
-      idx.servePointQuantizedRecallDetail("embedding", q, 10, 1.0))
+      serveOne(q, ServeTier.Quantized(certify = true), exact1, Nil))
     val (rpqserveQps, rpqserveRecall, rpqserveDecl) = codeRow(exact, q =>
-      idx.servePointPqRecallDetail("embedding", q, 10, 1.0))
+      serveOne(q, ServeTier.Pq(certify = true), exact1, Nil))
     // their FILTERED forms: passing-count cover × certification over the
     // masked (= filtered) candidates — proven-exact filtered answers off
     // 16-bit / PQ codes
     val (frqserveQps, frqserveRecall, frqserveDecl) = codeRow(exactFiltered,
-      q => idx.servePointQuantizedFilteredRecallDetail("embedding", q, 10,
-        1.0, fconds))
+      q => serveOne(q, ServeTier.Quantized(certify = true), exact1, fconds))
     val (frpqserveQps, frpqserveRecall, frpqserveDecl) = codeRow(exactFiltered,
-      q => idx.servePointPqFilteredRecallDetail("embedding", q, 10,
-        1.0, fconds))
+      q => serveOne(q, ServeTier.Pq(certify = true), exact1, fconds))
 
     // BATCH proven-recall FILTERED serving: ONE all-cluster pass set +
     // passing-count map serve per-query covers on the shared masked
     // sweep — the batch twin of frserve (recall vs the filtered exact
-    // must read 1.0 on every served entry; a whole-batch decline is
-    // counted, not crashed)
+    // must read 1.0 on every served entry; declined entries are counted,
+    // not crashed)
     val tbfr = System.nanoTime()
     val bfrserveDeadline = tbfr + 10L * 1000 * 1000 * 1000
     var bfrserveQueries = 0L
     var bfrserveDecl = 0L
-    var bfrGot: Option[Array[(Long, Option[Array[(Long, Double)]])]] = None
+    var bfrGot: Array[Option[Served]] = null
     while (bfrserveQueries == 0L || System.nanoTime() < bfrserveDeadline) {
-      bfrGot = idx.servePointFilteredRecallBatch("embedding", batchServeQs,
-        10, 1.0, fconds)
-      if (bfrGot.isEmpty) bfrserveDecl += batchServeQs.length
-      bfrserveQueries += batchServeQs.length
+      bfrGot = serveAll(ServeTier.Float, exact1, fconds)
+      bfrserveDecl += bfrGot.count(_.isEmpty)
+      bfrserveQueries += queries.length
     }
     val bfrserveSec = (System.nanoTime() - tbfr) / 1e9
-    val bfrserveRecall = bfrGot match {
-      case None => 0.0
-      case Some(got) => exactFiltered.zipWithIndex.map { case (e, i) =>
-        val a = got(i)._2.map(_.map(_._1).toSeq).getOrElse(Nil)
-        e.toSet.intersect(a.toSet).size.toDouble / math.max(e.size, 1)
-      }.sum / exactFiltered.length
-    }
+    val bfrserveRecall = exactFiltered.zipWithIndex.map { case (e, i) =>
+      val a = bfrGot(i).map(_.hits.map(_._1).toSeq).getOrElse(Nil)
+      e.toSet.intersect(a.toSet).size.toDouble / math.max(e.size, 1)
+    }.sum / exactFiltered.length
 
     // BATCH proven-recall on the 16-bit tier: per-query covers on the
     // shared code sweep × forced per-query certification — the batch
@@ -585,18 +583,14 @@ object AnnBench {
     val tbr = System.nanoTime()
     val brqserveDeadline = tbr + 10L * 1000 * 1000 * 1000
     var brqserveQueries = 0L
-    var brqGot: Array[(Long, Option[(Array[(Long, Double)], Int)])] = null
+    var brqGot: Array[Option[Served]] = null
     while (brqserveQueries == 0L || System.nanoTime() < brqserveDeadline) {
-      val covers = batchServeQs.map { case (_, q) =>
-        idx.probeSetForRecall(q, 10, 1.0)
-      }
-      brqGot = idx.servePointQuantizedBatchDetail("embedding", batchServeQs,
-        10, nProbe = 8, certify = true, probeSets = Some(covers))
-      brqserveQueries += batchServeQs.length
+      brqGot = serveAll(ServeTier.Quantized(certify = true), exact1, Nil)
+      brqserveQueries += queries.length
     }
     val brqserveSec = (System.nanoTime() - tbr) / 1e9
     val brqserveRecall = exact.zipWithIndex.map { case (e, i) =>
-      val a = brqGot(i)._2.map(_._1.map(_._1).toSeq).getOrElse(Nil)
+      val a = brqGot(i).map(_.hits.map(_._1).toSeq).getOrElse(Nil)
       e.toSet.intersect(a.toSet).size.toDouble / e.size
     }.sum / exact.length
 
@@ -606,7 +600,7 @@ object AnnBench {
     // the served answers must stay byte-identical to the quiescent ones —
     // and residency must stay warm (qps within ~20% of quiescent).
     val quiescent = queries.map(q =>
-      idx.servePoint("embedding", q, 10, nProbe = 8).get.map(_._1).toSeq)
+      serveOne(q, ServeTier.Float, near8, Nil).get.hits.map(_._1).toSeq)
     val dim = queries.head.length
     val stopIngest = new java.util.concurrent.atomic.AtomicBoolean(false)
     val appendsN = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -633,8 +627,8 @@ object AnnBench {
     while (ingestQueries == 0L || System.nanoTime() < ingestDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        val got = idx.servePoint("embedding", queries(qi), 10, nProbe = 8)
-          .map(_.map(_._1).toSeq).getOrElse(Nil)
+        val got = serveOne(queries(qi), ServeTier.Float, near8, Nil)
+          .map(_.hits.map(_._1).toSeq).getOrElse(Nil)
         if (got != quiescent(qi)) ingestWrong += 1
         qi += 1
       }

@@ -516,9 +516,10 @@ object Queries {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfsc_${math.abs(dir.hashCode)}"
       val idx = graft.index.IvfIndex.build(s, emb, "embedding", "vec_id", path,
         graft.types.MetricType.Euclidean, nClusters = 8, maxIter = 3)
-      val hits = idx.servePointQuantizedDetail("embedding",
-        SparkEntry.queryVectorOf(s, dir), 10,
-        nProbe = idx.centroids().length, certify = true).get._1
+      val hits = idx.serve("embedding", Array(SparkEntry.queryVectorOf(s, dir)),
+        10, graft.index.ServeTier.Quantized(certify = true),
+        graft.index.ServeProbe.Nearest(idx.centroids().length), Nil,
+        _ => false, None).head.get.hits
       hits.map(_._1).toSeq.toDF("vec_id")
     }),
     "vq_pq_serve_cert" -> ((s, dir) => {
@@ -527,15 +528,16 @@ object Queries {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpsc_${math.abs(dir.hashCode)}"
       val idx = graft.index.IvfIndex.build(s, emb, "embedding", "vec_id", path,
         graft.types.MetricType.Euclidean, nClusters = 8, maxIter = 3)
-      val hits = idx.servePointPqDetail("embedding",
-        SparkEntry.queryVectorOf(s, dir), 10,
-        nProbe = idx.centroids().length, certify = true).get._1
+      val hits = idx.serve("embedding", Array(SparkEntry.queryVectorOf(s, dir)),
+        10, graft.index.ServeTier.Pq(certify = true),
+        graft.index.ServeProbe.Nearest(idx.centroids().length), Nil,
+        _ => false, None).head.get.hits
       hits.map(_._1).toSeq.toDF("vec_id")
     }),
     // V4 × serving: a `"serve":true` request CARRYING A FILTER through the
     // full GraftDb dispatch. The filter is a simple conjunct over a
     // declared resident column, so the serve tier answers it EXACTLY
-    // (servePointFiltered evaluates the predicate in the sweep) — the gate
+    // (IvfIndex.serve evaluates the predicate in the sweep) — the gate
     // asserts the envelope says served+filtered (a silent decline would
     // still hash-equal via the job path and prove nothing), then
     // value-checks the id set against the DuckDB filtered brute force.
@@ -567,7 +569,7 @@ object Queries {
         .select(col("vec_id")).orderBy("vec_id")
     }),
     // The BATCH form of the same contract: a `queryVectors` request with a
-    // shared filter rides servePointFilteredBatch (one passing-id set for
+    // shared filter rides one filtered IvfIndex.serve (one passing-id set for
     // the whole batch); every entry must be marked served+filtered and
     // value-check against its own filtered brute force.
     "v11_serve_filtered_batch" -> ((s, dir) => {

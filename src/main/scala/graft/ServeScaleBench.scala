@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.index.IvfIndex
+import graft.index.{IvfIndex, ServeProbe, ServeTier}
 import graft.types.MetricType
 
 /** Horizontal serving scale-out bench: N OS processes each open the SAME
@@ -23,6 +23,13 @@ object ServeScaleBench {
   /** The filtered tier's shared conjunction (label >= 5 — half the rows). */
   private[graft] val FilterConds = Seq(graft.filter.SimpleConjuncts.Cond(
     "label", ">=", graft.filter.SimpleConjuncts.NumLit(5.0, isInt = true)))
+
+  /** One query's top-10 through `IvfIndex.serve` (no tail, no mask). */
+  private[graft] def serveHits(idx: IvfIndex, q: Array[Float], tier: ServeTier,
+      probe: ServeProbe, conds: Seq[graft.filter.SimpleConjuncts.Cond])
+      : Option[Array[(Long, Double)]] =
+    idx.serve(VecCol, Array(q), 10, tier, probe, conds, _ => false, None)
+      .head.map(_.hits)
 
   private def javaBin = s"${System.getProperty("java.home")}/bin/java"
 
@@ -47,15 +54,15 @@ object ServeScaleBench {
     // m-byte ADC-resident tier — the shard-residency story at its densest
     // (each worker's warm set is ~50x smaller in bytes, so process count
     // scales before RAM does); "filtered" serves the float tier through
-    // servePointFiltered (label >= 5 over the declared scalar residency)
+    // a filtered serve (label >= 5 over the declared scalar residency)
     // — attribute-filtered serving scales out like the rest; "autoprobe"
-    // serves with the RECALL-TARGETED cover (probeSetForRecall at
+    // serves with the RECALL-TARGETED cover (a Recall serve at
     // SPARK_GRAFT_SCALE_RT, default 1.0) — the radii/counts the cover
     // reads are per-worker stamp-cached off the shared layout, and the
     // leader's appends invalidate them (radius deltas widen the bound),
     // so this tier measures proven-recall serving under live ingest
     // "frecall" serves the PROVEN-recall FILTERED tier
-    // (servePointFilteredRecall at SPARK_GRAFT_SCALE_RT): the
+    // (a filtered Recall serve at SPARK_GRAFT_SCALE_RT): the
     // passing-count ball cover re-derives per serve off each worker's
     // stamp-cached radii/counts + pass set, and the leader's appends
     // invalidate both — proven filtered answers under live ingest
@@ -119,15 +126,16 @@ object ServeScaleBench {
     // frecall's oracle is the EXACT FILTERED answer (full-probe filtered
     // sweep): workers check the declared floor against it
     val expected = queries.map(q =>
-      (if (tier == "pq") idx.servePointPq(VecCol, q, 10, nProbe = 8)
-       else if (tier == "filtered")
-         idx.servePointFiltered(VecCol, q, 10, nProbe = 8, ServeScaleBench.FilterConds)
-       else if (tier == "frecall")
-         idx.servePointFiltered(VecCol, q, 10,
-           nProbe = idx.centroids().length, ServeScaleBench.FilterConds)
-       else if (tier == "autoprobe")
-         idx.servePoint(VecCol, q, 10, nProbe = idx.centroids().length)
-       else idx.servePoint(VecCol, q, 10, nProbe = 8)).get.map(_._1).toSeq)
+      (if (tier == "pq") serveHits(idx, q, ServeTier.Pq(certify = false),
+         ServeProbe.Nearest(8), Nil)
+       else if (tier == "filtered") serveHits(idx, q, ServeTier.Float,
+         ServeProbe.Nearest(8), ServeScaleBench.FilterConds)
+       else if (tier == "frecall") serveHits(idx, q, ServeTier.Float,
+         ServeProbe.Nearest(idx.centroids().length), ServeScaleBench.FilterConds)
+       else if (tier == "autoprobe") serveHits(idx, q, ServeTier.Float,
+         ServeProbe.Nearest(idx.centroids().length), Nil)
+       else serveHits(idx, q, ServeTier.Float, ServeProbe.Nearest(8), Nil))
+        .get.map(_._1).toSeq)
 
     val benchDir = java.nio.file.Paths.get(idxPath, ".scalebench")
     def writeLines(name: String, lines: Seq[String]): Unit = {
@@ -150,7 +158,7 @@ object ServeScaleBench {
         java.nio.file.Files.deleteIfExists(benchDir.resolve(f))
       }
       // each worker's scoring pool gets its FAIR SHARE of the cores:
-      // servePoint fans clusters onto ExecutionContext.global, which
+      // IvfIndex.serve fans clusters onto ExecutionContext.global, which
       // defaults to all machine cores per JVM — N workers would stack
       // N*cores scoring threads and thrash the box sublinear
       val share = math.max(2, Runtime.getRuntime.availableProcessors / n)
@@ -264,22 +272,22 @@ object ServeScaleWorker {
       // warm this shard's probed clusters BEFORE signaling ready: the
       // timed window measures the warm serving tier
       def serveOne(i: Int): Option[Array[(Long, Double)]] =
-        if (tier == "pq")
-          idx.servePointPq(ServeScaleBench.VecCol, queries(i), 10, nProbe = 8)
-        else if (tier == "filtered")
-          idx.servePointFiltered(ServeScaleBench.VecCol, queries(i), 10,
-            nProbe = 8, ServeScaleBench.FilterConds)
+        if (tier == "pq") ServeScaleBench.serveHits(idx, queries(i),
+          ServeTier.Pq(certify = false), ServeProbe.Nearest(8), Nil)
+        else if (tier == "filtered") ServeScaleBench.serveHits(idx, queries(i),
+          ServeTier.Float, ServeProbe.Nearest(8), ServeScaleBench.FilterConds)
         else if (tier == "frecall")
           // passing-count cover re-derived per serve; leader appends
           // invalidate the pass set + counts caches live
-          idx.servePointFilteredRecall(ServeScaleBench.VecCol, queries(i),
-            10, rtTarget, ServeScaleBench.FilterConds)
+          ServeScaleBench.serveHits(idx, queries(i), ServeTier.Float,
+            ServeProbe.Recall(rtTarget, 0L), ServeScaleBench.FilterConds)
         else if (tier == "autoprobe")
           // the cover is recomputed per serve off the stamp-cached
           // radii/counts — leader appends invalidate and widen it live
-          idx.servePoint(ServeScaleBench.VecCol, queries(i), 10, nProbe = 8,
-            probeSet = Some(idx.probeSetForRecall(queries(i), 10, rtTarget)))
-        else idx.servePoint(ServeScaleBench.VecCol, queries(i), 10, nProbe = 8)
+          ServeScaleBench.serveHits(idx, queries(i), ServeTier.Float,
+            ServeProbe.Recall(rtTarget, 0L), Nil)
+        else ServeScaleBench.serveHits(idx, queries(i), ServeTier.Float,
+          ServeProbe.Nearest(8), Nil)
       mine.foreach(serveOne)
       java.nio.file.Files.write(benchDir.resolve(s"ready$wid"), Array.empty[Byte])
       val deadline0 = System.currentTimeMillis + 180000

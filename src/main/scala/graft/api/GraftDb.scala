@@ -7,6 +7,7 @@ import graft.types._
 import graft.store.{SchemaJson, TableStore}
 import graft.query.QueryEngine
 import graft.query.QueryEngine._
+import graft.index.{ServeProbe, ServeTier}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -103,7 +104,7 @@ class GraftDb(val spark: SparkSession, val root: String,
       // (densePassVerdict) must decline while any exist in the tail
       nullVecRows: Int = 0)
 
-  // fresh-tail rows in servePoint's resident layout, re-collected only
+  // fresh-tail rows in the serve tier's resident layout, re-collected only
   // when the snapshot version or serving pin moves (one pruned job per
   // commit, then every serve is pure JVM compute). Left(()) — the
   // over-cap verdict — is cached too: in the rebuild-overdue regime every
@@ -617,8 +618,7 @@ class GraftDb(val spark: SparkSession, val root: String,
     * entry exactly what the single-query endpoint would have returned.
     *
     * With `"serve":true` the batch rides the tier's shared sweep — float
-    * ([[graft.index.IvfIndex.servePointBatch]]), 16-bit
-    * (`servePointQuantizedBatchDetail`) or PQ (`servePointPqBatchDetail`):
+    * ([[graft.index.IvfIndex.serve]] on the float, 16-bit or PQ tier):
     * one snapshot handshake, one union cold load, one shared row sweep;
     * certification (and its rare wider-pad retries) runs per query.
     * Queries the serve tier declines fall back to the job path
@@ -711,7 +711,7 @@ class GraftDb(val spark: SparkSession, val root: String,
     * of the dense ranking over `queryField` and the BM25 keyword ranking
     * over `textField`, both cut to `rrfCut` (default 50) before ranking.
     * With `"serve":true` both sides try their driver-resident tiers
-    * (dense servePoint incl. fresh tail; BM25 sparse servePointDot over
+    * (dense IvfIndex.serve incl. fresh tail; BM25 sparse servePointDot over
     * the impact index — WAND prefixes apply to stop-word terms) and fall
     * back to their job paths individually. Keyword-side freshness is the
     * impact index's snapshot (frozen-stats caveat above); tombstones are
@@ -755,7 +755,7 @@ class GraftDb(val spark: SparkSession, val root: String,
     // universe before fusion (filter-then-rank — the same semantics the
     // single-query path has, queryPlan's preFilter). When the filter is a
     // resident-evaluable conjunction BOTH sides can serve: the dense side
-    // through servePointFiltered, the keyword side by borrowing the
+    // through a filtered IvfIndex.serve, the keyword side by borrowing the
     // dense index's complete passing-id verdict (passingIdSet + the
     // pre-filtered tail sidecar) as a mask on the sparse candidate walk.
     val filterStr = filterStringOf(req)
@@ -873,10 +873,10 @@ class GraftDb(val spark: SparkSession, val root: String,
   }
 
   /** One dense serving handshake (pin + fresh tail + tombstones +
-    * servePoint + pin re-check) returning raw hits — the id-level core
-    * the hybrid path shares with `serveQuery`'s rendered envelope.
-    * `conds` non-empty = attribute-filtered serving (servePointFiltered
-    * over declared resident columns; tail pre-filtered on the sidecar). */
+    * `IvfIndex.serve` + pin re-check) returning raw hits — the id-level
+    * core the hybrid path shares with `serveQuery`'s rendered envelope.
+    * `conds` non-empty = attribute-filtered serving (over declared
+    * resident columns; tail pre-filtered on the sidecar). */
   private def serveDenseHits(st: TableStore, queryField: String,
       dense: Array[Float], k: Int, nProbe: Int,
       conds: Seq[graft.filter.SimpleConjuncts.Cond] = Nil,
@@ -902,45 +902,78 @@ class GraftDb(val spark: SparkSession, val root: String,
             case Some(t) => t
             case None => return None
           }
-          val np = math.min(nProbe, idx.centroids().length)
-          val k2 = math.min(k, maxRenderRows)
-          val served =
-            if (conds.isEmpty) recallTarget match {
-              // declared floor: the geometric ball cover proves it
-              // (1.0 = exact), the same path the single dispatch takes
-              case Some(t) => idx.servePointRecall(queryField, dense, k2,
-                t, exclude = tombs.contains, freshTail = tail.map(_.packed),
-                slack = tombs.size.toLong)
-              case None => idx.servePoint(queryField, dense, k2, np,
-                exclude = tombs.contains, freshTail = tail.map(_.packed))
-            }
-            else {
-              val ft = tail match {
-                case None => None
-                case Some(dt) => filterTail(dt, conds, f.dimensions) match {
-                  case Some(p) => if (p._1.isEmpty) None else Some(p)
-                  case None => return None
-                }
-              }
-              recallTarget match {
-                // floor + filter: the passing-count cover proves the
-                // floor over the FILTERED universe
-                case Some(t) => idx.servePointFilteredRecall(queryField,
-                  dense, k2, t, conds, exclude = tombs.contains,
-                  freshTail = ft, slack = tombs.size.toLong)
-                case None => idx.servePointFiltered(queryField, dense, k2,
-                  np, conds, exclude = tombs.contains, freshTail = ft)
-              }
-            }
-          served match {
-            case Some(hits) =>
-              if (idx.servingWatermark() == pin) return Some(hits)
+          val ft = serveTail(tail, conds, f.dimensions).getOrElse(return None)
+          // a declared floor: the ball cover proves it (1.0 = exact) — the
+          // passing-count cover under a filter — as in the single dispatch
+          val probe = serveProbe(recallTarget,
+            math.min(nProbe, idx.centroids().length), tombs.size.toLong)
+          idx.serve(queryField, Array(dense), math.min(k, maxRenderRows),
+            ServeTier.Float, probe, conds, tombs.contains, ft).head match {
+            case Some(s) =>
+              if (idx.servingWatermark() == pin) return Some(s.hits)
             // else: pin moved mid-serve — retry
             case None => return None
           }
       }
     }
     None
+  }
+
+  /** The fresh tail a dense serve takes: the packed tail, pre-filtered on
+    * its scalar sidecar when `conds` is non-empty (the conjunction applies
+    * to tail rows too; an empty filtered tail rides as none). None = the
+    * sidecar raced a re-declaration → decline. */
+  private def serveTail(tail: Option[DenseTail],
+      conds: Seq[graft.filter.SimpleConjuncts.Cond], dim: Int)
+      : Option[Option[(Array[Long], Array[Double], Array[Double])]] =
+    if (conds.isEmpty) Some(tail.map(_.packed))
+    else tail match {
+      case None => Some(None)
+      case Some(dt) =>
+        filterTail(dt, conds, dim).map(p => if (p._1.isEmpty) None else Some(p))
+    }
+
+  /** The probe mode of a dense serve: the proven cover of a declared
+    * recall floor (`slack` = the tombstone count the mask may hide), else
+    * the `np` nearest clusters. */
+  private def serveProbe(recallTarget: Option[Double], np: Int, slack: Long)
+      : ServeProbe =
+    recallTarget.fold[ServeProbe](ServeProbe.Nearest(np))(
+      t => ServeProbe.Recall(t, slack))
+
+  /** The dense tier a request asks for (`serve` forces certification
+    * on the code tiers under a declared floor — cover × certified is the
+    * floor's proof). */
+  private def serveTier(quantized: Boolean, pq: Boolean, certified: Boolean)
+      : ServeTier =
+    if (pq) ServeTier.Pq(certified)
+    else if (quantized) ServeTier.Quantized(certified)
+    else ServeTier.Float
+
+  /** A dense serve's response: the hits as (`__row_id`, `@distance`)
+    * rows, the tier/filter/proof flags and the facets fragment. */
+  private def servedEnvelope(served: graft.index.Served, filtered: Boolean,
+      quantized: Boolean, pq: Boolean, certified: Boolean,
+      facetJson: String): String = {
+    val hits = served.hits
+    val sb = new java.lang.StringBuilder("{\"result\":[")
+    var i = 0
+    while (i < hits.length) {
+      if (i > 0) sb.append(',')
+      sb.append("{\"__row_id\":").append(hits(i)._1)
+        .append(",\"@distance\":").append(hits(i)._2).append('}')
+      i += 1
+    }
+    sb.append("],\"served\":true")
+    if (filtered) sb.append(",\"filtered\":true")
+    if (pq || quantized) {
+      sb.append(if (pq) ",\"pq\":true" else ",\"quantized\":true")
+      if (certified) sb.append(",\"certified\":true")
+      if (served.reranked > 0) sb.append(",\"reranked\":").append(served.reranked)
+    }
+    sb.append(facetJson)
+    sb.append('}')
+    sb.toString
   }
 
   /** Serve-path FACETS: aggregate the POST-LIMIT served result (≤ k rows
@@ -956,10 +989,8 @@ class GraftDb(val spark: SparkSession, val root: String,
     * undeclared column (or any facet parse failure) returns None and the
     * whole request declines to the job path's full surface. */
   private def serveFacetsJson(st: TableStore, idx: graft.index.IvfIndex,
-      queryField: String, dense: Array[Float], np: Int,
-      hits: Array[(Long, Double)], tail: Option[DenseTail],
-      facets: Seq[Facet], probeSet: Option[Array[Int]] = None)
-      : Option[String] = {
+      dense: Array[Float], served: graft.index.Served,
+      tail: Option[DenseTail], facets: Seq[Facet]): Option[String] = {
     import org.apache.spark.sql.types._
     val cols = idx.serveFilterColumns()
     if (cols.isEmpty) return None
@@ -970,8 +1001,11 @@ class GraftDb(val spark: SparkSession, val root: String,
           id -> cols.map(c => dt.scalars(c)(j)).toArray
         }.toMap
     }
+    val hits = served.hits
     val needResident = hits.map(_._1).filterNot(tailValueById.contains)
-    val resident = idx.scalarRowsFor(needResident, dense, np, probeSet) match {
+    // the lookup probes the clusters the hits were swept from
+    val resident = idx.scalarRowsFor(needResident, dense, served.probed.length,
+        Some(served.probed)) match {
       case Some(m) => m
       case None => return None
     }
@@ -1134,7 +1168,7 @@ class GraftDb(val spark: SparkSession, val root: String,
   }
 
   /** The serve-tier fast path for [[batchQuery]]: one pin/tail/tombstone
-    * handshake for the whole batch, then `servePointBatch`. Per-query
+    * handshake for the whole batch, then one `IvfIndex.serve`. Per-query
     * `None` = that query falls to its single-query path (same outcome it
     * would have had alone); all-`None` = the shared handshake itself
     * declined (no index, over-cap tail, tombstone mask over cap). */
@@ -1155,13 +1189,11 @@ class GraftDb(val spark: SparkSession, val root: String,
     val facets = parseFacets(req \ "facets")
     // the uniform floor contract, batch form: ALL THREE dense tiers
     // serve a declared recallTarget with PER-QUERY proven covers on the
-    // shared sweep (probeSets below) — the code tiers compose forced
-    // certification on top (cover × certified = the floor's proof, as
-    // in the single dispatch). The FILTER combination rides the shared
-    // sweep too: one all-cluster pass set + passing-count map serves
-    // per-query passing-count covers (servePointFilteredRecallBatch and
-    // the code-tier twins — recall >= target over the FILTERED universe,
-    // 1.0 = exact per query)
+    // shared sweep — the code tiers compose forced certification on top
+    // (cover × certified = the floor's proof, as in the single dispatch).
+    // The FILTER combination rides the shared sweep too: one all-cluster
+    // pass set + passing-count map serves per-query passing-count covers
+    // (recall >= target over the FILTERED universe, 1.0 = exact per query)
     val recallTarget: Option[Double] = (req \ "recallTarget") match {
       case JDouble(d) => Some(d)
       case JDecimal(d) => Some(d.toDouble)
@@ -1218,132 +1250,28 @@ class GraftDb(val spark: SparkSession, val root: String,
           // a declared floor forces certification on the code tiers —
           // cover × certified is the floor's proof (see serveQuery)
           val certEff = certified || recallTarget.isDefined
-          val qs = dense.zipWithIndex.map { case (q, i) => (i.toLong, q) }
-          // batch covers are derived state: their pin must survive the
-          // sweep's own handshake or the whole attempt retries (the
-          // same-watermark-rebuild race — see servePointRecall)
-          var coverStable: () => Boolean = () => true
-          // per-query proven covers (1.0 = exact), shared by the three
-          // dense tiers: each query keeps ITS cover, the union is
-          // acquired once, the shared sweep scores each row only for
-          // the queries whose cover holds its cluster
-          val covers: Option[Array[Array[Int]]] =
-            if (conds.nonEmpty) None // filtered floors: passing-count
-                                     // covers, pinned inside the batch
-                                     // recall methods below
-            else recallTarget.map { t =>
-              val (ck, cw) = idx.servingPinSnapshot()
-              coverStable = () => idx.pinStableFor(ck, cw)
-              qs.map { case (_, q) =>
-                idx.probeSetForRecall(q, k, t, slack = tombs.size.toLong)
-              }
-            }
-          val got: Array[(Long, Option[(Array[(Long, Double)], Int)])] =
-            if (conds.nonEmpty) {
-              // shared conjunction: tail pre-filtered once on the scalar
-              // sidecar, one passing-id set masks the whole batch — on
-              // whichever tier the batch requested (the code tiers
-              // compose the mask into their shared code sweeps)
-              val ft = tail match {
-                case None => None
-                case Some(dt) => filterTail(dt, conds,
-                    st.schema.field(queryField).dimensions) match {
-                  case Some(p) => if (p._1.isEmpty) None else Some(p)
-                  case None => return allNone
-                }
-              }
-              def allDecline: Array[(Long, Option[(Array[(Long, Double)], Int)])] =
-                qs.map { case (qid, _) => (qid, None) }
-              recallTarget match {
-                // declared floor + filter on the shared sweep: per-query
-                // passing-count covers off ONE pass set (1.0 = exact over
-                // the filtered universe); a whole-batch decline degrades
-                // every entry to per-query dispatch, which still serves
-                case Some(t) =>
-                  if (pq) idx.servePointPqFilteredRecallBatchDetail(
-                    queryField, qs, k, t, conds, exclude = tombs.contains,
-                    freshTail = ft, slack = tombs.size.toLong)
-                    .getOrElse(allDecline)
-                  else if (quantized)
-                    idx.servePointQuantizedFilteredRecallBatchDetail(
-                      queryField, qs, k, t, conds, exclude = tombs.contains,
-                      freshTail = ft, slack = tombs.size.toLong)
-                      .getOrElse(allDecline)
-                  else idx.servePointFilteredRecallBatch(queryField, qs, k,
-                    t, conds, exclude = tombs.contains, freshTail = ft,
-                    slack = tombs.size.toLong)
-                    .map(_.map { case (qid, r) => (qid, r.map((_, 0))) })
-                    .getOrElse(allDecline)
-                case None =>
-                  if (pq) idx.servePointPqFilteredBatchDetail(queryField, qs,
-                    k, np, conds, exclude = tombs.contains, freshTail = ft,
-                    certify = certified)
-                  else if (quantized) idx.servePointQuantizedFilteredBatchDetail(
-                    queryField, qs, k, np, conds, exclude = tombs.contains,
-                    freshTail = ft, certify = certified)
-                  else idx.servePointFilteredBatch(queryField, qs, k, np, conds,
-                    exclude = tombs.contains, freshTail = ft)
-                    .map { case (qid, r) => (qid, r.map((_, 0))) }
-              }
-            }
-            else if (pq) idx.servePointPqBatchDetail(queryField, qs, k, np,
-              exclude = tombs.contains, freshTail = tail.map(_.packed),
-              certify = certEff, probeSets = covers)
-            else if (quantized) idx.servePointQuantizedBatchDetail(queryField,
-              qs, k, np, exclude = tombs.contains,
-              freshTail = tail.map(_.packed), certify = certEff,
-              probeSets = covers)
-            else
-              idx.servePointBatch(queryField, qs, k, np,
-                exclude = tombs.contains, freshTail = tail.map(_.packed),
-                probeSets = covers)
-                .map { case (qid, r) => (qid, r.map((_, 0))) }
-          if (idx.servingWatermark() == pin && coverStable()) {
-            return got.zipWithIndex.map { case ((_, res), qi) =>
-              res.flatMap { case (hits, reranked) =>
+          // shared conjunction: tail pre-filtered once on the scalar
+          // sidecar, one passing-id set masks the whole batch; a declared
+          // floor gives each query ITS proven cover (passing-count cover
+          // when filtered), pinned inside `serve`
+          val ft = serveTail(tail, conds,
+            st.schema.field(queryField).dimensions).getOrElse(return allNone)
+          val got = idx.serve(queryField, dense, k,
+            serveTier(quantized, pq, certEff),
+            serveProbe(recallTarget, np, tombs.size.toLong), conds,
+            tombs.contains, ft)
+          if (idx.servingWatermark() == pin) {
+            return got.zipWithIndex.map { case (res, qi) =>
+              res.flatMap { served =>
                 // per-entry facets over ITS served top-k (≤ k rows, the
-                // single dispatch's serveFacetsJson); an unavailable
-                // source degrades this entry to its per-query fallback
+                // single dispatch's serveFacetsJson, probing the clusters
+                // swept); an unavailable source degrades this entry to its
+                // per-query fallback
                 val facetJson: Option[String] =
                   if (facets.isEmpty) Some("")
-                  else {
-                    // filtered floors swept per-query PASSING-COUNT covers
-                    // (inside the batch recall methods) — recompute the
-                    // same cover as the value-lookup hint (cached warm; a
-                    // racing rebuild only makes the lookup miss → this
-                    // entry degrades to its per-query fallback)
-                    val hint: Option[Array[Int]] = covers.map(_(qi)).orElse(
-                      if (conds.nonEmpty) recallTarget.flatMap(t =>
-                        idx.probeSetForFilteredRecall(dense(qi), k, t,
-                          slack = tombs.size.toLong, conds))
-                      else None)
-                    serveFacetsJson(st, idx, queryField, dense(qi), np,
-                      hits, tail, facets, hint)
-                  }
-                facetJson.map { fj =>
-                  val sb = new java.lang.StringBuilder("{\"result\":[")
-                  var i = 0
-                  while (i < hits.length) {
-                    if (i > 0) sb.append(',')
-                    sb.append("{\"__row_id\":").append(hits(i)._1)
-                      .append(",\"@distance\":").append(hits(i)._2).append('}')
-                    i += 1
-                  }
-                  sb.append("],\"served\":true")
-                  if (conds.nonEmpty) sb.append(",\"filtered\":true")
-                  if (pq) {
-                    sb.append(",\"pq\":true")
-                    if (certEff) sb.append(",\"certified\":true")
-                    if (reranked > 0) sb.append(",\"reranked\":").append(reranked)
-                  } else if (quantized) {
-                    sb.append(",\"quantized\":true")
-                    if (certEff) sb.append(",\"certified\":true")
-                    if (reranked > 0) sb.append(",\"reranked\":").append(reranked)
-                  }
-                  sb.append(fj)
-                  sb.append('}')
-                  sb.toString
-                }
+                  else serveFacetsJson(st, idx, dense(qi), served, tail, facets)
+                facetJson.map(servedEnvelope(served, conds.nonEmpty, quantized,
+                  pq, certEff, _))
               }
             }
           } // pin moved mid-serve: retry
@@ -1522,8 +1450,8 @@ class GraftDb(val spark: SparkSession, val root: String,
     if (facets.nonEmpty && idx.serveFilterColumns().isEmpty) return None
     // filtered requests serve ONLY when the filter is a simple conjunction
     // over declared resident scalar columns — evaluated exactly in the
-    // sweep (servePointFiltered and the code tiers' filtered forms, which
-    // compose the same passing-id mask into their sweeps); anything else
+    // sweep (every tier composes the same passing-id mask into its
+    // sweep); anything else
     // declines so the job path answers with the full grammar, exactly.
     val conds: Seq[graft.filter.SimpleConjuncts.Cond] =
       if (filterStr.isEmpty) Nil
@@ -1574,136 +1502,37 @@ class GraftDb(val spark: SparkSession, val root: String,
           }
           val k = math.min(limit, maxRenderRows)
           val np = math.min(nProbe, idx.centroids().length)
-          // facet-lookup hint only: under a recall floor the hits come
-          // from the cover, so the facet value lookup should probe it —
-          // a freshly computed cover is fine as a HINT (values are
-          // id-keyed; a miss declines, never miscounts). FILTERED floors
-          // swept the PASSING-COUNT cover, which can be wider than the
-          // unfiltered one — probe the cover the hits actually came from
-          val facetProbeHint: Option[Array[Int]] =
-            if (facets.isEmpty) None
-            else recallTarget.flatMap(t =>
-              if (conds.isEmpty)
-                Some(idx.probeSetForRecall(dense, k, t,
-                  slack = tombs.size.toLong))
-              else idx.probeSetForFilteredRecall(dense, k, t,
-                slack = tombs.size.toLong, conds))
-          val served =
-            if (conds.nonEmpty) {
-              // the conjunction applies to tail rows too: evaluated here
-              // on the tail's scalar sidecar (one driver pass over the
-              // bounded tail), so filtered serving stays live under
-              // continuous ingest; a sidecar raced by a re-declaration
-              // declines to the job path
-              val dim = st.schema.field(queryField).dimensions
-              val ft: Option[(Array[Long], Array[Double], Array[Double])] =
-                tail match {
-                  case None => None
-                  case Some(dt) => filterTail(dt, conds, dim) match {
-                    case Some(p) => if (p._1.isEmpty) None else Some(p)
-                    case None => return None
-                  }
-                }
-              // the filtered sweep runs on the REQUESTED tier: the code
-              // tiers compose the same passing-id mask into their code
-              // sweeps, with certification proven over the masked
-              // (= filtered) candidate set; a declared floor swaps their
-              // probe set for the passing-count cover (certification
-              // forced — cover × certified = the floor's proof)
-              if (pq) recallTarget match {
-                case Some(t) => idx.servePointPqFilteredRecallDetail(
-                  queryField, dense, k, t, conds, exclude = tombs.contains,
-                  freshTail = ft, slack = tombs.size.toLong)
-                case None => idx.servePointPqFilteredDetail(queryField,
-                  dense, k, np, conds, exclude = tombs.contains,
-                  freshTail = ft, certify = certEff)
-              }
-              else if (quantized) recallTarget match {
-                case Some(t) => idx.servePointQuantizedFilteredRecallDetail(
-                  queryField, dense, k, t, conds, exclude = tombs.contains,
-                  freshTail = ft, slack = tombs.size.toLong)
-                case None => idx.servePointQuantizedFilteredDetail(
-                  queryField, dense, k, np, conds, exclude = tombs.contains,
-                  freshTail = ft, certify = certEff)
-              }
-              else recallTarget match {
-                // declared floor + filter: passing-count cover proves
-                // recall >= target over the FILTERED universe (1.0 =
-                // exact); over-budget covers decline to the job path
-                case Some(t) => idx.servePointFilteredRecall(queryField,
-                  dense, k, t, conds, exclude = tombs.contains,
-                  freshTail = ft, slack = tombs.size.toLong).map(h => (h, 0))
-                case None => idx.servePointFiltered(queryField, dense, k,
-                  np, conds, exclude = tombs.contains, freshTail = ft)
-                  .map(h => (h, 0))
-              }
-            }
-            else if (pq) recallTarget match {
-              case Some(t) => idx.servePointPqRecallDetail(queryField, dense,
-                k, t, exclude = tombs.contains,
-                freshTail = tail.map(_.packed), slack = tombs.size.toLong)
-              case None => idx.servePointPqDetail(queryField, dense,
-                k, np, exclude = tombs.contains,
-                freshTail = tail.map(_.packed), certify = certEff)
-            }
-            else if (quantized) recallTarget match {
-              case Some(t) => idx.servePointQuantizedRecallDetail(queryField,
-                dense, k, t, exclude = tombs.contains,
-                freshTail = tail.map(_.packed), slack = tombs.size.toLong)
-              case None => idx.servePointQuantizedDetail(queryField, dense,
-                k, np, exclude = tombs.contains,
-                freshTail = tail.map(_.packed), certify = certEff)
-            }
-            else recallTarget match {
-              // the cover is computed and served under ONE pin inside
-              // servePointRecall (covers are derived state — see the
-              // same-watermark-rebuild race note there)
-              case Some(t) => idx.servePointRecall(queryField, dense, k, t,
-                exclude = tombs.contains, freshTail = tail.map(_.packed),
-                slack = tombs.size.toLong).map((_, 0))
-              case None => idx.servePoint(queryField, dense, k, np,
-                exclude = tombs.contains,
-                freshTail = tail.map(_.packed)).map((_, 0))
-            }
-          val (hits, reranked) = served match {
-            case Some(h) => h
+          // the conjunction applies to tail rows too: evaluated on the
+          // tail's scalar sidecar (one driver pass over the bounded tail),
+          // so filtered serving stays live under continuous ingest; a
+          // sidecar raced by a re-declaration declines to the job path.
+          // The sweep runs on the REQUESTED tier: the code tiers compose
+          // the same passing-id mask into their code sweeps, with
+          // certification proven over the masked (= filtered) candidates
+          val ft = serveTail(tail, conds,
+            st.schema.field(queryField).dimensions).getOrElse(return None)
+          val served = idx.serve(queryField, Array(dense), k,
+            serveTier(quantized, pq, certEff),
+            serveProbe(recallTarget, np, tombs.size.toLong), conds,
+            tombs.contains, ft).head match {
+            case Some(s) => s
             // probed clusters exceed the resident budget (cardinality
             // pre-check declined before any collect) -> job path
             case None => return None
           }
           if (idx.servingWatermark() == pin) {
             // facets aggregate the served top-k from the scalar residency
-            // + tail sidecar — an unavailable source declines the WHOLE
-            // request (a response must never carry partial facets)
+            // (over the clusters swept) + tail sidecar — an unavailable
+            // source declines the WHOLE request (a response must never
+            // carry partial facets)
             val facetJson: String =
               if (facets.isEmpty) ""
-              else serveFacetsJson(st, idx, queryField, dense, np, hits,
-                tail, facets, facetProbeHint) match {
+              else serveFacetsJson(st, idx, dense, served, tail, facets) match {
                 case Some(fj) => fj
                 case None => return None
               }
-            val sb = new java.lang.StringBuilder("{\"result\":[")
-            var i = 0
-            while (i < hits.length) {
-              if (i > 0) sb.append(',')
-              sb.append("{\"__row_id\":").append(hits(i)._1)
-                .append(",\"@distance\":").append(hits(i)._2).append('}')
-              i += 1
-            }
-            sb.append("],\"served\":true")
-            if (conds.nonEmpty) sb.append(",\"filtered\":true")
-            if (pq) {
-              sb.append(",\"pq\":true")
-              if (certEff) sb.append(",\"certified\":true")
-              if (reranked > 0) sb.append(",\"reranked\":").append(reranked)
-            } else if (quantized) {
-              sb.append(",\"quantized\":true")
-              if (certEff) sb.append(",\"certified\":true")
-              if (reranked > 0) sb.append(",\"reranked\":").append(reranked)
-            }
-            sb.append(facetJson)
-            sb.append('}')
-            return Some(sb.toString)
+            return Some(servedEnvelope(served, conds.nonEmpty, quantized, pq,
+              certEff, facetJson))
           } // pin moved mid-serve (rebuild/rebase landed): retry
       }
     }
@@ -2006,8 +1835,9 @@ class GraftDb(val spark: SparkSession, val root: String,
         val all = didx.centroids().map(_._1)
         if (all.isEmpty) return None
         val dim = st.schema.field(donorField).dimensions
-        serveFacetsJson(st, didx, donorField, new Array[Float](dim),
-          all.length, hits, dtail, facets, Some(all))
+        // values by id over every donor cluster
+        serveFacetsJson(st, didx, new Array[Float](dim),
+          graft.index.Served(hits, 0, all), dtail, facets)
     }
   }
 
@@ -2528,7 +2358,7 @@ class GraftDb(val spark: SparkSession, val root: String,
   /** GET /statistics analog. Tables with built indexes also report the
     * index cardinality stats backing the serving guard (per-cluster rows /
     * per-dim postings, summarized): the observability face of the numbers
-    * `servePoint`/`servePointDot` check before any cold collect. */
+    * `IvfIndex.serve`/`servePointDot` check before any cold collect. */
   // per-index cardinality fragment for statistics(), keyed on the index
   // freshness stamp: a polling monitor must read pure JVM state on repeat
   // calls, not run a Spark aggregation job per indexed field per call.

@@ -300,7 +300,7 @@ object PqAdcRes {
   * PROVABLE: for L2, |d(q,x) − d(q,x̂)| ≤ ‖x−x̂‖ (triangle inequality); for
   * dot/cosine, |q·x − q·x̂| ≤ ‖q‖₂·‖x−x̂‖ (Cauchy–Schwarz). Build persists
   * it next to the codes; the quantized serving tier certifies top-k
-  * boundaries against it (IvfIndex.servePointPqDetail). Reading the codes
+  * boundaries against it (IvfIndex.serve on the PQ tier). Reading the codes
   * instead of re-running the argmin keeps this pass at O(dim) per row —
   * subexpression elimination already shares the PqEncode result in the
   * build projection, and appends reuse the frozen codebook the same way. */

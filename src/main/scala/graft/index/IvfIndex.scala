@@ -198,54 +198,15 @@ class IvfIndex(
 
   /** Probe set PROVING recall ≥ `target` at cut `k`, from centroid
     * distances + persisted ball radii + row counts — the recall knob the
-    * reference exposes as a fixed nProbe, made geometric:
-    *
-    * With d_c = ‖q − centroid_c‖₂ and radius r_c, every row of c has true
-    * distance within [d_c − r_c, d_c + r_c] (triangle inequality). Take
-    * clusters by ascending UPPER bound until their counts cover
-    * ⌈target·k⌉ rows — the worst of those upper bounds, U, bounds the
-    * true ⌈target·k⌉-th best distance. Any cluster with d_c − r_c > U
-    * provably holds none of the top ⌈target·k⌉, so probing the rest
-    * returns AT LEAST the exact top-⌈target·k⌉ ⇒ recall@k ≥ target;
-    * target 1.0 is fully exact (the brute-force-threshold spirit of
-    * vec_search_executor.hpp:28, without the fixed threshold).
-    *
-    * Euclidean bounds directly; cosine rides the same L2 geometry (rows
-    * are stored normalized, and cosine top-k of unit vectors == L2
-    * top-k). Dot product has no triangle inequality → probe everything.
-    * Clusters with unknown radius/count are always probed and never
-    * tighten U (partial radii stay conservative). `slack` widens the
-    * cover target (callers add their tombstone count: masked rows might
-    * occupy the cover, pushing true answers past U otherwise). */
+    * reference exposes as a fixed nProbe, made geometric: the ball cover
+    * (`coverFromCounts`) over the per-cluster row counts of
+    * `clusterStats()`, for the metric-normalized query. Without counts
+    * (layout predates the stats file) it probes everything. */
   def probeSetForRecall(query: Array[Float], k: Int, target: Double = 1.0,
-      slack: Long = 0L): Array[Int] = {
-    val cents = centroids()
-    val all = cents.map(_._1)
-    if (metric == MetricType.DotProduct) return all
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    val radii = clusterRadii().getOrElse(return all)
-    val counts = clusterStats().getOrElse(return all)
-    val kGoal = math.max(1L, math.ceil(target * k).toLong) + slack
-    val ds = cents.map { case (cid, c) =>
-      (cid, math.sqrt(IvfIndex.dist(MetricType.Euclidean, c, q)))
-    }
-    val known = ds.filter { case (cid, _) =>
-      radii.contains(cid) && counts.contains(cid)
-    }
-    if (known.isEmpty) return all
-    val byUb = known.map { case (cid, d) => (cid, d + radii(cid), counts(cid)) }
-      .sortBy(_._2)
-    var cum = 0L
-    var u = Double.PositiveInfinity
-    var i = 0
-    while (i < byUb.length && cum < kGoal) {
-      cum += byUb(i)._3; u = byUb(i)._2; i += 1
-    }
-    if (cum < kGoal) return all // fewer certain rows than the cover needs
-    ds.filter { case (cid, d) =>
-      !radii.contains(cid) || !counts.contains(cid) || d - radii(cid) <= u
-    }.map(_._1)
-  }
+      slack: Long = 0L): Array[Int] =
+    coverFromCounts(
+      if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query,
+      k, target, slack, clusterStats())
 
   /** Old-layout fallback for the serving cardinality guard: one pruned
     * COUNT over the probed clusters (reads only footers of the probed
@@ -834,7 +795,7 @@ class IvfIndex(
     * (table_segment_mvp.cpp:106-111, vec_search_executor.cpp:833-935);
     * this is the same model scoped to the PROBED clusters — each cluster
     * is loaded once (one pruned Spark job), then every subsequent
-    * servePoint over it is pure JVM compute, microseconds not a job.
+    * serve over it is pure JVM compute, microseconds not a job.
     * Invalidated when the index meta changes (rebuild/append). */
   /** (ids, row-major doubles, per-row |x|^2): doubles avoid a float->double
     * conversion per element in the hot loop, and the precomputed norms turn
@@ -935,18 +896,8 @@ class IvfIndex(
     * Maintenance passes to `IvfIndex.splitOversized` when declines rise. */
   def serveBudgetRows(dim: Int): Long = effectiveMaxRows(dim)
 
-  /** Low-latency top-K answered on the DRIVER: centroid argmin -> probe
-    * the nProbe nearest clusters from the resident cache -> bounded-heap
-    * top-K with the engine's (distance, id) tie-break. Returns
-    * (id, distance) pairs, best first.
-    *
-    * Serving answers FROM THE INDEX plus an optional caller-supplied
-    * `freshTail` (rows above the indexed watermark, packed via
-    * `IvfIndex.packRows`) — the in-process analog of the reference's
-    * graph-over-prefix + brute-force-tail merge
-    * (vec_search_executor.cpp:885-904). `exclude` masks known-dead ids. */
   /** One pruned job collecting + packing the rows of `missing` clusters —
-    * runs OUTSIDE the instance lock (see servePoint); overridable so tests
+    * runs OUTSIDE the instance lock (see acquireResident); overridable so tests
     * can model a slow cold load. */
   protected def loadClusters(vecCol: String, missing: Array[Int])
       : Map[Int, (Array[Long], Array[Double], Array[Double])] = {
@@ -1036,8 +987,8 @@ class IvfIndex(
     * top-k id set, float-reranking only a boundary-ambiguous band (one
     * pruned job) when an interval overlaps the k-th boundary. The default
     * quantized mode skips certification for throughput — empirically
-    * exact, approximate in principle. `servePoint` remains the all-float
-    * exact tier. */
+    * exact, approximate in principle. The float tier remains the
+    * all-float exact tier. */
   protected final case class QuantCluster(ids: Array[Long], codes: Array[Short],
       scaleA: Array[Double], scaleB: Array[Double],
       norm2: Array[Double], rerr2: Array[Double])
@@ -1149,149 +1100,28 @@ class IvfIndex(
     * certified exact with zero jobs warm). */
   def quantRerankCount(): Long = quantReranks.get()
 
-  /** Quantized-residency top-K: the same probe/guard/retry skeleton as
-    * `servePoint`, scoring from the 16-bit resident cache; the fresh tail
-    * is scored EXACTLY from its float payload and merged.
-    *
-    * `certify = false` (the throughput mode): rank by quantized scores
-    * directly — zero jobs warm, empirically exact on real embedding
-    * geometry (the only quantized term is the dot; the L2 norm term is
-    * packed exact), but without a proof.
-    *
-    * `certify = true`: the returned id SET is exact, never approximate —
-    * per-row score-error bounds (see QuantCluster) certify the top-k
-    * boundary; when intervals overlap it, the ambiguous band is reranked
-    * on floats via one job pruned to the probed cluster dirs +
-    * pushed-down ids (`_2` = rows reranked, 0 = certified without a
-    * job). Distances are quantized on the certified path, exact on the
-    * reranked path.
-    *
-    * None = over budget, thrash, or a pathological rerank band — the
-    * caller answers on the job path. */
-  def servePointQuantizedDetail(vecCol: String, query: Array[Float], k: Int,
-      nProbe: Int, exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      certify: Boolean = false,
-      probeSet: Option[Array[Int]] = None)
-      : Option[(Array[(Long, Double)], Int)] = {
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    // stored-dim guard (mirrors the PQ tier's cb.dim check): the packed
-    // codes stride by the STORED dim — scoring them at q.length would
-    // misread every row past the first, or walk off the array. A
-    // wrong-length query declines; it must never throw or mis-score.
-    if (centroids().headOption.exists(_._2.length != q.length)) return decline
-    var clusters: Array[QuantCluster] = null
-    var probed: Array[Int] = null
-    var attempts = 0
-    while (clusters == null) {
-      attempts += 1
-      if (attempts > 8) return decline
-      var w0AtProbe = 0L
-      var keyAtProbe: (Long, Long) = null
-      val missing: Array[Int] = synchronized {
-        ensureServeFresh()
-        w0AtProbe = serveWatermark
-        keyAtProbe = serveKey
-        // an explicit probe set (a recall cover) overrides nearest-nProbe,
-        // exactly as in servePoint
-        probed = singleProbeSet(q, nProbe, probeSet)
-        probed.filterNot(quantCache.containsKey(_))
-      }
-      var loaded: Map[Int, QuantCluster] = null
-      try {
-        if (missing.nonEmpty) {
-          val counts = clusterStats().getOrElse(probeClusterCounts(missing))
-          val projected = missing.map(counts.getOrElse(_, 0L)).sum
-          val retained = synchronized {
-            probed.filter(quantCache.containsKey(_))
-              .map(quantCache.get(_).ids.length.toLong).sum
-          }
-          if (projected + retained > effectiveMaxQuantRows(q.length)) return decline
-        }
-        loaded =
-          if (missing.isEmpty) Map.empty
-          else loadQuantClusters(vecCol, missing)
-      } catch { case scala.util.control.NonFatal(_) => }
-      if (loaded == null) {
-        synchronized { serveStampCheckedAt = 0L; ensureServeFresh() }
-      } else synchronized {
-        ensureServeFresh()
-        if (serveKey == keyAtProbe && serveWatermark == w0AtProbe)
-          loaded.foreach { case (cid, cluster) =>
-            val prev = quantCache.put(cid, cluster)
-            if (prev != null) quantRowsResident -= prev.ids.length
-            quantRowsResident += cluster.ids.length
-          }
-        val rowCap = effectiveMaxQuantRows(q.length)
-        if (quantRowsResident > rowCap) {
-          val it = quantCache.entrySet().iterator()
-          while (quantRowsResident > rowCap && it.hasNext) {
-            val e = it.next()
-            if (!probed.contains(e.getKey)) {
-              quantRowsResident -= e.getValue.ids.length
-              it.remove()
-            }
-          }
-        }
-        val got = probed.map(quantCache.get(_))
-        if (!got.contains(null)) clusters = got
-      }
-    }
-    val dim = q.length
-    val qd = new Array[Double](dim)
-    var qs = 0.0
-    var qss = 0.0
-    var qabs = 0.0
-    var qi = 0
-    while (qi < dim) {
-      qd(qi) = q(qi).toDouble
-      qs += qd(qi); qss += qd(qi) * qd(qi); qabs += math.abs(qd(qi))
-      qi += 1
-    }
-    // exact-scored fresh tail rides in through the shared float kernel
-    // (error bound 0 — its scores need no certification or rerank)
-    val tailLocal: Array[(Long, Double, Double)] = freshTail match {
-      case Some(t) =>
-        IvfIndex.scoreCluster(t, qd, qss, k, metric, exclude)
-          .map(c => (c._1, c._2, 0.0))
-      case None => Array.empty
-    }
-    proofCut(kPad => parScore[QuantCluster](clusters,
-        c => scoreQuantCluster(c, qd, qs, qss, qabs, kPad, exclude)),
-      tailLocal, k, certify, vecCol, probed, qd, qss, quantReranks)
-  }
-
-  /** Score every probed cluster, concurrently when more than one — the
+  /** Run `tasks` concurrently when there is more than one — the
     * in-process analog of the reference's executor pool
-    * (executor_pool.hpp:10-46); scoring reads immutable captured arrays. */
-  private def parScore[C](clusters: Array[C],
-      f: C => (Array[(Long, Double, Double)], Double))
-      : Array[(Array[(Long, Double, Double)], Double)] = {
+    * (executor_pool.hpp:10-46); the serve sweeps' tasks read immutable
+    * captured arrays. */
+  private def par[A](tasks: Seq[() => A]): Seq[A] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    if (clusters.length <= 1) clusters.map(f)
-    else Await.result(Future.sequence(clusters.toSeq.map(c => Future(f(c)))),
-      Duration.Inf).toArray
+    if (tasks.length <= 1) tasks.map(_())
+    else Await.result(Future.sequence(tasks.map(t => Future(t()))), Duration.Inf)
   }
 
-  /** Generic concurrent map over immutable captured state (the batch
-    * tiers' shared sweeps — same pool model as `parScore`). */
-  private def parMap[A, B](items: Array[A])(f: A => B): Seq[B] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    if (items.length <= 1) items.toSeq.map(f)
-    else Await.result(Future.sequence(items.toSeq.map(c => Future(f(c)))),
-      Duration.Inf)
-  }
+  /** One cluster's bounded candidates (id, score, error bound) plus the
+    * minimum score lower bound over the rows its heap discarded. */
+  private type Cands = (Array[(Long, Double, Double)], Double)
 
-  /** The shared cut for the code-resident serving tiers (16-bit min-max
-    * and PQ): the proof logic is tier-independent — only the scoring
-    * kernel behind `scoreAll(kPad)` differs (it returns per-cluster
-    * (candidates as (id, score, errBound), min discarded lower bound)).
+  /** The shared cut for every serving tier: the proof logic is
+    * tier-independent — only the scoring kernel behind `scoreAll(kPad)`
+    * differs (it returns per-cluster Cands). The float tier's scores are
+    * exact (error bound 0) and it never certifies.
     *
-    * `certify = false`: rank by quantized scores as-is, zero jobs.
+    * `certify = false`: rank by the tier's scores as-is, zero jobs.
     *
     * `certify = true`: true score ∈ [s−e, s+e] per candidate. With
     * `bound` = k-th smallest upper bound, at least k true scores are ≤
@@ -1305,7 +1135,7 @@ class IvfIndex(
     * only an absurd rerank band (the job path is the better plan there)
     * does. */
   private def proofCut(
-      scoreAll: Int => Array[(Array[(Long, Double, Double)], Double)],
+      scoreAll: Int => Array[Cands],
       tailLocal: Array[(Long, Double, Double)], k: Int, certify: Boolean,
       vecCol: String, probed: Array[Int], qd: Array[Double], qss: Double,
       reranks: java.util.concurrent.atomic.AtomicLong)
@@ -1330,27 +1160,19 @@ class IvfIndex(
         val need = possible.collect { case (id, _, e) if e > 0.0 => id }
         // a pathological band (near-tie mass) would push-down thousands
         // of ids into one filter — the job path is the better plan there
-        if (need.length > 10000) return decline
+        if (need.length > 10000) return None
         return rerankExact(vecCol, need, probed, qd, qss) match {
           case Some(m) =>
             reranks.incrementAndGet()
             val fixed = possible.map(c =>
               (c._1, if (c._3 == 0.0) c._2 else m(c._1), 0.0))
             Some((topK(fixed), need.length))
-          case None => decline // racing rebuild relocated a band id
+          case None => None // racing rebuild relocated a band id
         }
       }
     }
-    decline // unreachable: the final all-rows pass discards nothing
+    None // unreachable: the final all-rows pass discards nothing
   }
-
-  /** Compatibility shape of `servePointQuantizedDetail` — hits only. */
-  def servePointQuantized(vecCol: String, query: Array[Float], k: Int,
-      nProbe: Int, exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None)
-      : Option[Array[(Long, Double)]] =
-    servePointQuantizedDetail(vecCol, query, k, nProbe, exclude, freshTail)
-      .map(_._1)
 
   // ---- PQ serving residency (m-byte ADC codes resident) ----
 
@@ -1487,180 +1309,6 @@ class IvfIndex(
     }.toMap
   }
 
-  /** Bounded top-kPad of one PQ-resident cluster: m SHARED-lut lookups
-    * per row plus the per-cluster `constOff` (residual L2: ‖q−centroid‖²;
-    * residual dot/cos: −q·centroid) plus the per-row load-time constant
-    * (see PqServeCluster). Same contract as scoreQuantCluster —
-    * candidates plus min discarded lower bound. */
-  private def scorePqCluster(cluster: PqServeCluster, lut: Array[Double],
-      constOff: Double,
-      m: Int, ksub: Int, errScale: Double, kPad: Int,
-      exclude: Long => Boolean): (Array[(Long, Double, Double)], Double) = {
-    val l2Metric = metric == MetricType.Euclidean
-    val cosMetric = metric == MetricType.Cosine
-    val heap = new java.util.PriorityQueue[(Long, Double, Double)](
-      math.min(math.max(1, kPad), 1024),
-      (a: (Long, Double, Double), b: (Long, Double, Double)) => {
-        val c = java.lang.Double.compare(b._2, a._2)
-        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
-      })
-    var minDisc = Double.PositiveInfinity
-    val ids = cluster.ids
-    val codes = cluster.codes
-    var i = 0
-    var off = 0
-    while (i < ids.length) {
-      if (!exclude(ids(i))) {
-        var adc = constOff + cluster.rowConst(i)
-        var sub = 0
-        while (sub < m) {
-          adc += lut(sub * ksub + (codes(off + sub) & 0xff)); sub += 1
-        }
-        val er = cluster.err(i)
-        val d =
-          if (l2Metric) adc
-          else if (cosMetric) 1.0 + adc
-          else adc
-        val e =
-          if (l2Metric) 2.0 * math.sqrt(math.max(adc, 0.0)) * er + er * er
-          else errScale * er
-        if (heap.size < kPad) heap.add((ids(i), d, e))
-        else {
-          val worst = heap.peek()
-          if (d < worst._2 || (d == worst._2 && ids(i) < worst._1)) {
-            val ev = heap.poll()
-            if (ev._2 - ev._3 < minDisc) minDisc = ev._2 - ev._3
-            heap.add((ids(i), d, e))
-          } else if (d - e < minDisc) minDisc = d - e
-        }
-      }
-      i += 1
-      off += m
-    }
-    val out = new Array[(Long, Double, Double)](heap.size)
-    var n = out.length - 1
-    while (n >= 0) { out(n) = heap.poll(); n -= 1 }
-    (out, minDisc)
-  }
-
-  /** PQ-residency top-K: the same probe/guard/retry skeleton as
-    * `servePoint`, scoring resident m-byte ADC codes; the fresh tail is
-    * scored EXACTLY from its float payload and merged.
-    *
-    * `certify = false` (throughput): rank by ADC scores directly — zero
-    * jobs warm, but PQ is a lossy ~32× compression, so unlike the 16-bit
-    * tier expect REAL rank flips on close pairs; this mode trades recall
-    * for the densest residency and is an explicit opt-in.
-    *
-    * `certify = true`: the returned id SET is exact (same proof shape as
-    * the 16-bit tier, off the persisted per-row reconstruction error) —
-    * boundary-ambiguous candidates are float-reranked in one pruned job.
-    * PQ intervals are wider than 16-bit ones, so expect a rerank job on
-    * most non-trivial serves: this mode is for proof, not throughput.
-    *
-    * None = pre-PQ/pre-__pqerr layout, dim mismatch, over budget, thrash,
-    * or a pathological rerank band — the caller answers on the job path. */
-  def servePointPqDetail(vecCol: String, query: Array[Float], k: Int,
-      nProbe: Int, exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      certify: Boolean = false,
-      probeSet: Option[Array[Int]] = None)
-      : Option[(Array[(Long, Double)], Int)] = {
-    val cb = pqCodebook() match {
-      case Some(c) => c
-      case None => return decline // pre-PQ layout
-    }
-    if (!clustered().columns.contains("__pqerr")) return decline
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    if (q.length != cb.dim) return decline
-    var clusters: Array[PqServeCluster] = null
-    var probed: Array[Int] = null
-    var attempts = 0
-    while (clusters == null) {
-      attempts += 1
-      if (attempts > 8) return decline
-      var w0AtProbe = 0L
-      var keyAtProbe: (Long, Long) = null
-      val missing: Array[Int] = synchronized {
-        ensureServeFresh()
-        w0AtProbe = serveWatermark
-        keyAtProbe = serveKey
-        // an explicit probe set (a recall cover) overrides nearest-nProbe,
-        // exactly as in servePoint
-        probed = singleProbeSet(q, nProbe, probeSet)
-        probed.filterNot(pqCache.containsKey(_))
-      }
-      var loaded: Map[Int, PqServeCluster] = null
-      try {
-        if (missing.nonEmpty) {
-          val counts = clusterStats().getOrElse(probeClusterCounts(missing))
-          val projected = missing.map(counts.getOrElse(_, 0L)).sum
-          val retained = synchronized {
-            probed.filter(pqCache.containsKey(_))
-              .map(pqCache.get(_).ids.length.toLong).sum
-          }
-          if (projected + retained > effectiveMaxPqRows(cb.m)) return decline
-        }
-        loaded =
-          if (missing.isEmpty) Map.empty
-          else loadPqClusters(missing, cb.m)
-      } catch { case scala.util.control.NonFatal(_) => }
-      if (loaded == null) {
-        synchronized { serveStampCheckedAt = 0L; ensureServeFresh() }
-      } else synchronized {
-        ensureServeFresh()
-        if (serveKey == keyAtProbe && serveWatermark == w0AtProbe)
-          loaded.foreach { case (cid, cluster) =>
-            val prev = pqCache.put(cid, cluster)
-            if (prev != null) pqRowsResident -= prev.ids.length
-            pqRowsResident += cluster.ids.length
-          }
-        val rowCap = effectiveMaxPqRows(cb.m)
-        if (pqRowsResident > rowCap) {
-          val it = pqCache.entrySet().iterator()
-          while (pqRowsResident > rowCap && it.hasNext) {
-            val e = it.next()
-            if (!probed.contains(e.getKey)) {
-              pqRowsResident -= e.getValue.ids.length
-              it.remove()
-            }
-          }
-        }
-        val got = probed.map(pqCache.get(_))
-        if (!got.contains(null)) clusters = got
-      }
-    }
-    val dim = q.length
-    val qd = new Array[Double](dim)
-    var qss = 0.0
-    var qi = 0
-    while (qi < dim) {
-      qd(qi) = q(qi).toDouble
-      qss += qd(qi) * qd(qi)
-      qi += 1
-    }
-    val errScale = math.sqrt(qss) // ‖q‖₂ (1.0 for cosine: q normalized)
-    // exact-scored fresh tail rides in through the shared float kernel
-    // (error bound 0 — its scores need no certification or rerank)
-    val tailLocal: Array[(Long, Double, Double)] = freshTail match {
-      case Some(t) =>
-        IvfIndex.scoreCluster(t, qd, qss, k, metric, exclude)
-          .map(c => (c._1, c._2, 0.0))
-      case None => Array.empty
-    }
-    // ONE shared scoring lut for every coding×metric case — residual L2
-    // decomposes as ‖q−c‖² + Σ(−2q·cent)[codes] + rowConst (load-time);
-    // residual dot/cos as −q·c + Σ(−q·cent)[codes]
-    val (lutIds, lut, consts) = pqServeLuts(cb, probed, q)
-    proofCut(kPad => parScore[(PqServeCluster, Int)](clusters.zip(probed), {
-        case (cl, cid) =>
-          val ci = java.util.Arrays.binarySearch(lutIds, cid)
-          scorePqCluster(cl, lut, consts(ci), cb.m, cb.ksub,
-            errScale, kPad, exclude)
-      }),
-      tailLocal, k, certify, vecCol, probed, qd, qss, pqReranks)
-  }
-
   /** Serve-side ADC tables: (sorted probed ids, ONE shared lut,
     * per-cluster consts) for the layout's coding scheme — see the
     * decomposition note at the call site; rowConst carries the per-row
@@ -1707,14 +1355,6 @@ class IvfIndex(
     }
   }
 
-  /** Compatibility shape of `servePointPqDetail` — hits only. */
-  def servePointPq(vecCol: String, query: Array[Float], k: Int,
-      nProbe: Int, exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None)
-      : Option[Array[(Long, Double)]] =
-    servePointPqDetail(vecCol, query, k, nProbe, exclude, freshTail)
-      .map(_._1)
-
   /** Exact float scores for the boundary-ambiguous ids: ONE job, pruned
     * to the probed cluster dirs with the id list pushed down. Scores use
     * the same norm-form kernel as the float serve tier so merged
@@ -1750,380 +1390,160 @@ class IvfIndex(
       if (ids.forall(m.contains)) Some(m) else None
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Bounded top-kPad of one quantized resident cluster: scores
-    * dequantized rows WITHOUT materializing them — one fused Σ c_j·q_j
-    * over the short[] codes per row, then:
-    *   dot = b·Σq + a·(Σ c_j q_j)
-    *   L2  = norm2 − 2·dot + |q|²      (norm2 packed EXACT)
-    * Codes are stored biased into Short range (c − 32768), so the short
-    * dot is corrected by +32768·Σq once per row, not per element.
+  /** Low-latency top-K answered on the DRIVER from the resident serving
+    * caches, for a batch of queries (a single query is a batch of one) —
+    * the reference's in-process search (vec_search_executor.cpp:833-935),
+    * one entry point for every serving cell:
+    *   - `tier`: the resident form swept. `Float` is the all-float exact
+    *     tier; `Quantized` (16-bit codes) and `Pq` (ADC codes) rank by
+    *     code scores, or with `certify` return a PROVEN-exact id set
+    *     (boundary-ambiguous rows float-reranked in one pruned job — see
+    *     proofCut; `reranked` counts them). PQ is a lossy ~32× compression:
+    *     uncertified, expect real rank flips on close pairs.
+    *   - `probe`: the `nProbe` nearest clusters, or (`Recall`) the ball
+    *     cover PROVING recall ≥ target (`coverFromCounts`; 1.0 = exact).
+    *     On the code tiers a cover forces certification — the proof is the
+    *     composition cover × certified top-k of the cover's candidates.
+    *   - `conds`: a conjunction over the declared resident columns (empty
+    *     = unfiltered), evaluated EXACTLY over scalar residency into a
+    *     passing-id mask (`withPassingMask`) — the job path's
+    *     filter-then-topk over the same probe set (the reference evaluates
+    *     the filter during the walk, vec_search_executor.cpp:905-928).
+    *     Under a cover, per-cluster PASSING counts make it a filtered
+    *     cover (recall ≥ target over the filtered rows).
     *
-    * Returns (id, score, errorBound) candidates plus the minimum score
-    * LOWER bound over every row the heap discarded — the caller proves
-    * discarded rows can't reach the global top-k (QuantCluster doc has
-    * the bound derivations; the dot bound is the tighter of the L1 form
-    * and Cauchy–Schwarz against the packed residual norm). */
-  private def scoreQuantCluster(cluster: QuantCluster, qd: Array[Double],
-      qs: Double, qss: Double, qabs: Double, kPad: Int,
-      exclude: Long => Boolean): (Array[(Long, Double, Double)], Double) = {
-    val dim = qd.length
-    val l2Metric = metric == MetricType.Euclidean
-    val qn2 = math.sqrt(qss)
-    val heap = new java.util.PriorityQueue[(Long, Double, Double)](
-      math.min(math.max(1, kPad), 1024), // grows; kPad may be "everything"
-      (a: (Long, Double, Double), b: (Long, Double, Double)) => {
-        val c = java.lang.Double.compare(b._2, a._2)
-        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
-      })
-    var minDisc = Double.PositiveInfinity
-    val ids = cluster.ids
-    val codes = cluster.codes
-    var i = 0
-    var off = 0
-    while (i < ids.length) {
-      if (!exclude(ids(i))) {
-        var sdot = 0.0
-        var j = 0
-        while (j < dim) { sdot += codes(off + j) * qd(j); j += 1 }
-        val cdot = sdot + 32768.0 * qs
-        val a = cluster.scaleA(i)
-        val b = cluster.scaleB(i)
-        val dot = b * qs + a * cdot
-        val d =
-          if (l2Metric) cluster.norm2(i) - 2.0 * dot + qss
-          else if (metric == MetricType.Cosine) 1.0 - dot
-          else -dot
-        val eDot = math.min(0.5 * a * qabs, qn2 * cluster.rerr2(i))
-        val e = if (l2Metric) 2.0 * eDot else eDot
-        if (heap.size < kPad) heap.add((ids(i), d, e))
-        else {
-          val worst = heap.peek()
-          if (d < worst._2 || (d == worst._2 && ids(i) < worst._1)) {
-            val ev = heap.poll()
-            if (ev._2 - ev._3 < minDisc) minDisc = ev._2 - ev._3
-            heap.add((ids(i), d, e))
-          } else if (d - e < minDisc) minDisc = d - e
-        }
-      }
-      i += 1
-      off += dim
-    }
-    val out = new Array[(Long, Double, Double)](heap.size)
-    var n = out.length - 1
-    while (n >= 0) { out(n) = heap.poll(); n -= 1 }
-    (out, minDisc)
+    * Serving answers FROM THE INDEX plus an optional caller-supplied
+    * `freshTail` (rows above the serving pin, packed via
+    * `IvfIndex.packRows`, scored exactly) — the in-process analog of the
+    * reference's graph-over-prefix + brute-force-tail merge
+    * (vec_search_executor.cpp:885-904). With `conds` the tail must be
+    * PRE-FILTERED by the caller (the resident mask does not cover it).
+    * `exclude` masks known-dead ids.
+    *
+    * The batch shares ONE snapshot handshake, ONE union cold load and
+    * ONE row sweep (each resident row is read from RAM once and scored
+    * for every query probing its cluster — dense serving at high dim is
+    * RAM-bandwidth-bound); each query's answer equals the query served
+    * alone: same probes, scores, (distance, id) tie-break and proof.
+    * Returns per query, in input order, the hits best first, the rows
+    * reranked and the probe set swept; None = that query declines to the
+    * job path (over budget, thrash, a pathological rerank band, an
+    * undeclared filter column, a wrong dimension, a pre-PQ layout). A
+    * batch-wide failure (union over budget, churn, mixed dimensions)
+    * degrades to per-query serves — batch membership never changes a
+    * query's outcome; a batch of one declines. Each None counts one
+    * serve decline; degrading counts nothing. */
+  def serve(vecCol: String, queries: Array[Array[Float]], k: Int,
+      tier: ServeTier, probe: ServeProbe,
+      conds: Seq[graft.filter.SimpleConjuncts.Cond],
+      exclude: Long => Boolean,
+      freshTail: Option[(Array[Long], Array[Double], Array[Double])])
+      : Array[Option[Served]] = {
+    def attempt(qs: Array[Array[Float]]) =
+      serveBatch(vecCol, qs, k, tier, probe, conds, exclude, freshTail)
+    val out: Array[Option[Served]] =
+      if (queries.isEmpty) Array.empty
+      else attempt(queries).getOrElse(
+        if (queries.length == 1) Array(None)
+        else queries.map(q => attempt(Array(q)).flatMap(_.head)))
+    declines.addAndGet(out.count(_.isEmpty).toLong)
+    out
   }
 
-  /** None = the probed clusters exceed the resident budget (cardinality
-    * pre-check against persisted per-cluster counts, BEFORE any collect)
-    * or the cache is thrashing under racing rebuilds — the caller answers
-    * on the job path instead. */
-  def servePoint(vecCol: String, query: Array[Float], k: Int, nProbe: Int,
+  /** One attempt at the whole batch; None = a batch-wide failure. Takes
+    * the RAW queries: a degraded per-query serve re-normalizes a cosine
+    * query from its raw vector (re-normalizing a normalized one can move
+    * the last ulp). */
+  private def serveBatch(vecCol: String, raw: Array[Array[Float]], k: Int,
+      tier: ServeTier, probe: ServeProbe,
+      conds: Seq[graft.filter.SimpleConjuncts.Cond],
+      exclude: Long => Boolean,
+      freshTail: Option[(Array[Long], Array[Double], Array[Double])])
+      : Option[Array[Option[Served]]] = {
+    val qs = if (metric == MetricType.Cosine) raw.map(IvfIndex.normalize) else raw
+    val dim = qs(0).length
+    if (qs.exists(_.length != dim)) return None // mixed dims: per-query guards
+    // stored-dim guard: resident rows are packed at the stored dim — a
+    // wrong-length query declines, never misreads or throws
+    val fits = tier match {
+      case ServeTier.Pq(_) => pqCodebook().exists(_.dim == dim) &&
+        clustered().columns.contains("__pqerr") // else a pre-PQ layout
+      case _ => !centroids().headOption.exists(_._2.length != dim)
+    }
+    if (!fits || !conds.forall(c => filterColsDecl.contains(c.col)))
+      return Some(Array.fill(qs.length)(None))
+    val certify = tier match {
+      case ServeTier.Float => false
+      case ServeTier.Quantized(c) => c || probe.isInstanceOf[ServeProbe.Recall]
+      case ServeTier.Pq(c) => c || probe.isInstanceOf[ServeProbe.Recall]
+    }
+    val tailIds = freshTail.map(_._1).getOrElse(Array.empty[Long])
+    def sweepOver(nProbe: Int, sets: Option[Array[Array[Int]]],
+        ex: Long => Boolean) =
+      sweep(vecCol, qs, k, tier, certify,
+        () => resolveProbes(qs, nProbe, sets), ex, freshTail)
+    // fixed probe sets: the mask (if any) covers their union — a superset
+    // mask stays exact for a query probing any subset
+    def fixed(nProbe: Int, sets: Option[Array[Array[Int]]]) =
+      if (conds.isEmpty) sweepOver(nProbe, sets, exclude)
+      else withPassingMask(conds, exclude, tailIds,
+        () => resolveProbes(qs, nProbe, sets).flatten.distinct)(
+        (ex, _) => sweepOver(nProbe, sets, ex))
+    probe match {
+      case ServeProbe.Nearest(nProbe) => fixed(nProbe, None)
+      case ServeProbe.Sets(sets) => fixed(0, Some(sets))
+      case ServeProbe.Recall(target, slack) =>
+        // covers are DERIVED STATE: computed and swept under one pin (a
+        // same-watermark rebuild in between would serve the new generation
+        // under a stale cover with no recall proof) — withPassingMask
+        // re-verifies it, over ALL clusters when filtered (every indexed
+        // row lives in exactly one, so the union is the id universe)
+        withPassingMask(conds, exclude, tailIds, () => centroids().map(_._1)) {
+          (ex, counts) =>
+            lazy val cs = counts()
+            sweepOver(0, Some(qs.map(coverFromCounts(_, k, target, slack, cs))), ex)
+        }
+    }
+  }
+
+  // ---- adapters kept for perfbench/: the benchmark harness replays
+  // these calls and is versioned with its recorded metrics, so it keeps
+  // its call sites; each adapter is one `serve` call ----
+
+  def servePointRecall(vecCol: String, query: Array[Float], k: Int,
+      target: Double, exclude: Long => Boolean = _ => false,
+      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
+      slack: Long = 0L): Option[Array[(Long, Double)]] =
+    serve(vecCol, Array(query), k, ServeTier.Float,
+      ServeProbe.Recall(target, slack), Nil, exclude, freshTail).head.map(_.hits)
+
+  def servePointFilteredRecall(vecCol: String, query: Array[Float], k: Int,
+      target: Double, conds: Seq[graft.filter.SimpleConjuncts.Cond],
       exclude: Long => Boolean = _ => false,
       freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      probeSet: Option[Array[Int]] = None)
-      : Option[Array[(Long, Double)]] = {
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    // stored-dim guard: resident vectors are packed row-major at the
-    // stored dim — a wrong-length query declines rather than misreading.
-    if (centroids().headOption.exists(_._2.length != q.length)) return decline
-    // ONLY cache bookkeeping runs under the lock. The cold-cluster load is
-    // a real Spark job (hundreds of ms) and runs between the lock windows —
-    // holding the lock across it would convoy every concurrent warm query
-    // behind one cold one (the reference serializes nothing across queries:
-    // 16-way executor pool, executor_pool.hpp:10-46). Duplicate concurrent
-    // loads of the same cluster are allowed; last writer wins. Scoring is
-    // also outside the lock (the captured arrays are immutable — eviction
-    // only unlinks map entries).
-    var clusters: Array[(Array[Long], Array[Double], Array[Double])] = null
-    var probed: Array[Int] = null
-    var attempts = 0
-    while (clusters == null) {
-      attempts += 1
-      if (attempts > 8) return decline // thrash: degrade to the job path
-      var w0AtProbe = 0L
-      var keyAtProbe: (Long, Long) = null
-      val missing: Array[Int] = synchronized {
-        ensureServeFresh()
-        w0AtProbe = serveWatermark
-        keyAtProbe = serveKey
-        // an EXPLICIT probe set (e.g. probeSetForRecall's proven cover)
-        // overrides the nearest-nProbe selection; ids a racing rebuild
-        // retired are dropped (the caller's pin re-check catches the race)
-        probed = probeSet match {
-          case Some(ps) =>
-            val live = centroids().map(_._1).toSet
-            ps.filter(live)
-          case None => centroids()
-            .map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-            .sortBy { case (_, d) => d }
-            .take(nProbe)
-            .map(_._1)
-        }
-        probed.filterNot(serveCache.containsKey(_))
-      }
-      // probe + load are guarded: a rebuild overwriting clustered/ between
-      // the stamp read and the collect throws FileNotFound out of the job —
-      // treated as one failed attempt (the retry re-reads the stamp and
-      // re-lists), never an exception out of servePoint; persistent churn
-      // declines via the attempt bound
-      var loaded: Map[Int, (Array[Long], Array[Double], Array[Double])] = null
-      try {
-        if (missing.nonEmpty) {
-          // cardinality pre-check BEFORE the collect: a degenerate cluster
-          // larger than the budget never reaches the driver. Feasibility is
-          // judged on the probe set alone (eviction keeps only these).
-          val counts = clusterStats().getOrElse(probeClusterCounts(missing))
-          val projected = missing.map(counts.getOrElse(_, 0L)).sum
-          val retained = synchronized {
-            probed.filter(serveCache.containsKey(_))
-              .map(serveCache.get(_)._1.length.toLong).sum
-          }
-          if (projected + retained > effectiveMaxRows(q.length)) return decline
-        }
-        loaded =
-          if (missing.isEmpty) Map.empty[Int, (Array[Long], Array[Double], Array[Double])]
-          else loadClusters(vecCol, missing) // the Spark job — lock NOT held
-      } catch { case scala.util.control.NonFatal(_) => }
-      if (loaded == null) {
-        // force a stamp re-read past the 250 ms rate limit: the failure
-        // usually IS a stamp move this instance hasn't observed yet
-        synchronized { serveStampCheckedAt = 0L; ensureServeFresh() }
-      } else synchronized {
-        ensureServeFresh()
-        // a rebase OR a rebuild/purge between the lock windows invalidated
-        // what we loaded (a purge rebuild can even leave the watermark
-        // unchanged, so the key check is load-bearing): drop and retry
-        if (serveKey == keyAtProbe && serveWatermark == w0AtProbe)
-          loaded.foreach { case (cid, cluster) =>
-            val prev = serveCache.put(cid, cluster)
-            if (prev != null) serveRowsResident -= prev._1.length
-            serveRowsResident += cluster._1.length
-          }
-        // evict least-recently-probed clusters beyond the budget (never
-        // the clusters of THIS query — just accessed/inserted)
-        val rowCap = effectiveMaxRows(q.length)
-        if (serveRowsResident > rowCap) {
-          val it = serveCache.entrySet().iterator()
-          while (serveRowsResident > rowCap && it.hasNext) {
-            val e = it.next()
-            if (!probed.contains(e.getKey)) {
-              serveRowsResident -= e.getValue._1.length
-              it.remove()
-            }
-          }
-        }
-        val got = probed.map(serveCache.get(_))
-        // a meta refresh between the lock windows may have cleared entries
-        // this thread loaded — rare; retry re-lists and re-loads
-        if (!got.contains(null)) clusters = got
-      }
-    }
-    val dim = q.length
-    val qd = new Array[Double](dim)
-    var qi = 0
-    var qNorm = 0.0
-    while (qi < dim) {
-      qd(qi) = q(qi).toDouble; qNorm += qd(qi) * qd(qi); qi += 1
-    }
-    val scoreSets = freshTail match {
-      case Some(t) => clusters :+ t
-      case None => clusters
-    }
-    // score probed clusters in parallel (flop-bound at high dims: a
-    // 960-dim probe is ~30M multiply-adds — one thread per cluster
-    // recovers the core count the job path gets from Spark), then merge
-    // the per-cluster top-k lists — same (distance, id) order as a single
-    // heap over everything
-    val locals: Array[Array[(Long, Double)]] =
-      if (scoreSets.length <= 1)
-        scoreSets.map(c => IvfIndex.scoreCluster(c, qd, qNorm, k, metric, exclude))
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        Await.result(Future.sequence(scoreSets.toSeq.map(c =>
-          Future(IvfIndex.scoreCluster(c, qd, qNorm, k, metric, exclude)))),
-          Duration.Inf).toArray
-      }
-    val heap = new java.util.PriorityQueue[(Long, Double)](k,
-      (a: (Long, Double), b: (Long, Double)) => {
-        val c = java.lang.Double.compare(b._2, a._2)
-        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
-      })
-    locals.foreach(_.foreach { cand =>
-      if (heap.size < k) heap.add(cand)
-      else {
-        val worst = heap.peek()
-        if (cand._2 < worst._2 || (cand._2 == worst._2 && cand._1 < worst._1)) {
-          heap.poll(); heap.add(cand)
-        }
-      }
-    })
-    val out = new Array[(Long, Double)](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { out(i) = heap.poll(); i -= 1 }
-    Some(out)
-  }
+      slack: Long = 0L): Option[Array[(Long, Double)]] =
+    serve(vecCol, Array(query), k, ServeTier.Float,
+      ServeProbe.Recall(target, slack), conds, exclude, freshTail).head.map(_.hits)
 
-  /** Batch serving: Q queries answered from the float-resident tier with
-    * ONE stamp handshake, ONE union cold load, and a SHARED row sweep —
-    * each resident row is read from RAM once per batch and scored against
-    * every query probing its cluster (dense serving at high dim is RAM-
-    * bandwidth-bound, so the sweep amortizes the bytes the way the
-    * job-mode batch amortizes the scan).
-    *
-    * Per-query results are EXACTLY `servePoint`'s (same probes, same
-    * score math, same (d, id) tie-break, same exclude + fresh-tail
-    * handling — proven in ServeBatchSpec). If the UNION of all queries'
-    * probe sets exceeds the residency budget, the batch degrades to
-    * per-query `servePoint` calls, which serve or decline individually —
-    * a batch never declines queries that would have served alone.
-    *
-    * Returns one (qid, result) per input query, input order. */
-  /** `probeSets` (aligned with `queries`) overrides the nearest-nProbe
-    * selection per query — the batch form of servePoint's explicit
-    * probe set (recallTarget covers: each query keeps ITS proven cover,
-    * the union is acquired once, the shared sweep scores each row only
-    * for the queries whose cover holds its cluster). Retired cluster ids
-    * are dropped like the single-query path. */
+  def servePointQuantizedRecallDetail(vecCol: String, query: Array[Float],
+      k: Int, target: Double, exclude: Long => Boolean = _ => false,
+      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
+      slack: Long = 0L): Option[(Array[(Long, Double)], Int)] =
+    serve(vecCol, Array(query), k, ServeTier.Quantized(certify = true),
+      ServeProbe.Recall(target, slack), Nil, exclude, freshTail)
+      .head.map(s => (s.hits, s.reranked))
+
+  /** `probeSets` (aligned with `queries`) replaces the nearest-nProbe
+    * selection per query. */
   def servePointBatch(vecCol: String,
       queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
       exclude: Long => Boolean = _ => false,
       freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
       probeSets: Option[Array[Array[Int]]] = None)
-      : Array[(Long, Option[Array[(Long, Double)]])] = {
-    if (queries.isEmpty) return Array.empty
-    val qs: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    // fall back with the RAW queries: servePoint normalizes cosine queries
-    // itself, and re-normalizing an already-normalized vector can move the
-    // last ulp — the degraded path must equal a direct servePoint call
-    def fallback(): Array[(Long, Option[Array[(Long, Double)]])] =
-      queries.zipWithIndex.map { case ((qid, raw), qi) =>
-        (qid, servePoint(vecCol, raw, k, nProbe, exclude, freshTail,
-          probeSet = probeSets.map(_(qi))))
-      }
-    val dim = qs(0).length
-    if (qs.exists(_.length != dim)) return fallback() // mixed dims: per-query guard
-    if (centroids().headOption.exists(_._2.length != dim)) {
-      queries.foreach(_ => decline)
-      return queries.map { case (qid, _) => (qid, None) }
-    }
-    // per-query probe sets + the union acquisition, same retry skeleton
-    // as servePoint (lock only around cache bookkeeping)
-    var clusters: Map[Int, (Array[Long], Array[Double], Array[Double])] = null
-    var probesPer: Array[Array[Int]] = null
-    var attempts = 0
-    while (clusters == null) {
-      attempts += 1
-      if (attempts > 8) return fallback() // churn: per-query path decides
-      var w0AtProbe = 0L
-      var keyAtProbe: (Long, Long) = null
-      var union: Array[Int] = null
-      val missing: Array[Int] = synchronized {
-        ensureServeFresh()
-        w0AtProbe = serveWatermark
-        keyAtProbe = serveKey
-        val cents = centroids()
-        probesPer = probeSets match {
-          case Some(ps) =>
-            val live = cents.map(_._1).toSet
-            ps.map(_.filter(live))
-          case None => qs.map { q =>
-            cents.map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-              .sortBy { case (_, d) => d }
-              .take(nProbe)
-              .map(_._1)
-          }
-        }
-        union = probesPer.flatten.distinct
-        union.filterNot(serveCache.containsKey(_))
-      }
-      var loaded: Map[Int, (Array[Long], Array[Double], Array[Double])] = null
-      try {
-        if (missing.nonEmpty) {
-          val counts = clusterStats().getOrElse(probeClusterCounts(missing))
-          val projected = missing.map(counts.getOrElse(_, 0L)).sum
-          val retained = synchronized {
-            union.filter(serveCache.containsKey(_))
-              .map(serveCache.get(_)._1.length.toLong).sum
-          }
-          // union over budget: the BATCH can't be resident at once, but
-          // individual queries might — degrade, don't decline
-          if (projected + retained > effectiveMaxRows(dim)) return fallback()
-        }
-        loaded =
-          if (missing.isEmpty) Map.empty[Int, (Array[Long], Array[Double], Array[Double])]
-          else loadClusters(vecCol, missing)
-      } catch { case scala.util.control.NonFatal(_) => }
-      if (loaded == null) {
-        synchronized { serveStampCheckedAt = 0L; ensureServeFresh() }
-      } else synchronized {
-        ensureServeFresh()
-        if (serveKey == keyAtProbe && serveWatermark == w0AtProbe)
-          loaded.foreach { case (cid, cluster) =>
-            val prev = serveCache.put(cid, cluster)
-            if (prev != null) serveRowsResident -= prev._1.length
-            serveRowsResident += cluster._1.length
-          }
-        val rowCap = effectiveMaxRows(dim)
-        if (serveRowsResident > rowCap) {
-          val it = serveCache.entrySet().iterator()
-          while (serveRowsResident > rowCap && it.hasNext) {
-            val e = it.next()
-            if (!union.contains(e.getKey)) {
-              serveRowsResident -= e.getValue._1.length
-              it.remove()
-            }
-          }
-        }
-        val got = union.map(cid => cid -> serveCache.get(cid))
-        if (!got.exists(_._2 == null)) clusters = got.toMap
-      }
-    }
-    val qds = qs.map { q =>
-      val a = new Array[Double](dim)
-      var i = 0
-      while (i < dim) { a(i) = q(i).toDouble; i += 1 }
-      a
-    }
-    val qNorms = qds.map { a =>
-      var s = 0.0; var i = 0
-      while (i < dim) { s += a(i) * a(i); i += 1 }
-      s
-    }
-    // cluster -> indices of the queries probing it
-    val byCluster: Array[(Int, Array[Int])] = probesPer.zipWithIndex
-      .flatMap { case (ps, qi) => ps.map(c => (c, qi)) }
-      .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2)) }.toArray
-    // shared sweep per cluster, clusters in parallel (same pool model as
-    // the single-query path); the tail is swept once for ALL queries
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val tasks = byCluster.map { case (cid, qIdxs) => () =>
-      IvfIndex.scoreClusterBatch(clusters(cid), qds, qNorms, qIdxs, k,
-        metric, exclude)
-    } ++ freshTail.map { t => () =>
-      IvfIndex.scoreClusterBatch(t, qds, qNorms, qds.indices.toArray, k,
-        metric, exclude)
-    }.toSeq
-    val locals: Array[Array[(Int, Array[(Long, Double)])]] =
-      if (tasks.length <= 1) tasks.map(_())
-      else Await.result(
-        Future.sequence(tasks.toSeq.map(t => Future(t()))), Duration.Inf).toArray
-    // per-query merge of its clusters' locals — identical order semantics
-    // to servePoint's final heap
-    val finals = Array.fill(qs.length)(new graft.functions.TopKHeap(k))
-    locals.foreach(_.foreach { case (qi, local) =>
-      local.foreach { case (id, d) => finals(qi).offer(d, id) }
-    })
-    queries.zipWithIndex.map { case ((qid, _), qi) =>
-      (qid, Some(finals(qi).sortedPairs.map { case (d, id) => (id, d) }))
-    }
-  }
+      : Array[(Long, Option[Array[(Long, Double)]])] =
+    queries.map(_._1).zip(serve(vecCol, queries.map(_._2), k, ServeTier.Float,
+      probeSets.fold[ServeProbe](ServeProbe.Nearest(nProbe))(ServeProbe.Sets),
+      Nil, exclude, freshTail).map(_.map(_.hits)))
 
   // ---- attribute-filtered serving: declared scalar columns resident ----
 
@@ -2267,50 +1687,22 @@ class IvfIndex(
     }.toMap
   }
 
-  /** Attribute-filtered low-latency top-K: the conjunction is evaluated
-    * EXACTLY over the declared columns' resident values for the probed
-    * clusters, producing a passing-id set the sweep masks by — semantics
-    * identical to the job path's filter-then-topk over the same probe set
-    * (the reference's single path evaluates the filter during the walk,
-    * vec_search_executor.cpp:905-928; ours stays exact because the sweep
-    * is exhaustive over probed clusters). Declines (→ job path, exact)
-    * when a condition references an undeclared column, the scalar load
-    * overruns the budget, or the cache thrashes.
-    *
-    * `freshTail` rows must be PRE-FILTERED BY THE CALLER with the same
-    * conjunction (GraftDb evaluates it on the tail's scalar sidecar) —
-    * the resident passing-id set doesn't cover them, so the sweep
-    * exempts tail ids from the mask and scores them all. */
-  def servePointFiltered(vecCol: String, query: Array[Float], k: Int,
-      nProbe: Int, conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      probeSet: Option[Array[Int]] = None)
-      : Option[Array[(Long, Double)]] = {
-    if (conds.isEmpty)
-      return servePoint(vecCol, query, k, nProbe, exclude, freshTail, probeSet)
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    if (centroids().headOption.exists(_._2.length != q.length)) return decline
-    withPassingMask(conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty),
-      () => singleProbeSet(q, nProbe, probeSet)) { ex =>
-      servePoint(vecCol, query, k, nProbe, ex, freshTail, probeSet)
+  /** The clusters each query sweeps: the `nProbe` nearest centroids, or
+    * the explicit `sets` (a recall cover) with ids a racing rebuild
+    * retired dropped (the caller's pin re-check catches the race). Runs
+    * under the instance lock inside an acquisition (probeUnion contract). */
+  private def resolveProbes(qs: Array[Array[Float]], nProbe: Int,
+      sets: Option[Array[Array[Int]]]): Array[Array[Int]] = {
+    val cents = centroids()
+    sets match {
+      case Some(ps) =>
+        val live = cents.map(_._1).toSet
+        ps.map(_.filter(live))
+      case None => qs.map { q =>
+        cents.map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
+          .sortBy { case (_, d) => d }.take(nProbe).map(_._1)
+      }
     }
-  }
-
-  /** The probe set the vector sweep will visit, for the scalar residency
-    * to mirror (explicit set honored here and in servePoint; retired ids
-    * dropped). Must run under the instance lock (probeUnion contract). */
-  private def singleProbeSet(q: Array[Float], nProbe: Int,
-      probeSet: Option[Array[Int]]): Array[Int] = probeSet match {
-    case Some(ps) =>
-      val live = centroids().map(_._1).toSet
-      ps.filter(live)
-    case None => centroids()
-      .map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-      .sortBy { case (_, d) => d }
-      .take(nProbe)
-      .map(_._1)
   }
 
   /** Pin re-verify: true iff the serving snapshot still matches the one
@@ -2372,7 +1764,7 @@ class IvfIndex(
       effectiveMaxScalarRows,
       // the lookup must cover the clusters the HITS came from — an
       // explicit probe set (recallTarget covers) overrides nearest-nProbe
-      () => singleProbeSet(q, nProbe, probeSet),
+      () => resolveProbes(Array(q), nProbe, probeSet.map(Array(_))).head,
       loadScalarClusters) match {
       case None => decline
       case Some((scalars, _, _)) =>
@@ -2399,415 +1791,48 @@ class IvfIndex(
     case BoolVals(v, nl) => if (nl(j)) null else java.lang.Boolean.valueOf(v(j))
   }
 
-  /** PROVEN-recall serving (unfiltered): the cover is computed and the
-    * sweep served under ONE pin discipline — covers are DERIVED STATE
-    * like pass sets, so a same-watermark rebuild landing between
-    * probeSetForRecall (gen G radii/counts/centroids) and servePoint's
-    * own handshake (gen G+1 clusters, SAME cluster ids — build() reuses
-    * 0..N−1) would otherwise serve the new generation under a stale
-    * cover with no recall proof and nothing in the envelope saying so.
-    * Pin mismatch retries from scratch; persistent churn declines. */
-  def servePointRecall(vecCol: String, query: Array[Float], k: Int,
-      target: Double, exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L): Option[Array[(Long, Double)]] =
-    withRecallCover(query, k, target, slack)(cover =>
-      servePoint(vecCol, query, k, nProbe = cover.length, exclude,
-        freshTail, probeSet = Some(cover)))
-
-  /** The cover-pin skeleton shared by every PROVEN-recall serving tier:
-    * compute the geometric cover and run `inner`'s sweep under ONE pin
-    * (the sweep re-handshakes on its own; a same-watermark rebuild in
-    * between would serve the new generation under a stale cover with no
-    * recall proof). Pin mismatch retries from scratch; persistent churn
-    * declines. */
-  private def withRecallCover[R](query: Array[Float], k: Int,
-      target: Double, slack: Long)(
-      inner: Array[Int] => Option[R]): Option[R] = {
-    var attempts = 0
-    while (attempts < 4) {
-      attempts += 1
-      val (pinKey, pinWm) =
-        synchronized { ensureServeFresh(); (serveKey, serveWatermark) }
-      val cover = probeSetForRecall(query, k, target, slack)
-      inner(cover) match {
-        case None => return None
-        case some =>
-          if (pinStable(pinKey, pinWm)) return some
-        // else: a rebuild raced the cover — recompute against the new pin
-      }
-    }
-    decline
-  }
-
-  /** PROVEN-recall serving off the 16-BIT code residency: the proof is a
-    * COMPOSITION — the geometric cover guarantees ≥ ⌈target·k⌉ of the
-    * true top-k live in the cover's clusters, and the interval
-    * certification (proofCut, forced on — a floor demands a proof)
-    * returns the EXACT top-k of the cover's candidate set, so the
-    * answer's recall vs the true top-k is ≥ target; at target 1.0 it IS
-    * the exact top-k, at code-tier memory bandwidth. Distances follow the
-    * certified contract (quantized on the certified path, exact on the
-    * reranked path); the id SET carries the proof. Same cover-pin
-    * discipline as the float tier. */
-  def servePointQuantizedRecallDetail(vecCol: String, query: Array[Float],
-      k: Int, target: Double, exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L): Option[(Array[(Long, Double)], Int)] =
-    withRecallCover(query, k, target, slack)(cover =>
-      servePointQuantizedDetail(vecCol, query, k, nProbe = cover.length,
-        exclude, freshTail, certify = true, probeSet = Some(cover)))
-
-  /** PROVEN-recall serving off the PQ code residency — the same
-    * cover×certification composition as the 16-bit form (the stored
-    * per-row reconstruction error bounds make proofCut's intervals
-    * sound); a pathological rerank band declines to the job path. */
-  def servePointPqRecallDetail(vecCol: String, query: Array[Float],
-      k: Int, target: Double, exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L): Option[(Array[(Long, Double)], Int)] =
-    withRecallCover(query, k, target, slack)(cover =>
-      servePointPqDetail(vecCol, query, k, nProbe = cover.length,
-        exclude, freshTail, certify = true, probeSet = Some(cover)))
-
-  /** The serving pin as an opaque snapshot for callers assembling their
-    * own derived state (batch covers) — pair with [[pinStableFor]]. */
-  private[graft] def servingPinSnapshot(): ((Long, Long), Long) =
-    synchronized { ensureServeFresh(); (serveKey, serveWatermark) }
-
-  /** PROVEN-recall attribute-filtered serving: the recallTarget+filter
-    * combination the unfiltered cover cannot answer (it bounds the
-    * UNFILTERED top-k; filtered matches may rank past it). Per-cluster
-    * PASSING counts restore the bound: with the conjunction evaluated
-    * over scalar residency covering ALL clusters, take clusters by
-    * ascending d+r until the cumulative PASSING counts reach
-    * ⌈target·k⌉+slack — the worst such upper bound U bounds the true
-    * ⌈target·k⌉-th best FILTERED distance, and any cluster with
-    * d−r > U provably holds no filtered top-⌈target·k⌉ row (d−r lower-
-    * bounds every member, passing ones included). Probing the rest plus
-    * the exactly-scored pre-filtered tail ⇒ recall@k ≥ target; 1.0 is
-    * exact. `slack` absorbs tombstoned/excluded passing rows that may
-    * occupy the cover. DotProduct (no triangle inequality), missing
-    * radii, or unknown counts degrade the cover to ALL clusters — still
-    * proven (exhaustive), just not pruned. Declines when the all-cluster
-    * scalar residency or the cover's vector residency exceeds budget. */
-  def servePointFilteredRecall(vecCol: String, query: Array[Float], k: Int,
-      target: Double, conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L)
-      : Option[Array[(Long, Double)]] = {
-    if (conds.isEmpty)
-      return servePointRecall(vecCol, query, k, target, exclude, freshTail,
-        slack)
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    if (centroids().headOption.exists(_._2.length != q.length)) return decline
-    withPassingCountCover(q, k, target, slack, conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty)) { (cover, ex) =>
-      servePoint(vecCol, query, k, nProbe = cover.length, ex, freshTail,
-        probeSet = Some(cover))
-    }
-  }
-
-  /** The passing-count cover as a facet-lookup HINT for the
-    * filter+recallTarget(+facets) combination: the hits come from the
-    * passing-count cover, so the facet value lookup must probe THOSE
-    * clusters — the unfiltered probeSetForRecall cover may be narrower
-    * and systematically miss (→ a spurious decline, never a miscount).
-    * Recomputing here is cheap warm (scalar residency, pass set and
-    * per-cluster counts are all cached under the same keys the serving
-    * sweep used); a rebuild racing between the sweep and this hint can
-    * only make the lookup miss, which declines. */
-  def probeSetForFilteredRecall(query: Array[Float], k: Int, target: Double,
-      slack: Long, conds: Seq[graft.filter.SimpleConjuncts.Cond])
-      : Option[Array[Int]] = {
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    if (centroids().headOption.exists(_._2.length != q.length)) return None
-    withPassingCountCover(q, k, target, slack, conds, _ => false,
-      Array.empty)((cover, _) => Some(cover))
-  }
-
-  /** The skeleton shared by every PROVEN-recall attribute-FILTERED
-    * serving tier: acquire scalar residency over ALL clusters (every
-    * indexed row lives in exactly one, so the union is the id universe),
-    * evaluate the conjunction to a passing-id set + per-cluster PASSING
-    * counts, build the passing-count ball cover (recall ≥ target over
-    * the FILTERED universe), run the tier's sweep over the cover with
-    * the mask composed, then RE-VERIFY the pin (covers and pass sets are
-    * derived state — the same-watermark-rebuild race). `q` must already
-    * be metric-normalized; `tailIds0` (caller-pre-filtered fresh-tail
-    * rows) bypass the resident mask. */
-  private def withPassingCountCover[R](q: Array[Float], k: Int,
-      target: Double, slack: Long,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean, tailIds0: Array[Long])(
-      inner: (Array[Int], Long => Boolean) => Option[R]): Option[R] = {
-    if (!conds.forall(c => filterColsDecl.contains(c.col))) return decline
-    val tailIds = new java.util.HashSet[java.lang.Long]()
-    tailIds0.foreach(id => tailIds.add(id))
-    var attempts = 0
-    while (attempts < 4) {
-      attempts += 1
-      var union: Array[Int] = null
-      acquireResident[ScalarCluster](
-        scalarCache, _.ids.length.toLong,
-        () => scalarRowsResident, v => scalarRowsResident = v,
-        effectiveMaxScalarRows,
-        () => { union = centroids().map(_._1); union },
-        loadScalarClusters) match {
-        case None => return decline
-        case Some((scalars, pinKey, pinWm)) =>
-          val pass = passingIds(conds, union.map(scalars), union, pinWm)
-          // per-cluster passing counts (the cover's count input), cached
-          // next to the pass set — recomputing them is an O(corpus) hash
-          // walk per serve, a visible tax at 500k rows
-          val countKey = (graft.filter.SimpleConjuncts.key(conds), pinWm,
-            union.sorted.toSeq)
-          val cachedCounts = synchronized { passCountCache.get(countKey) }
-          val passCounts: Map[Int, Long] =
-            if (cachedCounts != null) cachedCounts
-            else {
-              val m = union.map { cid =>
-                val sc = scalars(cid)
-                var n = 0L
-                var j = 0
-                while (j < sc.ids.length) {
-                  if (pass.contains(sc.ids(j))) n += 1
-                  j += 1
-                }
-                cid -> n
-              }.toMap
-              synchronized { passCountCache.put(countKey, m) }
-              m
-            }
-          val cover = coverFromCounts(q, k, target, slack, passCounts)
-          inner(cover,
-            id => exclude(id) || (!pass.contains(id) && !tailIds.contains(id))
-          ) match {
-            case None => return None
-            case some =>
-              if (pinStable(pinKey, pinWm)) return some
-            // else: a rebuild raced the pass set/cover — retry
-          }
-      }
-    }
-    decline
-  }
-
-  /** PROVEN-recall attribute-FILTERED serving off the 16-BIT code
-    * residency: the passing-count cover bounds the true FILTERED top-k's
-    * clusters, the mask makes the candidate set the filtered universe,
-    * and the forced certification returns its exact top-k — recall ≥
-    * target over the filtered rows, at code-tier bandwidth (target 1.0 =
-    * the exact filtered answer). `freshTail` must be pre-filtered by the
-    * caller. */
-  def servePointQuantizedFilteredRecallDetail(vecCol: String,
-      query: Array[Float], k: Int, target: Double,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L): Option[(Array[(Long, Double)], Int)] = {
-    if (conds.isEmpty)
-      return servePointQuantizedRecallDetail(vecCol, query, k, target,
-        exclude, freshTail, slack)
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    if (centroids().headOption.exists(_._2.length != q.length)) return decline
-    withPassingCountCover(q, k, target, slack, conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty)) { (cover, ex) =>
-      servePointQuantizedDetail(vecCol, query, k, nProbe = cover.length,
-        ex, freshTail, certify = true, probeSet = Some(cover))
-    }
-  }
-
-  /** PROVEN-recall attribute-FILTERED serving off the PQ code residency —
-    * see `servePointQuantizedFilteredRecallDetail` (same passing-count
-    * cover, same forced certification over the masked candidates). */
-  def servePointPqFilteredRecallDetail(vecCol: String,
-      query: Array[Float], k: Int, target: Double,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L): Option[(Array[(Long, Double)], Int)] = {
-    if (conds.isEmpty)
-      return servePointPqRecallDetail(vecCol, query, k, target, exclude,
-        freshTail, slack)
-    val cb = pqCodebook() match {
-      case Some(c) => c
-      case None => return decline // pre-PQ layout
-    }
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    if (q.length != cb.dim) return decline
-    withPassingCountCover(q, k, target, slack, conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty)) { (cover, ex) =>
-      servePointPqDetail(vecCol, query, k, nProbe = cover.length, ex,
-        freshTail, certify = true, probeSet = Some(cover))
-    }
-  }
-
-  /** The BATCH form of [[withPassingCountCover]]: one all-cluster scalar
-    * acquisition + ONE passing-id set + ONE per-cluster passing-count map
-    * serve PER-QUERY proven covers for the whole batch (the conjunction is
-    * shared, so the counts are too — each query only differs in its
-    * centroid distances). `inner` gets the aligned covers plus the
-    * composed mask and runs the tier's shared sweep; the pin is
-    * re-verified after it returns (covers and pass sets are derived
-    * state — the same-watermark-rebuild race). `qsArr` must already be
-    * metric-normalized; `tailIds0` pre-filtered tail rows bypass the
-    * resident mask. */
-  private def withPassingCountCoverBatch[R](qsArr: Array[Array[Float]],
-      k: Int, target: Double, slack: Long,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean, tailIds0: Array[Long])(
-      inner: (Array[Array[Int]], Long => Boolean) => Option[R]): Option[R] = {
-    if (!conds.forall(c => filterColsDecl.contains(c.col))) return decline
-    val tailIds = new java.util.HashSet[java.lang.Long]()
-    tailIds0.foreach(id => tailIds.add(id))
-    var attempts = 0
-    while (attempts < 4) {
-      attempts += 1
-      var union: Array[Int] = null
-      acquireResident[ScalarCluster](
-        scalarCache, _.ids.length.toLong,
-        () => scalarRowsResident, v => scalarRowsResident = v,
-        effectiveMaxScalarRows,
-        () => { union = centroids().map(_._1); union },
-        loadScalarClusters) match {
-        case None => return decline
-        case Some((scalars, pinKey, pinWm)) =>
-          val pass = passingIds(conds, union.map(scalars), union, pinWm)
-          val countKey = (graft.filter.SimpleConjuncts.key(conds), pinWm,
-            union.sorted.toSeq)
-          val cachedCounts = synchronized { passCountCache.get(countKey) }
-          val passCounts: Map[Int, Long] =
-            if (cachedCounts != null) cachedCounts
-            else {
-              val m = union.map { cid =>
-                val sc = scalars(cid)
-                var n = 0L
-                var j = 0
-                while (j < sc.ids.length) {
-                  if (pass.contains(sc.ids(j))) n += 1
-                  j += 1
-                }
-                cid -> n
-              }.toMap
-              synchronized { passCountCache.put(countKey, m) }
-              m
-            }
-          val covers = qsArr.map(q => coverFromCounts(q, k, target, slack,
-            passCounts))
-          inner(covers,
-            id => exclude(id) || (!pass.contains(id) && !tailIds.contains(id))
-          ) match {
-            case None => return None
-            case some =>
-              if (pinStable(pinKey, pinWm)) return some
-            // else: a rebuild raced the pass set/covers — retry
-          }
-      }
-    }
-    decline
-  }
-
-  /** BATCH proven-recall attribute-filtered serving, float tier: each
-    * query keeps ITS passing-count cover (recall ≥ target over the
-    * FILTERED universe; 1.0 = exact) while the cover union is acquired
-    * once and the row sweep is shared. Outer None = whole-batch decline
-    * (caller degrades to per-query dispatch, which still serves). */
-  def servePointFilteredRecallBatch(vecCol: String,
-      queries: Array[(Long, Array[Float])], k: Int, target: Double,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L)
-      : Option[Array[(Long, Option[Array[(Long, Double)]])]] = {
-    if (queries.isEmpty) return Some(Array.empty)
-    if (conds.isEmpty) return decline // unfiltered covers are the caller's path
-    val qsArr: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    val dim = qsArr(0).length
-    if (qsArr.exists(_.length != dim)) return decline
-    if (centroids().headOption.exists(_._2.length != dim)) return decline
-    withPassingCountCoverBatch(qsArr, k, target, slack, conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty)) { (covers, ex) =>
-      Some(servePointBatch(vecCol, queries, k, nProbe = 0, ex, freshTail,
-        probeSets = Some(covers)))
-    }
-  }
-
-  /** BATCH proven-recall attribute-filtered serving off the 16-BIT code
-    * residency: per-query passing-count covers × FORCED certification on
-    * the shared code sweep — cover bounds the filtered top-k's clusters,
-    * the mask makes the candidates the filtered universe, certification
-    * returns their exact top-k ⇒ recall ≥ target per query. */
-  def servePointQuantizedFilteredRecallBatchDetail(vecCol: String,
-      queries: Array[(Long, Array[Float])], k: Int, target: Double,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L)
-      : Option[Array[(Long, Option[(Array[(Long, Double)], Int)])]] = {
-    if (queries.isEmpty) return Some(Array.empty)
-    if (conds.isEmpty) return decline
-    val qsArr: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    val dim = qsArr(0).length
-    if (qsArr.exists(_.length != dim)) return decline
-    if (centroids().headOption.exists(_._2.length != dim)) return decline
-    withPassingCountCoverBatch(qsArr, k, target, slack, conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty)) { (covers, ex) =>
-      Some(servePointQuantizedBatchDetail(vecCol, queries, k, nProbe = 0,
-        ex, freshTail, certify = true, probeSets = Some(covers)))
-    }
-  }
-
-  /** The PQ twin of [[servePointQuantizedFilteredRecallBatchDetail]]
-    * (per-row reconstruction error bounds keep proofCut's intervals
-    * sound; a pathological rerank band declines that query). */
-  def servePointPqFilteredRecallBatchDetail(vecCol: String,
-      queries: Array[(Long, Array[Float])], k: Int, target: Double,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      slack: Long = 0L)
-      : Option[Array[(Long, Option[(Array[(Long, Double)], Int)])]] = {
-    if (queries.isEmpty) return Some(Array.empty)
-    if (conds.isEmpty) return decline
-    val cb = pqCodebook() match {
-      case Some(c) => c
-      case None => return decline // pre-PQ layout
-    }
-    val qsArr: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    if (qsArr.exists(_.length != cb.dim)) return decline
-    withPassingCountCoverBatch(qsArr, k, target, slack, conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty)) { (covers, ex) =>
-      Some(servePointPqBatchDetail(vecCol, queries, k, nProbe = 0,
-        ex, freshTail, certify = true, probeSets = Some(covers)))
-    }
-  }
-
-  /** Ball cover from caller-supplied per-cluster counts (the geometric
-    * half of probeSetForRecall, counts injected — passing counts for the
-    * filtered form). `q` is already metric-normalized. */
+  /** The ball cover: the probe set PROVING recall ≥ `target` at cut `k`
+    * over the rows `counts` counts per cluster — every row for
+    * `probeSetForRecall`, the rows PASSING a conjunction for a filtered
+    * cover (an unfiltered cover bounds the UNFILTERED top-k; filtered
+    * matches may rank past it, and passing counts restore the bound).
+    *
+    * With d_c = ‖q − centroid_c‖₂ and radius r_c, every row of c has true
+    * distance within [d_c − r_c, d_c + r_c] (triangle inequality). Take
+    * clusters by ascending UPPER bound until their counts cover
+    * ⌈target·k⌉ rows — the worst of those upper bounds, U, bounds the
+    * true ⌈target·k⌉-th best distance. Any cluster with d_c − r_c > U
+    * provably holds none of the top ⌈target·k⌉ (d_c − r_c lower-bounds
+    * every member, passing ones included), so probing the rest returns
+    * AT LEAST the exact top-⌈target·k⌉ ⇒ recall@k ≥ target; target 1.0
+    * is fully exact (the brute-force-threshold spirit of
+    * vec_search_executor.hpp:28, without the fixed threshold).
+    *
+    * Euclidean bounds directly; cosine rides the same L2 geometry (rows
+    * are stored normalized, and cosine top-k of unit vectors == L2
+    * top-k). Dot product has no triangle inequality → probe everything;
+    * so do missing radii or counts (`counts` is read only when needed).
+    * Clusters with unknown radius/count are always probed and never
+    * tighten U (partial radii stay conservative). `slack` widens the
+    * cover target (callers add their tombstone count: masked rows might
+    * occupy the cover, pushing true answers past U otherwise). `q` is
+    * already metric-normalized. */
   private def coverFromCounts(q: Array[Float], k: Int, target: Double,
-      slack: Long, counts: Map[Int, Long]): Array[Int] = {
+      slack: Long, counts: => Option[Map[Int, Long]]): Array[Int] = {
     val cents = centroids()
     val all = cents.map(_._1)
     if (metric == MetricType.DotProduct) return all
     val radii = clusterRadii().getOrElse(return all)
+    val cnt = counts.getOrElse(return all)
     val kGoal = math.max(1L, math.ceil(target * k).toLong) + slack
     val ds = cents.map { case (cid, c) =>
       (cid, math.sqrt(IvfIndex.dist(MetricType.Euclidean, c, q)))
     }
     val known = ds.filter { case (cid, _) =>
-      radii.contains(cid) && counts.contains(cid)
+      radii.contains(cid) && cnt.contains(cid)
     }
     if (known.isEmpty) return all
-    val byUb = known.map { case (cid, d) => (cid, d + radii(cid), counts(cid)) }
+    val byUb = known.map { case (cid, d) => (cid, d + radii(cid), cnt(cid)) }
       .sortBy(_._2)
     var cum = 0L
     var u = Double.PositiveInfinity
@@ -2815,60 +1840,96 @@ class IvfIndex(
     while (i < byUb.length && cum < kGoal) {
       cum += byUb(i)._3; u = byUb(i)._2; i += 1
     }
-    if (cum < kGoal) return all // fewer certain passing rows than the cover needs
+    if (cum < kGoal) return all // fewer certain rows than the cover needs
     ds.filter { case (cid, d) =>
-      !radii.contains(cid) || !counts.contains(cid) || d - radii(cid) <= u
+      !radii.contains(cid) || !cnt.contains(cid) || d - radii(cid) <= u
     }.map(_._1)
   }
 
-  /** The shared skeleton of EVERY attribute-filtered serving tier:
-    * acquire scalar residency over `probeUnion`'s clusters, evaluate the
-    * conjunction to a passing-id set, run `inner` with the composed
-    * exclusion mask, then RE-VERIFY the serving pin — `inner` (servePoint
-    * and the code-tier sweeps) does its own snapshot handshake, so a full
-    * rebuild landing in between that changes cluster MEMBERSHIP but not
-    * the watermark would otherwise let the sweep serve a generation the
-    * pass set does not cover (passing rows relocated into newly-probed
-    * clusters would be silently excluded from a response still marked
-    * served+filtered). On pin mismatch the acquisition retries from
-    * scratch; persistent churn declines. `tailIds0` (caller-pre-filtered
-    * fresh-tail rows) bypass the resident mask — the pass set doesn't
-    * cover them. The scalar acquisition is gated by its OWN cap
-    * (effectiveMaxScalarRows — scalar rows are far lighter than any
-    * vector/code row); the inner sweep's residency guards still gate the
-    * vector/code bytes. */
+  /** The pin skeleton of every serve that builds DERIVED state (a
+    * passing-id set, a recall cover) outside the sweep's own handshake:
+    * with `conds`, acquire scalar residency over `probeUnion`'s clusters
+    * and evaluate the conjunction to a passing-id set; run `inner` with
+    * the composed exclusion mask and the per-cluster counts a cover needs
+    * (PASSING counts filtered, `clusterStats()` unfiltered); then
+    * RE-VERIFY the serving pin. `inner` (the sweep) does its own snapshot
+    * handshake, so a full rebuild landing in between that changes
+    * cluster MEMBERSHIP but not the watermark would otherwise let the
+    * sweep serve a generation the pass set or cover does not describe
+    * (passing rows relocated into newly-probed clusters silently
+    * excluded, or a cover with no recall proof, from a response still
+    * marked served). On pin mismatch the whole attempt retries from
+    * scratch; persistent churn gives up (None). `tailIds0`
+    * (caller-pre-filtered fresh-tail rows) bypass the resident mask —
+    * the pass set doesn't cover them. The scalar acquisition is gated by
+    * its OWN cap (effectiveMaxScalarRows — scalar rows are far lighter
+    * than any vector/code row); the sweep's residency guards still gate
+    * the vector/code bytes. */
   private def withPassingMask[R](
       conds: Seq[graft.filter.SimpleConjuncts.Cond],
       exclude: Long => Boolean,
       tailIds0: Array[Long],
       probeUnion: () => Array[Int])(
-      inner: (Long => Boolean) => Option[R]): Option[R] = {
-    if (!conds.forall(c => filterColsDecl.contains(c.col))) return decline
-    val tailIds = new java.util.HashSet[java.lang.Long]()
-    tailIds0.foreach(id => tailIds.add(id))
+      inner: (Long => Boolean, () => Option[Map[Int, Long]]) => Option[R])
+      : Option[R] = {
+    lazy val tailIds = {
+      val s = new java.util.HashSet[java.lang.Long]()
+      tailIds0.foreach(id => s.add(id))
+      s
+    }
     var attempts = 0
     while (attempts < 4) {
       attempts += 1
-      var union: Array[Int] = null
-      acquireResident[ScalarCluster](
-        scalarCache, _.ids.length.toLong,
-        () => scalarRowsResident, v => scalarRowsResident = v,
-        effectiveMaxScalarRows,
-        () => { union = probeUnion(); union },
-        loadScalarClusters) match {
-        case None => return decline
-        case Some((scalars, pinKey, pinWm)) =>
-          val pass = passingIds(conds, union.map(scalars), union, pinWm)
-          inner(id =>
-            exclude(id) || (!pass.contains(id) && !tailIds.contains(id))) match {
-            case None => return None // inner declined on its own terms
-            case some =>
-              if (pinStable(pinKey, pinWm)) return some
-            // else: a rebuild raced the pass set — retry from scratch
-          }
+      val (mask, counts, pinKey, pinWm): (Long => Boolean,
+          () => Option[Map[Int, Long]], (Long, Long), Long) =
+        if (conds.isEmpty) {
+          val (key, wm) = synchronized { ensureServeFresh(); (serveKey, serveWatermark) }
+          (exclude, () => clusterStats(), key, wm)
+        } else {
+          var union: Array[Int] = null
+          val (scalars, key, wm) = acquireResident[ScalarCluster](
+            scalarCache, _.ids.length.toLong,
+            () => scalarRowsResident, v => scalarRowsResident = v,
+            effectiveMaxScalarRows,
+            () => { union = probeUnion(); union },
+            loadScalarClusters).getOrElse(return None)
+          val pass = passingIds(conds, union.map(scalars), union, wm)
+          (id => exclude(id) || (!pass.contains(id) && !tailIds.contains(id)),
+            () => Some(passingCounts(conds, scalars, union, pass, wm)), key, wm)
+        }
+      inner(mask, counts) match {
+        case None => return None // inner declined on its own terms
+        case some =>
+          if (pinStable(pinKey, pinWm)) return some
+        // else: a rebuild raced the pass set / cover — retry from scratch
       }
     }
-    decline
+    None
+  }
+
+  /** Per-cluster PASSING counts (a filtered cover's count input), cached
+    * next to the pass set under the same key discipline — recomputing
+    * them is an O(corpus) hash walk per serve, a visible tax at 500k
+    * rows. */
+  private def passingCounts(conds: Seq[graft.filter.SimpleConjuncts.Cond],
+      scalars: Map[Int, ScalarCluster], clusters: Array[Int],
+      pass: java.util.HashSet[java.lang.Long], pinWm: Long): Map[Int, Long] = {
+    val countKey = (graft.filter.SimpleConjuncts.key(conds), pinWm,
+      clusters.sorted.toSeq)
+    val cached = synchronized { passCountCache.get(countKey) }
+    if (cached != null) return cached
+    val m = clusters.map { cid =>
+      val sc = scalars(cid)
+      var n = 0L
+      var j = 0
+      while (j < sc.ids.length) {
+        if (pass.contains(sc.ids(j))) n += 1
+        j += 1
+      }
+      cid -> n
+    }.toMap
+    synchronized { passCountCache.put(countKey, m) }
+    m
   }
 
   /** Ids passing the conjunction among the given scalar clusters, cached
@@ -2906,194 +1967,24 @@ class IvfIndex(
     s
   }
 
-  /** Batch attribute-filtered serving: the conjunction is SHARED by the
-    * batch, so one scalar acquisition + ONE passing-id set over the
-    * union of the batch's probe sets masks every query (a superset mask
-    * stays exact for a query probing any subset), and the float tier's
-    * shared row sweep does the rest. `freshTail` must be pre-filtered by
-    * the caller, like `servePointFiltered`. Declines/degrades per query
-    * via the single-query fallback. */
-  def servePointFilteredBatch(vecCol: String,
-      queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None)
-      : Array[(Long, Option[Array[(Long, Double)]])] = {
-    if (queries.isEmpty) return Array.empty
-    if (conds.isEmpty)
-      return servePointBatch(vecCol, queries, k, nProbe, exclude, freshTail)
-    def fallback(): Array[(Long, Option[Array[(Long, Double)]])] =
-      queries.map { case (qid, raw) =>
-        (qid, servePointFiltered(vecCol, raw, k, nProbe, conds, exclude,
-          freshTail))
-      }
-    val declared = filterColsDecl
-    if (!conds.forall(c => declared.contains(c.col))) {
-      queries.foreach(_ => decline)
-      return queries.map { case (qid, _) => (qid, None) }
-    }
-    val qsArr: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    val dim = qsArr(0).length
-    if (qsArr.exists(_.length != dim)) return fallback()
-    if (centroids().headOption.exists(_._2.length != dim)) {
-      queries.foreach(_ => decline)
-      return queries.map { case (qid, _) => (qid, None) }
-    }
-    withPassingMask(conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty),
-      () => batchProbeUnion(qsArr, nProbe)) { ex =>
-      Some(servePointBatch(vecCol, queries, k, nProbe, ex, freshTail))
-    }.getOrElse(fallback())
-  }
+  // ---- the shared sweep: acquisition, batch kernels, cut ----
 
-  /** Union of the batch's per-query probe sets (probeUnion contract:
-    * runs under the instance lock). */
-  private def batchProbeUnion(qsArr: Array[Array[Float]], nProbe: Int)
-      : Array[Int] = {
-    val cents = centroids()
-    qsArr.flatMap { q =>
-      cents.map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-        .sortBy { case (_, d) => d }.take(nProbe).map(_._1)
-    }.distinct
-  }
-
-  /** Attribute-filtered serving off the 16-BIT code residency: the same
-    * passing-id mask as `servePointFiltered`, composed into the quantized
-    * sweep's exclusion — the candidate set IS the filtered universe, so
-    * `certify = true`'s interval proof certifies the exact top-k OF THE
-    * FILTERED rows (exactly the filtered-serving contract) and the
-    * boundary rerank only ever touches passing rows. The pass set's pin
-    * is re-verified after the sweep (same race note as withPassingMask).
-    * `freshTail` must be pre-filtered by the caller. */
-  def servePointQuantizedFilteredDetail(vecCol: String, query: Array[Float],
-      k: Int, nProbe: Int, conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      certify: Boolean = false)
-      : Option[(Array[(Long, Double)], Int)] = {
-    if (conds.isEmpty)
-      return servePointQuantizedDetail(vecCol, query, k, nProbe, exclude,
-        freshTail, certify)
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    if (centroids().headOption.exists(_._2.length != q.length)) return decline
-    withPassingMask(conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty),
-      () => singleProbeSet(q, nProbe, None)) { ex =>
-      servePointQuantizedDetail(vecCol, query, k, nProbe, ex, freshTail,
-        certify)
-    }
-  }
-
-  /** Attribute-filtered serving off the PQ code residency — see
-    * `servePointQuantizedFilteredDetail` (same mask, same certification
-    * semantics over the masked candidates, same pin re-verify). */
-  def servePointPqFilteredDetail(vecCol: String, query: Array[Float],
-      k: Int, nProbe: Int, conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      certify: Boolean = false)
-      : Option[(Array[(Long, Double)], Int)] = {
-    if (conds.isEmpty)
-      return servePointPqDetail(vecCol, query, k, nProbe, exclude,
-        freshTail, certify)
-    val cb = pqCodebook() match {
-      case Some(c) => c
-      case None => return decline // pre-PQ layout
-    }
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    if (q.length != cb.dim) return decline
-    withPassingMask(conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty),
-      () => singleProbeSet(q, nProbe, None)) { ex =>
-      servePointPqDetail(vecCol, query, k, nProbe, ex, freshTail, certify)
-    }
-  }
-
-  /** Batch attribute-filtered serving off the 16-bit residency: one
-    * shared pass set over the union of probe sets masks the whole batch
-    * (a superset mask stays exact for a query probing any subset), then
-    * the quantized batch sweep runs as usual — per-query certification
-    * over masked candidates. Mask-acquisition failure degrades to
-    * per-query filtered calls, never a batch-wide decline. */
-  def servePointQuantizedFilteredBatchDetail(vecCol: String,
-      queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      certify: Boolean = false)
-      : Array[(Long, Option[(Array[(Long, Double)], Int)])] = {
-    if (queries.isEmpty) return Array.empty
-    if (conds.isEmpty)
-      return servePointQuantizedBatchDetail(vecCol, queries, k, nProbe,
-        exclude, freshTail, certify)
-    def fallback(): Array[(Long, Option[(Array[(Long, Double)], Int)])] =
-      queries.map { case (qid, raw) =>
-        (qid, servePointQuantizedFilteredDetail(vecCol, raw, k, nProbe,
-          conds, exclude, freshTail, certify))
-      }
-    val qsArr: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    val dim = qsArr(0).length
-    if (qsArr.exists(_.length != dim)) return fallback()
-    if (centroids().headOption.exists(_._2.length != dim)) {
-      queries.foreach(_ => decline)
-      return queries.map { case (qid, _) => (qid, None) }
-    }
-    withPassingMask(conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty),
-      () => batchProbeUnion(qsArr, nProbe)) { ex =>
-      Some(servePointQuantizedBatchDetail(vecCol, queries, k, nProbe, ex,
-        freshTail, certify))
-    }.getOrElse(fallback())
-  }
-
-  /** Batch attribute-filtered serving off the PQ residency — the PQ twin
-    * of `servePointQuantizedFilteredBatchDetail`. */
-  def servePointPqFilteredBatchDetail(vecCol: String,
-      queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      certify: Boolean = false)
-      : Array[(Long, Option[(Array[(Long, Double)], Int)])] = {
-    if (queries.isEmpty) return Array.empty
-    if (conds.isEmpty)
-      return servePointPqBatchDetail(vecCol, queries, k, nProbe, exclude,
-        freshTail, certify)
-    def fallback(): Array[(Long, Option[(Array[(Long, Double)], Int)])] =
-      queries.map { case (qid, raw) =>
-        (qid, servePointPqFilteredDetail(vecCol, raw, k, nProbe, conds,
-          exclude, freshTail, certify))
-      }
-    val cb = pqCodebook() match {
-      case Some(c) => c
-      case None => queries.foreach(_ => decline)
-        return queries.map { case (qid, _) => (qid, None) }
-    }
-    val qsArr: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    val dim = qsArr(0).length
-    if (qsArr.exists(_.length != dim) || dim != cb.dim) return fallback()
-    withPassingMask(conds, exclude,
-      freshTail.map(_._1).getOrElse(Array.empty),
-      () => batchProbeUnion(qsArr, nProbe)) { ex =>
-      Some(servePointPqBatchDetail(vecCol, queries, k, nProbe, ex,
-        freshTail, certify))
-    }.getOrElse(fallback())
-  }
-
-  // ---- batch serving for the code-resident tiers (16-bit + PQ) ----
-
-  /** Generic probe/budget/retry residency acquisition (the skeleton the
-    * single-query paths hand-roll; those stay as-is — they are pinned by
-    * existing specs — and the BATCH tiers share this one). `probeUnion`
+  /** Probe/budget/retry residency acquisition — the ONE skeleton every
+    * tier (float, 16-bit, PQ, scalar) acquires through. `probeUnion`
     * runs under the instance lock and returns the union of the batch's
-    * probe sets; `load` runs OUTSIDE the lock (it is a Spark job). None =
-    * over budget or thrash — the caller degrades per query.
+    * probe sets; `load` (a Spark job, hundreds of ms) runs OUTSIDE the
+    * lock — holding it across the load would convoy every concurrent
+    * warm query behind one cold one (the reference serializes nothing
+    * across queries: 16-way executor pool, executor_pool.hpp:10-46).
+    * Duplicate concurrent loads of the same cluster are allowed; last
+    * writer wins. The cardinality pre-check runs BEFORE the collect
+    * against persisted per-cluster counts: a degenerate cluster larger
+    * than the budget never reaches the driver. A load failure (a rebuild
+    * overwrote clustered/ between the stamp read and the collect) is one
+    * failed attempt: the retry re-reads the stamp past its rate limit.
+    * Loads that a rebase or rebuild invalidated between the lock windows
+    * are dropped; eviction is least-recently-probed, never the clusters
+    * of this union. None = over budget or thrash.
     *
     * Returns the map PLUS the serving pin (key, watermark) the acquired
     * entries belong to — captured under the lock in the success branch,
@@ -3170,12 +2061,23 @@ class IvfIndex(
     Some((out, pinKey, pinWm))
   }
 
-  /** Shared sweep of ONE quantized cluster for every query probing it:
-    * each row's 2·dim code bytes are read from RAM once per batch (the
-    * tier is RAM-bandwidth-bound at high dims, same rationale as the
-    * float `scoreClusterBatch`); the per-query FLOPs are unchanged.
-    * Returns per query the same (candidates, minDiscarded) the
-    * single-query kernel produces. */
+  /** Bounded top-kPad of ONE quantized resident cluster for every query
+    * in `qIdxs`: each row's 2·dim code bytes are read from RAM once per
+    * batch (the tier is RAM-bandwidth-bound at high dims, same rationale
+    * as the float `scoreClusterBatch`). Scores dequantized rows WITHOUT
+    * materializing them — one fused Σ c_j·q_j over the short[] codes per
+    * row and query, then:
+    *   dot = b·Σq + a·(Σ c_j q_j)
+    *   L2  = norm2 − 2·dot + |q|²      (norm2 packed EXACT)
+    * Codes are stored biased into Short range (c − 32768), so the short
+    * dot is corrected by +32768·Σq once per row, not per element.
+    *
+    * Returns per query (id, score, errorBound) candidates plus the
+    * minimum score LOWER bound over every row the heap discarded — the
+    * caller proves discarded rows can't reach the global top-k
+    * (QuantCluster doc has the bound derivations; the dot bound is the
+    * tighter of the L1 form and Cauchy–Schwarz against the packed
+    * residual norm). */
   private def scoreQuantClusterBatch(cluster: QuantCluster,
       qds: Array[Array[Double]], qs: Array[Double], qss: Array[Double],
       qabs: Array[Double], qIdxs: Array[Int], kPad: Int,
@@ -3241,10 +2143,13 @@ class IvfIndex(
     }
   }
 
-  /** Shared sweep of ONE PQ cluster for every query probing it: each
-    * row's m code bytes are read once per batch; each query pays its own
-    * m table lookups. `luts(qi)`/`consts(qi)` are that query's shared
-    * scoring lut and this CLUSTER's constant (resolved by the caller). */
+  /** Bounded top-kPad of ONE PQ-resident cluster for every query in
+    * `qIdxs`: each row's m code bytes are read once per batch; each query
+    * pays its own m lookups into its SHARED lut (`luts(qi)`) plus this
+    * cluster's constant `consts(qi)` (residual L2: ‖q−centroid‖²;
+    * residual dot/cos: −q·centroid) plus the per-row load-time constant
+    * (see PqServeCluster). Same contract as scoreQuantClusterBatch —
+    * candidates plus min discarded lower bound per query. */
   private def scorePqClusterBatch(cluster: PqServeCluster,
       luts: Array[Array[Double]], consts: Array[Double],
       errScales: Array[Double], m: Int, ksub: Int,
@@ -3309,164 +2214,22 @@ class IvfIndex(
     }
   }
 
-  /** Batch serving off the 16-bit quantized residency: one handshake, one
-    * union cold load, one SHARED row sweep; per-query results equal
-    * `servePointQuantizedDetail`'s (same probes, scores, bounds, proof —
-    * certification runs per query over its per-cluster candidates, and a
-    * proof retry at a wider pad re-sweeps that query alone). Per-query
-    * None = that query declines; union-over-budget / mixed dims degrade
-    * to per-query calls, never a batch-wide decline. */
-  def servePointQuantizedBatchDetail(vecCol: String,
-      queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      certify: Boolean = false,
-      probeSets: Option[Array[Array[Int]]] = None)
-      : Array[(Long, Option[(Array[(Long, Double)], Int)])] = {
-    if (queries.isEmpty) return Array.empty
-    def fallback(): Array[(Long, Option[(Array[(Long, Double)], Int)])] =
-      queries.zipWithIndex.map { case ((qid, raw), qi) =>
-        (qid, servePointQuantizedDetail(vecCol, raw, k, nProbe, exclude,
-          freshTail, certify, probeSet = probeSets.map(_(qi))))
-      }
-    val qsArr: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    val dim = qsArr(0).length
-    if (qsArr.exists(_.length != dim)) return fallback()
-    if (centroids().headOption.exists(_._2.length != dim)) {
-      queries.foreach(_ => decline)
-      return queries.map { case (qid, _) => (qid, None) }
-    }
-    var probesPer: Array[Array[Int]] = null
-    val clusters = acquireResident[QuantCluster](
-      quantCache, _.ids.length.toLong,
-      () => quantRowsResident, v => quantRowsResident = v,
-      effectiveMaxQuantRows(dim),
-      () => {
-        val cents = centroids()
-        // explicit per-query probe sets (recallTarget covers) override
-        // nearest-nProbe, exactly as in servePointBatch
-        probesPer = probeSets match {
-          case Some(ps) =>
-            val live = cents.map(_._1).toSet
-            ps.map(_.filter(live))
-          case None => qsArr.map { q =>
-            cents.map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-              .sortBy { case (_, d) => d }.take(nProbe).map(_._1)
-          }
-        }
-        probesPer.flatten.distinct
-      },
-      missing => loadQuantClusters(vecCol, missing)) match {
-      case Some((m, _, _)) => m
-      case None => return fallback()
-    }
-    val qds = qsArr.map { q =>
-      val a = new Array[Double](dim); var i = 0
-      while (i < dim) { a(i) = q(i).toDouble; i += 1 }; a
-    }
-    val qsSum = new Array[Double](qds.length)
-    val qss = new Array[Double](qds.length)
-    val qabs = new Array[Double](qds.length)
-    for (qi <- qds.indices) {
-      var s = 0.0; var ss = 0.0; var ab = 0.0; var i = 0
-      while (i < dim) {
-        s += qds(qi)(i); ss += qds(qi)(i) * qds(qi)(i)
-        ab += math.abs(qds(qi)(i)); i += 1
-      }
-      qsSum(qi) = s; qss(qi) = ss; qabs(qi) = ab
-    }
-    // per-query exact tail triples via the shared float sweep
-    val tails: Array[Array[(Long, Double, Double)]] = freshTail match {
-      case Some(t) =>
-        val byQ = IvfIndex.scoreClusterBatch(t, qds, qss, qds.indices.toArray,
-          k, metric, exclude).toMap
-        qds.indices.toArray.map(qi =>
-          byQ.getOrElse(qi, Array.empty[(Long, Double)]).map(c => (c._1, c._2, 0.0)))
-      case None => qds.indices.toArray.map(_ => Array.empty[(Long, Double, Double)])
-    }
-    // shared sweep at the proof's FIRST pad; wider retry pads (rare —
-    // heap-discard violations only) re-sweep that query alone
-    val pad0 = if (certify) k + 16 else k
-    val byCluster: Array[(Int, Array[Int])] = probesPer.zipWithIndex
-      .flatMap { case (ps, qi) => ps.map(c => (c, qi)) }
-      .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2)) }.toArray
-    val swept: Map[(Int, Int), (Array[(Long, Double, Double)], Double)] =
-      parMap(byCluster) { case (cid, qIdxs) =>
-        scoreQuantClusterBatch(clusters(cid), qds, qsSum, qss, qabs,
-          qIdxs, pad0, exclude).map { case (qi, r) => ((cid, qi), r) }
-      }.flatten.toMap
-    queries.zipWithIndex.map { case ((qid, _), qi) =>
-      val cut = proofCut(kPad =>
-        if (kPad == pad0)
-          probesPer(qi).map(cid => swept((cid, qi)))
-        else
-          probesPer(qi).map(cid => scoreQuantCluster(clusters(cid), qds(qi),
-            qsSum(qi), qss(qi), qabs(qi), kPad, exclude)),
-        tails(qi), k, certify, vecCol, probesPer(qi), qds(qi), qss(qi),
-        quantReranks)
-      (qid, cut)
-    }
-  }
-
-  /** Batch serving off the PQ residency: same shape as the quantized
-    * batch — the m-byte code rows are swept once for all queries probing
-    * their cluster; each query keeps its own shared-lut decomposition
-    * (the lut is per QUERY, the code read is per batch — exactly the
-    * amortization the tier doc promises). */
-  def servePointPqBatchDetail(vecCol: String,
-      queries: Array[(Long, Array[Float])], k: Int, nProbe: Int,
-      exclude: Long => Boolean = _ => false,
-      freshTail: Option[(Array[Long], Array[Double], Array[Double])] = None,
-      certify: Boolean = false,
-      probeSets: Option[Array[Array[Int]]] = None)
-      : Array[(Long, Option[(Array[(Long, Double)], Int)])] = {
-    if (queries.isEmpty) return Array.empty
-    def fallback(): Array[(Long, Option[(Array[(Long, Double)], Int)])] =
-      queries.zipWithIndex.map { case ((qid, raw), qi) =>
-        (qid, servePointPqDetail(vecCol, raw, k, nProbe, exclude,
-          freshTail, certify, probeSet = probeSets.map(_(qi))))
-      }
-    val cb = pqCodebook() match {
-      case Some(c) => c
-      case None => queries.foreach(_ => decline)
-        return queries.map { case (qid, _) => (qid, None) }
-    }
-    if (!clustered().columns.contains("__pqerr")) {
-      queries.foreach(_ => decline)
-      return queries.map { case (qid, _) => (qid, None) }
-    }
-    val qsArr: Array[Array[Float]] = queries.map { case (_, raw) =>
-      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-    }
-    val dim = qsArr(0).length
-    if (qsArr.exists(_.length != dim) || dim != cb.dim) return fallback()
-    var probesPer: Array[Array[Int]] = null
-    val clusters = acquireResident[PqServeCluster](
-      pqCache, _.ids.length.toLong,
-      () => pqRowsResident, v => pqRowsResident = v,
-      effectiveMaxPqRows(cb.m),
-      () => {
-        val cents = centroids()
-        // explicit per-query probe sets (recallTarget covers) override
-        // nearest-nProbe, exactly as in servePointBatch
-        probesPer = probeSets match {
-          case Some(ps) =>
-            val live = cents.map(_._1).toSet
-            ps.map(_.filter(live))
-          case None => qsArr.map { q =>
-            cents.map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-              .sortBy { case (_, d) => d }.take(nProbe).map(_._1)
-          }
-        }
-        probesPer.flatten.distinct
-      },
-      missing => loadPqClusters(missing, cb.m)) match {
-      case Some((m, _, _)) => m
-      case None => return fallback()
-    }
-    val qds = qsArr.map { q =>
+  /** One tier's shared sweep for a batch — every tier is just its cache,
+    * row cap, loader and batch kernel: acquire the union of the queries'
+    * probe sets through `acquireResident` (`probeSets` runs under the
+    * instance lock), score each resident row once for every query
+    * probing its cluster (clusters in parallel, the exact-scored fresh
+    * tail as one more task), then cut each query through `proofCut`. The
+    * sweep runs at the proof's FIRST pad; a wider retry pad (rare —
+    * heap-discard violations only) re-sweeps that query alone. None =
+    * the acquisition failed (over budget or thrash). */
+  private def sweep(vecCol: String, qs: Array[Array[Float]], k: Int,
+      tier: ServeTier, certify: Boolean, probeSets: () => Array[Array[Int]],
+      exclude: Long => Boolean,
+      freshTail: Option[(Array[Long], Array[Double], Array[Double])])
+      : Option[Array[Option[Served]]] = {
+    val dim = qs(0).length
+    val qds = qs.map { q =>
       val a = new Array[Double](dim); var i = 0
       while (i < dim) { a(i) = q(i).toDouble; i += 1 }; a
     }
@@ -3474,51 +2237,85 @@ class IvfIndex(
       var s = 0.0; var i = 0
       while (i < dim) { s += a(i) * a(i); i += 1 }; s
     }
-    val errScales = qss.map(math.sqrt)
-    val tails: Array[Array[(Long, Double, Double)]] = freshTail match {
-      case Some(t) =>
-        val byQ = IvfIndex.scoreClusterBatch(t, qds, qss, qds.indices.toArray,
-          k, metric, exclude).toMap
-        qds.indices.toArray.map(qi =>
-          byQ.getOrElse(qi, Array.empty[(Long, Double)]).map(c => (c._1, c._2, 0.0)))
-      case None => qds.indices.toArray.map(_ => Array.empty[(Long, Double, Double)])
+    var probes: Array[Array[Int]] = null
+    val union = () => { probes = probeSets(); probes.flatten.distinct }
+    // exact float scores carry error bound 0 and discard nothing provable
+    def exact(c: (Array[Long], Array[Double], Array[Double]), qIdxs: Array[Int],
+        kPad: Int): Array[(Int, Cands)] =
+      IvfIndex.scoreClusterBatch(c, qds, qss, qIdxs, kPad, metric, exclude)
+        .map { case (qi, cs) =>
+          (qi, (cs.map(x => (x._1, x._2, 0.0)), Double.PositiveInfinity))
+        }
+    // kernel(cluster, queries, heap bound) and the tier's rerank counter
+    val (kernel, reranks): ((Int, Array[Int], Int) => Array[(Int, Cands)],
+        java.util.concurrent.atomic.AtomicLong) = tier match {
+      case ServeTier.Float =>
+        val cl = acquireResident[(Array[Long], Array[Double], Array[Double])](
+          serveCache, _._1.length.toLong,
+          () => serveRowsResident, v => serveRowsResident = v,
+          effectiveMaxRows(dim), union,
+          loadClusters(vecCol, _)).getOrElse(return None)._1
+        // never certified: the counter is never touched
+        ((cid, qIdxs, kPad) => exact(cl(cid), qIdxs, kPad), null)
+      case ServeTier.Quantized(_) =>
+        val cl = acquireResident[QuantCluster](
+          quantCache, _.ids.length.toLong,
+          () => quantRowsResident, v => quantRowsResident = v,
+          effectiveMaxQuantRows(dim), union,
+          loadQuantClusters(vecCol, _)).getOrElse(return None)._1
+        val qSum = new Array[Double](qds.length)
+        val qAbs = new Array[Double](qds.length)
+        for (qi <- qds.indices) {
+          var s = 0.0; var ab = 0.0; var i = 0
+          while (i < dim) { s += qds(qi)(i); ab += math.abs(qds(qi)(i)); i += 1 }
+          qSum(qi) = s; qAbs(qi) = ab
+        }
+        ((cid, qIdxs, kPad) => scoreQuantClusterBatch(cl(cid), qds, qSum, qss,
+          qAbs, qIdxs, kPad, exclude), quantReranks)
+      case ServeTier.Pq(_) =>
+        val cb = pqCodebook().getOrElse(return None)
+        val cl = acquireResident[PqServeCluster](
+          pqCache, _.ids.length.toLong,
+          () => pqRowsResident, v => pqRowsResident = v,
+          effectiveMaxPqRows(cb.m), union,
+          loadPqClusters(_, cb.m)).getOrElse(return None)._1
+        val errScales = qss.map(math.sqrt) // ‖q‖₂ (1.0 for cosine)
+        // ONE shared scoring lut per query over ITS probe set — residual
+        // L2 decomposes as ‖q−c‖² + Σ(−2q·cent)[codes] + rowConst
+        // (load-time); residual dot/cos as −q·c + Σ(−q·cent)[codes]
+        val lutsPer = qs.indices.map(qi => pqServeLuts(cb, probes(qi), qs(qi))).toArray
+        ((cid, qIdxs, kPad) => {
+          val luts = new Array[Array[Double]](qds.length)
+          val consts = new Array[Double](qds.length)
+          qIdxs.foreach { qi =>
+            val (lutIds, lut, cs) = lutsPer(qi)
+            luts(qi) = lut
+            consts(qi) = cs(java.util.Arrays.binarySearch(lutIds, cid))
+          }
+          scorePqClusterBatch(cl(cid), luts, consts, errScales, cb.m, cb.ksub,
+            qIdxs, kPad, exclude)
+        }, pqReranks)
     }
-    // per-query shared-lut decomposition over ITS probe set
-    val lutsPer = qsArr.indices.map(qi =>
-      pqServeLuts(cb, probesPer(qi), qsArr(qi))).toArray
     val pad0 = if (certify) k + 16 else k
-    val byCluster: Array[(Int, Array[Int])] = probesPer.zipWithIndex
+    val byCluster: Array[(Int, Array[Int])] = probes.zipWithIndex
       .flatMap { case (ps, qi) => ps.map(c => (c, qi)) }
       .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2)) }.toArray
-    def constOf(qi: Int, cid: Int): Double = {
-      val (lutIds, _, consts) = lutsPer(qi)
-      consts(java.util.Arrays.binarySearch(lutIds, cid))
-    }
-    val swept: Map[(Int, Int), (Array[(Long, Double, Double)], Double)] =
-      parMap(byCluster) { case (cid, qIdxs) =>
-        val luts = new Array[Array[Double]](qds.length)
-        val consts = new Array[Double](qds.length)
-        qIdxs.foreach { qi => luts(qi) = lutsPer(qi)._2; consts(qi) = constOf(qi, cid) }
-        scorePqClusterBatch(clusters(cid), luts, consts, errScales,
-          cb.m, cb.ksub, qIdxs, pad0, exclude)
-          .map { case (qi, r) => ((cid, qi), r) }
-      }.flatten.toMap
-    queries.zipWithIndex.map { case ((qid, _), qi) =>
-      val cut = proofCut(kPad =>
-        if (kPad == pad0)
-          probesPer(qi).map(cid => swept((cid, qi)))
-        else {
-          val (lutIds, lut, consts) = lutsPer(qi)
-          probesPer(qi).map { cid =>
-            scorePqCluster(clusters(cid), lut,
-              consts(java.util.Arrays.binarySearch(lutIds, cid)),
-              cb.m, cb.ksub, errScales(qi), kPad, exclude)
-          }
-        },
-        tails(qi), k, certify, vecCol, probesPer(qi), qds(qi), qss(qi),
-        pqReranks)
-      (qid, cut)
-    }
+    // keyed (Some(cluster), query); the fresh tail is (None, query)
+    val swept: Map[(Option[Int], Int), Cands] = par(
+      byCluster.toSeq.map { case (cid, qIdxs) => () =>
+        kernel(cid, qIdxs, pad0).map { case (qi, r) => ((Option(cid), qi), r) }
+      } ++ freshTail.map(t => () => exact(t, qds.indices.toArray, k)
+        .map { case (qi, r) => ((Option.empty[Int], qi), r) }).toSeq
+    ).flatten.toMap
+    Some(qs.indices.toArray.map { qi =>
+      val ps = probes(qi)
+      proofCut(kPad =>
+          if (kPad == pad0) ps.map(cid => swept((Some(cid), qi)))
+          else par(ps.toSeq.map(cid => () => kernel(cid, Array(qi), kPad).head._2)).toArray,
+        swept.get((None, qi)).fold(Array.empty[(Long, Double, Double)])(_._1),
+        k, certify, vecCol, ps, qds(qi), qss(qi), reranks)
+        .map { case (hits, reranked) => Served(hits, reranked, ps) }
+    })
   }
 }
 
@@ -3602,7 +2399,7 @@ object IvfIndex {
   /** Hand-parsed (the file is `{"watermark":N,"count":N,"purge":N}`):
     * meta() runs on EVERY index access as the freshness stamp, including
     * the driver-side serving path, so it must cost microseconds — a JSON
-    * library parse here was the dominant term of servePoint latency. */
+    * library parse here was the dominant term of serve latency. */
   private[index] def readMeta(metaPath: String): (Long, Long, Long) = {
     val s = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(metaPath)))
@@ -4137,7 +2934,7 @@ object IvfIndex {
     }
 
   /** Pack (id, vector) rows into the resident scoring layout
-    * (ids, row-major doubles, per-row |x|^2) used by `servePoint` — for
+    * (ids, row-major doubles, per-row |x|^2) used by `serve` — for
     * caller-supplied fresh tails. */
   def packRows(rows: Array[(Long, Array[Float])], dim: Int)
       : (Array[Long], Array[Double], Array[Double]) = {
@@ -4161,55 +2958,12 @@ object IvfIndex {
     (ids, flat, norms)
   }
 
-  /** Bounded top-k of one resident cluster: every metric reduces to one
-    * fused dot per row (Euclidean via |x|^2 - 2 x.q + |q|^2); returns the
-    * local best ascending by (distance, id). */
-  private[index] def scoreCluster(
-      cluster: (Array[Long], Array[Double], Array[Double]),
-      qd: Array[Double], qNorm: Double, k: Int, metric: MetricType.Value,
-      exclude: Long => Boolean): Array[(Long, Double)] = {
-    val (ids, flat, norms) = cluster
-    val dim = qd.length
-    val l2Metric = metric == MetricType.Euclidean
-    val cosMetric = metric == MetricType.Cosine
-    val heap = new java.util.PriorityQueue[(Long, Double)](math.max(1, k),
-      (a: (Long, Double), b: (Long, Double)) => {
-        val c = java.lang.Double.compare(b._2, a._2)
-        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
-      })
-    var i = 0
-    var off = 0
-    while (i < ids.length) {
-      if (!exclude(ids(i))) {
-        var dot = 0.0
-        var j = 0
-        while (j < dim) { dot += flat(off + j) * qd(j); j += 1 }
-        val d =
-          if (l2Metric) norms(i) - 2.0 * dot + qNorm
-          else if (cosMetric) 1.0 - dot
-          else -dot
-        if (heap.size < k) heap.add((ids(i), d))
-        else {
-          val worst = heap.peek()
-          if (d < worst._2 || (d == worst._2 && ids(i) < worst._1)) {
-            heap.poll(); heap.add((ids(i), d))
-          }
-        }
-      }
-      i += 1
-      off += dim
-    }
-    val out = new Array[(Long, Double)](heap.size)
-    var n = out.length - 1
-    while (n >= 0) { out(n) = heap.poll(); n -= 1 }
-    out
-  }
-
-  /** Shared row sweep for batch serving: each row of `cluster` is read
-    * once and scored against every query in `qIdxs` — same score math and
-    * (d, id) tie-break as [[scoreCluster]], amortizing the row bytes over
-    * the batch (dense serving at high dim is RAM-bandwidth-bound).
-    * Returns (queryIdx, local top-k best-first) per query. */
+  /** Bounded top-k of one float-resident cluster for every query in
+    * `qIdxs`: each row is read once and scored against every query,
+    * amortizing the row bytes over the batch (dense serving at high dim
+    * is RAM-bandwidth-bound). Every metric reduces to one fused dot per
+    * row and query (Euclidean via |x|^2 - 2 x.q + |q|^2). Returns
+    * (queryIdx, local top-k best-first by (distance, id)) per query. */
   private[index] def scoreClusterBatch(
       cluster: (Array[Long], Array[Double], Array[Double]),
       qds: Array[Array[Double]], qNorms: Array[Double], qIdxs: Array[Int],
@@ -4264,3 +3018,34 @@ object IvfIndex {
     if (acc == 0.0) v else { val inv = 1.0 / math.sqrt(acc); v.map(x => (x * inv).toFloat) }
   }
 }
+
+/** The resident form a dense serve sweeps (see [[IvfIndex.serve]]). */
+sealed trait ServeTier
+object ServeTier {
+  /** Float vectors: exact scores. */
+  case object Float extends ServeTier
+  /** 16-bit codes; `certify` proves the exact id set. */
+  final case class Quantized(certify: Boolean) extends ServeTier
+  /** PQ (ADC) codes; `certify` proves the exact id set. */
+  final case class Pq(certify: Boolean) extends ServeTier
+}
+
+/** Which clusters a dense serve probes (see [[IvfIndex.serve]]). */
+sealed trait ServeProbe
+object ServeProbe {
+  /** The `nProbe` nearest centroids. */
+  final case class Nearest(nProbe: Int) extends ServeProbe
+  /** The ball cover proving recall ≥ `target` (1.0 = exact); `slack`
+    * widens it by rows the mask may hide (tombstones). */
+  final case class Recall(target: Double, slack: Long) extends ServeProbe
+  /** Explicit per-query probe sets — only for the kept
+    * `servePointBatch(…, probeSets)` adapter. */
+  private[index] final case class Sets(sets: Array[Array[Int]])
+    extends ServeProbe
+}
+
+/** One query's serve answer: hits best first by (distance, id), the rows
+  * float-reranked by certification (0 = none), and the probe set swept
+  * (facet lookups probe the clusters the hits came from). */
+final case class Served(hits: Array[(Long, Double)], reranked: Int,
+    probed: Array[Int])

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.index.{ServeProbe, ServeTier}
+import ServeCalls._
 
 /** Randomized equivalence harness for the filtered serving tier: the
   * SimpleConjuncts comparison kernels (evaluated over the scalar
@@ -67,7 +69,8 @@ class FilteredServeProps extends SparkSpec {
       val filter = parts.mkString(" AND ")
       val conds = graft.filter.SimpleConjuncts.parse(filter, schema)
         .getOrElse(fail(s"sub-grammar rejected its own production: $filter"))
-      val got = idx.servePointFiltered("vec", q, 10, nAll, conds)
+      val got = idx.serveOne("vec", q, 10, ServeProbe.Nearest(nAll), conds = conds)
+        .map(_.hits)
       assert(got.isDefined, s"trial $trial declined: $filter")
       val expect = idx.search("vec", q, 10, nAll,
           preFilter = Some(graft.filter.FilterTranslator.translate(filter, df.schema)))

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.index.{IvfIndex, PqCodebook}
 import graft.types.MetricType
+import graft.index.{ServeProbe, ServeTier}
+import ServeCalls._
 
 /** PQ serving residency tier: persisted reconstruction errors, ADC
   * throughput-mode scoring (exactly the documented ADC ranking), the
@@ -67,10 +69,10 @@ class PqServeSpec extends SparkSpec {
     for (qid <- Seq(3L, 7L, 11L)) {
       val q = queryVec(qid)
       val exact = exactTopL2(base, q, 10)
-      val got = idx.servePointPqDetail("embedding", q, 10,
-        nProbe = idx.centroids().length, certify = true)
+      val got = idx.serveOne("embedding", q, 10,
+        ServeProbe.Nearest(idx.centroids().length), ServeTier.Pq(certify = true))
       assert(got.isDefined, "certified serve must not decline here")
-      assert(got.get._1.map(_._1).toSeq == exact,
+      assert(got.get.hits.map(_._1).toSeq == exact,
         s"certified id set must be exact for q=$qid")
     }
   }
@@ -92,10 +94,10 @@ class PqServeSpec extends SparkSpec {
         (r.getLong(0), cb.adcL2(r.getAs[Array[Byte]](1), qr))
       }
       .sortBy { case (id, d) => (d, id) }.take(10).map(_._1).toSeq
-    val got = idx.servePointPq("embedding", q, 10,
-      nProbe = idx.centroids().length)
+    val got = idx.serveOne("embedding", q, 10,
+      ServeProbe.Nearest(idx.centroids().length), ServeTier.Pq(certify = false))
     assert(got.isDefined)
-    assert(got.get.map(_._1).toSeq == oracle,
+    assert(got.get.hits.map(_._1).toSeq == oracle,
       "throughput mode must rank by ADC exactly")
   }
 
@@ -110,10 +112,10 @@ class PqServeSpec extends SparkSpec {
         lit(IvfIndex.normalize(q))))
       .orderBy(col("d").asc, col("vec_id").asc).limit(10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val got = idx.servePointPqDetail("embedding", q, 10,
-      nProbe = idx.centroids().length, certify = true)
+    val got = idx.serveOne("embedding", q, 10,
+      ServeProbe.Nearest(idx.centroids().length), ServeTier.Pq(certify = true))
     assert(got.isDefined)
-    assert(got.get._1.map(_._1).toSeq == exact)
+    assert(got.get.hits.map(_._1).toSeq == exact)
   }
 
   test("fresh tail is scored exactly and merges into the certified set") {
@@ -128,11 +130,12 @@ class PqServeSpec extends SparkSpec {
     val tail = IvfIndex.packRows(tailRows, dim)
     val q = queryVec(402L) // the query IS a tail row: must surface itself
     val exact = exactTopL2(emb.filter(col("vec_id") < 450), q, 10)
-    val got = idx.servePointPqDetail("embedding", q, 10,
-      nProbe = idx.centroids().length, freshTail = Some(tail), certify = true)
+    val got = idx.serveOne("embedding", q, 10,
+      ServeProbe.Nearest(idx.centroids().length), ServeTier.Pq(certify = true),
+      tail = Some(tail))
     assert(got.isDefined)
-    assert(got.get._1.map(_._1).toSeq == exact)
-    assert(got.get._1.map(_._1).contains(402L))
+    assert(got.get.hits.map(_._1).toSeq == exact)
+    assert(got.get.hits.map(_._1).contains(402L))
   }
 
   test("budget and pre-PQ declines; decline counter moves; no exceptions") {
@@ -144,7 +147,8 @@ class PqServeSpec extends SparkSpec {
     // over-budget: the cardinality pre-check must decline BEFORE loading
     idx.maxServeRows = 10
     val d0 = idx.serveDeclineCount()
-    assert(idx.servePointPq("embedding", q, 10, nProbe = 2).isEmpty)
+    assert(idx.serveOne("embedding", q, 10, ServeProbe.Nearest(2),
+      ServeTier.Pq(certify = false)).isEmpty)
     assert(idx.serveDeclineCount() == d0 + 1)
     idx.maxServeRows = 4L * 1024 * 1024
     // pre-PQ layout (codebook gone): decline, not exception
@@ -155,7 +159,8 @@ class PqServeSpec extends SparkSpec {
     }
     deleteRec(java.nio.file.Paths.get(s"$path/pq_codebook"))
     val reopened = new IvfIndex(spark, path, "vec_id", MetricType.Euclidean)
-    assert(reopened.servePointPq("embedding", q, 10, nProbe = 2).isEmpty)
+    assert(reopened.serveOne("embedding", q, 10, ServeProbe.Nearest(2),
+      ServeTier.Pq(certify = false)).isEmpty)
   }
 
   test("tight-cluster geometry: proven candidate cut keeps searchPq exact") {
@@ -185,9 +190,9 @@ class PqServeSpec extends SparkSpec {
     assert(got == exact,
       s"proven cut must survive sub-resolution spacing: $got vs $exact")
     // and the certified serve tier agrees
-    val served = idx.servePointPqDetail("embedding", q, 10,
-      nProbe = idx.centroids().length, certify = true)
-    assert(served.isDefined && served.get._1.map(_._1).toSeq == exact)
+    val served = idx.serveOne("embedding", q, 10,
+      ServeProbe.Nearest(idx.centroids().length), ServeTier.Pq(certify = true))
+    assert(served.isDefined && served.get.hits.map(_._1).toSeq == exact)
   }
 
   test("append after a split lands rows in the RIGHT cluster dirs; residual codes re-encode") {
@@ -228,9 +233,9 @@ class PqServeSpec extends SparkSpec {
     val viaJob = idx.searchPq("embedding", q, 10, nProbe = idx.centroids().length)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(viaJob == exact, s"post-split+append searchPq: $viaJob vs $exact")
-    val served = idx.servePointPqDetail("embedding", q, 10,
-      nProbe = idx.centroids().length, certify = true)
-    assert(served.isDefined && served.get._1.map(_._1).toSeq == exact)
+    val served = idx.serveOne("embedding", q, 10,
+      ServeProbe.Nearest(idx.centroids().length), ServeTier.Pq(certify = true))
+    assert(served.isDefined && served.get.hits.map(_._1).toSeq == exact)
   }
 
   test("a rebuild (generation bump) flushes PQ residency; serving stays exact") {
@@ -239,8 +244,8 @@ class PqServeSpec extends SparkSpec {
     val idx = IvfIndex.build(spark, base, "embedding", "vec_id", path,
       MetricType.Euclidean, nClusters = 2, maxIter = 3)
     val q = queryVec(3L)
-    assert(idx.servePointPqDetail("embedding", q, 10, nProbe = 2,
-      certify = true).isDefined)
+    assert(idx.serveOne("embedding", q, 10, ServeProbe.Nearest(2),
+      ServeTier.Pq(certify = true)).isDefined)
     assert(idx.servingResidentPqRows() > 0)
     // full rebuild over a DIFFERENT subset: stale residency would serve
     // rows that no longer exist
@@ -248,10 +253,10 @@ class PqServeSpec extends SparkSpec {
     IvfIndex.build(spark, rebuilt, "embedding", "vec_id", path,
       MetricType.Euclidean, nClusters = 2, maxIter = 3)
     val exact = exactTopL2(rebuilt, q, 10)
-    val got = idx.servePointPqDetail("embedding", q, 10,
-      nProbe = idx.centroids().length, certify = true)
+    val got = idx.serveOne("embedding", q, 10,
+      ServeProbe.Nearest(idx.centroids().length), ServeTier.Pq(certify = true))
     assert(got.isDefined)
-    assert(got.get._1.map(_._1).toSeq == exact,
+    assert(got.get.hits.map(_._1).toSeq == exact,
       "post-rebuild certified serve must reflect the new layout only")
   }
 }

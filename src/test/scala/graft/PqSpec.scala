@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.index.{IvfIndex, PqCodebook}
 import graft.types.MetricType
+import graft.index.{ServeProbe, ServeTier}
+import ServeCalls._
 
 /** Product-quantization tier: codebook fit determinism, encode/ADC math,
   * save/load round-trip, layout integration (build + append), and the
@@ -190,9 +192,9 @@ class PqSpec extends SparkSpec {
     val declinesBefore = idx.serveDeclineCount()
     for (badLen <- Seq(dim - 3, dim + 5)) {
       val bad = Array.fill(badLen)(0.5f)
-      assert(idx.servePoint("embedding", bad, 5, nProbe = 2).isEmpty)
-      assert(idx.servePointQuantized("embedding", bad, 5, nProbe = 2).isEmpty)
-      assert(idx.servePointPq("embedding", bad, 5, nProbe = 2).isEmpty)
+      for (tier <- Seq(ServeTier.Float, ServeTier.Quantized(certify = false),
+          ServeTier.Pq(certify = false)))
+        assert(idx.serveOne("embedding", bad, 5, ServeProbe.Nearest(2), tier).isEmpty)
     }
     assert(idx.serveDeclineCount() > declinesBefore)
   }

@@ -5,11 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import graft.index.{ServeProbe, ServeTier}
+import ServeCalls._
 
 /** Round 10: the serve dispatch must never answer a filtered/faceted
   * request with UNFILTERED rows (the round-9 judge's one wrong-answer
   * finding) — filtered requests either serve EXACTLY through the new
-  * resident-scalar path (servePointFiltered over declared columns) or
+  * resident-scalar path (a filtered IvfIndex.serve over declared columns) or
   * decline to the job path, which evaluates the full grammar. Plus the
   * four round-9 ADVICE fixes (hybrid purge-gen staleness, @distance
   * filters on the quantized/PQ search, TopKMin SQL-surface casts,
@@ -285,7 +287,7 @@ class Round10Spec extends SparkSpec {
          |"textField":"Doc","queryField":"V","queryVector":$qVec,
          |"limit":10,"nProbe":9999,"filter":"Label >= 5"""".stripMargin
     val served = db.query(req + ""","serve":true}""")
-    // Label IS declared: the dense side rides servePointFiltered and the
+    // Label IS declared: the dense side rides a filtered serve and the
     // keyword side (round 11) borrows the dense index's passing-id
     // verdict to mask its candidate walk — BOTH sides serve
     assert(served.contains("\"served\":{\"dense\":true,\"keyword\":true}"), served)
@@ -424,7 +426,8 @@ class Round10Spec extends SparkSpec {
     var wrong = 0
     val t0 = System.nanoTime()
     while (System.nanoTime() - t0 < 8L * 1000 * 1000 * 1000) {
-      idx.servePointFiltered("vec", q, 10, nAll, conds) match {
+      idx.serveOne("vec", q, 10, ServeProbe.Nearest(nAll), conds = conds)
+        .map(_.hits) match {
         case Some(hits) =>
           served += 1
           if (hits.map(_._1).toSeq != expect) wrong += 1

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import graft.index.ServeProbe
+import ServeCalls._
 
 /** Round 11: the recallTarget contract made uniform (no knob combination
   * may silently drop a declared floor — the round-10 judge's one found
@@ -407,7 +409,8 @@ class Round11Spec extends SparkSpec {
     // passing count covers k=10 — the cover should stay narrow
     val local = Seq(graft.filter.SimpleConjuncts.Cond("id", "<",
       graft.filter.SimpleConjuncts.NumLit(100.0, isInt = true)))
-    val gotLocal = idx.servePointFilteredRecall("vec", q, 10, 1.0, local)
+    val gotLocal = idx.serveOne("vec", q, 10, ServeProbe.Recall(1.0, 0L), conds = local)
+      .map(_.hits)
     assert(gotLocal.isDefined, "local filtered-recall serve declined")
     assert(gotLocal.get.map(_._1).toSeq == filteredExact(col("id") < 100))
     val residentAfterLocal = idx.servingResidentRows()
@@ -419,13 +422,15 @@ class Round11Spec extends SparkSpec {
     // and still return the exact filtered answer
     val far = Seq(graft.filter.SimpleConjuncts.Cond("id", ">=",
       graft.filter.SimpleConjuncts.NumLit(792.0, isInt = true)))
-    val gotFar = idx.servePointFilteredRecall("vec", q, 8, 1.0, far)
+    val gotFar = idx.serveOne("vec", q, 8, ServeProbe.Recall(1.0, 0L), conds = far)
+      .map(_.hits)
     assert(gotFar.isDefined, "far filtered-recall serve declined")
     val expectFar = filteredExact(col("id") >= 792).take(8)
     assert(gotFar.get.map(_._1).toSeq == expectFar,
       s"far matches lost: ${gotFar.get.map(_._1).toSeq} vs $expectFar")
     // the filtered-recall path reports a declared floor < 1 honestly too
-    val half = idx.servePointFilteredRecall("vec", q, 10, 0.5, local)
+    val half = idx.serveOne("vec", q, 10, ServeProbe.Recall(0.5, 0L), conds = local)
+      .map(_.hits)
     assert(half.isDefined)
     val exactLocal = filteredExact(col("id") < 100).toSet
     val recall = half.get.map(_._1).count(exactLocal.contains) / 10.0
@@ -535,16 +540,22 @@ class Round11Spec extends SparkSpec {
       (ci.toLong, Array(ci * 10.0f + 0.03f, ci * 10.0f, (ci % 3) * 10.0f, 0.02f))
     }.toArray
     val covers = queries.map { case (_, q) => idx.probeSetForRecall(q, 10, 1.0) }
+    // the batch serves each query under ITS proven cover (the kept
+    // explicit-probe-set adapter and the Recall probe mode agree)
     val batch = idx.servePointBatch("vec", queries, 10, nProbe = 2,
       probeSets = Some(covers))
+    val recallBatch = idx.serveAll("vec", queries.map(_._2), 10,
+      ServeProbe.Recall(1.0, 0L))
     queries.zipWithIndex.foreach { case ((qid, q), i) =>
-      val single = idx.servePoint("vec", q, 10, nProbe = 2,
-        probeSet = Some(covers(i)))
+      val single = idx.serveOne("vec", q, 10, ServeProbe.Recall(1.0, 0L))
+      assert(single.get.probed.toSeq == covers(i).toSeq, s"query $qid cover")
       assert(batch(i)._1 == qid)
-      assert(batch(i)._2.map(_.toSeq) == single.map(_.toSeq),
+      assert(batch(i)._2.map(_.toSeq) == single.map(_.hits.toSeq),
         s"query $qid diverged")
+      assert(recallBatch(i).map(_.hits.toSeq) == single.map(_.hits.toSeq))
       // the cover is proven exact — equal to the full probe
-      val exact = idx.servePoint("vec", q, 10, nProbe = idx.centroids().length)
+      val exact = idx.serveOne("vec", q, 10,
+        ServeProbe.Nearest(idx.centroids().length)).map(_.hits)
       assert(batch(i)._2.map(_.map(_._1).toSeq) == exact.map(_.map(_._1).toSeq))
     }
   }
@@ -664,9 +675,9 @@ class Round11Spec extends SparkSpec {
 
   test("a rebuild racing a recall COVER retries to a consistent generation (covers are derived state too)") {
     // the cover twin of the pass-set race: probeSetForRecall reads gen-G
-    // radii/counts, servePoint re-handshakes — a same-watermark rebuild
+    // radii/counts, the sweep re-handshakes — a same-watermark rebuild
     // in between reuses cluster ids 0..N-1, so a stale cover would serve
-    // the new generation with no recall proof. servePointRecall pins the
+    // the new generation with no recall proof. A Recall serve pins the
     // cover; target 1.0's answer is generation-INDEPENDENT (exact over
     // the same rows), so the assertion is deterministic.
     val df = blobs(800)
@@ -689,15 +700,15 @@ class Round11Spec extends SparkSpec {
     var got: Option[Array[(Long, Double)]] = None
     var tries = 0
     while (got.isEmpty && tries < 6) {
-      got = raced.servePointRecall("vec", q, 10, 1.0)
+      got = raced.serveOne("vec", q, 10, ServeProbe.Recall(1.0, 0L)).map(_.hits)
       tries += 1
     }
     assert(fired.get, "fixture never raced")
     assert(got.isDefined, "recall serve never recovered after the race")
     val fresh = new graft.index.IvfIndex(spark, path, "id",
       graft.types.MetricType.Euclidean)
-    val exact = fresh.servePoint("vec", q, 10,
-      nProbe = fresh.centroids().length)
+    val exact = fresh.serveOne("vec", q, 10,
+      ServeProbe.Nearest(fresh.centroids().length)).map(_.hits)
     assert(exact.isDefined)
     assert(got.get.map(_._1).toSeq == exact.get.map(_._1).toSeq,
       "raced recall cover lost exactness")
@@ -734,7 +745,8 @@ class Round11Spec extends SparkSpec {
     var got: Option[Array[(Long, Double)]] = None
     var tries = 0
     while (got.isEmpty && tries < 6) {
-      got = raced.servePointFiltered("vec", q, 10, 3, conds)
+      got = raced.serveOne("vec", q, 10, ServeProbe.Nearest(3), conds = conds)
+        .map(_.hits)
       tries += 1
     }
     assert(fired.get, "fixture never raced")
@@ -743,7 +755,8 @@ class Round11Spec extends SparkSpec {
     val fresh = new graft.index.IvfIndex(spark, path, "id",
       graft.types.MetricType.Euclidean)
     fresh.setServeFilterColumns(Seq("id"))
-    val expect = fresh.servePointFiltered("vec", q, 10, 3, conds)
+    val expect = fresh.serveOne("vec", q, 10, ServeProbe.Nearest(3), conds = conds)
+      .map(_.hits)
     assert(expect.isDefined)
     assert(got.get.map(_._1).toSeq == expect.get.map(_._1).toSeq,
       "raced filtered serve diverged from the consistent answer")
@@ -991,7 +1004,8 @@ class Round11Spec extends SparkSpec {
       graft.filter.SimpleConjuncts.NumLit(100.0, isInt = true)))
     val q = Array(0.03f, 0.0f, 0.0f, 0.02f)
     val nAll = follower.centroids().length
-    val got = follower.servePointFiltered("vec", q, 10, nAll, conds)
+    val got = follower.serveOne("vec", q, 10, ServeProbe.Nearest(nAll),
+      conds = conds).map(_.hits)
     val expect = leader.search("vec", q, 10, nAll,
         preFilter = Some(col("id") >= 100))
       .select(col("id")).collect().map(_.getLong(0)).toSeq

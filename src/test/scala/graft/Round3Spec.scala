@@ -7,6 +7,8 @@ import graft.store.TableStore
 import graft.index.IvfIndex
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import graft.index.{ServeProbe, ServeTier}
+import ServeCalls._
 
 /** Round-3 regression coverage: ANN consistency across compact(),
   * cross-process index freshness, vacuum grace, facet-cache release,
@@ -132,25 +134,26 @@ class Round3Spec extends SparkSpec {
     val q = Array.fill(8)(0.5f)
     val viaJob = idx.search("v", q, 10, nProbe = 8)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
-    val served = idx.servePoint("v", q, 10, nProbe = 8).get
+    val served = idx.serveOne("v", q, 10, ServeProbe.Nearest(8)).map(_.hits).get
     assert(served.map(_._1).toSeq == viaJob)
     assert(served.map(_._2).toSeq == served.map(_._2).toSeq.sorted) // ascending distance
     // warm path runs no Spark job
     val sc = spark.sparkContext
     val before = sc.statusTracker.getJobIdsForGroup(null).length
-    idx.servePoint("v", q, 10, nProbe = 8)
-    idx.servePoint("v", Array.fill(8)(0.1f), 10, nProbe = 8)
+    idx.serveOne("v", q, 10, ServeProbe.Nearest(8)).map(_.hits)
+    idx.serveOne("v", Array.fill(8)(0.1f), 10, ServeProbe.Nearest(8)).map(_.hits)
     val after = sc.statusTracker.getJobIdsForGroup(null).length
     assert(after == before, s"warm servePoint ran ${after - before} Spark job(s)")
     // exclusion mask drops a served id
     val excluded = served.head._1
-    val masked = idx.servePoint("v", q, 10, nProbe = 8, exclude = _ == excluded).get
+    val masked = idx.serveOne("v", q, 10, ServeProbe.Nearest(8),
+      exclude = _ == excluded).map(_.hits).get
     assert(!masked.map(_._1).contains(excluded))
     // LRU budget: all 8 clusters are resident (2000 rows); shrinking the
     // budget evicts least-recently-probed clusters on the next query
     assert(idx.servingResidentRows() == 2000)
     idx.maxServeRows = 600
-    val s2 = idx.servePoint("v", Array.fill(8)(0.9f), 5, nProbe = 1).get
+    val s2 = idx.serveOne("v", Array.fill(8)(0.9f), 5, ServeProbe.Nearest(1)).map(_.hits).get
     assert(s2.nonEmpty)
     assert(idx.servingResidentRows() < 2000,
       s"no eviction happened: resident ${idx.servingResidentRows()}")

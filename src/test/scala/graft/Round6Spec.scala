@@ -8,6 +8,8 @@ import graft.types.MetricType
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
+import graft.index.{ServeProbe, ServeTier}
+import ServeCalls._
 
 /** Round-6 serving/maintenance fixes: cold-load off the serving lock,
   * bounded tombstone mask with job-path fallback, per-table cache eviction
@@ -45,16 +47,17 @@ class Round6Spec extends SparkSpec {
     }
     val qWarm = Array(0f, 0f, 0f, 0f)
     val qCold = Array(0f, 0f, 10f, 0f)
-    val warmExpected = idx.servePoint("vec", qWarm, 5, 1).get.toSeq // warms blob-0 cluster
+    // warms blob-0 cluster
+    val warmExpected = idx.serveOne("vec", qWarm, 5, ServeProbe.Nearest(1)).get.hits.toSeq
     assert(warmExpected.nonEmpty)
     slow.set(true)
-    val cold = Future(idx.servePoint("vec", qCold, 5, 1).get)
+    val cold = Future(idx.serveOne("vec", qCold, 5, ServeProbe.Nearest(1)).get.hits)
     assert(inLoad.await(30, java.util.concurrent.TimeUnit.SECONDS),
       "cold load never started")
     // the cold thread is now sleeping INSIDE loadClusters; before the fix
     // it held the instance lock there and this warm call would stall ~2.5s
     val t0 = System.nanoTime()
-    val warm = idx.servePoint("vec", qWarm, 5, 1).get.toSeq
+    val warm = idx.serveOne("vec", qWarm, 5, ServeProbe.Nearest(1)).get.hits.toSeq
     val warmMs = (System.nanoTime() - t0) / 1e6
     assert(warm == warmExpected)
     assert(warmMs < slowMs / 2,

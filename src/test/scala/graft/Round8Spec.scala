@@ -8,6 +8,8 @@ import graft.index.{IvfIndex, SparseIndex}
 import graft.types.MetricType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import graft.index.ServeProbe
+import ServeCalls._
 
 /** Round 8: serving cold loads are gated by a CARDINALITY PRE-CHECK —
   * per-dim / per-cluster counts persisted at build time are consulted
@@ -169,12 +171,12 @@ class Round8Spec extends SparkSpec {
     idx.maxServeRows = 500 // hot cluster holds 1800 rows
     // probing near the heavy blob must decline, and the decline happens
     // BEFORE the 1800-row cluster is collected
-    val declined = idx.servePoint("vec", Array(0f, 0f, 0f, 0f), 10, nProbe = 1)
+    val declined = idx.serveOne("vec", Array(0f, 0f, 0f, 0f), 10, ServeProbe.Nearest(1)).map(_.hits)
     assert(declined.isEmpty, "degenerate-cluster probe must decline to the job path")
     assert(loadedClusters.isEmpty,
       s"hot cluster was collected despite the guard: $loadedClusters")
     // the light blob's cluster fits and serves, matching the job path
-    val served = idx.servePoint("vec", Array(10f, 10f, 10f, 10f), 10, nProbe = 1)
+    val served = idx.serveOne("vec", Array(10f, 10f, 10f, 10f), 10, ServeProbe.Nearest(1)).map(_.hits)
     assert(served.isDefined, "light cluster fits the budget and must serve")
     val viaJob = idx.search("vec", Array(10f, 10f, 10f, 10f), 10, nProbe = 1)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
@@ -263,10 +265,10 @@ class Round8Spec extends SparkSpec {
         super.loadClusters(vecCol, missing)
       }
     }
-    assert(idx.servePoint("vec", Array(0f, 0f, 0f, 0f), 5, nProbe = 1).isEmpty,
+    assert(idx.serveOne("vec", Array(0f, 0f, 0f, 0f), 5, ServeProbe.Nearest(1)).map(_.hits).isEmpty,
       "perpetual churn must degrade to the job path, not throw")
     churn.set(false)
-    val served = idx.servePoint("vec", Array(0f, 0f, 0f, 0f), 5, nProbe = 1)
+    val served = idx.serveOne("vec", Array(0f, 0f, 0f, 0f), 5, ServeProbe.Nearest(1)).map(_.hits)
     assert(served.isDefined && served.get.nonEmpty)
   }
 
@@ -306,11 +308,11 @@ class Round8Spec extends SparkSpec {
     // row cap stays huge; byte cap admits only ~20 rows at dim=4
     // (8*4 + 24 = 56 bytes/row) — the 1800-row cluster must decline
     idx.maxServeBytes = 56L * 20
-    assert(idx.servePoint("vec", Array(0f, 0f, 0f, 0f), 5, nProbe = 1).isEmpty,
+    assert(idx.serveOne("vec", Array(0f, 0f, 0f, 0f), 5, ServeProbe.Nearest(1)).map(_.hits).isEmpty,
       "a dimension-blind row cap must not admit an over-byte probe")
     // raising the byte budget serves again
     idx.maxServeBytes = 2L * 1024 * 1024 * 1024
-    assert(idx.servePoint("vec", Array(0f, 0f, 0f, 0f), 5, nProbe = 1).isDefined)
+    assert(idx.serveOne("vec", Array(0f, 0f, 0f, 0f), 5, ServeProbe.Nearest(1)).map(_.hits).isDefined)
   }
 
   test("dense serve:true falls back to the job path on an over-budget probe, result identical") {

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.index.{IvfIndex, SparseIndex}
 import graft.types.MetricType
+import graft.index.{ServeProbe, ServeTier}
+import ServeCalls._
 
 /** Round 9: the serving tier's remaining ceilings. A degenerate k-means
   * cluster used to DECLINE forever (safe, but a permanent ~1 qps job-path
@@ -13,6 +15,7 @@ import graft.types.MetricType
   * Decline counters feed that loop (Maintenance.tick -> healServingDeclines)
   * and reset per generation. */
 class Round9Spec extends SparkSpec {
+  private val q16 = ServeTier.Quantized(certify = false)
 
   /** Two blobs, one heavy (all rows but `light`) and one light — k-means
     * with 2 clusters separates them, leaving a degenerate hot cluster
@@ -83,7 +86,7 @@ class Round9Spec extends SparkSpec {
     idx.rebaseServing()
     val q = Array(0f, 0f, 0f, 0f)
     // the degenerate cluster declines (cardinality guard, before any load)
-    assert(idx.servePoint("Vec", q, 10, nProbe = 1).isEmpty,
+    assert(idx.serveOne("Vec", q, 10, ServeProbe.Nearest(1)).map(_.hits).isEmpty,
       "degenerate-cluster probe must decline before the heal")
     assert(idx.serveDeclineCount() >= 1L)
     // the maintenance tick sees the decline burst and splits the cluster
@@ -93,7 +96,7 @@ class Round9Spec extends SparkSpec {
     assert(idx.serveDeclineCount() == 0L)
     // the SAME probe now serves — and matches the job path over the same
     // probe set exactly (the healed layout's nearest cluster fits)
-    val served = idx.servePoint("Vec", q, 10, nProbe = 1)
+    val served = idx.serveOne("Vec", q, 10, ServeProbe.Nearest(1)).map(_.hits)
     assert(served.isDefined, "healed layout must serve without declining")
     val viaJob = idx.search("Vec", q, 10, nProbe = 1)
       .select(col(graft.store.TableStore.RowId)).collect().map(_.getLong(0)).toSeq
@@ -229,8 +232,8 @@ class Round9Spec extends SparkSpec {
       val idx = new IvfIndex(spark, path, "id", metric)
       val q = Array.tabulate(dim)(j => 0.05f * (j % 3))
       val np = idx.centroids().length
-      val exact = idx.servePoint("vec", q, 15, nProbe = np).get
-      val quant = idx.servePointQuantized("vec", q, 15, nProbe = np).get
+      val exact = idx.serveOne("vec", q, 15, ServeProbe.Nearest(np)).map(_.hits).get
+      val quant = idx.serveOne("vec", q, 15, ServeProbe.Nearest(np), q16).map(_.hits).get
       assert(quant.map(_._1).toSeq == exact.map(_._1).toSeq,
         s"$metric: quantized ranking diverged from exact")
       assert(idx.servingResidentQuantRows() == 900L)
@@ -240,8 +243,8 @@ class Round9Spec extends SparkSpec {
       }
       // exclusions apply to the quantized pass too
       val excluded = exact.head._1
-      val q2 = idx.servePointQuantized("vec", q, 15, nProbe = np,
-        exclude = _ == excluded).get
+      val q2 = idx.serveOne("vec", q, 15, ServeProbe.Nearest(np), q16,
+        exclude = _ == excluded).get.hits
       assert(!q2.map(_._1).contains(excluded))
       // a fresh tail rides in through the EXACT float kernel and merges
       // (per metric: L2 wants a vector AT the query, dot wants a big one)
@@ -249,8 +252,8 @@ class Round9Spec extends SparkSpec {
         if (metric == MetricType.DotProduct) Array.fill(dim)(100f) else q.clone()
       val tailRows = Array((100000L, tailVec))
       val tail = Some(IvfIndex.packRows(tailRows, dim))
-      val withTail = idx.servePointQuantized("vec", q, 5, nProbe = np,
-        freshTail = tail).get
+      val withTail = idx.serveOne("vec", q, 5, ServeProbe.Nearest(np), q16,
+        tail = tail).get.hits
       assert(withTail.map(_._1).contains(100000L),
         s"$metric: near-query tail row must surface: ${withTail.toSeq}")
     }
@@ -270,9 +273,9 @@ class Round9Spec extends SparkSpec {
     idx.maxServeBytes = 900L * (2 * dim + 48)
     val q = Array.tabulate(dim)(j => 0.05f * (j % 3))
     val np = idx.centroids().length
-    assert(idx.servePoint("vec", q, 10, nProbe = np).isEmpty,
+    assert(idx.serveOne("vec", q, 10, ServeProbe.Nearest(np)).map(_.hits).isEmpty,
       "float tier must decline: probed rows exceed the byte budget")
-    val quant = idx.servePointQuantized("vec", q, 10, nProbe = np)
+    val quant = idx.serveOne("vec", q, 10, ServeProbe.Nearest(np), q16).map(_.hits)
     assert(quant.isDefined, "quantized tier must serve at ~4x the density")
     // and the answer is the true top-k (full-probe == exact search)
     val viaJob = idx.search("vec", q, 10, nProbe = np)
@@ -288,15 +291,15 @@ class Round9Spec extends SparkSpec {
     val idx = new IvfIndex(spark, path, "id", MetricType.Euclidean)
     val q = Array(0f, 0f, 0f, 0f)
     val np0 = idx.centroids().length
-    val before = idx.servePointQuantized("vec", q, 10, nProbe = np0).get
+    val before = idx.serveOne("vec", q, 10, ServeProbe.Nearest(np0), q16).map(_.hits).get
     assert(idx.servingResidentQuantRows() == 2000L)
     // splitOversized bumps the generation: residency must fall cold and
     // reload the NEW layout (same rows, more clusters), same answer
     assert(IvfIndex.splitOversized(spark, path, "vec", "id",
       MetricType.Euclidean, maxRows = 300) == 1)
     idx.rebaseServing()
-    val after = idx.servePointQuantized("vec", q, 10,
-      nProbe = idx.centroids().length).get
+    val after = idx.serveOne("vec", q, 10,
+      ServeProbe.Nearest(idx.centroids().length), q16).get.hits
     assert(after.map(_._1).toSeq == before.map(_._1).toSeq)
   }
 
@@ -358,12 +361,13 @@ class Round9Spec extends SparkSpec {
     val idx = new IvfIndex(spark, path, "id", MetricType.DotProduct)
     val np = idx.centroids().length
     val q = Array(1f, 0f, 0f, 0f)
-    val exact = idx.servePoint("vec", q, 10, nProbe = np).get
+    val exact = idx.serveOne("vec", q, 10, ServeProbe.Nearest(np)).map(_.hits).get
     val before = idx.quantRerankCount()
-    idx.servePointQuantizedDetail("vec", q, 10, nProbe = np,
-      certify = true) // warm residency (this one reranks too)
+    idx.serveOne("vec", q, 10, ServeProbe.Nearest(np),
+      ServeTier.Quantized(certify = true)) // warm residency (this one reranks too)
     val ((hits, reranked), jobs) = countJobs(
-      idx.servePointQuantizedDetail("vec", q, 10, nProbe = np, certify = true).get)
+      idx.serveOne("vec", q, 10, ServeProbe.Nearest(np),
+        ServeTier.Quantized(certify = true)).map(s => (s.hits, s.reranked)).get)
     assert(jobs.n == 1,
       s"warm near-tie serve must cost exactly ONE rerank job, ran ${jobs.n}")
     assert(reranked > 0, "near-tie boundary must trigger the float rerank")
@@ -391,14 +395,15 @@ class Round9Spec extends SparkSpec {
     val idx = new IvfIndex(spark, path, "id", MetricType.Euclidean)
     val np = idx.centroids().length
     val q = Array(0.01f, 0f, 0f, 0f)
-    idx.servePointQuantized("vec", q, 10, nProbe = np) // warm residency
+    idx.serveOne("vec", q, 10, ServeProbe.Nearest(np), q16).map(_.hits) // warm residency
     val before = idx.quantRerankCount()
     val ((hits, reranked), jobs) = countJobs(
-      idx.servePointQuantizedDetail("vec", q, 10, nProbe = np, certify = true).get)
+      idx.serveOne("vec", q, 10, ServeProbe.Nearest(np),
+        ServeTier.Quantized(certify = true)).map(s => (s.hits, s.reranked)).get)
     assert(jobs.n == 0, s"certified warm serve ran ${jobs.n} job(s)")
     assert(reranked == 0, "separated data must certify without a rerank")
     assert(hits.map(_._1).toSeq ==
-      idx.servePoint("vec", q, 10, nProbe = np).get.map(_._1).toSeq)
+      idx.serveOne("vec", q, 10, ServeProbe.Nearest(np)).map(_.hits).get.map(_._1).toSeq)
     assert(idx.quantRerankCount() == before)
   }
 
@@ -413,9 +418,9 @@ class Round9Spec extends SparkSpec {
       val rnd = new scala.util.Random(42)
       (0 until 25).foreach { _ =>
         val q = Array.fill(dim)((rnd.nextFloat() - 0.3f) * 8f)
-        val e = idx.servePoint("vec", q, 12, nProbe = np).get.map(_._1).toSet
-        val qq = idx.servePointQuantizedDetail("vec", q, 12, nProbe = np,
-          certify = true).get._1.map(_._1).toSet
+        val e = idx.serveOne("vec", q, 12, ServeProbe.Nearest(np)).map(_.hits).get.map(_._1).toSet
+        val qq = idx.serveOne("vec", q, 12, ServeProbe.Nearest(np),
+          ServeTier.Quantized(certify = true)).get.hits.map(_._1).toSet
         assert(qq == e, s"$metric: certified quantized id set diverged from exact")
       }
     }

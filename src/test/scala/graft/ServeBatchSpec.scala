@@ -1,11 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.index.IvfIndex
+import graft.index.{IvfIndex, ServeProbe, ServeTier}
 import graft.types.MetricType
+import ServeCalls._
 
-/** servePointBatch: per-query equality with servePoint, shared cold load,
-  * and the degrade-not-decline contract when the union exceeds budget. */
+/** Batch serves (`IvfIndex.serve` over several queries): per-query
+  * equality with the query served alone, shared cold load, and the
+  * degrade-not-decline contract when the union exceeds budget. (Test
+  * names keep the method names of the earlier per-cell serve API.) */
 class ServeBatchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,32 +26,32 @@ class ServeBatchSpec extends SparkSpec {
     val idx = freshIndex("sb_eq")
     val queries = Seq(5, 150, 333, 512, 789).map(i => (i.toLong, corpus(i)._2)).toArray
     // COLD: the batch acquires the union in one pass
-    val batch = idx.servePointBatch("embedding", queries, k = 7, nProbe = 3)
+    val batch = idx.serveAll("embedding", queries.map(_._2), 7, ServeProbe.Nearest(3))
     // then per-query (cache warm, same snapshot)
-    queries.zip(batch).foreach { case ((qid, q), (gotQid, got)) =>
-      assert(gotQid == qid)
-      val single = idx.servePoint("embedding", q, 7, nProbe = 3)
+    queries.zip(batch).foreach { case ((qid, q), got) =>
+      val single = idx.serveOne("embedding", q, 7, ServeProbe.Nearest(3))
       assert(single.isDefined && got.isDefined)
-      assert(got.get.toSeq == single.get.toSeq, s"query $qid batch != single")
+      assert(got.get.hits.toSeq == single.get.hits.toSeq, s"query $qid batch != single")
+      assert(got.get.probed.toSeq == single.get.probed.toSeq)
     }
     // WARM batch again — still equal
-    val batch2 = idx.servePointBatch("embedding", queries, k = 7, nProbe = 3)
-    assert(batch2.map(_._2.get.toSeq).toSeq == batch.map(_._2.get.toSeq).toSeq)
+    val batch2 = idx.serveAll("embedding", queries.map(_._2), 7, ServeProbe.Nearest(3))
+    assert(batch2.map(_.get.hits.toSeq).toSeq == batch.map(_.get.hits.toSeq).toSeq)
   }
 
   test("exclude mask and fresh tail flow through the shared sweep") {
     val idx = freshIndex("sb_tail")
     val q = corpus(10)._2
-    val single = idx.servePoint("embedding", q, 5, nProbe = 8).get
+    val single = idx.serveOne("embedding", q, 5, ServeProbe.Nearest(8)).get.hits
     val dead = single.head._1
     val tail = IvfIndex.packRows(Array((9000L, q)), 16)
-    val batch = idx.servePointBatch("embedding", Array((0L, q)), 5, nProbe = 8,
-      exclude = _ == dead, freshTail = Some(tail))
-    val expected = idx.servePoint("embedding", q, 5, nProbe = 8,
-      exclude = _ == dead, freshTail = Some(tail)).get
-    assert(batch.head._2.get.toSeq == expected.toSeq)
-    assert(batch.head._2.get.map(_._1).contains(9000L), "tail row must surface")
-    assert(!batch.head._2.get.map(_._1).contains(dead), "excluded id returned")
+    val batch = idx.serveAll("embedding", Array(q, corpus(500)._2), 5,
+      ServeProbe.Nearest(8), exclude = _ == dead, tail = Some(tail))
+    val expected = idx.serveOne("embedding", q, 5, ServeProbe.Nearest(8),
+      exclude = _ == dead, tail = Some(tail)).get.hits
+    assert(batch.head.get.hits.toSeq == expected.toSeq)
+    assert(batch.head.get.hits.map(_._1).contains(9000L), "tail row must surface")
+    assert(!batch.head.get.hits.map(_._1).contains(dead), "excluded id returned")
   }
 
   test("union over budget degrades to per-query serves, not a batch decline") {
@@ -57,12 +60,36 @@ class ServeBatchSpec extends SparkSpec {
     // union cannot be resident, single-cluster probes can
     idx.maxServeRows = 150
     val queries = (0 until 8).map(i => (i.toLong, corpus(i * 100 + 3)._2)).toArray
-    val batch = idx.servePointBatch("embedding", queries, k = 3, nProbe = 1)
-    queries.zip(batch).foreach { case ((qid, q), (_, got)) =>
-      val single = idx.servePoint("embedding", q, 3, nProbe = 1)
+    val batch = idx.serveAll("embedding", queries.map(_._2), 3, ServeProbe.Nearest(1))
+    queries.zip(batch).foreach { case ((qid, q), got) =>
+      val single = idx.serveOne("embedding", q, 3, ServeProbe.Nearest(1))
       assert(got.isDefined == single.isDefined, s"query $qid serve/decline parity")
       if (single.isDefined)
-        assert(got.get.toSeq == single.get.toSeq, s"query $qid diverged")
+        assert(got.get.hits.toSeq == single.get.hits.toSeq, s"query $qid diverged")
+    }
+    // FILTERED: the batch's pass set spans the union of its probe sets —
+    // over the scalar budget, the batch degrades to per-query serves, and
+    // degrading declines nothing: when every entry serves, the decline
+    // counter (the split-on-declines maintenance signal) stays put. One
+    // query per corpus group, kept when its own probe fits the budget.
+    idx.setServeFilterColumns(Seq("vec_id"))
+    val conds = Seq(graft.filter.SimpleConjuncts.Cond("vec_id", ">=",
+      graft.filter.SimpleConjuncts.NumLit(50.0, isInt = true)))
+    val fqs = (0 until 8).map(i => corpus(i)._2).filter(q =>
+      idx.serveOne("embedding", q, 3, ServeProbe.Nearest(1)).isDefined).toArray
+    assert(fqs.length >= 4 && fqs.map(q => idx.serveOne("embedding", q, 3,
+      ServeProbe.Nearest(1)).get.probed.head).distinct.length >= 2,
+      "fixture: the union must span several fitting clusters")
+    val before = idx.serveDeclineCount()
+    val fb = idx.serveAll("embedding", fqs, 3, ServeProbe.Nearest(1), conds = conds)
+    assert(fb.forall(_.isDefined), "every filtered entry serves on its own")
+    assert(idx.serveDeclineCount() == before,
+      s"degrading the batch counted ${idx.serveDeclineCount() - before} declines")
+    fqs.zip(fb).foreach { case (q, got) =>
+      val single = idx.serveOne("embedding", q, 3, ServeProbe.Nearest(1),
+        conds = conds)
+      assert(got.get.hits.toSeq == single.get.hits.toSeq, "filtered entry diverged")
+      assert(got.get.hits.forall(_._1 >= 50L))
     }
   }
 
@@ -70,21 +97,21 @@ class ServeBatchSpec extends SparkSpec {
     // the batch contract: Q queries cost the SAME cold jobs as one query
     // (centroid/stat construction + ONE union load), not Q loads
     def jobsOf(f: => Unit): Int = countJobs(f)._2.n
-    val queries = Seq(5, 150, 333, 512).map(i => (i.toLong, corpus(i)._2)).toArray
+    val queries = Seq(5, 150, 333, 512).map(i => corpus(i)._2).toArray
     val idxSingle = freshIndex("sb_jobs1")
     val jSingle = jobsOf {
-      assert(idxSingle.servePointBatch("embedding", queries.take(1),
-        k = 5, nProbe = 2).head._2.isDefined)
+      assert(idxSingle.serveAll("embedding", queries.take(1), 5,
+        ServeProbe.Nearest(2)).head.isDefined)
     }
     val idxBatch = freshIndex("sb_jobs4")
     val jBatch = jobsOf {
-      assert(idxBatch.servePointBatch("embedding", queries,
-        k = 5, nProbe = 2).forall(_._2.isDefined))
+      assert(idxBatch.serveAll("embedding", queries, 5,
+        ServeProbe.Nearest(2)).forall(_.isDefined))
     }
     assert(jBatch <= jSingle + 1, // +1: the wider union may split its stats read
       s"4-query cold batch ran $jBatch jobs vs $jSingle for 1 query — loads scale with Q")
     val jWarm = jobsOf {
-      idxBatch.servePointBatch("embedding", queries, k = 5, nProbe = 2)
+      idxBatch.serveAll("embedding", queries, 5, ServeProbe.Nearest(2))
     }
     assert(jWarm == 0, s"warm batch ran $jWarm jobs")
   }
@@ -118,23 +145,22 @@ class ServeBatchSpec extends SparkSpec {
     val idx = freshIndex("sb_q_eq")
     val queries = Seq(5, 150, 333, 512, 789).map(i => (i.toLong, corpus(i)._2)).toArray
     for (certify <- Seq(false, true)) {
-      val batch = idx.servePointQuantizedBatchDetail("embedding", queries,
-        k = 7, nProbe = 3, certify = certify)
-      queries.zip(batch).foreach { case ((qid, q), (gotQid, got)) =>
-        assert(gotQid == qid)
-        val single = idx.servePointQuantizedDetail("embedding", q, 7,
-          nProbe = 3, certify = certify)
+      val tier = ServeTier.Quantized(certify)
+      val batch = idx.serveAll("embedding", queries.map(_._2), 7,
+        ServeProbe.Nearest(3), tier)
+      queries.zip(batch).foreach { case ((qid, q), got) =>
+        val single = idx.serveOne("embedding", q, 7, ServeProbe.Nearest(3), tier)
         assert(single.isDefined && got.isDefined, s"certify=$certify qid=$qid")
-        assert(got.get._1.toSeq == single.get._1.toSeq,
+        assert(got.get.hits.toSeq == single.get.hits.toSeq,
           s"certify=$certify query $qid batch != single")
       }
     }
     // certified mode returns the proven exact id set: equals the float tier
-    val certified = idx.servePointQuantizedBatchDetail("embedding", queries,
-      k = 7, nProbe = 8, certify = true)
-    queries.zip(certified).foreach { case ((_, q), (_, got)) =>
-      val exact = idx.servePoint("embedding", q, 7, nProbe = 8).get
-      assert(got.get._1.map(_._1).toSeq == exact.map(_._1).toSeq)
+    val certified = idx.serveAll("embedding", queries.map(_._2), 7,
+      ServeProbe.Nearest(8), ServeTier.Quantized(certify = true))
+    queries.zip(certified).foreach { case ((_, q), got) =>
+      val exact = idx.serveOne("embedding", q, 7, ServeProbe.Nearest(8)).get.hits
+      assert(got.get.hits.map(_._1).toSeq == exact.map(_._1).toSeq)
     }
   }
 
@@ -142,43 +168,42 @@ class ServeBatchSpec extends SparkSpec {
     val idx = freshIndex("sb_pq_eq")
     val queries = Seq(10, 200, 400, 700).map(i => (i.toLong, corpus(i)._2)).toArray
     for (certify <- Seq(false, true)) {
-      val batch = idx.servePointPqBatchDetail("embedding", queries,
-        k = 5, nProbe = 4, certify = certify)
-      queries.zip(batch).foreach { case ((qid, q), (_, got)) =>
-        val single = idx.servePointPqDetail("embedding", q, 5,
-          nProbe = 4, certify = certify)
+      val tier = ServeTier.Pq(certify)
+      val batch = idx.serveAll("embedding", queries.map(_._2), 5,
+        ServeProbe.Nearest(4), tier)
+      queries.zip(batch).foreach { case ((qid, q), got) =>
+        val single = idx.serveOne("embedding", q, 5, ServeProbe.Nearest(4), tier)
         assert(single.isDefined && got.isDefined, s"certify=$certify qid=$qid")
-        assert(got.get._1.toSeq == single.get._1.toSeq,
+        assert(got.get.hits.toSeq == single.get.hits.toSeq,
           s"certify=$certify query $qid batch != single")
       }
     }
     // exclude + fresh tail, batch vs single
+    val pq = ServeTier.Pq(certify = false)
     val q = corpus(10)._2
-    val dead = idx.servePointPqDetail("embedding", q, 5, nProbe = 8).get._1.head._1
+    val dead = idx.serveOne("embedding", q, 5, ServeProbe.Nearest(8), pq)
+      .get.hits.head._1
     val tail = IvfIndex.packRows(Array((9000L, q)), 16)
-    val batch = idx.servePointPqBatchDetail("embedding", Array((0L, q)), 5,
-      nProbe = 8, exclude = _ == dead, freshTail = Some(tail))
-    val single = idx.servePointPqDetail("embedding", q, 5, nProbe = 8,
-      exclude = _ == dead, freshTail = Some(tail)).get
-    assert(batch.head._2.get._1.toSeq == single._1.toSeq)
-    assert(batch.head._2.get._1.map(_._1).contains(9000L), "tail row must surface")
+    val batch = idx.serveAll("embedding", Array(q, corpus(300)._2), 5,
+      ServeProbe.Nearest(8), pq, exclude = _ == dead, tail = Some(tail))
+    val single = idx.serveOne("embedding", q, 5, ServeProbe.Nearest(8), pq,
+      exclude = _ == dead, tail = Some(tail)).get
+    assert(batch.head.get.hits.toSeq == single.hits.toSeq)
+    assert(batch.head.get.hits.map(_._1).contains(9000L), "tail row must surface")
   }
 
   test("quantized/pq batch over-budget degrades to per-query serves") {
     val idx = freshIndex("sb_q_budget")
     idx.maxServeRows = 150
     val queries = (0 until 8).map(i => (i.toLong, corpus(i * 100 + 3)._2)).toArray
-    val qb = idx.servePointQuantizedBatchDetail("embedding", queries, k = 3, nProbe = 1)
-    queries.zip(qb).foreach { case ((qid, q), (_, got)) =>
-      val single = idx.servePointQuantizedDetail("embedding", q, 3, nProbe = 1)
-      assert(got.isDefined == single.isDefined, s"qid $qid parity")
-      if (single.isDefined) assert(got.get._1.toSeq == single.get._1.toSeq)
-    }
-    val pb = idx.servePointPqBatchDetail("embedding", queries, k = 3, nProbe = 1)
-    queries.zip(pb).foreach { case ((qid, q), (_, got)) =>
-      val single = idx.servePointPqDetail("embedding", q, 3, nProbe = 1)
-      assert(got.isDefined == single.isDefined, s"qid $qid parity")
-      if (single.isDefined) assert(got.get._1.toSeq == single.get._1.toSeq)
+    for (tier <- Seq(ServeTier.Quantized(certify = false), ServeTier.Pq(certify = false))) {
+      val batch = idx.serveAll("embedding", queries.map(_._2), 3,
+        ServeProbe.Nearest(1), tier)
+      queries.zip(batch).foreach { case ((qid, q), got) =>
+        val single = idx.serveOne("embedding", q, 3, ServeProbe.Nearest(1), tier)
+        assert(got.isDefined == single.isDefined, s"$tier qid $qid parity")
+        if (single.isDefined) assert(got.get.hits.toSeq == single.get.hits.toSeq)
+      }
     }
   }
 
