@@ -235,26 +235,23 @@ class GraftDb(val spark: SparkSession, val root: String,
     }
   }
 
-  /** The cached tail's rows passing the conjunction, evaluated on the
-    * scalar sidecar with the SAME comparison kernels the resident sweep
-    * uses. None = a condition references a column the sidecar lacks (a
-    * re-declaration raced the cache) → the caller declines to the job
+  /** Which rows of a row-aligned scalar sidecar (fresh-tail rows, a
+    * values residency) pass the conjunction, evaluated with the SAME
+    * comparison kernels the resident sweeps use. None = a condition
+    * references a column the sidecar lacks (a re-declaration raced the
+    * cache) or a value's type drifted → the caller declines to the job
     * path. */
-  private def filterTail(dt: DenseTail,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond], dim: Int)
-      : Option[(Array[Long], Array[Double], Array[Double])] = {
+  private def sidecarPasses(n: Int, scalars: Map[String, Array[AnyRef]],
+      conds: Seq[graft.filter.SimpleConjuncts.Cond]): Option[Array[Boolean]] = {
     import graft.filter.SimpleConjuncts._
-    val (ids, flat, norms) = dt.packed
-    val n = ids.length
     val keep = new Array[Boolean](n)
-    var kept = 0
     var j = 0
     while (j < n) {
       var ok = true
       var ci = 0
       while (ok && ci < conds.length) {
         val c = conds(ci)
-        val arr = dt.scalars.getOrElse(c.col, null)
+        val arr = scalars.getOrElse(c.col, null)
         if (arr == null) return None
         ok = (arr(j), c.value) match {
           case (null, _) => false // SQL: NULL fails every comparison
@@ -263,20 +260,42 @@ class GraftDb(val spark: SparkSession, val root: String,
           case (x: java.lang.Number, l: NumLit) => evalLong(c.op, x.longValue, l)
           case (x: String, l: StrLit) => evalString(c.op, x, l)
           case (x: java.lang.Boolean, l: BoolLit) => evalBool(c.op, x.booleanValue, l)
-          case _ => return None // type drift: job path answers
+          case _ => return None
         }
         ci += 1
       }
       keep(j) = ok
-      if (ok) kept += 1
       j += 1
     }
+    Some(keep)
+  }
+
+  /** The passing ids of a row-aligned sidecar (see [[sidecarPasses]]). */
+  private def sidecarPassingIds(ids: Array[Long],
+      scalars: Map[String, Array[AnyRef]],
+      conds: Seq[graft.filter.SimpleConjuncts.Cond]): Option[Array[Long]] =
+    sidecarPasses(ids.length, scalars, conds).map { keep =>
+      val out = Array.newBuilder[Long]
+      var j = 0
+      while (j < ids.length) { if (keep(j)) out += ids(j); j += 1 }
+      out.result()
+    }
+
+  /** The cached tail's rows passing the conjunction, judged on its scalar
+    * sidecar ([[sidecarPasses]]; None declines). */
+  private def filterTail(dt: DenseTail,
+      conds: Seq[graft.filter.SimpleConjuncts.Cond], dim: Int)
+      : Option[(Array[Long], Array[Double], Array[Double])] = {
+    val (ids, flat, norms) = dt.packed
+    val n = ids.length
+    val keep = sidecarPasses(n, dt.scalars, conds).getOrElse(return None)
+    val kept = keep.count(identity)
     if (kept == n) return Some(dt.packed)
     val oIds = new Array[Long](kept)
     val oFlat = new Array[Double](kept * dim)
     val oNorms = new Array[Double](kept)
     var o = 0
-    j = 0
+    var j = 0
     while (j < n) {
       if (keep(j)) {
         oIds(o) = ids(j)
@@ -592,22 +611,85 @@ class GraftDb(val spark: SparkSession, val root: String,
     * JSON in, JSON out (rendering is capped — see `render`); use
     * `queryDataFrame` as the primary surface for large results. */
   def query(requestJson: String): String = {
-    val req = JsonMethods.parse(requestJson)
-    (req \ "keywords") match {
+    val q = new QueryRequest(JsonMethods.parse(requestJson))
+    (q.json \ "keywords") match {
       case JArray(ks) if ks.nonEmpty =>
-        return hybridQuery(req, ks.map(str))
+        return hybridQuery(q, ks.map(str))
       case _ => ()
     }
-    (req \ "queryVectors") match {
-      case JArray(vs) if vs.nonEmpty => return batchQuery(req, vs)
+    (q.json \ "queryVectors") match {
+      case JArray(vs) if vs.nonEmpty => return batchQuery(q, vs)
       case _ => ()
     }
-    val serve = (req \ "serve") match { case JBool(b) => b; case _ => false }
-    if (serve) serveQuery(req) match {
+    if (q.serve) serveQuery(q) match {
       case Some(resp) => return resp
       case None => // no index / stale index: fall through to the job path
     }
-    val (out, facetDfs, facets, unbounded, cleanup) = queryPlan(requestJson)
+    jobPathResponse(q, q.json \ "queryVector")
+  }
+
+  /** A query request, read once from its JSON: every query entry point
+    * (`query`, `batchQuery`, `serveQuery`, `serveBatch`, `hybridQuery`,
+    * `queryPlan`) takes its fields from here. Each field is lazy, so it
+    * is read — and can throw (no table, an ambiguous `queryField`) — only
+    * where an entry point first asks for it. */
+  private final class QueryRequest(val json: JValue) {
+    private def flag(key: String): Boolean =
+      (json \ key) match { case JBool(b) => b; case _ => false }
+    lazy val table: String = str(json \ "table")
+    lazy val st: TableStore = store(table)
+    lazy val queryField: String = (json \ "queryField") match {
+      case JString(s) => s
+      case _ =>
+        val vfs = st.schema.vectorFields
+        require(vfs.size == 1, "queryField required when table has multiple vector fields")
+        vfs.head.name
+    }
+    lazy val limit: Int = (json \ "limit") match { case JInt(i) => i.toInt; case _ => 10 }
+    lazy val nProbe: Int = (json \ "nProbe") match { case JInt(i) => i.toInt; case _ => 8 }
+    /** The filter as sent (the job path's); the serve paths read it trimmed. */
+    lazy val filter: String = (json \ "filter") match { case JString(s) => s; case _ => "" }
+    /** The filter as a resident-evaluable conjunction: `Some(Nil)` when
+      * unfiltered, None when it lies outside the serve sub-grammar (only
+      * the job path can answer it). */
+    lazy val conds: Option[Seq[graft.filter.SimpleConjuncts.Cond]] =
+      if (filter.trim.isEmpty) Some(Nil)
+      else graft.filter.SimpleConjuncts.parse(filter.trim, st.schema)
+    /** A declared recall floor: served only under its proven cover. */
+    lazy val recallTarget: Option[Double] = (json \ "recallTarget") match {
+      case JDouble(d) => Some(d)
+      case JDecimal(d) => Some(d.toDouble)
+      case JInt(i) => Some(i.toDouble)
+      case _ => None
+    }
+    lazy val serve: Boolean = flag("serve")
+    // "quantized":true = OPT-IN serving off the 16-bit resident tier
+    // (~4x the rows per residency byte; empirically exact ranking, the L2
+    // norm term is packed exact, but no proof). "pq":true = OPT-IN serving
+    // off the PQ resident tier (m-byte ADC codes; a lossy ~32x compression,
+    // so rank flips on close pairs are expected; pre-PQ layouts decline,
+    // never silently downgrade). Either answer is marked in the envelope;
+    // the default serve tier stays the all-float one.
+    lazy val quantized: Boolean = flag("quantized")
+    lazy val pq: Boolean = flag("pq")
+    /** "certified":true upgrades a code tier to a PROVEN-exact id set
+      * (interval-certified against per-row code error bounds, the
+      * boundary-ambiguous band float-reranked in one pruned job, surfaced
+      * as "reranked":n). A declared floor forces it on: the cover bounds
+      * the true top-k's clusters and certification returns the exact
+      * top-k of the cover's candidates, so cover × certified is the
+      * floor's proof (the envelope says certified:true, truthfully). */
+    lazy val certified: Boolean = flag("certified") || recallTarget.isDefined
+    lazy val tier: ServeTier =
+      if (pq) ServeTier.Pq(certified)
+      else if (quantized) ServeTier.Quantized(certified)
+      else ServeTier.Float
+    lazy val facets: Seq[Facet] = parseFacets(json \ "facets")
+  }
+
+  /** The job path's rendered answer to `q` for one query vector. */
+  private def jobPathResponse(q: QueryRequest, vector: JValue): String = {
+    val (out, facetDfs, facets, unbounded, cleanup) = queryPlan(q, vector)
     try render(out, facetDfs, facets, unbounded)
     finally cleanup()
   }
@@ -617,37 +699,37 @@ class GraftDb(val spark: SparkSession, val root: String,
     * `{"results":[<single-query response>, ...]}` in input order, each
     * entry exactly what the single-query endpoint would have returned.
     *
-    * With `"serve":true` the batch rides the tier's shared sweep — float
-    * ([[graft.index.IvfIndex.serve]] on the float, 16-bit or PQ tier):
-    * one snapshot handshake, one union cold load, one shared row sweep;
-    * certification (and its rare wider-pad retries) runs per query.
-    * Queries the serve tier declines fall back to the job path
-    * INDIVIDUALLY — batch membership never changes any query's
-    * serve-or-decline outcome. Sparse queries run per query. */
-  private def batchQuery(req: JValue, vs: List[JValue]): String = {
-    val serve = (req \ "serve") match { case JBool(b) => b; case _ => false }
-    val quantized = (req \ "quantized") match { case JBool(b) => b; case _ => false }
-    val pq = (req \ "pq") match { case JBool(b) => b; case _ => false }
+    * With `"serve":true` a dense batch rides the tier's shared sweep
+    * ([[serveBatch]]: one snapshot handshake, one union cold load, one
+    * shared row sweep; certification runs per query). An entry the serve
+    * tier declines goes straight to the job path, so it is served — and
+    * counts as a serve decline — once. Batch membership never changes any
+    * query's serve-or-decline outcome. Sparse or non-numeric entries run
+    * the single-query dispatch one by one (it holds the sparse serve
+    * tier). */
+  private def batchQuery(q: QueryRequest, vs: List[JValue]): String = {
     val denseOk = vs.forall {
       case JArray(xs) => xs.nonEmpty && xs.forall {
         case JInt(_) | JDouble(_) | JDecimal(_) | JLong(_) => true; case _ => false
       }
       case _ => false
     }
-    val servedUp: Array[Option[String]] =
-      if (serve && denseOk)
-        serveBatch(req, vs.map { case JArray(xs) => xs.map(num(_).toFloat).toArray
-          case _ => Array.empty[Float] }.toArray, quantized, pq)
-      else Array.fill(vs.length)(None)
-    val fields = req match { case JObject(fs) => fs; case _ => Nil }
-    val out = vs.zipWithIndex.map { case (v, i) =>
-      servedUp(i).getOrElse {
-        val single = JObject(
-          fields.filterNot { case (k, _) => k == "queryVectors" } :+
-            ("queryVector" -> v))
-        query(JsonMethods.compact(JsonMethods.render(single)))
+    val out =
+      if (denseOk) {
+        val served: Array[Option[String]] =
+          if (q.serve)
+            serveBatch(q, vs.map { case JArray(xs) => xs.map(num(_).toFloat).toArray
+              case _ => Array.empty[Float] }.toArray)
+          else Array.fill(vs.length)(None)
+        vs.zip(served).map { case (v, s) => s.getOrElse(jobPathResponse(q, v)) }
+      } else {
+        val fields = q.json match { case JObject(fs) => fs; case _ => Nil }
+        vs.map { v =>
+          query(JsonMethods.compact(JsonMethods.render(JObject(
+            fields.filterNot { case (k, _) => k == "queryVectors" } :+
+              ("queryVector" -> v)))))
+        }
       }
-    }
     s"""{"results":[${out.mkString(",")}]}"""
   }
 
@@ -716,25 +798,18 @@ class GraftDb(val spark: SparkSession, val root: String,
     * back to their job paths individually. Keyword-side freshness is the
     * impact index's snapshot (frozen-stats caveat above); tombstones are
     * masked on both sides. Response rows are (__row_id, rrf). */
-  private def hybridQuery(req: JValue, terms: List[String]): String = {
-    val table = str(req \ "table")
-    val st = store(table)
-    val textField = str(req \ "textField")
-    val queryField = (req \ "queryField") match {
-      case JString(s) => s
-      case _ =>
-        val vfs = st.schema.vectorFields
-        require(vfs.size == 1, "queryField required when table has multiple vector fields")
-        vfs.head.name
-    }
-    val dense: Array[Float] = (req \ "queryVector") match {
+  private def hybridQuery(q: QueryRequest, terms: List[String]): String = {
+    val table = q.table
+    val st = q.st
+    val textField = str(q.json \ "textField")
+    val queryField = q.queryField
+    val dense: Array[Float] = (q.json \ "queryVector") match {
       case JArray(vals) => vals.map(num(_).toFloat).toArray
       case _ => throw new IllegalArgumentException(
         "hybrid query needs a dense queryVector alongside keywords")
     }
-    val limit = (req \ "limit") match { case JInt(i) => i.toInt; case _ => 10 }
-    val cut = (req \ "rrfCut") match { case JInt(i) => i.toInt; case _ => 50 }
-    val nProbe = (req \ "nProbe") match { case JInt(i) => i.toInt; case _ => 8 }
+    val limit = q.limit
+    val cut = (q.json \ "rrfCut") match { case JInt(i) => i.toInt; case _ => 50 }
     // a declared recall floor: the DENSE side serves under its PROVEN
     // cover (geometric ball cover unfiltered, passing-count cover
     // filtered — the same proofs the single dispatch uses; 1.0 = the
@@ -743,14 +818,9 @@ class GraftDb(val spark: SparkSession, val root: String,
     // retrieval-mode and proves none). The uniform recallTarget contract
     // holds: every served side carries its floor's proof, and the
     // envelope says which side served.
-    val recallTarget: Option[Double] = (req \ "recallTarget") match {
-      case JDouble(d) => Some(d)
-      case JDecimal(d) => Some(d.toDouble)
-      case JInt(i) => Some(i.toDouble)
-      case _ => None
-    }
-    val serve = (req \ "serve") match { case JBool(b) => b; case _ => false }
-    require(!facetsPresent(req), "hybrid queries do not support facets")
+    val recallTarget = q.recallTarget
+    val serve = q.serve
+    require(q.facets.isEmpty, "hybrid queries do not support facets")
     // `filter` applies to BOTH sides: each ranks over the FILTERED
     // universe before fusion (filter-then-rank — the same semantics the
     // single-query path has, queryPlan's preFilter). When the filter is a
@@ -758,7 +828,7 @@ class GraftDb(val spark: SparkSession, val root: String,
     // through a filtered IvfIndex.serve, the keyword side by borrowing the
     // dense index's complete passing-id verdict (passingIdSet + the
     // pre-filtered tail sidecar) as a mask on the sparse candidate walk.
-    val filterStr = filterStringOf(req)
+    val filterStr = q.filter.trim
     val filterCol: Option[org.apache.spark.sql.Column] =
       if (filterStr.isEmpty) None
       else Some(graft.filter.FilterTranslator.translate(filterStr,
@@ -768,17 +838,18 @@ class GraftDb(val spark: SparkSession, val root: String,
     // excludeIds) instead
     val tombsOpt: Option[Long => Boolean] = tombstoneSet(st).map(_.contains)
 
-    // dense side: (row_id asc-rank list), serve tier first when asked.
-    // A filtered hybrid can still serve its dense side when the filter is
-    // a resident-evaluable conjunction (same sub-grammar the single-query
-    // serve path takes); anything else keeps both sides on the job paths.
-    val serveConds: Option[Seq[graft.filter.SimpleConjuncts.Cond]] =
-      if (filterStr.isEmpty) Some(Nil)
-      else graft.filter.SimpleConjuncts.parse(filterStr, st.schema)
+    // dense side: (row_id asc-rank list), serve tier first when asked —
+    // the float tier of the one dense serve. A filtered hybrid can still
+    // serve its dense side when the filter is a resident-evaluable
+    // conjunction; anything else keeps both sides on the job paths.
+    val serveConds = q.conds
     val denseServed: Option[Array[Long]] =
-      if (!serve || serveConds.isEmpty) None
-      else serveDenseHits(st, queryField, dense, cut, nProbe,
-        serveConds.get, recallTarget).map(_.map(_._1))
+      if (!serve) None
+      else for {
+        conds <- serveConds
+        ds <- serveDense(q, Array(dense), cut, ServeTier.Float, conds)
+        served <- ds.served.head
+      } yield served.hits.map(_._1)
     val denseIds: Array[Long] = denseServed.getOrElse {
       val f = st.schema.field(queryField)
       val d = QueryEngine.distanceColumn(f, QueryEngine.DenseQuery(dense))
@@ -872,51 +943,87 @@ class GraftDb(val spark: SparkSession, val root: String,
     sb.toString
   }
 
-  /** One dense serving handshake (pin + fresh tail + tombstones +
-    * `IvfIndex.serve` + pin re-check) returning raw hits — the id-level
-    * core the hybrid path shares with `serveQuery`'s rendered envelope.
-    * `conds` non-empty = attribute-filtered serving (over declared
-    * resident columns; tail pre-filtered on the sidecar). */
-  private def serveDenseHits(st: TableStore, queryField: String,
-      dense: Array[Float], k: Int, nProbe: Int,
-      conds: Seq[graft.filter.SimpleConjuncts.Cond] = Nil,
-      recallTarget: Option[Double] = None)
-      : Option[Array[(Long, Double)]] = {
-    val f = st.schema.field(queryField)
-    if (!FieldType.isVector(f.fieldType) || FieldType.isSparse(f.fieldType))
-      return None
-    if (!Files.exists(Paths.get(
-        s"$root/${st.schema.name}/ivf_$queryField/ivf_meta.json"))) return None
-    val idx = index(st, queryField)
-    if (idx.indexedPurgeGen() < st.purgeGen()) return None
+  /** The pin-coherence loop every resident serve runs (dense, sparse,
+    * and the dense pass verdict other tiers borrow). The fresh tail and
+    * the resident index must cover DISJOINT id ranges around one serving
+    * pin, so each of up to 4 attempts reads the pin (`pin`; None
+    * declines), collects the tail (`tail`) and serves (`attempt`; None
+    * declines). The answer stands only if `stable` still holds after the
+    * sweep: a rebuild or rebase landing mid-serve re-pins residency while
+    * the tail still covers rows above the OLD pin (rows in between would
+    * be double-counted), so the loop retries. An over-cap tail rebases
+    * the pin only when appends moved the index past it (re-pinning
+    * shrinks the tail); otherwise the INDEX is behind the store (rebuild
+    * overdue) and the serve declines. Pin churn on every attempt declines
+    * too: the job path answers exactly. */
+  private def pinCoherent[T, A](pin: () => Option[Long],
+      indexedWatermark: () => Long, rebase: () => Unit,
+      tail: () => Either[Unit, T])(attempt: (Long, T) => Option[A])(
+      stable: (Long, A) => Boolean): Option[A] = {
     var attempts = 0
     while (attempts < 4) {
       attempts += 1
-      val pin = idx.servingWatermark()
-      freshTailCluster(st, idx, queryField) match {
+      val p = pin().getOrElse(return None)
+      tail() match {
         case Left(_) =>
-          if (idx.indexedWatermark() > pin) idx.rebaseServing()
-          else return None
-        case Right(tail) =>
-          val tombs = tombstoneSet(st) match {
-            case Some(t) => t
-            case None => return None
-          }
-          val ft = serveTail(tail, conds, f.dimensions).getOrElse(return None)
-          // a declared floor: the ball cover proves it (1.0 = exact) — the
-          // passing-count cover under a filter — as in the single dispatch
-          val probe = serveProbe(recallTarget,
-            math.min(nProbe, idx.centroids().length), tombs.size.toLong)
-          idx.serve(queryField, Array(dense), math.min(k, maxRenderRows),
-            ServeTier.Float, probe, conds, tombs.contains, ft).head match {
-            case Some(s) =>
-              if (idx.servingWatermark() == pin) return Some(s.hits)
-            // else: pin moved mid-serve — retry
-            case None => return None
-          }
+          if (indexedWatermark() > p) rebase() else return None
+        case Right(t) =>
+          val a = attempt(p, t).getOrElse(return None)
+          if (stable(p, a)) return Some(a)
       }
     }
     None
+  }
+
+  /** One dense serve's answers (aligned with its queries) with the index
+    * and the fresh tail they were served against — the facet lookups
+    * read both. */
+  private final case class DenseServe(idx: graft.index.IvfIndex,
+      tail: Option[DenseTail], served: Array[Option[graft.index.Served]])
+
+  /** The one dense serve handshake, shared by single, batch and hybrid
+    * queries: the index exists and postdates the last purge, then under
+    * one serving pin ([[pinCoherent]]) the fresh tail, the tombstone mask,
+    * ONE `IvfIndex.serve` over all `queries` and the pin re-check. `k` is
+    * capped at `maxRenderRows`; the probe is `q`'s nearest `nProbe`, or
+    * the proven cover of its declared floor (`recallTarget`; an over-wide
+    * cover declines on the residency budget) with the tombstone count as
+    * slack. `conds` non-empty = attribute-filtered serving: exact in the
+    * sweep over declared resident columns, and on the tail's scalar
+    * sidecar for tail rows. None = the handshake itself declined (no or
+    * stale index, a faceted request with nothing declared to read facet
+    * values from, tail or tombstone mask over cap, a sidecar raced by a
+    * re-declaration, pin churn); a per-query None is that query's
+    * decline, counted by `serve`. */
+  private def serveDense(q: QueryRequest, queries: Array[Array[Float]],
+      k: Int, tier: ServeTier, conds: Seq[graft.filter.SimpleConjuncts.Cond])
+      : Option[DenseServe] = {
+    val st = q.st
+    val field = q.queryField
+    if (!Files.exists(Paths.get(
+        s"$root/${st.schema.name}/ivf_$field/ivf_meta.json"))) return None
+    val dim = st.schema.field(field).dimensions
+    val idx = index(st, field)
+    if (idx.indexedPurgeGen() < st.purgeGen()) return None // stale vs compact
+    // facets read the declared scalar residency: nothing declared declines
+    // before the sweep instead of after it
+    if (q.facets.nonEmpty && idx.serveFilterColumns().isEmpty) return None
+    pinCoherent(() => Some(idx.servingWatermark()), () => idx.indexedWatermark(),
+        () => idx.rebaseServing(), () => freshTailCluster(st, idx, field)) {
+      (_, tail) =>
+        for {
+          // pure cache hit: the tail probe refreshed the tombstone cache
+          // for this version inside its own (single) job
+          tombs <- tombstoneSet(st)
+          ft <- serveTail(tail, conds, dim)
+        } yield {
+          val probe = q.recallTarget.fold[ServeProbe](
+            ServeProbe.Nearest(math.min(q.nProbe, idx.centroids().length)))(
+            ServeProbe.Recall(_, tombs.size.toLong))
+          DenseServe(idx, tail, idx.serve(field, queries,
+            math.min(k, maxRenderRows), tier, probe, conds, tombs.contains, ft))
+        }
+    } { (pin, _) => idx.servingWatermark() == pin }
   }
 
   /** The fresh tail a dense serve takes: the packed tail, pre-filtered on
@@ -933,29 +1040,11 @@ class GraftDb(val spark: SparkSession, val root: String,
         filterTail(dt, conds, dim).map(p => if (p._1.isEmpty) None else Some(p))
     }
 
-  /** The probe mode of a dense serve: the proven cover of a declared
-    * recall floor (`slack` = the tombstone count the mask may hide), else
-    * the `np` nearest clusters. */
-  private def serveProbe(recallTarget: Option[Double], np: Int, slack: Long)
-      : ServeProbe =
-    recallTarget.fold[ServeProbe](ServeProbe.Nearest(np))(
-      t => ServeProbe.Recall(t, slack))
-
-  /** The dense tier a request asks for (`serve` forces certification
-    * on the code tiers under a declared floor — cover × certified is the
-    * floor's proof). */
-  private def serveTier(quantized: Boolean, pq: Boolean, certified: Boolean)
-      : ServeTier =
-    if (pq) ServeTier.Pq(certified)
-    else if (quantized) ServeTier.Quantized(certified)
-    else ServeTier.Float
-
-  /** A dense serve's response: the hits as (`__row_id`, `@distance`)
-    * rows, the tier/filter/proof flags and the facets fragment. */
-  private def servedEnvelope(served: graft.index.Served, filtered: Boolean,
-      quantized: Boolean, pq: Boolean, certified: Boolean,
-      facetJson: String): String = {
-    val hits = served.hits
+  /** A served answer's response: the hits as (`__row_id`, `@distance`)
+    * rows, the served and filtered marks, then `rest` (tier flags,
+    * facets). */
+  private def servedJson(hits: Array[(Long, Double)], filtered: Boolean,
+      rest: String): String = {
     val sb = new java.lang.StringBuilder("{\"result\":[")
     var i = 0
     while (i < hits.length) {
@@ -966,14 +1055,25 @@ class GraftDb(val spark: SparkSession, val root: String,
     }
     sb.append("],\"served\":true")
     if (filtered) sb.append(",\"filtered\":true")
-    if (pq || quantized) {
-      sb.append(if (pq) ",\"pq\":true" else ",\"quantized\":true")
-      if (certified) sb.append(",\"certified\":true")
-      if (served.reranked > 0) sb.append(",\"reranked\":").append(served.reranked)
-    }
-    sb.append(facetJson)
-    sb.append('}')
-    sb.toString
+    sb.append(rest).append('}').toString
+  }
+
+  /** A served dense answer's response: [[servedJson]] with the tier and
+    * proof flags and, when asked, facets over the served top-k. None =
+    * the facet source is unavailable: the request declines whole (a
+    * response never carries partial facets). */
+  private def servedResponse(q: QueryRequest, ds: DenseServe,
+      query: Array[Float], served: graft.index.Served): Option[String] = {
+    val facetJson: String =
+      if (q.facets.isEmpty) ""
+      else serveFacetsJson(q.st, ds.idx, query, served, ds.tail, q.facets)
+        .getOrElse(return None)
+    val tierFlags =
+      if (!q.pq && !q.quantized) ""
+      else (if (q.pq) ",\"pq\":true" else ",\"quantized\":true") +
+        (if (q.certified) ",\"certified\":true" else "") +
+        (if (served.reranked > 0) s",\"reranked\":${served.reranked}" else "")
+    Some(servedJson(served.hits, q.conds.exists(_.nonEmpty), tierFlags + facetJson))
   }
 
   /** Serve-path FACETS: aggregate the POST-LIMIT served result (≤ k rows
@@ -1113,177 +1213,76 @@ class GraftDb(val spark: SparkSession, val root: String,
         s"$root/${st.schema.name}/ivf_$denseField/ivf_meta.json"))) return None
     val idx = index(st, denseField)
     if (idx.indexedPurgeGen() < st.purgeGen()) return None
-    var attempts = 0
-    while (attempts < 4) {
-      attempts += 1
-      // a donor that skipped NULL-vector rows at build/append has an
-      // INCOMPLETE id universe: rows it never saw (null dense, live
-      // sparse) would be judged non-passing — decline the borrow. The
-      // completeness bit and the pin come from ONE synchronized stamp
-      // read (and re-read per retry, since a rebase in the Left branch
-      // moves the pin): two separate reads let a throttled refresh slide
-      // the pin past new null rows the tail check then never sees
-      // (round-12 ADVICE, medium).
-      val (complete0, wm0) = idx.universeCompletePin()
-      if (!complete0) return None
-      freshTailCluster(st, idx, denseField) match {
-        case Left(_) =>
-          if (idx.indexedWatermark() > wm0) idx.rebaseServing()
-          else return None // tail over cap: rebuild overdue
-        case Right(tail) =>
-          // same completeness rule for the gap rows: a null-dense row
-          // above the pin has no sidecar judgment
-          if (tail.exists(_.nullVecRows > 0)) return None
-          // passing ids ABOVE the pin, from the tail's scalar sidecar
-          val tailPass = new java.util.HashSet[java.lang.Long]()
-          tail match {
-            case None => ()
-            case Some(dt) => filterTail(dt, conds, f.dimensions) match {
-              case Some(p) => p._1.foreach(id => tailPass.add(id))
-              case None => return None // sidecar raced a re-declaration
-            }
-          }
-          idx.passingIdSet(conds) match {
-            case None => return None // undeclared column / over budget
-            case Some((pass, pinKey, pinWm)) =>
-              // the tail was collected against wm0: a pass set pinned
-              // elsewhere would leave the gap rows unjudged — retry
-              if (pinWm == wm0)
-                return Some((
-                  (id: Long) =>
-                    if (id <= pinWm) pass.contains(id)
-                    else tailPass.contains(id),
-                  // post-sweep re-verify ALSO re-checks completeness at
-                  // the same pin from one stamp: nulls appended during
-                  // the borrower's sweep invalidate the verdict instead
-                  // of silently aging the tailPass set
-                  () => {
-                    val (c, w) = idx.universeCompletePin()
-                    c && w == pinWm && idx.pinStableFor(pinKey, pinWm)
-                  }))
-          }
-      }
+    // a donor that skipped NULL-vector rows at build/append has an
+    // INCOMPLETE id universe: rows it never saw (null dense, live sparse)
+    // would be judged non-passing — decline the borrow. The completeness
+    // bit and the pin come from ONE synchronized stamp read (and re-read
+    // per retry, since a rebase moves the pin): two separate reads let a
+    // throttled refresh slide the pin past new null rows the tail check
+    // then never sees (round-12 ADVICE, medium).
+    def completePin(): Option[Long] = {
+      val (complete, wm) = idx.universeCompletePin()
+      if (complete) Some(wm) else None
     }
-    None
-  }
-
-  /** The serve-tier fast path for [[batchQuery]]: one pin/tail/tombstone
-    * handshake for the whole batch, then one `IvfIndex.serve`. Per-query
-    * `None` = that query falls to its single-query path (same outcome it
-    * would have had alone); all-`None` = the shared handshake itself
-    * declined (no index, over-cap tail, tombstone mask over cap). */
-  private def serveBatch(req: JValue, dense: Array[Array[Float]],
-      quantized: Boolean = false, pq: Boolean = false)
-      : Array[Option[String]] = {
-    val allNone: Array[Option[String]] = Array.fill(dense.length)(None)
-    // FACETED batches ride the shared sweep too: facets aggregate each
-    // query's post-limit top-k (≤ k driver-resident rows) through the
-    // same serveFacetsJson the single dispatch uses — the sweep is
-    // batched, the per-query facet aggregation is tiny by contract. An
-    // entry whose facet source is unavailable degrades to ITS per-query
-    // fallback (which re-enters query() and serves or declines there) —
-    // never partial facets, never a batch-wide decline. A FILTERED
-    // batch rides the sweep when the filter is a resident-evaluable
-    // conjunction (the conjunction is shared, so one passing-id set
-    // masks the whole batch); anything else declines per query.
-    val facets = parseFacets(req \ "facets")
-    // the uniform floor contract, batch form: ALL THREE dense tiers
-    // serve a declared recallTarget with PER-QUERY proven covers on the
-    // shared sweep — the code tiers compose forced certification on top
-    // (cover × certified = the floor's proof, as in the single dispatch).
-    // The FILTER combination rides the shared sweep too: one all-cluster
-    // pass set + passing-count map serves per-query passing-count covers
-    // (recall >= target over the FILTERED universe, 1.0 = exact per query)
-    val recallTarget: Option[Double] = (req \ "recallTarget") match {
-      case JDouble(d) => Some(d)
-      case JDecimal(d) => Some(d.toDouble)
-      case JInt(i) => Some(i.toDouble)
-      case _ => None
-    }
-    val table = str(req \ "table")
-    val st = store(table)
-    val filterStr = filterStringOf(req)
-    val conds: Seq[graft.filter.SimpleConjuncts.Cond] =
-      if (filterStr.isEmpty) Nil
-      else {
-        graft.filter.SimpleConjuncts.parse(filterStr, st.schema) match {
-          case Some(cs) if cs.nonEmpty => cs
-          case _ => return allNone
+    def verdict(tail: Option[DenseTail])
+        : Option[(Long => Boolean, () => Boolean, Long)] = {
+      // same completeness rule for the gap rows: a null-dense row above
+      // the pin has no sidecar judgment
+      if (tail.exists(_.nullVecRows > 0)) return None
+      // passing ids ABOVE the pin, from the tail's scalar sidecar
+      val tailPass = new java.util.HashSet[java.lang.Long]()
+      tail match {
+        case None => ()
+        case Some(dt) => filterTail(dt, conds, f.dimensions) match {
+          case Some(p) => p._1.foreach(id => tailPass.add(id))
+          case None => return None // sidecar raced a re-declaration
         }
       }
-    val queryField = (req \ "queryField") match {
-      case JString(s) => s
-      case _ =>
-        val vfs = st.schema.vectorFields
-        require(vfs.size == 1, "queryField required when table has multiple vector fields")
-        vfs.head.name
-    }
-    if (!FieldType.isVector(st.schema.field(queryField).fieldType) ||
-        FieldType.isSparse(st.schema.field(queryField).fieldType)) return allNone
-    val limit = (req \ "limit") match { case JInt(i) => i.toInt; case _ => 10 }
-    val nProbe = (req \ "nProbe") match { case JInt(i) => i.toInt; case _ => 8 }
-    if (!Files.exists(Paths.get(s"$root/$table/ivf_$queryField/ivf_meta.json")))
-      return allNone
-    val idx = index(st, queryField)
-    if (idx.indexedPurgeGen() < st.purgeGen()) return allNone
-    // facets need the declared scalar residency as their value source —
-    // nothing declared means per-query dispatch decides (cheap early out)
-    if (facets.nonEmpty && idx.serveFilterColumns().isEmpty) return allNone
-    var attempts = 0
-    while (attempts < 4) {
-      attempts += 1
-      val pin = idx.servingWatermark()
-      freshTailCluster(st, idx, queryField) match {
-        case Left(_) =>
-          if (idx.indexedWatermark() > pin) idx.rebaseServing()
-          else return allNone
-        case Right(tail) =>
-          val tombs = tombstoneSet(st) match {
-            case Some(t) => t
-            case None => return allNone
-          }
-          val k = math.min(limit, maxRenderRows)
-          val np = math.min(nProbe, idx.centroids().length)
-          val certified = (req \ "certified") match {
-            case JBool(b) => b; case _ => false
-          }
-          // a declared floor forces certification on the code tiers —
-          // cover × certified is the floor's proof (see serveQuery)
-          val certEff = certified || recallTarget.isDefined
-          // shared conjunction: tail pre-filtered once on the scalar
-          // sidecar, one passing-id set masks the whole batch; a declared
-          // floor gives each query ITS proven cover (passing-count cover
-          // when filtered), pinned inside `serve`
-          val ft = serveTail(tail, conds,
-            st.schema.field(queryField).dimensions).getOrElse(return allNone)
-          val got = idx.serve(queryField, dense, k,
-            serveTier(quantized, pq, certEff),
-            serveProbe(recallTarget, np, tombs.size.toLong), conds,
-            tombs.contains, ft)
-          if (idx.servingWatermark() == pin) {
-            return got.zipWithIndex.map { case (res, qi) =>
-              res.flatMap { served =>
-                // per-entry facets over ITS served top-k (≤ k rows, the
-                // single dispatch's serveFacetsJson, probing the clusters
-                // swept); an unavailable source degrades this entry to its
-                // per-query fallback
-                val facetJson: Option[String] =
-                  if (facets.isEmpty) Some("")
-                  else serveFacetsJson(st, idx, dense(qi), served, tail, facets)
-                facetJson.map(servedEnvelope(served, conds.nonEmpty, quantized,
-                  pq, certEff, _))
-              }
-            }
-          } // pin moved mid-serve: retry
+      // None = undeclared column / over budget
+      idx.passingIdSet(conds).map { case (pass, pinKey, pinWm) =>
+        ((id: Long) =>
+            if (id <= pinWm) pass.contains(id)
+            else tailPass.contains(id),
+          // post-sweep re-verify ALSO re-checks completeness at the same
+          // pin from one stamp: nulls appended during the borrower's sweep
+          // invalidate the verdict instead of silently aging the tailPass
+          // set
+          () => {
+            val (c, w) = idx.universeCompletePin()
+            c && w == pinWm && idx.pinStableFor(pinKey, pinWm)
+          },
+          pinWm)
       }
     }
-    allNone
+    // the tail was collected against the pin: a pass set pinned elsewhere
+    // would leave the gap rows unjudged — retry
+    pinCoherent(() => completePin(), () => idx.indexedWatermark(),
+        () => idx.rebaseServing(), () => freshTailCluster(st, idx, denseField))(
+      (_, tail) => verdict(tail))((wm0, v) => v._3 == wm0)
+      .map { case (passes, verify, _) => (passes, verify) }
   }
 
-  private def filterStringOf(req: JValue): String =
-    (req \ "filter") match { case JString(s) => s.trim; case _ => "" }
-  private def facetsPresent(req: JValue): Boolean =
-    (req \ "facets") match { case JArray(a) => a.nonEmpty; case _ => false }
+  /** The serve-tier fast path for [[batchQuery]], and for a single dense
+    * query as a batch of one: the one dense serve handshake
+    * ([[serveDense]]) over the whole batch. A FILTERED batch rides it
+    * when the filter is a resident-evaluable conjunction (shared, so one
+    * passing-id set masks the whole batch); any other filter declines
+    * every entry. A declared floor gives each query ITS proven cover
+    * (passing-count cover when filtered) on the shared sweep, the code
+    * tiers composing forced certification on top. FACETED batches ride it
+    * too: each entry's facets aggregate ITS served top-k (≤ k
+    * driver-resident rows, [[servedResponse]]). Per query, None = that
+    * entry goes to the job path (same outcome it would have had alone, an
+    * unavailable facet source included); all None = the shared handshake
+    * itself declined. */
+  private def serveBatch(q: QueryRequest, dense: Array[Array[Float]])
+      : Array[Option[String]] =
+    q.conds.flatMap(serveDense(q, dense, q.limit, q.tier, _)) match {
+      case None => Array.fill(dense.length)(None)
+      case Some(ds) => ds.served.zip(dense).map { case (res, qv) =>
+        res.flatMap(servedResponse(q, ds, qv, _))
+      }
+    }
 
   /** `"serve":true` — the reference's in-process low-latency search
     * (vec_search_executor.cpp:833-935): answered from the driver-resident
@@ -1301,137 +1300,33 @@ class GraftDb(val spark: SparkSession, val root: String,
     *    job path rather than pinning unbounded fresh data on the driver;
     *  - tombstoned rows are masked via a snapshot-version-keyed
     *    driver-side set.
-    * Returns None (-> job path) when there is no index, the index predates
-    * a purge, the fresh tail exceeds the cap, or the query is not a dense
-    * vector. */
-  private def serveQuery(req: JValue): Option[String] = {
-    // filtered/faceted requests decline to the job path, which applies
-    // them exactly (the reference's single search path always evaluates
-    // the filter, vec_search_executor.cpp:905-928 — a serve tier that
-    // ignored it would return the UNFILTERED top-k unmarked). Two
-    // exceptions: a simple attribute conjunction over serve-resident
-    // scalar columns is evaluated exactly inside the sweep, and FACETS
-    // over declared resident columns aggregate the served top-k from the
-    // same residency (serveFacetsJson — facets are post-limit by
-    // contract, so ≤ k driver-resident rows are the whole input);
-    // anything else declines.
-    val facets = parseFacets(req \ "facets")
-    val table = str(req \ "table")
-    val st = store(table)
-    val queryField = (req \ "queryField") match {
-      case JString(s) => s
-      case _ =>
-        val vfs = st.schema.vectorFields
-        require(vfs.size == 1, "queryField required when table has multiple vector fields")
-        vfs.head.name
-    }
-    val limit = (req \ "limit") match { case JInt(i) => i.toInt; case _ => 10 }
-    val nProbe = (req \ "nProbe") match { case JInt(i) => i.toInt; case _ => 8 }
-    // "quantized":true = OPT-IN serving off the 16-bit resident tier
-    // (~4x the rows per residency byte; empirically exact ranking, the
-    // L2 norm term is packed exact, but no proof). Adding
-    // "certified":true upgrades it to a PROVEN-exact id set:
-    // interval-certified against per-row quantization error bounds, with
-    // a boundary-ambiguous band float-reranked in one pruned job
-    // (surfaced as "reranked":n). Never a silent fallback: quantized
-    // answers are marked in the envelope and the default serve tier
-    // stays the all-float one.
-    val quantized = (req \ "quantized") match { case JBool(b) => b; case _ => false }
-    val certified = (req \ "certified") match { case JBool(b) => b; case _ => false }
-    // "pq":true = OPT-IN serving off the PQ resident tier (m-byte ADC
-    // codes; ~14x the rows per residency byte of the 16-bit tier at high
-    // dims, ~30x lighter cold loads — but a lossy ~32x compression, so
-    // rank flips on close pairs are expected). "certified":true combines:
-    // the id set is interval-proven exact off the persisted per-row
-    // reconstruction error, with the ambiguous band float-reranked.
-    // Pre-PQ layouts decline to the job path, never silently downgrade.
-    val pq = (req \ "pq") match { case JBool(b) => b; case _ => false }
-    val filterStr = filterStringOf(req)
-    // parsed BEFORE any tier dispatch: a declared recall floor must gate
-    // every serve branch (sparse included), never be read after one
-    // already answered
-    val recallTarget: Option[Double] = (req \ "recallTarget") match {
-      case JDouble(d) => Some(d)
-      case JDecimal(d) => Some(d.toDouble)
-      case JInt(i) => Some(i.toDouble)
-      case _ => None
-    }
-    (req \ "queryVector") match {
-      case o: JObject =>
-        // sparse postings carry no attribute columns, but a resident
-        // conjunction can still serve by borrowing a dense sibling
-        // index's pass verdict (densePassVerdict — the hybrid keyword
-        // side's mechanism): dot/cosine keep their retrieval-mode
-        // contract under the mask, and Euclidean stays EXACT-or-decline
-        // — its proof bounds unseen rows by DISTANCE (norm order), which
-        // holds for masked rows identically. FACETS borrow a donor the
-        // same way (values by id from its scalar residency + tail
-        // sidecar — sparseFacetsJson). A declared recall floor:
-        // EUCLIDEAN sparse serving is exact-or-decline (servePointEuclid's
-        // norm-order truncation proof), so a served answer trivially
-        // honors any floor; DOT/COSINE serve it with the ZERO-GAP proof
-        // (round 12): every row outside the candidate walk shares no
-        // query dim, so its dot is EXACTLY 0 (cosine distance exactly 1)
-        // — if the k-th served score clears that constant by an fp
-        // margin, the candidates provably contain the true top-k and the
-        // answer is exact (any floor holds); otherwise decline
-        // (serveSparse checks per answer).
-        def denseDonor(cols: Set[String]): Option[String] =
-          st.schema.vectorFields.find { df =>
-            !FieldType.isSparse(df.fieldType) &&
-              Files.exists(Paths.get(
-                s"$root/${st.schema.name}/ivf_${df.name}/ivf_meta.json")) &&
-              cols.subsetOf(index(st, df.name).serveFilterColumns().toSet)
-          }.map(_.name)
-        val facetDonor: Option[(Option[String], Seq[Facet])] =
-          if (facets.isEmpty) None
-          else {
-            // columns a facet touches: plain group names + the argument
-            // of each aggregate ("SUM(ID)" → ID; "*" and @distance are
-            // always available on the ≤ k facet input)
-            val fcols = facets.flatMap(f => f.group ++ f.aggregate.flatMap(
-              a => "\\(([^)]*)\\)".r.findFirstMatchIn(a).map(_.group(1).trim)))
-              .filterNot(c => c == "*" || c.startsWith("@")).toSet
-            denseDonor(fcols) match {
-              case Some(dn) => Some((Some(dn), facets))
-              case None =>
-                // sparse-ONLY: values from the sparse index's OWN scalar
-                // residency + tail sidecar (round 12); undeclared → job
-                if (fcols.subsetOf(
-                    sparseIndex(st, queryField).serveFilterColumns().toSet))
-                  Some((None, facets))
-                else return None
-            }
-          }
-        if (filterStr.isEmpty)
-          return serveSparse(st, queryField, o, limit,
-            facetDonor = facetDonor, recallTarget = recallTarget)
-        val cs = graft.filter.SimpleConjuncts.parse(filterStr, st.schema) match {
-          case Some(cs0) if cs0.nonEmpty => cs0
-          case _ => return None // outside the serve sub-grammar
-        }
-        // verdict source, in preference order: a dense sibling whose
-        // DECLARED residency covers the conjunction's columns (values
-        // already resident, zero extra jobs), else — the sparse-ONLY
-        // case — the sparse index's OWN declaration (one cached pruned
-        // pass-set job, then warm); neither ⇒ job path
-        return denseDonor(cs.map(_.col).toSet) match {
-          case Some(dn) => serveSparse(st, queryField, o, limit,
-            filtered = Some((Some(dn), cs)), facetDonor = facetDonor,
-            recallTarget = recallTarget)
-          case None =>
-            if (cs.map(_.col).toSet.subsetOf(
-                sparseIndex(st, queryField).serveFilterColumns().toSet))
-              serveSparse(st, queryField, o, limit,
-                filtered = Some((None, cs)), facetDonor = facetDonor,
-                recallTarget = recallTarget)
-            else None
-        }
+    * A dense query (a vector, or `query` text embedded by the field's
+    * embedding index) is a batch of one through [[serveBatch]]. Returns
+    * None (-> job path) when there is no index, the index predates a
+    * purge, the fresh tail exceeds the cap, or the query is not a dense
+    * vector.
+    *
+    * Filtered/faceted requests decline to the job path, which applies
+    * them exactly (the reference's single search path always evaluates
+    * the filter, vec_search_executor.cpp:905-928 — a serve tier that
+    * ignored it would return the UNFILTERED top-k unmarked). Two
+    * exceptions: a simple attribute conjunction over serve-resident
+    * scalar columns is evaluated exactly inside the sweep, and FACETS
+    * over declared resident columns aggregate the served top-k from the
+    * same residency (serveFacetsJson — facets are post-limit by contract,
+    * so ≤ k driver-resident rows are the whole input). */
+  private def serveQuery(q: QueryRequest): Option[String] = {
+    // read first: an unknown table or an ambiguous queryField throws
+    // before any tier dispatch
+    val st = q.st
+    val queryField = q.queryField
+    (q.json \ "queryVector") match {
+      case o: JObject => return serveSparseQuery(q, o)
       case _ => ()
     }
-    val dense: Array[Float] = (req \ "queryVector") match {
+    val dense: Array[Float] = (q.json \ "queryVector") match {
       case JArray(vals) => vals.map(num(_).toFloat).toArray
-      case _ => (req \ "query") match {
+      case _ => (q.json \ "query") match {
         case JString(text) =>
           val ix = st.schema.indices.find(_.tgt == queryField).getOrElse(
             return None)
@@ -1440,148 +1335,80 @@ class GraftDb(val spark: SparkSession, val root: String,
         case _ => return None
       }
     }
-    if (!Files.exists(Paths.get(s"$root/$table/ivf_$queryField/ivf_meta.json")))
-      return None
-    val idx = index(st, queryField)
-    if (idx.indexedPurgeGen() < st.purgeGen()) return None // stale vs compact
-    // facets need the declared scalar residency as their value source —
-    // nothing declared means the job path answers (cheap early decline
-    // instead of sweeping first and declining late)
-    if (facets.nonEmpty && idx.serveFilterColumns().isEmpty) return None
-    // filtered requests serve ONLY when the filter is a simple conjunction
-    // over declared resident scalar columns — evaluated exactly in the
-    // sweep (every tier composes the same passing-id mask into its
-    // sweep); anything else
-    // declines so the job path answers with the full grammar, exactly.
-    val conds: Seq[graft.filter.SimpleConjuncts.Cond] =
-      if (filterStr.isEmpty) Nil
-      else {
-        graft.filter.SimpleConjuncts.parse(filterStr, st.schema) match {
-          case Some(cs) if cs.nonEmpty => cs
-          case _ => return None // outside the serve sub-grammar → job path
-        }
-      }
-    // "recallTarget" + serve: the float tier's probe set becomes the
-    // geometric cover PROVING recall >= target (probeSetForRecall; 1.0 =
-    // exact) instead of the fixed nearest-nProbe cut; an over-wide cover
-    // simply declines on the residency budget and the job path answers.
-    // UNIFORM CONTRACT: a request carrying a declared floor is answered
-    // with the floor proven or declines — never an unmarked fixed-probe
-    // cut. On the code-resident tiers the proof is a COMPOSITION: the
-    // cover bounds the true top-k's clusters and the interval
-    // certification — FORCED on when a floor is declared, a floor
-    // demands a proof — returns the exact top-k of the cover's
-    // candidates, so the floor holds at code-tier bandwidth (the
-    // envelope says certified:true, truthfully).
-    val certEff = certified || recallTarget.isDefined
-    // recallTarget + FILTER: the unfiltered cover proves nothing (it
-    // bounds the UNFILTERED top-k; filtered matches may rank past it),
-    // but per-cluster PASSING counts restore the bound — every dense
-    // tier answers via its passing-count-cover form (dispatched below).
-    // the tail and the resident clusters must cover DISJOINT id ranges
-    // around one pin: re-check the pin after scoring (a rebuild landing
-    // mid-query re-pins residency while the collected tail still covers
-    // rows above the OLD pin — rows in between would be double-counted)
-    var attempts = 0
-    while (attempts < 4) {
-      attempts += 1
-      val pin = idx.servingWatermark()
-      freshTailCluster(st, idx, queryField) match {
-        case Left(_) =>
-          // over-cap tail: a rebase only helps when appends moved the
-          // index past the pin (re-pinning shrinks the tail); otherwise
-          // the INDEX is behind the store (rebuild overdue) -> job path
-          if (idx.indexedWatermark() > pin) idx.rebaseServing()
-          else return None
-        case Right(tail) =>
-          // pure cache hit: the tail probe above refreshed the tombstone
-          // cache for this version inside its own (single) job
-          val tombs = tombstoneSet(st) match {
-            case Some(t) => t
-            case None => return None // tombstone mask over cap -> job path
-          }
-          val k = math.min(limit, maxRenderRows)
-          val np = math.min(nProbe, idx.centroids().length)
-          // the conjunction applies to tail rows too: evaluated on the
-          // tail's scalar sidecar (one driver pass over the bounded tail),
-          // so filtered serving stays live under continuous ingest; a
-          // sidecar raced by a re-declaration declines to the job path.
-          // The sweep runs on the REQUESTED tier: the code tiers compose
-          // the same passing-id mask into their code sweeps, with
-          // certification proven over the masked (= filtered) candidates
-          val ft = serveTail(tail, conds,
-            st.schema.field(queryField).dimensions).getOrElse(return None)
-          val served = idx.serve(queryField, Array(dense), k,
-            serveTier(quantized, pq, certEff),
-            serveProbe(recallTarget, np, tombs.size.toLong), conds,
-            tombs.contains, ft).head match {
-            case Some(s) => s
-            // probed clusters exceed the resident budget (cardinality
-            // pre-check declined before any collect) -> job path
-            case None => return None
-          }
-          if (idx.servingWatermark() == pin) {
-            // facets aggregate the served top-k from the scalar residency
-            // (over the clusters swept) + tail sidecar — an unavailable
-            // source declines the WHOLE request (a response must never
-            // carry partial facets)
-            val facetJson: String =
-              if (facets.isEmpty) ""
-              else serveFacetsJson(st, idx, dense, served, tail, facets) match {
-                case Some(fj) => fj
-                case None => return None
-              }
-            return Some(servedEnvelope(served, conds.nonEmpty, quantized, pq,
-              certEff, facetJson))
-          } // pin moved mid-serve (rebuild/rebase landed): retry
-      }
-    }
-    None // pin churn (rebuilds racing every attempt): job path answers exactly
+    serveBatch(q, Array(dense)).head
   }
 
-  /** `"serve":true` for a SPARSE query: answered from the driver-resident
-    * per-dim posting cache. Cosine/DotProduct serve in RETRIEVAL mode
-    * (SparseIndex.servePointDot) — only rows sharing >= 1 dim with the
-    * query are candidates, ranked by dot product (the classic inverted-
-    * index serving contract); distances are the metric form of the dot
-    * (cosine: 1 - dot; dot-product: -dot). Euclidean serves EXACTLY
-    * (SparseIndex.servePointEuclid): overlap candidates score off posting-
-    * resident norms, non-overlap candidates fill from the resident
-    * min-norm list, and when exactness cannot be proven the query falls
-    * back to the job path. Fresh tail + tombstone masks mirror the dense
-    * serve path. */
-  /** Passing ids from a row-aligned scalar sidecar (fresh-tail rows),
-    * evaluated with the SAME comparison kernels the resident sweeps use.
-    * None = a condition references a column the sidecar lacks (a
-    * re-declaration raced the cache) → the caller declines. */
-  private def sidecarPassingIds(ids: Array[Long],
-      scalars: Map[String, Array[AnyRef]],
-      conds: Seq[graft.filter.SimpleConjuncts.Cond]): Option[Array[Long]] = {
-    import graft.filter.SimpleConjuncts._
-    val out = scala.collection.mutable.ArrayBuffer[Long]()
-    var j = 0
-    while (j < ids.length) {
-      var ok = true
-      var ci = 0
-      while (ok && ci < conds.length) {
-        val c = conds(ci)
-        val arr = scalars.getOrElse(c.col, null)
-        if (arr == null) return None
-        ok = (arr(j), c.value) match {
-          case (null, _) => false // SQL: NULL fails every comparison
-          case (x: java.lang.Double, l: NumLit) => evalDouble(c.op, x.doubleValue, l)
-          case (x: java.lang.Float, l: NumLit) => evalDouble(c.op, x.doubleValue, l)
-          case (x: java.lang.Number, l: NumLit) => evalLong(c.op, x.longValue, l)
-          case (x: String, l: StrLit) => evalString(c.op, x, l)
-          case (x: java.lang.Boolean, l: BoolLit) => evalBool(c.op, x.booleanValue, l)
-          case _ => return None // type drift: job path answers
+  /** [[serveQuery]] for a SPARSE query vector. Sparse postings carry no
+    * attribute columns, but a resident conjunction can still serve by
+    * borrowing a dense sibling index's pass verdict (densePassVerdict —
+    * the hybrid keyword side's mechanism): dot/cosine keep their
+    * retrieval-mode contract under the mask, and Euclidean stays
+    * EXACT-or-decline — its proof bounds unseen rows by DISTANCE (norm
+    * order), which holds for masked rows identically. FACETS borrow a
+    * donor the same way (values by id from its scalar residency + tail
+    * sidecar — sparseFacetsJson). A declared recall floor: EUCLIDEAN
+    * sparse serving is exact-or-decline (servePointEuclid's norm-order
+    * truncation proof), so a served answer trivially honors any floor;
+    * DOT/COSINE serve it with the ZERO-GAP proof (round 12): every row
+    * outside the candidate walk shares no query dim, so its dot is
+    * EXACTLY 0 (cosine distance exactly 1) — if the k-th served score
+    * clears that constant by an fp margin, the candidates provably
+    * contain the true top-k and the answer is exact (any floor holds);
+    * otherwise decline (serveSparse checks per answer). */
+  private def serveSparseQuery(q: QueryRequest, o: JObject): Option[String] = {
+    val st = q.st
+    val queryField = q.queryField
+    def denseDonor(cols: Set[String]): Option[String] =
+      st.schema.vectorFields.find { df =>
+        !FieldType.isSparse(df.fieldType) &&
+          Files.exists(Paths.get(
+            s"$root/${st.schema.name}/ivf_${df.name}/ivf_meta.json")) &&
+          cols.subsetOf(index(st, df.name).serveFilterColumns().toSet)
+      }.map(_.name)
+    val facetDonor: Option[(Option[String], Seq[Facet])] =
+      if (q.facets.isEmpty) None
+      else {
+        // columns a facet touches: plain group names + the argument
+        // of each aggregate ("SUM(ID)" → ID; "*" and @distance are
+        // always available on the ≤ k facet input)
+        val fcols = q.facets.flatMap(f => f.group ++ f.aggregate.flatMap(
+          a => "\\(([^)]*)\\)".r.findFirstMatchIn(a).map(_.group(1).trim)))
+          .filterNot(c => c == "*" || c.startsWith("@")).toSet
+        denseDonor(fcols) match {
+          case Some(dn) => Some((Some(dn), q.facets))
+          case None =>
+            // sparse-ONLY: values from the sparse index's OWN scalar
+            // residency + tail sidecar (round 12); undeclared → job
+            if (fcols.subsetOf(
+                sparseIndex(st, queryField).serveFilterColumns().toSet))
+              Some((None, q.facets))
+            else return None
         }
-        ci += 1
       }
-      if (ok) out += ids(j)
-      j += 1
+    q.conds match {
+      case None => None // outside the serve sub-grammar
+      case Some(Nil) =>
+        serveSparse(st, queryField, o, q.limit,
+          facetDonor = facetDonor, recallTarget = q.recallTarget)
+      case Some(cs) =>
+        // verdict source, in preference order: a dense sibling whose
+        // DECLARED residency covers the conjunction's columns (values
+        // already resident, zero extra jobs), else — the sparse-ONLY
+        // case — the sparse index's OWN declaration (one cached pruned
+        // pass-set job, then warm); neither ⇒ job path
+        denseDonor(cs.map(_.col).toSet) match {
+          case Some(dn) => serveSparse(st, queryField, o, q.limit,
+            filtered = Some((Some(dn), cs)), facetDonor = facetDonor,
+            recallTarget = q.recallTarget)
+          case None =>
+            if (cs.map(_.col).toSet.subsetOf(
+                sparseIndex(st, queryField).serveFilterColumns().toSet))
+              serveSparse(st, queryField, o, q.limit,
+                filtered = Some((None, cs)), facetDonor = facetDonor,
+                recallTarget = q.recallTarget)
+            else None
+        }
     }
-    Some(out.toArray)
   }
 
   /** The sparse index's scalar VALUES residency at a pin: ONE cached
@@ -1650,6 +1477,17 @@ class GraftDb(val spark: SparkSession, val root: String,
     }
   }
 
+  /** `"serve":true` for a SPARSE query: answered from the driver-resident
+    * per-dim posting cache. Cosine/DotProduct serve in RETRIEVAL mode
+    * (SparseIndex.servePointDot) — only rows sharing >= 1 dim with the
+    * query are candidates, ranked by dot product (the classic inverted-
+    * index serving contract); distances are the metric form of the dot
+    * (cosine: 1 - dot; dot-product: -dot). Euclidean serves EXACTLY
+    * (SparseIndex.servePointEuclid): overlap candidates score off posting-
+    * resident norms, non-overlap candidates fill from the resident
+    * min-norm list, and when exactness cannot be proven the query falls
+    * back to the job path. Fresh tail + tombstone masks mirror the dense
+    * serve path. */
   private def serveSparse(st: TableStore, queryField: String,
       o: JObject, limit: Int,
       filtered: Option[(Option[String], Seq[graft.filter.SimpleConjuncts.Cond])] = None,
@@ -1665,138 +1503,98 @@ class GraftDb(val spark: SparkSession, val root: String,
     val qIdx = (o \ "indices").asInstanceOf[JArray].arr.map(num(_).toInt).toArray
     val qVal = (o \ "values").asInstanceOf[JArray].arr.map(num(_).toFloat).toArray
     val k = math.min(limit, maxRenderRows)
-    // pin-coherence loop: tail and resident postings must share one pin
-    // (see serveQuery for the double-count hazard this closes)
-    var attempts = 0
-    while (attempts < 4) {
-      attempts += 1
-      val pin = idx.servingWatermark()
-      sparseFreshTail(st, idx, queryField) match {
-        case Left(_) =>
-          if (idx.indexedWatermark() > pin) idx.rebaseServing()
-          else return None // index behind the store: rebuild overdue
-        case Right(tailData) =>
-          val tail = tailData.byDim
-          val tailNorms = tailData.rowNorms
-          // pure cache hit: the tail probe above refreshed the tombstone
-          // cache for this version inside its own (single) job
-          val tombs = tombstoneSet(st) match {
-            case Some(t) => t
-            case None => return None // tombstone mask over cap -> job path
+    // one attempt under `pin`: the pin, the hits, the tail they merged
+    // and the donor's post-sweep re-verify
+    def attempt(pin: Long, tailData: SparseTail)
+        : Option[(Long, Array[(Long, Double)], SparseTail, () => Boolean)] = {
+      val tail = tailData.byDim
+      val tailNorms = tailData.rowNorms
+      // pure cache hit: the tail probe refreshed the tombstone cache for
+      // this version inside its own (single) job; None = mask over cap
+      val tombs = tombstoneSet(st).getOrElse(return None)
+      // filtered retrieval: a complete pass verdict composes into the
+      // candidate walk — from a dense donor's scalar residency when one
+      // exists (pin re-verified next to the sparse pin), or from the sparse
+      // index's OWN declared columns on sparse-only tables (id-keyed
+      // immutable content: nothing to re-verify)
+      val (passes, verifyDonor): (Long => Boolean, () => Boolean) =
+        filtered match {
+          case None => ((_: Long) => true, () => true)
+          case Some((Some(df), cs)) =>
+            densePassVerdict(st, df, cs).getOrElse(return None)
+          case Some((None, cs)) =>
+            (sparseSelfVerdict(st, idx, pin, cs, tailData).getOrElse(return None),
+              () => true)
+        }
+      val ex: Long => Boolean = id => tombs.contains(id) || !passes(id)
+      val hits: Array[(Long, Double)] =
+        if (f.metric == MetricType.Euclidean)
+          // None = exactness unprovable -> job path
+          idx.servePointEuclid(qIdx, qVal, k, exclude = ex,
+            tail = tail, tailNorms = tailNorms).getOrElse(return None)
+        else idx.servePointDot(qIdx, qVal, k, exclude = ex,
+          tail = tail) match {
+            case Some(h) => h.map { case (id, dot) =>
+              (id, if (f.metric == MetricType.Cosine) 1.0 - dot else -dot)
+            }
+            // probe set over the resident budget (cardinality
+            // pre-check declined before any collect) -> job path
+            case None => return None
           }
-          // filtered retrieval: a complete pass verdict composes into the
-          // candidate walk — from a dense donor's scalar residency when
-          // one exists (pin re-verified next to the sparse pin below), or
-          // from the sparse index's OWN declared columns on sparse-only
-          // tables (id-keyed immutable content: nothing to re-verify)
-          val (passes, verifyDonor): (Long => Boolean, () => Boolean) =
-            filtered match {
-              case None => ((_: Long) => true, () => true)
-              case Some((Some(df), cs)) => densePassVerdict(st, df, cs) match {
-                case Some(v) => v
-                case None => return None
-              }
-              case Some((None, cs)) =>
-                sparseSelfVerdict(st, idx, pin, cs, tailData) match {
-                  case Some(p) => (p, () => true)
-                  case None => return None
-                }
-            }
-          val ex: Long => Boolean = id => tombs.contains(id) || !passes(id)
-          val hits: Array[(Long, Double)] =
-            if (f.metric == MetricType.Euclidean)
-              idx.servePointEuclid(qIdx, qVal, k, exclude = ex,
-                tail = tail, tailNorms = tailNorms) match {
-                case Some(h) => h
-                case None => return None // exactness unprovable -> job path
-              }
-            else idx.servePointDot(qIdx, qVal, k, exclude = ex,
-              tail = tail) match {
-                case Some(h) => h.map { case (id, dot) =>
-                  (id, if (f.metric == MetricType.Cosine) 1.0 - dot else -dot)
-                }
-                // probe set over the resident budget (cardinality
-                // pre-check declined before any collect) -> job path
-                case None => return None
-              }
-          // declared floor on DOT/COSINE: the ZERO-GAP proof. Every row
-          // the candidate walk never saw shares no query dim, so its raw
-          // dot is EXACTLY 0 — distance exactly 0.0 (dot) / 1.0 (cosine).
-          // If k hits came back and the k-th strictly clears that
-          // constant by an fp margin (the two engines may not sum the
-          // overlap products in the same order), no unseen row can enter
-          // the true top-k: the served answer IS exact and any floor
-          // holds. Fewer than k overlap candidates, or a k-th at/past
-          // the constant, proves nothing → decline to the exact job cut.
-          // (Euclidean's own serve path is already exact-or-decline.)
-          if (recallTarget.isDefined && f.metric != MetricType.Euclidean) {
-            val unseen = if (f.metric == MetricType.Cosine) 1.0 else 0.0
-            // fp margin scaled to the k-th hit's own magnitude: an
-            // absolute 1e-9 floor is blind to value scale — a raw dot
-            // accumulated from large sparse values carries absolute
-            // rounding error far above 1e-9, which would let a
-            // non-positive-dot candidate outrank an unseen exact-zero
-            // row (round-12 ADVICE). Cosine dots are normalized (|d|
-            // ≤ ~2) so the relative term is tiny there; raw dot
-            // distances grow with the data and the margin grows with
-            // them. Strictly larger margin than before → can only turn
-            // a serve into a decline, never the reverse.
-            // hits can legitimately be EMPTY (every candidate excluded
-            // by tombstones/filter, or no query dim has postings) —
-            // guard before touching hits.last or the margin computation
-            // itself throws and escapes query() instead of declining.
-            if (hits.isEmpty || hits.length < k) return None
-            val margin = 1e-9 * (1.0 + math.abs(hits.last._2))
-            if (hits.last._2 >= unseen - margin)
-              return None // k = 0 requests included: nothing provable
-          }
-          if (idx.servingWatermark() == pin && verifyDonor()) {
-            // facets aggregate the served top-k; values come from a dense
-            // donor's scalar residency + tail sidecar when one declares
-            // the columns, else from the sparse index's OWN values
-            // residency (id-keyed either way — a miss declines, never
-            // miscounts), same executor as the dense path
-            val facetJson: String = facetDonor match {
-              case None => ""
-              case Some((Some(dn), fs)) => sparseFacetsJson(st, dn, hits, fs) match {
-                case Some(fj) => fj
-                case None => return None
-              }
-              case Some((None, fs)) =>
-                sparseSelfFacetsJson(st, idx, pin, hits, tailData, fs) match {
-                  case Some(fj) => fj
-                  case None => return None
-                }
-            }
-            val sb = new java.lang.StringBuilder("{\"result\":[")
-            var i = 0
-            while (i < hits.length) {
-              if (i > 0) sb.append(',')
-              sb.append("{\"__row_id\":").append(hits(i)._1)
-                .append(",\"@distance\":").append(hits(i)._2).append('}')
-              i += 1
-            }
-            sb.append("],\"served\":true")
-            if (filtered.isDefined) sb.append(",\"filtered\":true")
-            sb.append(facetJson)
-            sb.append('}')
-            return Some(sb.toString)
-          } // sparse pin or donor pin moved mid-serve: retry
+      // declared floor on DOT/COSINE: the ZERO-GAP proof. Every row the
+      // candidate walk never saw shares no query dim, so its raw dot is
+      // EXACTLY 0 — distance exactly 0.0 (dot) / 1.0 (cosine). If k hits
+      // came back and the k-th strictly clears that constant by an fp
+      // margin (the two engines may not sum the overlap products in the
+      // same order), no unseen row can enter the true top-k: the served
+      // answer IS exact and any floor holds. Fewer than k overlap
+      // candidates, or a k-th at/past the constant, proves nothing →
+      // decline to the exact job cut. (Euclidean's own serve path is
+      // already exact-or-decline.)
+      if (recallTarget.isDefined && f.metric != MetricType.Euclidean) {
+        val unseen = if (f.metric == MetricType.Cosine) 1.0 else 0.0
+        // fp margin scaled to the k-th hit's own magnitude: an absolute
+        // 1e-9 floor is blind to value scale — a raw dot accumulated from
+        // large sparse values carries absolute rounding error far above
+        // 1e-9, which would let a non-positive-dot candidate outrank an
+        // unseen exact-zero row (round-12 ADVICE). Cosine dots are
+        // normalized (|d| ≤ ~2) so the relative term is tiny there; raw
+        // dot distances grow with the data and the margin grows with
+        // them. Strictly larger margin than before → can only turn a
+        // serve into a decline, never the reverse.
+        // hits can legitimately be EMPTY (every candidate excluded by
+        // tombstones/filter, or no query dim has postings) — guard before
+        // touching hits.last or the margin computation itself throws and
+        // escapes query() instead of declining.
+        if (hits.isEmpty || hits.length < k) return None
+        val margin = 1e-9 * (1.0 + math.abs(hits.last._2))
+        if (hits.last._2 >= unseen - margin)
+          return None // k = 0 requests included: nothing provable
       }
+      Some((pin, hits, tailData, verifyDonor))
     }
-    None // pin churn: job path answers exactly
+    // tail and resident postings share one pin; a sparse or donor pin
+    // that moved mid-serve retries
+    val (pin, hits, tailData, _) = pinCoherent(
+        () => Some(idx.servingWatermark()), () => idx.indexedWatermark(),
+        () => idx.rebaseServing(), () => sparseFreshTail(st, idx, queryField))(
+      attempt)((pin, a) => idx.servingWatermark() == pin && a._4())
+      .getOrElse(return None)
+    // facets aggregate the served top-k; values come from a dense donor's
+    // scalar residency + tail sidecar when one declares the columns, else
+    // from the sparse index's OWN values residency (id-keyed either way —
+    // a miss declines, never miscounts), same executor as the dense path
+    val facetJson: String = facetDonor match {
+      case None => ""
+      case Some((Some(dn), fs)) =>
+        sparseFacetsJson(st, dn, hits, fs).getOrElse(return None)
+      case Some((None, fs)) =>
+        sparseSelfFacetsJson(st, idx, pin, hits, tailData, fs)
+          .getOrElse(return None)
+    }
+    Some(servedJson(hits, filtered.isDefined, facetJson))
   }
 
-  /** Facet source for SPARSE serves: the sparse postings carry no
-    * attribute columns, so values for the served top-k come from a dense
-    * sibling's declared scalar residency over ALL clusters (every indexed
-    * row lives in exactly one) plus its fresh-tail scalar sidecar for
-    * rows above the donor's pin. Scalar values are row content, keyed by
-    * id — generation-INDEPENDENT, so no donor-pin coherence is needed
-    * here: a racing rebuild can only make a lookup miss (→ decline),
-    * never return another row's value. The zeros query is a placeholder:
-    * with an explicit all-clusters probe set it feeds only the dim
-    * guard. */
   /** Facet source for SPARSE-ONLY serves (no dense donor declares the
     * facet's columns): values by id from the sparse index's own scalar
     * VALUES residency (rows ≤ pin) plus the sparse tail's scalar sidecar
@@ -1825,6 +1623,16 @@ class GraftDb(val spark: SparkSession, val root: String,
     }, facets)
   }
 
+  /** Facet source for SPARSE serves: the sparse postings carry no
+    * attribute columns, so values for the served top-k come from a dense
+    * sibling's declared scalar residency over ALL clusters (every indexed
+    * row lives in exactly one) plus its fresh-tail scalar sidecar for
+    * rows above the donor's pin. Scalar values are row content, keyed by
+    * id — generation-INDEPENDENT, so no donor-pin coherence is needed
+    * here: a racing rebuild can only make a lookup miss (→ decline),
+    * never return another row's value. The zeros query is a placeholder:
+    * with an explicit all-clusters probe set it feeds only the dim
+    * guard. */
   private def sparseFacetsJson(st: TableStore, donorField: String,
       hits: Array[(Long, Double)], facets: Seq[Facet]): Option[String] = {
     val didx = index(st, donorField)
@@ -1845,29 +1653,27 @@ class GraftDb(val spark: SparkSession, val root: String,
     * collected to the driver until the caller acts on it). Facets are
     * ignored on this surface — computing them would cache the cut with no
     * render step to release it. */
-  def queryDataFrame(requestJson: String): DataFrame =
-    queryPlan(requestJson, skipFacets = true)._1
+  def queryDataFrame(requestJson: String): DataFrame = {
+    val q = new QueryRequest(JsonMethods.parse(requestJson))
+    queryPlan(q, q.json \ "queryVector", skipFacets = true)._1
+  }
 
-  private def queryPlan(requestJson: String, skipFacets: Boolean = false)
+  /** The job path's plan for `q` with query vector `vector` (a batch
+    * entry's, or the request's own `queryVector`). */
+  private def queryPlan(q: QueryRequest, vector: JValue,
+      skipFacets: Boolean = false)
       : (DataFrame, Seq[DataFrame], Seq[Facet], Boolean, () => Unit) = {
-    val req = JsonMethods.parse(requestJson)
-    val table = str(req \ "table")
-    val st = store(table)
-    val queryField = (req \ "queryField") match {
-      case JString(s) => s
-      case _ =>
-        val vfs = st.schema.vectorFields
-        require(vfs.size == 1, "queryField required when table has multiple vector fields")
-        vfs.head.name
-    }
-    val limit = (req \ "limit") match { case JInt(i) => i.toInt; case _ => 10 }
-    val filter = (req \ "filter") match { case JString(s) => s; case _ => "" }
+    val req = q.json
+    val st = q.st
+    val queryField = q.queryField
+    val limit = q.limit
+    val filter = q.filter
     val withDistance = (req \ "withDistance") match { case JBool(b) => b; case _ => false }
     val response = (req \ "response") match {
       case JArray(a) => a.collect { case JString(s) => s }
       case _ => Nil
     }
-    val qv: QueryVector = (req \ "queryVector") match {
+    val qv: QueryVector = vector match {
       case JArray(vals) => DenseQuery(vals.map(num(_).toFloat).toArray)
       case o: JObject =>
         SparseQuery(
@@ -1886,19 +1692,13 @@ class GraftDb(val spark: SparkSession, val root: String,
       }
     }
     val useAnn = (req \ "ann") match { case JBool(b) => b; case _ => false }
-    // "recallTarget": recall-targeted auto-probe (probeSetForRecall) —
-    // 1.0 = proven exact, t < 1 = proven recall@k >= t; only meaningful
-    // with "ann":true on a dense field
-    val recallTarget = (req \ "recallTarget") match {
-      case JDouble(d) => Some(d)
-      case JDecimal(d) => Some(d.toDouble)
-      case JInt(i) => Some(i.toDouble)
-      case _ => None
-    }
     val unbounded = (req \ "unbounded") match { case JBool(b) => b; case _ => false }
-    val facets = if (skipFacets) Nil else parseFacets(req \ "facets")
+    val facets = if (skipFacets) Nil else q.facets
     if (useAnn) {
-      val cut0 = queryAnnCut(st, queryField, qv, limit, filter, recallTarget)
+      // "recallTarget": recall-targeted auto-probe (probeSetForRecall) —
+      // 1.0 = proven exact, t < 1 = proven recall@k >= t; only meaningful
+      // with "ann":true on a dense field
+      val cut0 = queryAnnCut(st, queryField, qv, limit, filter, q.recallTarget)
       // facets aggregate the post-limit result, same as the exact path;
       // cache so each facet doesn't redo the pruned scan (small: <= limit
       // rows) — released by the cleanup thunk after rendering

@@ -80,6 +80,8 @@ class IvfIndex(
   @transient private var clusteredCache: DataFrame = null
   @transient private var clusterStatsCache: Option[Map[Int, Long]] = null
   @transient private var clusterRadiiCache: Option[Map[Int, Double]] = null
+  // per centroid key (gen, purge): whether some cluster held no rows
+  @transient private var emptyClustersAt: ((Long, Long), Boolean) = null
   @transient private var pqCbKey: (Long, Long) = null
   @transient private var pqCbCache: Option[PqCodebook] = null
   @transient private var pqResCache: java.lang.Boolean = null
@@ -434,16 +436,41 @@ class IvfIndex(
       preFilter: Option[Column] = None,
       excludeIds: Option[DataFrame] = None,
       restrictIds: Option[DataFrame] = None): DataFrame = {
-    val cents = centroids()
     val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    val probed = cents
-      .map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
+    searchProbed(vecCol, q, k, nearestClusters(heldCentroids(), q, nProbe),
+      freshTail, preFilter, excludeIds, restrictIds)
+  }
+
+  /** The centroids whose clusters hold rows. A degenerate build (many
+    * identical rows) leaves duplicate centroids whose clusters stay empty;
+    * a probe spent on one finds nothing while the rows sit in its twin.
+    * Counts come from `clusterStats()` (the serving cardinality guard's
+    * source); without them (a layout that predates the stats file) every
+    * centroid stays. Within one centroid key clusters only gain rows
+    * (appends add, deletes tombstone, a build, split or purge starts a new
+    * key), so when every cluster held rows at the key's first read, the
+    * counts are not read again — a warm serve after an append stays
+    * job-free. */
+  private def heldCentroids(): Array[(Int, Array[Float])] = {
+    val (cents, key, known) = synchronized {
+      val cs = centroids()
+      (cs, centroidKey, emptyClustersAt)
+    }
+    if (known != null && known._1 == key && !known._2) return cents
+    val held = clusterStats().map(n =>
+      cents.filter(c => n.getOrElse(c._1, 0L) > 0L))
+    if (known == null || known._1 != key)
+      synchronized { emptyClustersAt = (key, held.exists(_.length < cents.length)) }
+    held.getOrElse(cents)
+  }
+
+  /** The `nProbe` centroids of `cents` nearest the (normalized) query. */
+  private def nearestClusters(cents: Array[(Int, Array[Float])],
+      q: Array[Float], nProbe: Int): Array[Int] =
+    cents.map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
       .sortBy { case (_, d) => d }
       .take(nProbe)
       .map(_._1)
-    searchProbed(vecCol, q, k, probed, freshTail, preFilter, excludeIds,
-      restrictIds)
-  }
 
   /** Recall-targeted ANN top-K: the probe set is picked geometrically by
     * [[probeSetForRecall]] instead of a fixed nProbe — target 1.0 is
@@ -1490,7 +1517,12 @@ class IvfIndex(
         () => resolveProbes(qs, nProbe, sets).flatten.distinct)(
         (ex, _) => sweepOver(nProbe, sets, ex))
     probe match {
-      case ServeProbe.Nearest(nProbe) => fixed(nProbe, None)
+      case ServeProbe.Nearest(nProbe) =>
+        // resolveProbes ranks only clusters holding rows, under the
+        // instance lock: read any counts that takes (a Spark job when
+        // cold) outside it
+        heldCentroids()
+        fixed(nProbe, None)
       case ServeProbe.Sets(sets) => fixed(0, Some(sets))
       case ServeProbe.Recall(target, slack) =>
         // covers are DERIVED STATE: computed and swept under one pin (a
@@ -1687,21 +1719,20 @@ class IvfIndex(
     }.toMap
   }
 
-  /** The clusters each query sweeps: the `nProbe` nearest centroids, or
-    * the explicit `sets` (a recall cover) with ids a racing rebuild
-    * retired dropped (the caller's pin re-check catches the race). Runs
-    * under the instance lock inside an acquisition (probeUnion contract). */
+  /** The clusters each query sweeps: the `nProbe` nearest centroids of
+    * clusters that hold rows (`heldCentroids`), or the explicit `sets` (a
+    * recall cover) with ids a racing rebuild retired dropped (the
+    * caller's pin re-check catches the race). Runs under the instance
+    * lock inside an acquisition (probeUnion contract). */
   private def resolveProbes(qs: Array[Array[Float]], nProbe: Int,
       sets: Option[Array[Array[Int]]]): Array[Array[Int]] = {
-    val cents = centroids()
     sets match {
       case Some(ps) =>
-        val live = cents.map(_._1).toSet
+        val live = centroids().map(_._1).toSet
         ps.map(_.filter(live))
-      case None => qs.map { q =>
-        cents.map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-          .sortBy { case (_, d) => d }.take(nProbe).map(_._1)
-      }
+      case None =>
+        val held = heldCentroids()
+        qs.map(nearestClusters(held, _, nProbe))
     }
   }
 

@@ -20,10 +20,14 @@ class Round9Spec extends SparkSpec {
   /** Two blobs, one heavy (all rows but `light`) and one light — k-means
     * with 2 clusters separates them, leaving a degenerate hot cluster
     * (same fixture as Round8Spec). */
-  private def skewedVectors(n: Int, light: Int, idName: String = "id"): DataFrame = {
+  private def skewedVectors(n: Int, light: Int, idName: String = "id",
+      distinct: Boolean = false): DataFrame = {
     val rows = (0 until n).map { i =>
       val base = if (i < light) 10f else 0f
-      Row(i.toLong, Seq(base + (i % 13) * 0.01f, base, base, base))
+      // distinct: every row its own point (13 groups 0.01 apart, each
+      // spread over ~0.0015), so a split can cut a group to any size
+      val x = base + (i % 13) * 0.01f + (if (distinct) (i / 13) * 1e-5f else 0f)
+      Row(i.toLong, Seq(x, base, base, base))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
       StructType(Seq(
@@ -75,7 +79,9 @@ class Round9Spec extends SparkSpec {
         |{"name":"Vec","dataType":"VECTOR_FLOAT","dimensions":4,
         | "metricType":"EUCLIDEAN"}]}""".stripMargin)
     val st = db.store("Skew")
-    st.insert(skewedVectors(2000, light = 200, idName = "ID")
+    // distinct rows: a group of identical rows larger than the budget
+    // could never be split to fit it
+    st.insert(skewedVectors(2000, light = 200, idName = "ID", distinct = true)
       .withColumnRenamed("vec", "Vec"))
     assert(db.rebuildIndex("Skew", "Vec"))
     val idx = db.denseIndexFor("Skew", "Vec")
@@ -98,6 +104,7 @@ class Round9Spec extends SparkSpec {
     // probe set exactly (the healed layout's nearest cluster fits)
     val served = idx.serveOne("Vec", q, 10, ServeProbe.Nearest(1)).map(_.hits)
     assert(served.isDefined, "healed layout must serve without declining")
+    assert(served.get.nonEmpty, "the probe must land on rows, not an empty cluster")
     val viaJob = idx.search("Vec", q, 10, nProbe = 1)
       .select(col(graft.store.TableStore.RowId)).collect().map(_.getLong(0)).toSeq
     assert(served.get.map(_._1).toSeq == viaJob)

@@ -118,7 +118,7 @@ class ServeBatchSpec extends SparkSpec {
 
   // ---- the JSON API batch endpoint ----
 
-  private def apiDb(dir: String): graft.api.GraftDb = {
+  private def apiDb(dir: String, n: Int = 600): graft.api.GraftDb = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val db = new graft.api.GraftDb(spark, tmpDir(dir))
@@ -127,7 +127,7 @@ class ServeBatchSpec extends SparkSpec {
         |{"name":"ID","dataType":"BIGINT","primaryKey":true},
         |{"name":"V","dataType":"VECTOR_FLOAT","dimensions":4,
         | "metricType":"EUCLIDEAN"}]}""".stripMargin)
-    val rows = (1 to 600).map { i =>
+    val rows = (1 to n).map { i =>
       Row(i.toLong, Seq((i % 83) / 83.0f, (i % 47) / 47.0f,
         (i % 29) / 29.0f, (i % 13) / 13.0f))
     }
@@ -237,5 +237,19 @@ class ServeBatchSpec extends SparkSpec {
       s"""{"table":"T","queryVectors":[${vecs.mkString(",")}],"limit":3}""")
     val js = vecs.map(v => db.query(s"""{"table":"T","queryVector":$v,"limit":3}"""))
     assert(jb == s"""{"results":[${js.mkString(",")}]}""")
+    // entries the serve tier declines (every cluster over a 30-row budget)
+    // go straight to the job path: one decline each, job-path answers
+    val big = apiDb("sb_api_declined", n = 2000)
+    val idx = big.denseIndexFor("T", "V")
+    idx.maxServeRows = 30
+    val two = vecs.take(2)
+    val before = idx.serveDeclineCount()
+    val declined = big.query(
+      s"""{"table":"T","queryVectors":[${two.mkString(",")}],"limit":5,
+         |"serve":true,"nProbe":1}""".stripMargin)
+    assert(idx.serveDeclineCount() - before == 2, declined)
+    val jobs = two.map(v => big.query(
+      s"""{"table":"T","queryVector":$v,"limit":5,"nProbe":1}"""))
+    assert(declined == s"""{"results":[${jobs.mkString(",")}]}""")
   }
 }

@@ -95,4 +95,40 @@ class ServeMatrixSpec extends SparkSpec {
       }
     }
   }
+
+  test("a nearest-cluster probe never lands on an empty cluster: degenerate data serves its exact top-k") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // 1,800 identical rows leave duplicate centroids at the origin, all
+    // but one of them holding no rows
+    val db = new graft.api.GraftDb(spark, tmpDir("serve_empty_cluster"))
+    db.createTable(
+      """{"name":"T","fields":[
+        |{"name":"ID","dataType":"BIGINT","primaryKey":true},
+        |{"name":"V","dataType":"VECTOR_FLOAT","dimensions":4,
+        | "metricType":"EUCLIDEAN"}]}""".stripMargin)
+    val data = (0 until 2000).map { i =>
+      Row(i.toLong, if (i < 1800) Seq(0f, 0f, 0f, 0f) else Seq(10f, 10f, 10f, 10f))
+    }
+    db.store("T").insert(spark.createDataFrame(
+      spark.sparkContext.parallelize(data, 4), StructType(Seq(
+        StructField("ID", LongType, nullable = false),
+        StructField("V", ArrayType(FloatType, containsNull = false), nullable = false)))))
+    assert(db.rebuildIndex("T", "V"))
+    // the exact top-10 by (distance, row id): the 10 lowest row ids at 0
+    val top = db.store("T").read()
+      .filter(org.apache.spark.sql.functions.col("ID") < 1800)
+      .select(graft.store.TableStore.RowId, "ID").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).take(10)
+    val served = db.query(
+      """{"table":"T","queryVector":[0,0,0,0],"limit":10,"serve":true,"nProbe":1}""")
+    assert(served == top.map { case (rid, _) => s"""{"__row_id":$rid,"@distance":0.0}""" }
+      .mkString("""{"result":[""", ",", """],"served":true}"""))
+    // the "ann":true job path ranks its probes by the same rule
+    val ann = db.query(
+      """{"table":"T","queryVector":[0,0,0,0],"limit":10,"ann":true,
+        |"response":["ID"]}""".stripMargin)
+    assert(ann == top.map { case (_, id) => s"""{"ID":$id}""" }
+      .mkString("""{"result":[""", ",", "]}"))
+  }
 }
