@@ -163,7 +163,7 @@ object AnnBench {
     val buildSec = (System.nanoTime() - tb) / 1e9
 
     def annTopK(q: Array[Float], k: Int): Seq[Long] =
-      idx.search("embedding", q, k, nProbe = 8)
+      idx.search("embedding", q, k, ServeProbe.Nearest(8))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
     annTopK(queries.head, 10)
 
@@ -179,10 +179,10 @@ object AnnBench {
     // pass — the union of probed dirs is scanned once, each row scored
     // only against queries that probed its cluster
     idx.searchBatch("embedding", batchQs.take(2).map(q => (q.qid, q.vector)).toSeq,
-      10, nProbe = 8).collect() // warm
+      10, ServeProbe.Nearest(8)).collect() // warm
     val tba = System.nanoTime()
     val batchAnnGot = idx.searchBatch("embedding",
-        batchQs.map(q => (q.qid, q.vector)).toSeq, 10, nProbe = 8)
+        batchQs.map(q => (q.qid, q.vector)).toSeq, 10, ServeProbe.Nearest(8))
       .orderBy(col("qid"), col("rank")).select("qid", "id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSeq).toMap
     val batchAnnSec = (System.nanoTime() - tba) / 1e9
@@ -197,9 +197,11 @@ object AnnBench {
     val autoRows = Seq(1.0, 0.9, 0.5).map { t =>
       val probesAvg = queries.map(q =>
         idx.probeSetForRecall(q, 10, t).length).sum.toDouble / queries.length
-      idx.searchAuto("embedding", queries.head, 10, t).collect() // warm
+      idx.search("embedding", queries.head, 10, ServeProbe.Recall(t, 0L))
+        .collect() // warm
       val ta = System.nanoTime()
-      val got = queries.map(q => idx.searchAuto("embedding", q, 10, t)
+      val got = queries.map(q => idx.search("embedding", q, 10,
+          ServeProbe.Recall(t, 0L))
         .select("vec_id").collect().map(_.getLong(0)).toSeq)
       val sec = (System.nanoTime() - ta) / 1e9
       val rec = exact.zip(got).map { case (e, a) =>
@@ -217,7 +219,8 @@ object AnnBench {
     // for the probed clusters and loses its pruning edge to the page
     // cache at in-memory sizes).
     def quantTopK(q: Array[Float], k: Int): Seq[Long] =
-      idx.searchQuantized("embedding", q, k, nProbe = 8)
+      idx.search("embedding", q, k, ServeProbe.Nearest(8),
+          ServeTier.Quantized(certify = false))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
     quantTopK(queries.head, 10)
     val tq = System.nanoTime()
@@ -232,7 +235,8 @@ object AnnBench {
     // then reranks candK rows on the floats. The scan-byte floor for the
     // job path at 100 TB.
     def pqTopK(q: Array[Float], k: Int): Seq[Long] =
-      idx.searchPq("embedding", q, k, nProbe = 8)
+      idx.search("embedding", q, k, ServeProbe.Nearest(8),
+          ServeTier.Pq(certify = false))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
     pqTopK(queries.head, 10)
     val tp = System.nanoTime()

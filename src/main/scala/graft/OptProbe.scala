@@ -245,7 +245,8 @@ object OptProbe {
         time("search fullprobe") {
           noop(idx.search("embedding",
             SparkEntry.queryVectorOf(spark, sfDir), k = 10,
-            nProbe = idx.centroids().length).select(col("vec_id")))
+            graft.index.ServeProbe.Nearest(idx.centroids().length))
+            .select(col("vec_id")))
         }
         time("build again (overwrite)") {
           graft.index.IvfIndex.build(spark, emb, "embedding", "vec_id",

@@ -378,7 +378,8 @@ object Queries {
       val idx = graft.index.IvfIndex.build(s, emb, "embedding", "vec_id", path,
         graft.types.MetricType.Euclidean, nClusters = 8, maxIter = 3)
       idx.search("embedding", SparkEntry.queryVectorOf(s, dir), k = 10,
-          nProbe = idx.centroids().length) // full probe even if skew-split added clusters
+          // full probe even if skew-split added clusters
+          graft.index.ServeProbe.Nearest(idx.centroids().length))
         .select(col("vec_id"))
     }),
 
@@ -391,8 +392,8 @@ object Queries {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfauto_${math.abs(dir.hashCode)}"
       val idx = graft.index.IvfIndex.build(s, emb, "embedding", "vec_id", path,
         graft.types.MetricType.Euclidean, nClusters = 8, maxIter = 3)
-      idx.searchAuto("embedding", SparkEntry.queryVectorOf(s, dir), k = 10,
-          recallTarget = 1.0)
+      idx.search("embedding", SparkEntry.queryVectorOf(s, dir), k = 10,
+          graft.index.ServeProbe.Recall(1.0, 0L))
         .select(col("vec_id"))
     }),
 
@@ -414,7 +415,8 @@ object Queries {
       val idx = graft.index.IvfIndex.build(s, emb, "embedding", "vec_id", path,
         graft.types.MetricType.Euclidean, nClusters = 8, maxIter = 3)
       def recallAt(nProbe: Int): Double = {
-        val ivfIds = idx.search("embedding", q, 10, nProbe)
+        val ivfIds = idx.search("embedding", q, 10,
+            graft.index.ServeProbe.Nearest(nProbe))
           .select(col("vec_id")).collect().map(_.getLong(0)).toSet
         ivfIds.intersect(exactIds).size / 10.0
       }
@@ -486,8 +488,9 @@ object Queries {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfq_${math.abs(dir.hashCode)}"
       val idx = graft.index.IvfIndex.build(s, emb, "embedding", "vec_id", path,
         graft.types.MetricType.Euclidean, nClusters = 8, maxIter = 3)
-      idx.searchQuantized("embedding", SparkEntry.queryVectorOf(s, dir), k = 10,
-        nProbe = idx.centroids().length)
+      idx.search("embedding", SparkEntry.queryVectorOf(s, dir), k = 10,
+          graft.index.ServeProbe.Nearest(idx.centroids().length),
+          graft.index.ServeTier.Quantized(certify = false))
         .select(col("vec_id"))
     }),
     // Persisted PQ tier: ADC candidate scan over the m-byte product-
@@ -501,8 +504,9 @@ object Queries {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_${math.abs(dir.hashCode)}"
       val idx = graft.index.IvfIndex.build(s, emb, "embedding", "vec_id", path,
         graft.types.MetricType.Euclidean, nClusters = 8, maxIter = 3)
-      idx.searchPq("embedding", SparkEntry.queryVectorOf(s, dir), k = 10,
-        nProbe = idx.centroids().length)
+      idx.search("embedding", SparkEntry.queryVectorOf(s, dir), k = 10,
+          graft.index.ServeProbe.Nearest(idx.centroids().length),
+          graft.index.ServeTier.Pq(certify = false))
         .select(col("vec_id"))
     }),
     // DRIVER-SIDE SERVING, oracle-gated: certification is what makes the
@@ -916,7 +920,8 @@ object Queries {
         s, emb, "embedding", "vec_id", path, graft.types.MetricType.Euclidean)
       val q = SparkEntry.queryVectorOf(s, dir)
       val res = idx match {
-        case Some(i) => i.search("embedding", q, 10, nProbe = Int.MaxValue)
+        case Some(i) => i.search("embedding", q, 10,
+          graft.index.ServeProbe.Nearest(Int.MaxValue))
         case None => emb
           .withColumn("@distance", l2sqr_distance(col("embedding"), lit(q)))
           .orderBy(col("@distance").asc, col("vec_id").asc).limit(10)
@@ -937,7 +942,7 @@ object Queries {
         "embedding", "vec_id", path, graft.types.MetricType.Euclidean,
         nClusters = 8, maxIter = 3)
       idx.search("embedding", SparkEntry.queryVectorOf(s, dir), k = 10,
-          nProbe = idx.centroids().length,
+          graft.index.ServeProbe.Nearest(idx.centroids().length),
           freshTail = Some(emb.filter(col("vec_id") > cut)))
         .select(col("vec_id"))
     }),

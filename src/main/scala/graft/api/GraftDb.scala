@@ -2050,48 +2050,38 @@ class GraftDb(val spark: SparkSession, val root: String,
     val stale = idx.indexedPurgeGen() < st.purgeGen()
     val tombs = if (stale) None else st.tombstoneIds()
     val liveIds = if (stale) Some(live.select(col(rowId))) else None
+    val nClusters = idx.centroids().length
     // recall-targeted auto-probe: geometric probe selection with the
     // declared floor (target 1.0 proven exact). Needs the tombstone
-    // CARDINALITY for the cover slack (the driver-side capped set); an
-    // over-cap set, a purge-stale index, or an attribute filter (whose
-    // per-cluster selectivity the bound can't see) fall back to the
-    // fixed-probe widening path below.
-    if (recallTarget.isDefined && filter.isEmpty && !stale) {
-      tombstoneSet(st) match {
-        case Some(ts) =>
-          return idx.searchAuto(queryField, dense, limit,
-            recallTarget.get, freshTail = Some(tail), preFilter = None,
-            excludeIds = tombs, restrictIds = None, slack = ts.size.toLong)
-            .drop("cluster")
-        case None => ()
-      }
+    // CARDINALITY for the cover slack (the driver-side capped set). When
+    // the cover is unavailable (an attribute filter, whose per-cluster
+    // selectivity the bound can't see; a purge-stale index; a tombstone
+    // mask over cap) a declared floor is answered EXACTLY — full probe
+    // makes the pruned scan exhaustive, satisfying any floor at bounded
+    // cost — never by the fixed-probe cut, which proves nothing.
+    val probe: ServeProbe = recallTarget match {
+      case Some(target) =>
+        (if (filter.isEmpty && !stale) tombstoneSet(st) else None)
+          .fold[ServeProbe](ServeProbe.Nearest(nClusters))(ts =>
+            ServeProbe.Recall(target, ts.size.toLong))
+      case None => ServeProbe.Nearest(math.min(8, nClusters))
     }
-    // UNIFORM CONTRACT: when the cover is unavailable (attribute filter —
-    // whose per-cluster selectivity the bound can't see; purge-stale
-    // index; tombstone mask over cap) a declared floor is answered
-    // EXACTLY — full probe makes the pruned scan exhaustive, satisfying
-    // any floor at bounded cost — never by the fixed-probe cut below,
-    // which proves nothing and used to drop the floor unmarked.
-    if (recallTarget.isDefined)
-      return idx.search(queryField, dense, limit, idx.centroids().length,
-        freshTail = Some(tail), preFilter = pre, excludeIds = tombs,
-        restrictIds = liveIds).drop("cluster")
-    val nClusters = idx.centroids().length
-    var nProbe = math.min(8, nClusters)
-    var cut = idx.search(queryField, dense, limit, nProbe,
-      freshTail = Some(tail), preFilter = pre, excludeIds = tombs,
-      restrictIds = liveIds)
+    def searchAt(p: ServeProbe): DataFrame =
+      idx.search(queryField, dense, limit, p, freshTail = Some(tail),
+        preFilter = pre, excludeIds = tombs, restrictIds = liveIds)
+    var cut = searchAt(probe)
     // a selective filter can leave fewer than `limit` survivors inside the
     // probed clusters even though matches exist elsewhere — widen the
     // probe until the cut fills or the scan is exhaustive (the reference
     // under-fills instead: bounded pool, vec_search_executor.cpp:905-928)
-    if (pre.isDefined) {
-      while (nProbe < nClusters && cut.count() < limit) {
-        nProbe = math.min(nClusters, nProbe * 4)
-        cut = idx.search(queryField, dense, limit, nProbe,
-          freshTail = Some(tail), preFilter = pre, excludeIds = tombs,
-          restrictIds = liveIds)
-      }
+    probe match {
+      case ServeProbe.Nearest(n0) if pre.isDefined =>
+        var nProbe = n0
+        while (nProbe < nClusters && cut.count() < limit) {
+          nProbe = math.min(nClusters, nProbe * 4)
+          cut = searchAt(ServeProbe.Nearest(nProbe))
+        }
+      case _ => ()
     }
     cut.drop("cluster")
   }

@@ -206,9 +206,9 @@ class IvfIndex(
     * (layout predates the stats file) it probes everything. */
   def probeSetForRecall(query: Array[Float], k: Int, target: Double = 1.0,
       slack: Long = 0L): Array[Int] =
-    coverFromCounts(
-      if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query,
-      k, target, slack, clusterStats())
+    resolveProbes(
+      Array(if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query),
+      k, ServeProbe.Recall(target, slack)).head
 
   /** Old-layout fallback for the serving cardinality guard: one pruned
     * COUNT over the probed clusters (reads only footers of the probed
@@ -338,7 +338,7 @@ class IvfIndex(
           case Some(cb) => staged0.withColumn("__pqcode",
             graft.functions.pq_encode(c(vecCol), cb))
           // codebook lost (broken layout): keep the SCHEMA consistent with
-          // empty codes — searchPq falls back to searchQuantized when the
+          // empty codes — the Pq job path falls back to Quantized when the
           // codebook is absent, so these bytes are never scored
           case None => staged0.withColumn("__pqcode", lit(Array.emptyByteArray))
         }
@@ -416,30 +416,88 @@ class IvfIndex(
   def universeCompletePin(): (Boolean, Long) =
     synchronized { ensureServeFresh(); (serveStamp._5 == 0L, serveWatermark) }
 
-  /** ANN top-K: prune to the nProbe nearest clusters of the query, exact
-    * search within them.
+  /** ANN top-K as one Spark job plan (the job path; [[serve]] is its
+    * driver-resident twin and takes the same `probe` and `tier`):
     *
-    *  - `freshTail`: rows not yet indexed (id > watermark); searched exactly
+    *  - `probe`: the clusters scanned. `Nearest(n)` takes the `n` nearest
+    *    centroids of clusters that hold rows; `Recall(target, slack)` the
+    *    ball cover PROVING recall@k ≥ target ([[probeSetForRecall]]; 1.0
+    *    is exact) — pass the tombstone count as `slack` when masking via
+    *    `excludeIds`.
+    *  - `tier`: the candidate cut before the exact float rerank. `Float`
+    *    scores every probed row on the float column. `Quantized` first
+    *    cuts to `max(8k, 64)` rows by dequantized int8 L2 for every
+    *    metric (that scan reads only codes + scales). `Pq` first cuts by
+    *    ADC over the m-byte PQ codes: PROVEN on a layout carrying
+    *    `__pqerr` (per-row intervals [adc − e, adc + e] against the k-th
+    *    smallest upper bound cover the true top-k however coarse the
+    *    codes; one extra tiny job), else the fixed `max(16k, 128)`. `Pq`
+    *    falls back to `Quantized`, and `Quantized` to `Float`, on a layout
+    *    without the tier's columns. The job path reads neither code tier's
+    *    `certify`: every cut is reranked on floats, and the PQ cut is
+    *    always proven when it can be.
+    *  - `freshTail`: rows not yet indexed (id > watermark); scored exactly
     *    and unioned BEFORE the cut.
     *  - `preFilter`: attribute predicate evaluated inside the pruned scan,
     *    before the top-K cut (may also reference `@distance` — the
     *    reference's post-filter mode). Without this, a selective filter
-    *    applied after the cut can return fewer than k rows despite matches.
+    *    applied after the cut can return fewer than k rows despite
+    *    matches. A code tier pushes it below its candidate cut too (a
+    *    predicate on `@distance` stays post-distance), so the cut covers
+    *    the FILTERED top-k.
     *  - `excludeIds`: tombstoned row ids (tiny; broadcast anti-join) — the
     *    clustered layout is a build-time copy and does not see later deletes.
     *  - `restrictIds`: live row ids (semi-join) — the correct-but-heavier
     *    mask for when the tombstone set is no longer complete (a compact()
     *    purged it since this index was built). Used instead of `excludeIds`.
     */
-  def search(vecCol: String, query: Array[Float], k: Int, nProbe: Int,
+  def search(vecCol: String, query: Array[Float], k: Int, probe: ServeProbe,
+      tier: ServeTier = ServeTier.Float,
       freshTail: Option[DataFrame] = None,
       preFilter: Option[Column] = None,
       excludeIds: Option[DataFrame] = None,
       restrictIds: Option[DataFrame] = None): DataFrame = {
     val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    searchProbed(vecCol, q, k, nearestClusters(heldCentroids(), q, nProbe),
-      freshTail, preFilter, excludeIds, restrictIds)
+    val full = clustered()
+    val probed = resolveProbes(Array(q), k, probe).head
+    // cluster IN (...) prunes parquet row groups via the partition column
+    val masked = SparseIndex.mask(full.filter(col("cluster").isin(probed.toSeq: _*)),
+      idCol, excludeIds, restrictIds)
+    // a code tier's cut runs over the filtered rows: a selective filter
+    // whose matches rank far by raw distance must not lose them before
+    // the rerank sees them
+    def candBase = preFilter.filterNot(IvfIndex.refsDistance)
+      .map(masked.filter).getOrElse(masked)
+    val cut: Option[DataFrame] = tier match {
+      case ServeTier.Pq(_) if full.columns.contains("__pqcode") && pqCodebook().isDefined =>
+        Some(pqCut(candBase, pqCodebook().get, probed, q, k,
+          proven = full.columns.contains("__pqerr")))
+      case ServeTier.Float => None
+      case _ if full.columns.contains("__qcode") =>
+        // candidate scan: id + codes + scales only -> parquet reads no floats
+        Some(candBase
+          .select(col(idCol), col("__qcode"), col("__qmin"), col("__qmax"))
+          .withColumn("@qdist", quantized_l2(col("__qcode"), col("__qmin"),
+            col("__qmax"), q.map(_.toDouble)))
+          .orderBy(col("@qdist").asc, col(idCol).asc)
+          .limit(math.max(8 * k, 64))
+          .select(col(idCol)))
+      case _ => None
+    }
+    // rerank the candidate ids (a bounded set — broadcast join) on the
+    // full vectors
+    val reranked = cut.fold(masked)(c => masked.join(broadcast(c), Seq(idCol), "left_semi"))
+    val withDist = withTail(reranked, freshTail)
+      .withColumn("@distance", IvfIndex.distColumn(metric, col(vecCol), q))
+    preFilter.map(withDist.filter).getOrElse(withDist)
+      .orderBy(col("@distance").asc, col(idCol).asc)
+      .limit(k)
   }
+
+  /** `df` unioned with the fresh-tail rows (cluster −1). */
+  private def withTail(df: DataFrame, freshTail: Option[DataFrame]): DataFrame =
+    freshTail.fold(df)(tail =>
+      df.unionByName(tail.withColumn("cluster", lit(-1)), allowMissingColumns = true))
 
   /** The centroids whose clusters hold rows. A degenerate build (many
     * identical rows) leaves duplicate centroids whose clusters stay empty;
@@ -472,58 +530,37 @@ class IvfIndex(
       .take(nProbe)
       .map(_._1)
 
-  /** Recall-targeted ANN top-K: the probe set is picked geometrically by
-    * [[probeSetForRecall]] instead of a fixed nProbe — target 1.0 is
-    * PROVEN exact (and usually probes far fewer clusters than a full
-    * probe), target t < 1 proves recall@k ≥ t. Pass the tombstone count
-    * as `slack` when masking via `excludeIds`. */
-  def searchAuto(vecCol: String, query: Array[Float], k: Int,
-      recallTarget: Double = 1.0,
-      freshTail: Option[DataFrame] = None,
-      preFilter: Option[Column] = None,
-      excludeIds: Option[DataFrame] = None,
-      restrictIds: Option[DataFrame] = None,
-      slack: Long = 0L): DataFrame = {
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    searchProbed(vecCol, q, k, probeSetForRecall(query, k, recallTarget, slack),
-      freshTail, preFilter, excludeIds, restrictIds)
-  }
-
-  private def searchProbed(vecCol: String, q: Array[Float], k: Int,
-      probed: Array[Int],
-      freshTail: Option[DataFrame],
-      preFilter: Option[Column],
-      excludeIds: Option[DataFrame],
-      restrictIds: Option[DataFrame]): DataFrame = {
-    val distCol = IvfIndex.distColumn(metric, col(vecCol), q)
-    // cluster IN (...) prunes parquet row groups via the partition column
-    val pruned = clustered()
-      .filter(col("cluster").isin(probed.toSeq: _*))
-    val head = restrictIds match {
-      case Some(live) => pruned.join(live, Seq(idCol), "left_semi")
-      case None => excludeIds match {
-        case Some(tombs) => pruned.join(broadcast(tombs), Seq(idCol), "left_anti")
-        case None => pruned
-      }
+  /** The one probe resolver of the job path and the serve tier: the
+    * clusters each metric-normalized query scans at cut `k`.
+    *  - `Nearest(n)`: the `n` nearest centroids of clusters that hold rows
+    *    (`heldCentroids`).
+    *  - `Recall(target, slack)`: the ball cover (`coverFromCounts`) over
+    *    `counts` — `clusterStats()` unless a filtered serve passes its
+    *    passing counts. Reads radii and counts (Spark jobs when cold):
+    *    never call it with `Recall` under the instance lock.
+    *  - `Sets`: the explicit sets, with ids a racing rebuild retired
+    *    dropped (the caller's pin re-check catches the race).
+    * The serve's sweep calls it under the instance lock inside an
+    * acquisition (probeUnion contract), with `Nearest` or `Sets` only. */
+  private def resolveProbes(qs: Array[Array[Float]], k: Int, probe: ServeProbe,
+      counts: => Option[Map[Int, Long]] = clusterStats()): Array[Array[Int]] =
+    probe match {
+      case ServeProbe.Nearest(nProbe) =>
+        val held = heldCentroids()
+        qs.map(nearestClusters(held, _, nProbe))
+      case ServeProbe.Recall(target, slack) =>
+        lazy val cs = counts
+        qs.map(coverFromCounts(_, k, target, slack, cs))
+      case ServeProbe.Sets(ps) =>
+        val live = centroids().map(_._1).toSet
+        ps.map(_.filter(live))
     }
-    val searched = freshTail match {
-      case Some(tail) =>
-        head.unionByName(tail.withColumn("cluster", lit(-1)),
-          allowMissingColumns = true)
-      case None => head
-    }
-    val withDist = searched.withColumn("@distance", distCol)
-    val filtered = preFilter.map(withDist.filter).getOrElse(withDist)
-    filtered
-      .orderBy(col("@distance").asc, col(idCol).asc)
-      .limit(k)
-  }
 
   /** Batch ANN: Q queries against the layout in ONE pruned pass.
     *
-    * Per-query results are IDENTICAL to `search(...)` at the same nProbe
-    * (same driver-side probe selection, same distance, same (d, id)
-    * tie-break) — proven by BatchIvfSpec. The scan reads only the UNION
+    * Per-query results are IDENTICAL to `search(...)` at the same `probe`
+    * (same probe resolver, same distance, same (d, id) tie-break) —
+    * proven by BatchIvfSpec. The scan reads only the UNION
     * of all queries' probed cluster dirs, each row is scored only against
     * the queries that probed its cluster (array_contains on the exploded
     * query struct — stays inside codegen), and per-(query, task) bounded
@@ -537,36 +574,22 @@ class IvfIndex(
     * (qid, rank, id, d) with rank 1..k by (d asc, id asc).
     */
   def searchBatch(vecCol: String, queries: Seq[(Long, Array[Float])], k: Int,
-      nProbe: Int,
+      probe: ServeProbe,
       freshTail: Option[DataFrame] = None,
       excludeIds: Option[DataFrame] = None): DataFrame = {
     require(queries.nonEmpty, "batch search needs at least one query")
-    val cents = centroids()
-    val qs = queries.map { case (qid, raw) =>
-      val q = if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
-      val probes = cents
-        .map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-        .sortBy { case (_, d) => d }
-        .take(nProbe)
-        .map(_._1)
-      (qid, q, probes)
-    }
+    val qvs = queries.map { case (_, raw) =>
+      if (metric == MetricType.Cosine) IvfIndex.normalize(raw) else raw
+    }.toArray
+    val qs = queries.map(_._1).zip(qvs).zip(resolveProbes(qvs, k, probe))
+      .map { case ((qid, q), probes) => (qid, q, probes) }
     val union = qs.flatMap { case (_, _, p) => p }.distinct
-    val pruned = clustered().filter(col("cluster").isin(union: _*))
-    val masked = excludeIds match {
-      case Some(tombs) => pruned.join(broadcast(tombs), Seq(idCol), "left_anti")
-      case None => pruned
-    }
-    val searched = freshTail match {
-      case Some(tail) =>
-        masked.unionByName(tail.withColumn("cluster", lit(-1)),
-          allowMissingColumns = true)
-      case None => masked
-    }
+    val masked = SparseIndex.mask(clustered().filter(col("cluster").isin(union: _*)),
+      idCol, excludeIds, None)
     val qarr = array(qs.map { case (qid, q, probes) =>
       struct(lit(qid).as("qid"), lit(q).as("qv"), lit(probes).as("probes"))
     }: _*)
-    searched
+    withTail(masked, freshTail)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"),
         col("cluster"))
       .select(col("id"), col("v"), col("cluster"), explode(qarr).as("q"))
@@ -578,78 +601,6 @@ class IvfIndex(
       .select(col("qid"), posexplode(col("topk")).as(Seq("pos", "hit")))
       .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
         col("hit.id").as("id"), col("hit.d").as("d"))
-  }
-
-  /** Quantized-scan-then-rerank top-K: the candidate pass reads ONLY the
-    * int8 codes + scales of the probed clusters (a quarter of the vector
-    * bytes — the float column never reaches that scan), cuts to
-    * `candK = max(candMult*k, 64)` by dequantized L2, then reranks JUST
-    * those candidates on the full float vectors for exact distances.
-    *
-    * Caveats vs `search`: the metric for the candidate cut is L2 over the
-    * dequantized codes — for Cosine/Dot the stored vectors are unit (or
-    * treated as-is) and the rerank applies the real metric, so candidates
-    * only need to be a superset of the true top-k; `preFilter` is pushed
-    * BELOW the candidate cut (the cut runs over the filtered relation, so
-    * filtered semantics match the exact path — a selective filter widens
-    * the candidate scan's projection by the filter's columns, nothing
-    * more). Falls back to `search` when the layout predates the quantized
-    * columns. */
-  def searchQuantized(vecCol: String, query: Array[Float], k: Int, nProbe: Int,
-      candMult: Int = 8,
-      freshTail: Option[DataFrame] = None,
-      preFilter: Option[Column] = None,
-      excludeIds: Option[DataFrame] = None,
-      restrictIds: Option[DataFrame] = None): DataFrame = {
-    val full = clustered()
-    if (!full.columns.contains("__qcode"))
-      return search(vecCol, query, k, nProbe, freshTail, preFilter, excludeIds, restrictIds)
-    val cents = centroids()
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    val probed = cents
-      .map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-      .sortBy { case (_, d) => d }
-      .take(nProbe)
-      .map(_._1)
-    val pruned = full.filter(col("cluster").isin(probed.toSeq: _*))
-    val masked = restrictIds match {
-      case Some(live) => pruned.join(live, Seq(idCol), "left_semi")
-      case None => excludeIds match {
-        case Some(tombs) => pruned.join(broadcast(tombs), Seq(idCol), "left_anti")
-        case None => pruned
-      }
-    }
-    // preFilter BEFORE the cut: the candidate set must cover the top-k of
-    // the FILTERED relation, not the unfiltered one — otherwise a
-    // selective filter whose matches rank far by raw distance loses them
-    // before the rerank ever sees them. A predicate referencing @distance
-    // cannot run here (the candidate relation has no such column) — it
-    // keeps the documented post-filter semantics below instead.
-    val pushable = preFilter.filterNot(IvfIndex.refsDistance)
-    val candBase = pushable.map(masked.filter).getOrElse(masked)
-    val candK = math.max(candMult * k, 64)
-    // candidate scan: id + codes + scales only -> parquet reads no floats
-    val cand = candBase
-      .select(col(idCol), col("__qcode"), col("__qmin"), col("__qmax"))
-      .withColumn("@qdist",
-        quantized_l2(col("__qcode"), col("__qmin"), col("__qmax"), q.map(_.toDouble)))
-      .orderBy(col("@qdist").asc, col(idCol).asc)
-      .limit(candK)
-      .select(col(idCol))
-    // rerank candidates on the full vectors (candK rows — broadcast join)
-    val reranked = masked.join(broadcast(cand), Seq(idCol), "left_semi")
-    val searched = freshTail match {
-      case Some(tail) =>
-        reranked.unionByName(tail.withColumn("cluster", lit(-1)),
-          allowMissingColumns = true)
-      case None => reranked
-    }
-    val withDist = searched.withColumn("@distance",
-      IvfIndex.distColumn(metric, col(vecCol), q))
-    val filtered = preFilter.map(withDist.filter).getOrElse(withDist)
-    filtered
-      .orderBy(col("@distance").asc, col(idCol).asc)
-      .limit(k)
   }
 
   /** PQ codebook for this layout, cached per (gen, purge) like the
@@ -714,105 +665,52 @@ class IvfIndex(
     }
   }
 
-  /** PQ-scan-then-rerank top-K: the candidate pass reads ONLY the m-byte
-    * PQ codes of the probed clusters (~1/32 of the vector bytes at dim
-    * 960 — 8x less than even the int8 scan), then reranks candidates on
-    * the float column with the real metric.
+  /** The PQ tier's job-path candidate ids: ADC over the m-byte PQ codes of
+    * the probed rows (~1/32 of the vector bytes at dim 960 — neither
+    * floats nor int8 codes are read from parquet).
     *
-    * On a layout carrying `__pqerr` the candidate cut is PROVEN: per-row
-    * true-distance intervals [adc − e, adc + e] (same bound math as the
-    * serving tier's certification) against the k-th smallest upper bound
-    * select a candidate set that provably covers the true top-k, however
-    * coarse the ADC geometry is — a fixed multiplier cut silently loses
-    * recall exactly when within-cluster spacing falls below quantization
-    * resolution (tight clusters at high dim), which is the one regime a
-    * compressed candidate scan gets used in anger. Costs one extra tiny
-    * job (the bound). `preFilter` is pushed below the cut, so the proof
-    * covers the FILTERED top-k. `candMult` only drives the legacy fixed
-    * cut on pre-`__pqerr` layouts. Falls back to `searchQuantized` when
-    * the layout predates the PQ tier entirely. */
-  def searchPq(vecCol: String, query: Array[Float], k: Int, nProbe: Int,
-      candMult: Int = 16,
-      freshTail: Option[DataFrame] = None,
-      preFilter: Option[Column] = None,
-      excludeIds: Option[DataFrame] = None,
-      restrictIds: Option[DataFrame] = None): DataFrame = {
-    val full = clustered()
-    val cb = pqCodebook()
-    if (!full.columns.contains("__pqcode") || cb.isEmpty)
-      return searchQuantized(vecCol, query, k, nProbe, math.max(candMult / 2, 8),
-        freshTail, preFilter, excludeIds, restrictIds)
-    val codebook = cb.get
-    val cents = centroids()
-    val q = if (metric == MetricType.Cosine) IvfIndex.normalize(query) else query
-    val probed = cents
-      .map { case (cid, c) => (cid, IvfIndex.dist(metric, c, q)) }
-      .sortBy { case (_, d) => d }
-      .take(nProbe)
-      .map(_._1)
-    val pruned = full.filter(col("cluster").isin(probed.toSeq: _*))
-    val masked = restrictIds match {
-      case Some(live) => pruned.join(live, Seq(idCol), "left_semi")
-      case None => excludeIds match {
-        case Some(tombs) => pruned.join(broadcast(tombs), Seq(idCol), "left_anti")
-        case None => pruned
-      }
-    }
+    * `proven` (the layout carries `__pqerr`): per-row true-distance
+    * intervals [adc − e, adc + e] (the serving tier's certification bound
+    * math) against the k-th smallest upper bound keep a candidate set that
+    * provably covers the true top-k of `candBase`, however coarse the ADC
+    * geometry is — a fixed multiplier cut silently loses recall exactly
+    * when within-cluster spacing falls below quantization resolution
+    * (tight clusters at high dim), which is the one regime a compressed
+    * candidate scan gets used in anger. Costs one extra tiny job (the
+    * bound). Otherwise (a pre-`__pqerr` layout) the fixed
+    * `max(16k, 128)` cut. */
+  private def pqCut(candBase: DataFrame, codebook: PqCodebook,
+      probed: Array[Int], q: Array[Float], k: Int, proven: Boolean): DataFrame = {
     val (lutIds, luts, consts, sharedLut) = pqLutsFor(codebook, probed, q)
     def adcCol: Column = pq_adc_res(col("__pqcode"),
       col("cluster").cast("int"), codebook, lutIds, luts, consts, sharedLut)
-    // preFilter BEFORE the proven cut: the interval proof covers the
-    // top-k of whatever relation the bound job ran over — prove against
-    // the FILTERED rows or a selective filter loses matches the
-    // unfiltered bound proved out. @distance-referencing predicates stay
-    // post-distance (the candidate relation has no @distance column).
-    val pushable = preFilter.filterNot(IvfIndex.refsDistance)
-    val candBase = pushable.map(masked.filter).getOrElse(masked)
-    // candidate scan: id + m-byte codes (+ the 8-byte error) only ->
-    // neither floats nor int8 codes are read from parquet
-    val cand: DataFrame =
-      if (full.columns.contains("__pqerr")) {
-        var qss = 0.0
-        var qi = 0
-        while (qi < q.length) { qss += q(qi).toDouble * q(qi); qi += 1 }
-        val scored = candBase
-          .select(col(idCol), col("cluster"), col("__pqcode"), col("__pqerr"))
-          .withColumn("@pqdist", adcCol)
-        val errHalf = metric match {
-          case MetricType.Euclidean =>
-            lit(2.0) * sqrt(greatest(col("@pqdist"), lit(0.0))) * col("__pqerr") +
-              col("__pqerr") * col("__pqerr")
-          case _ => lit(math.sqrt(qss)) * col("__pqerr") // ‖q‖₂ (1 for cosine)
-        }
-        val withUb = scored.withColumn("@pqub", col("@pqdist") + errHalf)
-        val boundRow = withUb.orderBy(col("@pqub").asc).limit(k)
-          .agg(max(col("@pqub"))).head()
-        if (boundRow.isNullAt(0)) withUb.select(col(idCol)) // empty probe set
-        else withUb
-          .filter(col("@pqdist") - errHalf <= lit(boundRow.getDouble(0)))
-          .select(col(idCol))
-      } else {
-        val candK = math.max(candMult * k, 128)
-        candBase
-          .select(col(idCol), col("cluster"), col("__pqcode"))
-          .withColumn("@pqdist", adcCol)
-          .orderBy(col("@pqdist").asc, col(idCol).asc)
-          .limit(candK)
-          .select(col(idCol))
+    if (proven) {
+      var qss = 0.0
+      var qi = 0
+      while (qi < q.length) { qss += q(qi).toDouble * q(qi); qi += 1 }
+      val scored = candBase
+        .select(col(idCol), col("cluster"), col("__pqcode"), col("__pqerr"))
+        .withColumn("@pqdist", adcCol)
+      val errHalf = metric match {
+        case MetricType.Euclidean =>
+          lit(2.0) * sqrt(greatest(col("@pqdist"), lit(0.0))) * col("__pqerr") +
+            col("__pqerr") * col("__pqerr")
+        case _ => lit(math.sqrt(qss)) * col("__pqerr") // ‖q‖₂ (1 for cosine)
       }
-    val reranked = masked.join(broadcast(cand), Seq(idCol), "left_semi")
-    val searched = freshTail match {
-      case Some(tail) =>
-        reranked.unionByName(tail.withColumn("cluster", lit(-1)),
-          allowMissingColumns = true)
-      case None => reranked
-    }
-    val withDist = searched.withColumn("@distance",
-      IvfIndex.distColumn(metric, col(vecCol), q))
-    val filtered = preFilter.map(withDist.filter).getOrElse(withDist)
-    filtered
-      .orderBy(col("@distance").asc, col(idCol).asc)
-      .limit(k)
+      val withUb = scored.withColumn("@pqub", col("@pqdist") + errHalf)
+      val boundRow = withUb.orderBy(col("@pqub").asc).limit(k)
+        .agg(max(col("@pqub"))).head()
+      if (boundRow.isNullAt(0)) withUb.select(col(idCol)) // empty probe set
+      else withUb
+        .filter(col("@pqdist") - errHalf <= lit(boundRow.getDouble(0)))
+        .select(col(idCol))
+    } else
+      candBase
+        .select(col(idCol), col("cluster"), col("__pqcode"))
+        .withColumn("@pqdist", adcCol)
+        .orderBy(col("@pqdist").asc, col(idCol).asc)
+        .limit(math.max(16 * k, 128))
+        .select(col(idCol))
   }
 
   // ---- driver-side serving (no Spark job on the hot path) ----
@@ -1167,23 +1065,26 @@ class IvfIndex(
       vecCol: String, probed: Array[Int], qd: Array[Double], qss: Double,
       reranks: java.util.concurrent.atomic.AtomicLong)
       : Option[(Array[(Long, Double)], Int)] = {
-    def topK(cands: Array[(Long, Double, Double)]): Array[(Long, Double)] =
-      cands.sortWith((x, y) => x._2 < y._2 || (x._2 == y._2 && x._1 < y._1))
-        .take(k).map(c => (c._1, c._2))
+    // one bounded (score, id) heap merge: never sorts the candidates
+    def topK(cands: Iterator[(Long, Double, Double)]): Array[(Long, Double)] = {
+      val heap = new graft.functions.TopKHeap(k)
+      cands.foreach(c => heap.offer(c._2, c._1))
+      heap.sortedPairs.map { case (d, id) => (id, d) }
+    }
     if (!certify)
-      return Some((topK(scoreAll(k).flatMap(_._1) ++ tailLocal), 0))
+      return Some((topK(scoreAll(k).iterator.flatMap(_._1) ++ tailLocal), 0))
     for (pad <- Seq(16, 256, Int.MaxValue - k)) {
       val kPad = k + pad
       val perCluster = scoreAll(kPad)
       val all = perCluster.flatMap(_._1) ++ tailLocal
-      if (all.length <= k) return Some((topK(all), 0))
+      if (all.length <= k) return Some((topK(all.iterator), 0))
       val ubs = all.map(c => c._2 + c._3).sorted
       val bound = ubs(k - 1)
       val minDisc = perCluster.foldLeft(Double.PositiveInfinity)(
         (m, c) => math.min(m, c._2))
       if (minDisc > bound) {
         val possible = all.filter(c => c._2 - c._3 <= bound)
-        if (possible.length == k) return Some((topK(possible), 0))
+        if (possible.length == k) return Some((topK(possible.iterator), 0))
         val need = possible.collect { case (id, _, e) if e > 0.0 => id }
         // a pathological band (near-tie mass) would push-down thousands
         // of ids into one filter — the job path is the better plan there
@@ -1193,7 +1094,7 @@ class IvfIndex(
             reranks.incrementAndGet()
             val fixed = possible.map(c =>
               (c._1, if (c._3 == 0.0) c._2 else m(c._1), 0.0))
-            Some((topK(fixed), need.length))
+            Some((topK(fixed.iterator), need.length))
           case None => None // racing rebuild relocated a band id
         }
       }
@@ -1505,26 +1406,11 @@ class IvfIndex(
       case ServeTier.Pq(c) => c || probe.isInstanceOf[ServeProbe.Recall]
     }
     val tailIds = freshTail.map(_._1).getOrElse(Array.empty[Long])
-    def sweepOver(nProbe: Int, sets: Option[Array[Array[Int]]],
-        ex: Long => Boolean) =
-      sweep(vecCol, qs, k, tier, certify,
-        () => resolveProbes(qs, nProbe, sets), ex, freshTail)
-    // fixed probe sets: the mask (if any) covers their union — a superset
-    // mask stays exact for a query probing any subset
-    def fixed(nProbe: Int, sets: Option[Array[Array[Int]]]) =
-      if (conds.isEmpty) sweepOver(nProbe, sets, exclude)
-      else withPassingMask(conds, exclude, tailIds,
-        () => resolveProbes(qs, nProbe, sets).flatten.distinct)(
-        (ex, _) => sweepOver(nProbe, sets, ex))
+    def sweepOver(p: ServeProbe, ex: Long => Boolean) =
+      sweep(vecCol, qs, k, tier, certify, () => resolveProbes(qs, k, p), ex,
+        freshTail)
     probe match {
-      case ServeProbe.Nearest(nProbe) =>
-        // resolveProbes ranks only clusters holding rows, under the
-        // instance lock: read any counts that takes (a Spark job when
-        // cold) outside it
-        heldCentroids()
-        fixed(nProbe, None)
-      case ServeProbe.Sets(sets) => fixed(0, Some(sets))
-      case ServeProbe.Recall(target, slack) =>
+      case ServeProbe.Recall(_, _) =>
         // covers are DERIVED STATE: computed and swept under one pin (a
         // same-watermark rebuild in between would serve the new generation
         // under a stale cover with no recall proof) — withPassingMask
@@ -1532,9 +1418,19 @@ class IvfIndex(
         // row lives in exactly one, so the union is the id universe)
         withPassingMask(conds, exclude, tailIds, () => centroids().map(_._1)) {
           (ex, counts) =>
-            lazy val cs = counts()
-            sweepOver(0, Some(qs.map(coverFromCounts(_, k, target, slack, cs))), ex)
+            sweepOver(ServeProbe.Sets(resolveProbes(qs, k, probe, counts())), ex)
         }
+      case _ =>
+        // the sweep resolves a nearest-cluster probe under the instance
+        // lock, ranking only clusters holding rows: read any counts that
+        // takes (a Spark job when cold) outside it
+        if (probe.isInstanceOf[ServeProbe.Nearest]) heldCentroids()
+        // fixed probe sets: the mask (if any) covers their union — a
+        // superset mask stays exact for a query probing any subset
+        if (conds.isEmpty) sweepOver(probe, exclude)
+        else withPassingMask(conds, exclude, tailIds,
+          () => resolveProbes(qs, k, probe).flatten.distinct)(
+          (ex, _) => sweepOver(probe, ex))
     }
   }
 
@@ -1719,23 +1615,6 @@ class IvfIndex(
     }.toMap
   }
 
-  /** The clusters each query sweeps: the `nProbe` nearest centroids of
-    * clusters that hold rows (`heldCentroids`), or the explicit `sets` (a
-    * recall cover) with ids a racing rebuild retired dropped (the
-    * caller's pin re-check catches the race). Runs under the instance
-    * lock inside an acquisition (probeUnion contract). */
-  private def resolveProbes(qs: Array[Array[Float]], nProbe: Int,
-      sets: Option[Array[Array[Int]]]): Array[Array[Int]] = {
-    sets match {
-      case Some(ps) =>
-        val live = centroids().map(_._1).toSet
-        ps.map(_.filter(live))
-      case None =>
-        val held = heldCentroids()
-        qs.map(nearestClusters(held, _, nProbe))
-    }
-  }
-
   /** Pin re-verify: true iff the serving snapshot still matches the one
     * a pass set was built at. */
   private def pinStable(key: (Long, Long), wm: Long): Boolean =
@@ -1795,7 +1674,8 @@ class IvfIndex(
       effectiveMaxScalarRows,
       // the lookup must cover the clusters the HITS came from — an
       // explicit probe set (recallTarget covers) overrides nearest-nProbe
-      () => resolveProbes(Array(q), nProbe, probeSet.map(Array(_))).head,
+      () => resolveProbes(Array(q), 0, probeSet.fold[ServeProbe](
+        ServeProbe.Nearest(nProbe))(p => ServeProbe.Sets(Array(p)))).head,
       loadScalarClusters) match {
       case None => decline
       case Some((scalars, _, _)) =>
@@ -2722,7 +2602,9 @@ object IvfIndex {
     * fresh sub-cluster ids, and retire the old id. One pruned read + one
     * partition-scoped write per oversized cluster; the rest of the layout
     * is untouched. Bumps the build generation so serving residency and
-    * cross-process caches flush (cluster membership changed).
+    * cross-process caches flush (cluster membership changed). A cluster
+    * whose sample holds fewer than 2 distinct vectors is left as it is: no
+    * split can shrink a group of identical rows.
     *
     * Crash window: a writer dying between the staged write and the old-dir
     * delete leaves rows duplicated across old+new partitions until the
@@ -2779,7 +2661,9 @@ object IvfIndex {
         val sampled = (if (frac >= 1.0) rows else rows.sample(withReplacement = false, frac, seed = 42L))
           .select(col(vecCol)).limit(sampleN.toInt).collect()
           .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
-        if (sampled.length >= 2) {
+        // identical rows all land in one sub-cluster: re-fitting,
+        // shuffling and rewriting them would shrink nothing
+        if (sampled.exists(v => !java.util.Arrays.equals(v, sampled(0)))) {
           val subCents = localLloyd(sampled, subK, metric, maxIter)
           val ids = Array.tabulate(subCents.length)(nextId + _)
           nextId += subCents.length
@@ -2933,8 +2817,9 @@ object IvfIndex {
   /** Int8 codes stored NEXT TO the float vectors in the clustered layout
     * (columns `__qcode` binary, `__qmin`/`__qmax` double): the quantized
     * scan path reads a quarter of the vector bytes, then reranks its
-    * candidates on the float column (see `searchQuantized`). One pass,
-    * computed during the same assign-and-write job. */
+    * candidates on the float column (see `search` at
+    * `ServeTier.Quantized`). One pass, computed during the same
+    * assign-and-write job. */
   private[index] def withQuantized(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn("__qv", quantize_vec(col(vecCol)))
       .withColumn("__qmin", col("__qv.qmin"))
@@ -3050,18 +2935,21 @@ object IvfIndex {
   }
 }
 
-/** The resident form a dense serve sweeps (see [[IvfIndex.serve]]). */
+/** The resident form a dense serve sweeps (see [[IvfIndex.serve]]), and
+  * the candidate cut of the job path ([[IvfIndex.search]]). */
 sealed trait ServeTier
 object ServeTier {
   /** Float vectors: exact scores. */
   case object Float extends ServeTier
-  /** 16-bit codes; `certify` proves the exact id set. */
+  /** 16-bit resident codes (the job path scans the int8 `__qcode`);
+    * `certify` (serve only) proves the exact id set. */
   final case class Quantized(certify: Boolean) extends ServeTier
-  /** PQ (ADC) codes; `certify` proves the exact id set. */
+  /** PQ (ADC) codes; `certify` (serve only) proves the exact id set. */
   final case class Pq(certify: Boolean) extends ServeTier
 }
 
-/** Which clusters a dense serve probes (see [[IvfIndex.serve]]). */
+/** Which clusters a dense serve or job-path search probes (see
+  * [[IvfIndex.serve]], [[IvfIndex.search]]). */
 sealed trait ServeProbe
 object ServeProbe {
   /** The `nProbe` nearest centroids. */

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * vector bytes — at 100 TB that is the difference between scanning 3 TB
   * and scanning 100 GB for the same candidate set — then the exact rerank
   * on the float column recovers exact results, same contract as
-  * `IvfIndex.searchQuantized`. Beyond-reference addition: the reference
+  * the `Quantized` tier of `IvfIndex.search`. Beyond-reference addition: the reference
   * keeps all vectors float32 in RAM (table_segment_mvp.cpp:106-111) and has
   * no compressed tier at all.
   *

@@ -1231,7 +1231,10 @@ object SparseIndex {
     MetaJson.writeAtomic(metaPath,
       s"""{"watermark":$watermark,"count":$count,"purge":$purge,"buckets":$buckets,"base":${if (base < 0) count else base},"gen":$gen}""")
 
-  private def mask(df: DataFrame, idCol: String,
+  /** The id mask of every index job path: semi-join to the live ids when
+    * given (the tombstone set is no longer complete), else a broadcast
+    * anti-join against the tombstones. */
+  private[index] def mask(df: DataFrame, idCol: String,
       excludeIds: Option[DataFrame], restrictIds: Option[DataFrame]): DataFrame =
     restrictIds match {
       case Some(live) => df.join(live, Seq(idCol), "left_semi")

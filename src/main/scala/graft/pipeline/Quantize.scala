@@ -78,7 +78,7 @@ object Quantize {
     * replaces an interpreted `aggregate(zip_with(...))` HOF chain that
     * paid per-element lambda dispatch). Same affine math as `quantizeI8`,
     * so the SQL oracle is unchanged. The PERSISTED form of this path lives
-    * in the IVF clustered layout (IvfIndex.searchQuantized), where the
+    * in the IVF clustered layout (IvfIndex.search at ServeTier.Quantized), where the
     * scan genuinely reads a quarter of the vector bytes. */
   def topKL2Quantized(df: DataFrame, vecCol: String, idCol: String,
       query: Array[Double], k: Int): DataFrame =

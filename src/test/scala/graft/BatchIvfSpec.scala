@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.index.IvfIndex
+import graft.index.{IvfIndex, ServeProbe}
 import graft.types.MetricType
 
 /** IvfIndex.searchBatch must be pointwise identical to the single-query
@@ -25,14 +25,15 @@ class BatchIvfSpec extends SparkSpec {
   private def single(idx: IvfIndex, q: Array[Float], k: Int, nProbe: Int,
       tail: Option[org.apache.spark.sql.DataFrame] = None,
       tombs: Option[org.apache.spark.sql.DataFrame] = None): Seq[Long] =
-    idx.search("embedding", q, k, nProbe, freshTail = tail, excludeIds = tombs)
+    idx.search("embedding", q, k, ServeProbe.Nearest(nProbe), freshTail = tail,
+      excludeIds = tombs)
       .select("vec_id").as[Long].collect().toSeq
 
   test("batch equals per-query search at partial and full probes") {
     val idx = freshIndex("batchivf")
     val queries = Seq(0, 150, 301, 452, 599).map(i => (i.toLong, corpus(i)._2))
     for (nProbe <- Seq(2, 4)) {
-      val batch = idx.searchBatch("embedding", queries, k = 7, nProbe = nProbe)
+      val batch = idx.searchBatch("embedding", queries, k = 7, ServeProbe.Nearest(nProbe))
         .orderBy($"qid", $"rank").select($"qid", $"id").as[(Long, Long)]
         .collect().groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
       queries.foreach { case (qid, q) =>
@@ -50,7 +51,7 @@ class BatchIvfSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val tombs = Seq(10L, 400L).toDF("vec_id")
     val queries = Seq((0L, corpus(10)._2), (1L, corpus(400)._2))
-    val batch = idx.searchBatch("embedding", queries, k = 5, nProbe = 2,
+    val batch = idx.searchBatch("embedding", queries, k = 5, ServeProbe.Nearest(2),
         freshTail = Some(tail), excludeIds = Some(tombs))
       .orderBy($"qid", $"rank").select($"qid", $"id").as[(Long, Long)]
       .collect().groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
@@ -66,7 +67,7 @@ class BatchIvfSpec extends SparkSpec {
   test("batch plan prunes to the union of probed clusters and keeps the heap agg") {
     val idx = freshIndex("batchivf_plan")
     val queries = Seq((0L, corpus(0)._2), (1L, corpus(3)._2)) // same region
-    val plan = idx.searchBatch("embedding", queries, k = 3, nProbe = 1)
+    val plan = idx.searchBatch("embedding", queries, k = 3, ServeProbe.Nearest(1))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
     assert(plan.contains("ObjectHashAggregate"), plan)

@@ -72,7 +72,7 @@ class FilteredServeProps extends SparkSpec {
       val got = idx.serveOne("vec", q, 10, ServeProbe.Nearest(nAll), conds = conds)
         .map(_.hits)
       assert(got.isDefined, s"trial $trial declined: $filter")
-      val expect = idx.search("vec", q, 10, nAll,
+      val expect = idx.search("vec", q, 10, ServeProbe.Nearest(nAll),
           preFilter = Some(graft.filter.FilterTranslator.translate(filter, df.schema)))
         .select(col("id")).collect().map(_.getLong(0)).toSeq
       assert(got.get.map(_._1).toSeq == expect,

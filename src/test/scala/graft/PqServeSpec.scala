@@ -185,7 +185,8 @@ class PqServeSpec extends SparkSpec {
       .withColumn("d", graft.functions.l2sqr_distance(col("embedding"), lit(q)))
       .orderBy(col("d").asc, col("vec_id").asc).limit(10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val got = idx.searchPq("embedding", q, 10, nProbe = idx.centroids().length)
+    val got = idx.search("embedding", q, 10, ServeProbe.Nearest(idx.centroids().length),
+        ServeTier.Pq(certify = false))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got == exact,
       s"proven cut must survive sub-resolution spacing: $got vs $exact")
@@ -230,7 +231,8 @@ class PqServeSpec extends SparkSpec {
     val q = queryVec(42L)
     val all = emb.filter(col("vec_id") < 500)
     val exact = exactTopL2(all, q, 10)
-    val viaJob = idx.searchPq("embedding", q, 10, nProbe = idx.centroids().length)
+    val viaJob = idx.search("embedding", q, 10, ServeProbe.Nearest(idx.centroids().length),
+        ServeTier.Pq(certify = false))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(viaJob == exact, s"post-split+append searchPq: $viaJob vs $exact")
     val served = idx.serveOne("embedding", q, 10,

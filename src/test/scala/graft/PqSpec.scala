@@ -78,13 +78,15 @@ class PqSpec extends SparkSpec {
       .withColumn("d", graft.functions.l2sqr_distance(col("embedding"), lit(q)))
       .orderBy(col("d").asc, col("vec_id").asc).limit(10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val pq = idx.searchPq("embedding", q, k = 10, nProbe = idx.centroids().length)
+    val pq = idx.search("embedding", q, k = 10, ServeProbe.Nearest(idx.centroids().length),
+        ServeTier.Pq(certify = false))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(pq == exact, s"searchPq full probe must be exact: $pq vs $exact")
 
     // candidate scan reads only (id, __pqcode): the float column must not
     // appear in the candidate leg's scan schema
-    val plan = idx.searchPq("embedding", q, 10, idx.centroids().length)
+    val plan = idx.search("embedding", q, 10, ServeProbe.Nearest(idx.centroids().length),
+        ServeTier.Pq(certify = false))
       .queryExecution.executedPlan.toString
     assert(plan.contains("__pqcode"))
 
@@ -111,7 +113,8 @@ class PqSpec extends SparkSpec {
       .withColumn("d", graft.functions.l2sqr_distance(col("embedding"), lit(q)))
       .orderBy(col("d").asc, col("vec_id").asc).limit(10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val pqAll = idx.searchPq("embedding", q, 10, idx.centroids().length)
+    val pqAll = idx.search("embedding", q, 10, ServeProbe.Nearest(idx.centroids().length),
+        ServeTier.Pq(certify = false))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(pqAll == exactAll)
   }
@@ -136,7 +139,8 @@ class PqSpec extends SparkSpec {
       .withColumn("d", graft.functions.l2sqr_distance(col("embedding"), lit(q)))
       .orderBy(col("d").asc, col("vec_id").asc).limit(10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val got = reopened.searchPq("embedding", q, 10, reopened.centroids().length)
+    val got = reopened.search("embedding", q, 10,
+        ServeProbe.Nearest(reopened.centroids().length), ServeTier.Pq(certify = false))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got == exact)
   }
@@ -153,7 +157,8 @@ class PqSpec extends SparkSpec {
         lit(IvfIndex.normalize(q))))
       .orderBy(col("d").asc, col("vec_id").asc).limit(10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val got = idx.searchPq("embedding", q, 10, idx.centroids().length)
+    val got = idx.search("embedding", q, 10, ServeProbe.Nearest(idx.centroids().length),
+        ServeTier.Pq(certify = false))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got == exact)
   }
@@ -174,12 +179,12 @@ class PqSpec extends SparkSpec {
       .orderBy(col("d").asc, col("vec_id").asc).limit(5)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(exact.size == 5)
-    val gotPq = idx.searchPq("embedding", q, 5, nProbe = idx.centroids().length,
-        preFilter = Some(filt))
+    val gotPq = idx.search("embedding", q, 5, ServeProbe.Nearest(idx.centroids().length),
+        ServeTier.Pq(certify = false), preFilter = Some(filt))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(gotPq == exact, "searchPq filtered top-k must equal brute force")
-    val gotQuant = idx.searchQuantized("embedding", q, 5,
-        nProbe = idx.centroids().length, preFilter = Some(filt))
+    val gotQuant = idx.search("embedding", q, 5, ServeProbe.Nearest(idx.centroids().length),
+        ServeTier.Quantized(certify = false), preFilter = Some(filt))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(gotQuant == exact, "searchQuantized filtered top-k must equal brute force")
   }

@@ -339,12 +339,14 @@ class Round10Spec extends SparkSpec {
     val pre = Some(graft.filter.FilterTranslator.translate(
       "@distance <= 0.08 AND id >= 10", searchedSchema))
     val full = idx.centroids().length
-    val exact = idx.search("vec", q, 10, full, preFilter = pre)
+    val exact = idx.search("vec", q, 10, ServeProbe.Nearest(full), preFilter = pre)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     // pre-fix these two threw unresolved-column analysis errors
-    val viaQuant = idx.searchQuantized("vec", q, 10, full, preFilter = pre)
+    val viaQuant = idx.search("vec", q, 10, ServeProbe.Nearest(full),
+        ServeTier.Quantized(certify = false), preFilter = pre)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
-    val viaPq = idx.searchPq("vec", q, 10, full, preFilter = pre)
+    val viaPq = idx.search("vec", q, 10, ServeProbe.Nearest(full), ServeTier.Pq(certify = false),
+        preFilter = pre)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     assert(exact.nonEmpty, "fixture too weak: distance band empty")
     assert(viaQuant == exact, s"$viaQuant vs $exact")
@@ -410,7 +412,7 @@ class Round10Spec extends SparkSpec {
       graft.filter.SimpleConjuncts.NumLit(100.0, isInt = true)))
     val q = Array(0.03f, 0.0f, 0.0f, 0.02f)
     val nAll = idx.centroids().length
-    val expect = idx.search("vec", q, 10, nAll,
+    val expect = idx.search("vec", q, 10, ServeProbe.Nearest(nAll),
         preFilter = Some(org.apache.spark.sql.functions.col("id") >= 100))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -464,14 +466,14 @@ class Round10Spec extends SparkSpec {
     val nAll = idx.centroids().length
     assert(idx.clusterRadii().isDefined, "build must persist radii")
     def exactIds(q: Array[Float]): Seq[Long] =
-      idx.search("vec", q, 10, nProbe = nAll)
+      idx.search("vec", q, 10, ServeProbe.Nearest(nAll))
         .select(col("id")).collect().map(_.getLong(0)).toSeq
     var prunedOnce = false
     for (ci <- 0 until 8) {
       val q = Array(ci * 10.0f + 0.03f, ci * 10.0f, (ci % 3) * 10.0f, 0.02f)
       val probes = idx.probeSetForRecall(q, 10, 1.0)
       if (probes.length < nAll) prunedOnce = true
-      val auto = idx.searchAuto("vec", q, 10)
+      val auto = idx.search("vec", q, 10, ServeProbe.Recall(1.0, 0L))
         .select(col("id")).collect().map(_.getLong(0)).toSeq
       assert(auto == exactIds(q), s"blob $ci: auto-probe lost exactness")
     }
@@ -485,7 +487,7 @@ class Round10Spec extends SparkSpec {
         StructField("vec", ArrayType(FloatType, containsNull = false), nullable = false))))
     assert(idx.append(far, "vec") == 1L)
     val q2 = Array(5.0f, 5.0f, 5.0f, 0.0f)
-    val auto2 = idx.searchAuto("vec", q2, 10)
+    val auto2 = idx.search("vec", q2, 10, ServeProbe.Recall(1.0, 0L))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     assert(auto2 == exactIds(q2), "post-append auto-probe lost exactness")
     assert(auto2.contains(9000L))
@@ -514,9 +516,9 @@ class Round10Spec extends SparkSpec {
     val q = Array(5.0f, 5.0f, 5.0f, 0.0f)
     // no radii -> probe everything -> still exact
     assert(idx.probeSetForRecall(q, 10, 1.0).length == idx.centroids().length)
-    val auto = idx.searchAuto("vec", q, 10)
+    val auto = idx.search("vec", q, 10, ServeProbe.Recall(1.0, 0L))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
-    val exact = idx.search("vec", q, 10, nProbe = idx.centroids().length)
+    val exact = idx.search("vec", q, 10, ServeProbe.Nearest(idx.centroids().length))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     assert(auto == exact)
   }
@@ -529,12 +531,12 @@ class Round10Spec extends SparkSpec {
     val nAll = idx.centroids().length
     // a query BETWEEN blobs so the true top-10 spans >= 2 clusters
     val q = Array(5.0f, 5.0f, 5.0f, 0.0f)
-    val exact = idx.search("vec", q, 10, nProbe = nAll)
+    val exact = idx.search("vec", q, 10, ServeProbe.Nearest(nAll))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     val pFull = idx.probeSetForRecall(q, 10, 1.0)
     val pHalf = idx.probeSetForRecall(q, 10, 0.5)
     assert(pHalf.length <= pFull.length)
-    val half = idx.searchAuto("vec", q, 10, recallTarget = 0.5)
+    val half = idx.search("vec", q, 10, ServeProbe.Recall(0.5, 0L))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     val recall = exact.toSet.intersect(half.toSet).size / 10.0
     assert(recall >= 0.5, s"declared floor violated: $recall")

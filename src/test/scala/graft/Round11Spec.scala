@@ -403,7 +403,8 @@ class Round11Spec extends SparkSpec {
     idx.setServeFilterColumns(Seq("id"))
     val q = Array(0.03f, 0.0f, 0.0f, 0.02f) // at blob 0's center
     def filteredExact(cond: org.apache.spark.sql.Column): Seq[Long] =
-      idx.search("vec", q, 10, idx.centroids().length, preFilter = Some(cond))
+      idx.search("vec", q, 10, ServeProbe.Nearest(idx.centroids().length),
+        preFilter = Some(cond))
         .select(col("id")).collect().map(_.getLong(0)).toSeq
     // LOCAL matches: id < 100 spans every blob (~12 each), so blob 0's
     // passing count covers k=10 — the cover should stay narrow
@@ -1006,7 +1007,7 @@ class Round11Spec extends SparkSpec {
     val nAll = follower.centroids().length
     val got = follower.serveOne("vec", q, 10, ServeProbe.Nearest(nAll),
       conds = conds).map(_.hits)
-    val expect = leader.search("vec", q, 10, nAll,
+    val expect = leader.search("vec", q, 10, ServeProbe.Nearest(nAll),
         preFilter = Some(col("id") >= 100))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     assert(got.isDefined && got.get.map(_._1).toSeq == expect)

@@ -106,7 +106,7 @@ class Round3Spec extends SparkSpec {
       nClusters = 4, maxIter = 3)
     val q = Array.fill(16)(0.1f)
     // full probe + rerank must equal brute force exactly
-    val got = idx.searchQuantized("v", q, k = 10, nProbe = 4)
+    val got = idx.search("v", q, k = 10, ServeProbe.Nearest(4), ServeTier.Quantized(certify = false))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     val exact = data
       .withColumn("d", graft.functions.l2sqr_distance(col("v"), org.apache.spark.sql.functions.lit(q)))
@@ -114,7 +114,7 @@ class Round3Spec extends SparkSpec {
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     assert(got == exact, s"quantized rerank diverged: $got vs $exact")
     // the candidate cut's parquet scan must NOT read the float column
-    val plan = idx.searchQuantized("v", q, k = 10, nProbe = 4).queryExecution.sparkPlan
+    val plan = idx.search("v", q, k = 10, ServeProbe.Nearest(4), ServeTier.Quantized(certify = false)).queryExecution.sparkPlan
     val scans = plan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f.requiredSchema.fieldNames.toSet
     }
@@ -132,7 +132,7 @@ class Round3Spec extends SparkSpec {
     val idx = IvfIndex.build(spark, data, "v", "id", dir, MetricType.Euclidean,
       nClusters = 8, maxIter = 3)
     val q = Array.fill(8)(0.5f)
-    val viaJob = idx.search("v", q, 10, nProbe = 8)
+    val viaJob = idx.search("v", q, 10, ServeProbe.Nearest(8))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     val served = idx.serveOne("v", q, 10, ServeProbe.Nearest(8)).map(_.hits).get
     assert(served.map(_._1).toSeq == viaJob)

@@ -178,7 +178,7 @@ class Round8Spec extends SparkSpec {
     // the light blob's cluster fits and serves, matching the job path
     val served = idx.serveOne("vec", Array(10f, 10f, 10f, 10f), 10, ServeProbe.Nearest(1)).map(_.hits)
     assert(served.isDefined, "light cluster fits the budget and must serve")
-    val viaJob = idx.search("vec", Array(10f, 10f, 10f, 10f), 10, nProbe = 1)
+    val viaJob = idx.search("vec", Array(10f, 10f, 10f, 10f), 10, ServeProbe.Nearest(1))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     assert(served.get.map(_._1).toSeq == viaJob)
     // stats agree with the layout

@@ -36,7 +36,7 @@ class Round9Spec extends SparkSpec {
   }
 
   private def fullProbeIds(idx: IvfIndex, q: Array[Float], k: Int): Seq[Long] =
-    idx.search("vec", q, k, nProbe = idx.centroids().length)
+    idx.search("vec", q, k, ServeProbe.Nearest(idx.centroids().length))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
 
   test("splitOversized preserves layout contents exactly: full-probe search unchanged, no row lost or duplicated") {
@@ -69,6 +69,26 @@ class Round9Spec extends SparkSpec {
     assert(stats2.values.sum == 2000L, stats2.toString)
     assert(stats2.values.max <= 300L, s"split did not converge: $stats2")
     assert(fullProbeIds(idx2, Array(0f, 0f, 0f, 0f), 20) == before)
+  }
+
+  test("splitOversized skips a cluster of identical rows: no split, no generation bump") {
+    // one cluster of 300 identical rows: no sub-clustering can shrink it
+    val rows = (0 until 300).map(i => Row(i.toLong, Seq(1f, 2f, 3f, 4f)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("vec", ArrayType(FloatType, containsNull = false), nullable = false))))
+    val path = tmpDir("r9_split_identical")
+    IvfIndex.build(spark, df, "vec", "id", path, MetricType.Euclidean,
+      nClusters = 1, maxIter = 3)
+    val idx = new IvfIndex(spark, path, "id", MetricType.Euclidean)
+    val centsBefore = idx.centroids().map { case (c, v) => (c, v.toSeq) }.toSeq
+    val genBefore = IvfIndex.readGen(idx.metaPath)
+    assert(IvfIndex.splitOversized(spark, path, "vec", "id",
+      MetricType.Euclidean, maxRows = 50) == 0)
+    assert(IvfIndex.readGen(idx.metaPath) == genBefore)
+    val reopened = new IvfIndex(spark, path, "id", MetricType.Euclidean)
+    assert(reopened.centroids().map { case (c, v) => (c, v.toSeq) }.toSeq == centsBefore)
   }
 
   test("maintenance heals a declined degenerate cluster: the probe serves after the tick, job-path-equal") {
@@ -105,7 +125,7 @@ class Round9Spec extends SparkSpec {
     val served = idx.serveOne("Vec", q, 10, ServeProbe.Nearest(1)).map(_.hits)
     assert(served.isDefined, "healed layout must serve without declining")
     assert(served.get.nonEmpty, "the probe must land on rows, not an empty cluster")
-    val viaJob = idx.search("Vec", q, 10, nProbe = 1)
+    val viaJob = idx.search("Vec", q, 10, ServeProbe.Nearest(1))
       .select(col(graft.store.TableStore.RowId)).collect().map(_.getLong(0)).toSeq
     assert(served.get.map(_._1).toSeq == viaJob)
     // a second tick with no declines is a no-op (no thrash-healing)
@@ -285,7 +305,7 @@ class Round9Spec extends SparkSpec {
     val quant = idx.serveOne("vec", q, 10, ServeProbe.Nearest(np), q16).map(_.hits)
     assert(quant.isDefined, "quantized tier must serve at ~4x the density")
     // and the answer is the true top-k (full-probe == exact search)
-    val viaJob = idx.search("vec", q, 10, nProbe = np)
+    val viaJob = idx.search("vec", q, 10, ServeProbe.Nearest(np))
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     assert(quant.get.map(_._1).toSeq == viaJob)
   }

@@ -5,7 +5,7 @@ import graft.types._
 import graft.store.TableStore
 import graft.query.QueryEngine
 import graft.query.QueryEngine._
-import graft.index.IvfIndex
+import graft.index.{IvfIndex, ServeProbe}
 import org.apache.spark.sql.functions.col
 
 /** F3/F4: semicircle fixture — 10k unit vectors on a half circle, inserted
@@ -51,7 +51,7 @@ class SemicircleSpec extends SparkSpec {
     val dir = tmpDir("ivf_semi")
     val idx = IvfIndex.build(spark, store.read(), "Vec", "ID", dir,
       MetricType.Cosine, nClusters = 32, maxIter = 5)
-    val ann = idx.search("Vec", Array(1.0f, 0.0f), 100, nProbe = 4)
+    val ann = idx.search("Vec", Array(1.0f, 0.0f), 100, ServeProbe.Nearest(4))
       .select(col("ID")).collect().map(_.getInt(0)).toSet
     val exact = (0 until 100).toSet
     val recall = (ann intersect exact).size / 100.0
@@ -128,7 +128,7 @@ class SemicircleSpec extends SparkSpec {
       MetricType.Cosine, nClusters = 16, maxIter = 3)
     val appended = idx.append(odd.select(col("ID"), col("Vec")), "Vec")
     assert(appended == N / 2)
-    val ids = idx.search("Vec", Array(1.0f, 0.0f), 100, nProbe = 4)
+    val ids = idx.search("Vec", Array(1.0f, 0.0f), 100, ServeProbe.Nearest(4))
       .select("ID").collect().map(_.getInt(0)).toSet
     val exact = (0 until 100).toSet
     assert((ids intersect exact).size >= 95, s"recall ${(ids intersect exact).size}/100")
@@ -154,7 +154,8 @@ class SemicircleSpec extends SparkSpec {
     val tail = store.read().filter(col("ID") % 2 === 1)
     val idx = IvfIndex.build(spark, base, "Vec", "ID", dir,
       MetricType.Cosine, nClusters = 16, maxIter = 3)
-    val ids = idx.search("Vec", Array(1.0f, 0.0f), 50, nProbe = 3, freshTail = Some(tail))
+    val ids = idx.search("Vec", Array(1.0f, 0.0f), 50, ServeProbe.Nearest(3),
+      freshTail = Some(tail))
       .select(col("ID")).collect().map(_.getInt(0)).toSet
     // the true top-50 (0..49) includes odd ids that only the tail can supply
     assert((ids.count(_ % 2 == 1)) > 0, "tail rows missing from ANN result")

@@ -40,8 +40,9 @@ class ServeMatrixSpec extends SparkSpec {
   private val conds = Seq(Cond("label", ">=", NumLit(4.0, isInt = true)))
   private def passes(label: Int): Boolean = label >= 4
 
-  private def exactTopK(q: Array[Float], dead: Long, filtered: Boolean): Seq[Long] =
-    (rows ++ tailRows)
+  private def exactTopK(q: Array[Float], dead: Long, filtered: Boolean,
+      withTail: Boolean = true): Seq[Long] =
+    (rows ++ (if (withTail) tailRows else Nil))
       .filter { case (id, label, _) => id != dead && (!filtered || passes(label)) }
       .map { case (id, _, v) =>
         (id, v.indices.map(j => math.pow(v(j).toDouble - q(j), 2)).sum)
@@ -96,6 +97,30 @@ class ServeMatrixSpec extends SparkSpec {
     }
   }
 
+  test("every job-path cell: tier × probe × preFilter × tail × tombstone equals brute force") {
+    import org.apache.spark.sql.functions.col
+    val nAll = idx.centroids().length
+    val tailDf = tailRows.toDF("id", "label", "vec")
+    for (tier <- Seq(ServeTier.Float, ServeTier.Quantized(certify = false),
+        ServeTier.Pq(certify = false));
+        probe <- Seq(ServeProbe.Nearest(nAll), ServeProbe.Recall(1.0, 1L));
+        filtered <- Seq(false, true); withTail <- Seq(false, true);
+        tombstoned <- Seq(false, true); qi <- Seq(0, 1)) {
+      val q = queries(qi)
+      // the tombstone: the query's nearest indexed row
+      val dead = if (tombstoned) exactTopK(q, -1L, filtered = false).find(_ < 10000L).get
+        else -1L
+      val cell = s"$tier $probe filtered=$filtered tail=$withTail " +
+        s"tombstoned=$tombstoned q$qi"
+      val got = idx.search("vec", q, k, probe, tier,
+          freshTail = if (withTail) Some(tailDf) else None,
+          preFilter = if (filtered) Some(col("label") >= 4) else None,
+          excludeIds = if (tombstoned) Some(Seq(dead).toDF("id")) else None)
+        .select(col("id")).as[Long].collect().toSeq
+      assert(got == exactTopK(q, dead, filtered, withTail), cell)
+    }
+  }
+
   test("a nearest-cluster probe never lands on an empty cluster: degenerate data serves its exact top-k") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -130,5 +155,17 @@ class ServeMatrixSpec extends SparkSpec {
         |"response":["ID"]}""".stripMargin)
     assert(ann == top.map { case (_, id) => s"""{"ID":$id}""" }
       .mkString("""{"result":[""", ",", "]}"))
+    // and so do the code-tier job paths and the batch job path
+    val idx = db.denseIndexFor("T", "V")
+    val rowId = graft.store.TableStore.RowId
+    val q = Array(0f, 0f, 0f, 0f)
+    for (tier <- Seq(ServeTier.Quantized(certify = false), ServeTier.Pq(certify = false))) {
+      val got = idx.search("V", q, 10, ServeProbe.Nearest(1), tier)
+        .select(rowId).collect().map(_.getLong(0)).toSeq
+      assert(got == top.map(_._1).toSeq, s"$tier job path")
+    }
+    val batch = idx.searchBatch("V", Seq((0L, q)), 10, ServeProbe.Nearest(1))
+      .orderBy("rank").select("id").collect().map(_.getLong(0)).toSeq
+    assert(batch == top.map(_._1).toSeq, "batch job path")
   }
 }
