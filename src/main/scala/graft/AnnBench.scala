@@ -708,12 +708,13 @@ object AnnBench {
   }
 
   /** Sparse inverted-index bench: synthetic corpus of `n` rows with 32
-    * nonzeros over a 65536-dim hashed vocab. Compares the raw explode-scan
-    * plan (SparseSearch.topKDot — what every query paid before the
-    * persisted index), the index job path (partition-pruned read of the
-    * query's dims), and driver serving (per-dim resident posting cache,
-    * no Spark job warm). Recall measured vs the raw scan (1.0 expected up
-    * to float-vs-double dot rounding). */
+    * nonzeros over a 65536-dim hashed vocab. Compares the raw row scan
+    * (the `sparse_negative_dot` merge-join GraftDb's exact path runs —
+    * what every query paid before the persisted index), the index job
+    * path (`SparseIndex.search`: a partition-pruned read of the query's
+    * dims), and the serve tier (`SparseIndex.serve`: per-dim resident
+    * posting cache, no Spark job warm). Recall measured vs the raw scan
+    * (1.0 expected up to float-vs-double dot rounding). */
   private def sparseBench(spark: SparkSession, n: Long): Unit = {
     import graft.index.SparseIndex
     val vocab = 65536
@@ -740,7 +741,9 @@ object AnnBench {
       }
 
     def scanTopK(q: (Array[Int], Array[Float])): Seq[Long] =
-      graft.query.SparseSearch.topKDot(df, "sv", "id", q._1, q._2, k)
+      df.withColumn("@distance", graft.functions.sparse_negative_dot(col("sv"),
+          struct(lit(q._1).as("indices"), lit(q._2).as("values"))))
+        .orderBy(col("@distance").asc, col("id").asc).limit(k)
         .select("id").collect().map(_.getLong(0)).toSeq
     scanTopK(queries.head) // warm up
     val t0 = System.nanoTime()
@@ -753,7 +756,8 @@ object AnnBench {
     val buildSec = (System.nanoTime() - tb) / 1e9
 
     def jobTopK(q: (Array[Int], Array[Float])): Seq[Long] =
-      idx.topKDot(q._1, q._2, k).select("id").collect().map(_.getLong(0)).toSeq
+      idx.search(MetricType.DotProduct, overlapOnly = true, q._1, q._2, k)
+        .select("id").collect().map(_.getLong(0)).toSeq
     jobTopK(queries.head)
     val t1 = System.nanoTime()
     val job = queries.map(jobTopK)
@@ -764,7 +768,9 @@ object AnnBench {
 
     idx.maxServePostings = Long.MaxValue // bench corpus is sized to fit
     val tws = System.nanoTime()
-    queries.foreach(q => idx.servePointDot(q._1, q._2, k)) // warm (loads dims)
+    def serveDot(q: (Array[Int], Array[Float])) =
+      idx.serve(Array(q), k, MetricType.DotProduct).head
+    queries.foreach(serveDot) // warm (loads dims)
     val sparseColdSec = (System.nanoTime() - tws) / 1e9
     val t2 = System.nanoTime()
     val serveDeadline = t2 + 10L * 1000 * 1000 * 1000
@@ -772,14 +778,14 @@ object AnnBench {
     while (serveQueries == 0L || System.nanoTime() < serveDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        idx.servePointDot(queries(qi)._1, queries(qi)._2, k)
+        serveDot(queries(qi))
         qi += 1
       }
       serveQueries += queries.length
     }
     val serveSec = (System.nanoTime() - t2) / 1e9
     val serveRecall = exact.zip(queries.map(q =>
-      idx.servePointDot(q._1, q._2, k).get.map(_._1).toSeq)).map {
+      serveDot(q).get.map(_._1).toSeq)).map {
       case (e, a) => e.toSet.intersect(a.toSet).size.toDouble / e.size
     }.sum / exact.length
 
@@ -787,17 +793,19 @@ object AnnBench {
     // norms + resident min-norm fills (recall vs the job-path distance
     // search must be 1.0 — the serve path proves exactness per query)
     def jobEuclid(q: (Array[Int], Array[Float])): Seq[Long] =
-      idx.topKDistance(MetricType.Euclidean, q._1, q._2, k)
+      idx.search(MetricType.Euclidean, overlapOnly = false, q._1, q._2, k)
         .select("id").collect().map(_.getLong(0)).toSeq
     val exactE = queries.map(jobEuclid)
-    idx.servePointEuclid(queries.head._1, queries.head._2, k) // warm
+    def serveEuclid(q: (Array[Int], Array[Float])) =
+      idx.serve(Array(q), k, MetricType.Euclidean).head
+    serveEuclid(queries.head) // warm
     val t3 = System.nanoTime()
     val euclidDeadline = t3 + 5L * 1000 * 1000 * 1000
     var euclidQueries = 0L
     while (euclidQueries == 0L || System.nanoTime() < euclidDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        idx.servePointEuclid(queries(qi)._1, queries(qi)._2, k)
+        serveEuclid(queries(qi))
         qi += 1
       }
       euclidQueries += queries.length
@@ -805,7 +813,7 @@ object AnnBench {
     val euclidSec = (System.nanoTime() - t3) / 1e9
     // recall over SERVED queries only; a decline (None) honors the
     // exact-or-decline contract and is counted separately, not as recall 0
-    val euclidServed = queries.map(q => idx.servePointEuclid(q._1, q._2, k))
+    val euclidServed = queries.map(serveEuclid)
     val euclidDeclined = euclidServed.count(_.isEmpty)
     val euclidPairs = exactE.zip(euclidServed).collect {
       case (e, Some(a)) => e.toSet.intersect(a.map(_._1).toSet).size.toDouble / e.size
@@ -845,7 +853,7 @@ object AnnBench {
     while (ingestQueries == 0L || System.nanoTime() < ingestDeadline) {
       var qi = 0
       while (qi < queries.length) {
-        val got = idx.servePointDot(queries(qi)._1, queries(qi)._2, k)
+        val got = serveDot(queries(qi))
           .map(_.map(_._1).toSeq).getOrElse(Nil)
         if (got != exact(qi)) wrong += 1
         qi += 1
@@ -880,10 +888,13 @@ object AnnBench {
     widx.maxServePostings = math.min(1L << 20, n / 2)
     val wandQueries = queries.map(q => Array(hotDim, q._1.head))
     def wandJob(q: Array[Int]): Seq[Long] =
-      widx.topKDot(q, q.map(_ => 1.0f), k).select("id").collect()
+      widx.search(MetricType.DotProduct, overlapOnly = true, q, q.map(_ => 1.0f), k)
+        .select("id").collect()
         .map(_.getLong(0)).toSeq
     val wandExact = wandQueries.map(wandJob)
-    wandQueries.foreach(q => widx.servePointDot(q, q.map(_ => 1.0f), k)) // warm
+    def serveWand(q: Array[Int]) =
+      widx.serve(Array((q, q.map(_ => 1.0f))), k, MetricType.DotProduct).head
+    wandQueries.foreach(serveWand) // warm
     val declBefore = widx.serveDeclineCount()
     val tw1 = System.nanoTime()
     val wandDeadline = tw1 + 5L * 1000 * 1000 * 1000
@@ -891,15 +902,14 @@ object AnnBench {
     while (wandServed == 0L || System.nanoTime() < wandDeadline) {
       var qi = 0
       while (qi < wandQueries.length) {
-        widx.servePointDot(wandQueries(qi), wandQueries(qi).map(_ => 1.0f), k)
+        serveWand(wandQueries(qi))
         qi += 1
       }
       wandServed += wandQueries.length
     }
     val wandSec = (System.nanoTime() - tw1) / 1e9
     val wandDeclined = widx.serveDeclineCount() - declBefore
-    val wandAnswers = wandQueries.map(q =>
-      widx.servePointDot(q, q.map(_ => 1.0f), k))
+    val wandAnswers = wandQueries.map(serveWand)
     val wandRecall = wandExact.zip(wandAnswers).collect {
       case (e, Some(a)) => e.toSet.intersect(a.map(_._1).toSet).size.toDouble / e.size
     }.sum / math.max(1, wandAnswers.count(_.isDefined))

@@ -1216,8 +1216,9 @@ object QueriesPipeline {
       // query vector = doc 0's postings (a pruned read of the persisted
       // index would also work; recomputing prunes to one doc via pushdown)
       val q0 = posting.filter(col("doc_id") === 0).select("dim", "v").collect()
-      idx.topKDot(q0.map(_.getInt(0)), q0.map(_.getFloat(1)), k = 20)
-        .select(col("doc_id"), col("dot").cast("long").as("dot"))
+      idx.search(graft.types.MetricType.DotProduct, overlapOnly = true,
+          q0.map(_.getInt(0)), q0.map(_.getFloat(1)), k = 20)
+        .select(col("doc_id"), (-col("@distance")).cast("long").as("dot"))
     }),
 
     // rebuild-while-querying lifecycle, driver-checked: the index covers
@@ -1241,9 +1242,10 @@ object QueriesPipeline {
         maxId = bStats.getLong(1), buckets = 16)
       val tail = posting(docs.filter(col("doc_id") > idx.indexedWatermark()))
       val q0 = posting(docs).filter(col("doc_id") === 0).select("dim", "v").collect()
-      idx.topKDot(q0.map(_.getInt(0)), q0.map(_.getFloat(1)), k = 20,
+      idx.search(graft.types.MetricType.DotProduct, overlapOnly = true,
+          q0.map(_.getInt(0)), q0.map(_.getFloat(1)), k = 20,
           tailPostings = Some(tail))
-        .select(col("doc_id"), col("dot").cast("long").as("dot"))
+        .select(col("doc_id"), (-col("@distance")).cast("long").as("dot"))
     }),
 
     // canonical-doc selection: connected components over the LSH near-dup

@@ -309,7 +309,7 @@ class GraftDb(val spark: SparkSession, val root: String,
   }
 
   // sparse fresh-tail rows exploded into per-dim posting slices (ids,
-  // values, norms) for servePointDot/Euclid, plus the (id, norm2) of every
+  // values, norms) for SparseIndex.serve, plus the (id, norm2) of every
   // tail row for Euclidean non-overlap fills; re-collected only when the
   // snapshot version or index watermark moves — the sparse twin of
   // `tailCache`
@@ -685,6 +685,36 @@ class GraftDb(val spark: SparkSession, val root: String,
       else if (quantized) ServeTier.Quantized(certified)
       else ServeTier.Float
     lazy val facets: Seq[Facet] = parseFacets(json \ "facets")
+    /** The request's own sparse `queryVector`, read and checked once. */
+    lazy val sparseQuery: SparseQuery = sparseQueryOf(json \ "queryVector")
+    /** A sparse query vector `{"indices":[..],"values":[..]}` (the
+      * request's own or a batch entry), held to the ingest rule for stored
+      * sparse vectors (TableStore.prepare; reference vector.hpp:13-19):
+      * equal lengths, indices non-negative, strictly increasing and below
+      * the field's `dimensions`. Every scoring path sums or merge-joins by
+      * dim, so a vector outside the rule has no one answer: it throws
+      * IllegalArgumentException on every path. */
+    def sparseQueryOf(v: JValue): SparseQuery = {
+      def arr(key: String): Array[JValue] = (v \ key) match {
+        case JArray(a) => a.toArray
+        case _ => throw new IllegalArgumentException(
+          s"a sparse queryVector needs an \"$key\" array")
+      }
+      val indices = arr("indices").map(num(_).toInt)
+      val values = arr("values").map(num(_).toFloat)
+      require(indices.length == values.length, s"sparse queryVector has " +
+        s"${indices.length} indices but ${values.length} values")
+      val dims = st.schema.field(queryField).dimensions
+      var i = 0
+      while (i < indices.length) {
+        require(indices(i) >= 0 && indices(i) < dims,
+          s"sparse queryVector index ${indices(i)} is outside [0, $dims)")
+        require(i == 0 || indices(i) > indices(i - 1),
+          "sparse queryVector indices must be strictly increasing")
+        i += 1
+      }
+      SparseQuery(indices, values)
+    }
   }
 
   /** The job path's rendered answer to `q` for one query vector. */
@@ -704,9 +734,11 @@ class GraftDb(val spark: SparkSession, val root: String,
     * shared row sweep; certification runs per query). An entry the serve
     * tier declines goes straight to the job path, so it is served — and
     * counts as a serve decline — once. Batch membership never changes any
-    * query's serve-or-decline outcome. Sparse or non-numeric entries run
-    * the single-query dispatch one by one (it holds the sparse serve
-    * tier). */
+    * query's serve-or-decline outcome. A batch of sparse objects does the
+    * same through the one sparse handshake ([[serveSparseQueries]]), every
+    * entry checked at parse first. Any other batch (mixed or malformed
+    * entries) goes entry by entry to the job path, which answers or
+    * throws. */
   private def batchQuery(q: QueryRequest, vs: List[JValue]): String = {
     val denseOk = vs.forall {
       case JArray(xs) => xs.nonEmpty && xs.forall {
@@ -714,22 +746,16 @@ class GraftDb(val spark: SparkSession, val root: String,
       }
       case _ => false
     }
-    val out =
-      if (denseOk) {
-        val served: Array[Option[String]] =
-          if (q.serve)
-            serveBatch(q, vs.map { case JArray(xs) => xs.map(num(_).toFloat).toArray
-              case _ => Array.empty[Float] }.toArray)
-          else Array.fill(vs.length)(None)
-        vs.zip(served).map { case (v, s) => s.getOrElse(jobPathResponse(q, v)) }
-      } else {
-        val fields = q.json match { case JObject(fs) => fs; case _ => Nil }
-        vs.map { v =>
-          query(JsonMethods.compact(JsonMethods.render(JObject(
-            fields.filterNot { case (k, _) => k == "queryVectors" } :+
-              ("queryVector" -> v)))))
-        }
-      }
+    val served: Array[Option[String]] =
+      if (denseOk && q.serve)
+        serveBatch(q, vs.map { case JArray(xs) => xs.map(num(_).toFloat).toArray
+          case _ => Array.empty[Float] }.toArray)
+      else if (!denseOk && vs.forall(_.isInstanceOf[JObject])) {
+        val sparse = vs.map(q.sparseQueryOf).toArray
+        if (q.serve) serveSparseQueries(q, sparse)
+        else Array.fill(vs.length)(None)
+      } else Array.fill(vs.length)(None)
+    val out = vs.zip(served).map { case (v, s) => s.getOrElse(jobPathResponse(q, v)) }
     s"""{"results":[${out.mkString(",")}]}"""
   }
 
@@ -793,9 +819,10 @@ class GraftDb(val spark: SparkSession, val root: String,
     * of the dense ranking over `queryField` and the BM25 keyword ranking
     * over `textField`, both cut to `rrfCut` (default 50) before ranking.
     * With `"serve":true` both sides try their driver-resident tiers
-    * (dense IvfIndex.serve incl. fresh tail; BM25 sparse servePointDot over
-    * the impact index — WAND prefixes apply to stop-word terms) and fall
-    * back to their job paths individually. Keyword-side freshness is the
+    * (dense IvfIndex.serve incl. fresh tail; the BM25 keyword side through
+    * the one sparse handshake [[serveSparse]] over the impact index — WAND
+    * prefixes apply to stop-word terms) and fall back to their job paths
+    * individually. Keyword-side freshness is the
     * impact index's snapshot (frozen-stats caveat above); tombstones are
     * masked on both sides. Response rows are (__row_id, rrf). */
   private def hybridQuery(q: QueryRequest, terms: List[String]): String = {
@@ -833,10 +860,6 @@ class GraftDb(val spark: SparkSession, val root: String,
       if (filterStr.isEmpty) None
       else Some(graft.filter.FilterTranslator.translate(filterStr,
         st.read().schema))
-    // over-cap tombstone mask: serving (which needs the driver-side set)
-    // declines to the job paths, which mask via the store (read() /
-    // excludeIds) instead
-    val tombsOpt: Option[Long => Boolean] = tombstoneSet(st).map(_.contains)
 
     // dense side: (row_id asc-rank list), serve tier first when asked —
     // the float tier of the one dense serve. A filtered hybrid can still
@@ -870,24 +893,33 @@ class GraftDb(val spark: SparkSession, val root: String,
     val bmIdx = bm25Index(st, textField)
     // impact postings frozen before a compact() still contain the purged
     // rows while tombstoneIds() no longer lists them — the anti-join mask
-    // can't cover removals any more. Skip the serve tier and restrict the
-    // job path's candidates to live ids (the same restrictIds contract
-    // annQuery uses) until the rebuild refreshes the index.
+    // can't cover removals any more. The serve handshake declines, and
+    // the job path restricts its candidates to live ids (the same
+    // restrictIds contract annQuery uses) until the rebuild refreshes the
+    // index.
     val bmStale = bmIdx.indexedPurgeGen() < st.purgeGen()
     val kwServed: Option[Array[Long]] =
-      if (!serve || bmStale || tombsOpt.isEmpty ||
-          recallTarget.isDefined) None // floor: exact job cut (see above)
-      else if (filterStr.isEmpty)
-        scala.util.Try(bmIdx.servePointDot(qd, ones, cut,
-            exclude = tombsOpt.get))
-          .toOption.flatten.map(_.map(_._1))
-      else serveConds match {
-        // filtered keyword serving: mask the candidate walk with the
-        // dense index's complete pass verdict (decline → job path)
-        case Some(cs) if cs.nonEmpty =>
-          serveKeywordFiltered(st, queryField, bmIdx, qd, ones, cut, cs,
-            tombsOpt.get)
-        case _ => None
+      if (!serve || recallTarget.isDefined) None // floor: exact job cut (see above)
+      else {
+        // a filtered keyword side masks the candidate walk with the dense
+        // index's complete pass verdict (densePassVerdict), which only a
+        // dense queryField can lend; impacts are frozen per build, so the
+        // walk takes no fresh tail
+        val filtered = serveConds match {
+          case Some(Nil) => Some(None)
+          case Some(cs) if {
+              val f = st.schema.field(queryField).fieldType
+              FieldType.isVector(f) && !FieldType.isSparse(f)
+            } => Some(Some((Some(queryField), cs)))
+          case _ => None
+        }
+        for {
+          fl <- filtered
+          ss <- serveSparse(st, bmIdx, MetricType.DotProduct,
+            Array(SparseQuery(qd, ones)), cut, () => Right(emptySparseTail), fl,
+            recallTarget = None)
+          hits <- ss.hits.head
+        } yield hits.map(_._1)
       }
     val kwIds: Array[Long] = kwServed.getOrElse {
       // filter → rank over the filtered live ids (st.read() already
@@ -899,7 +931,7 @@ class GraftDb(val spark: SparkSession, val root: String,
         else if (bmStale) Some(st.read().select(
           org.apache.spark.sql.functions.col(TableStore.RowId)))
         else None
-      bmIdx.topKDot(qd, ones, cut,
+      bmIdx.search(MetricType.DotProduct, overlapOnly = true, qd, ones, cut,
           excludeIds = if (restrict.isDefined) None else st.tombstoneIds(),
           restrictIds = restrict)
         .collect().map(_.getLong(0))
@@ -1161,41 +1193,6 @@ class GraftDb(val spark: SparkSession, val root: String,
     Some(sb.toString)
   }
 
-  /** Keyword-side FILTERED serving for hybrid queries: the sparse impact
-    * index holds no attribute columns, so the mask comes from the DENSE
-    * index's scalar residency — [[graft.index.IvfIndex.passingIdSet]]
-    * gives a complete verdict for ids at or below its serving pin, the
-    * pre-filtered tail sidecar covers ids above it, and together they
-    * mask the sparse candidate walk exactly (filter-then-rank over the
-    * frozen impacts, the same semantics the job path's restrictIds
-    * semi-join computes). The dense pin is re-verified after the sparse
-    * sweep; any inconsistency declines to the job path. */
-  private def serveKeywordFiltered(st: TableStore, queryField: String,
-      bmIdx: graft.index.SparseIndex, qd: Array[Int], ones: Array[Float],
-      cut: Int, conds: Seq[graft.filter.SimpleConjuncts.Cond],
-      excl: Long => Boolean): Option[Array[Long]] = {
-    val f = st.schema.field(queryField)
-    if (!FieldType.isVector(f.fieldType) || FieldType.isSparse(f.fieldType))
-      return None
-    var attempts = 0
-    while (attempts < 3) {
-      attempts += 1
-      densePassVerdict(st, queryField, conds) match {
-        case None => return None
-        case Some((passes, verify)) =>
-          val hits = scala.util.Try(bmIdx.servePointDot(qd, ones, cut,
-            exclude = id => excl(id) || !passes(id))).toOption.flatten
-          hits match {
-            case Some(h) =>
-              if (verify()) return Some(h.map(_._1))
-            // else: a rebuild raced the verdict — rebuild it and retry
-            case None => return None // sparse tier declined
-          }
-      }
-    }
-    None
-  }
-
   /** Complete pass verdict BORROWED from a dense index's scalar
     * residency: `passes` judges EVERY live id — the resident pass set
     * covers ids at or below the dense serving pin, the pre-filtered tail
@@ -1321,7 +1318,7 @@ class GraftDb(val spark: SparkSession, val root: String,
     val st = q.st
     val queryField = q.queryField
     (q.json \ "queryVector") match {
-      case o: JObject => return serveSparseQuery(q, o)
+      case _: JObject => return serveSparseQueries(q, Array(q.sparseQuery)).head
       case _ => ()
     }
     val dense: Array[Float] = (q.json \ "queryVector") match {
@@ -1338,26 +1335,29 @@ class GraftDb(val spark: SparkSession, val root: String,
     serveBatch(q, Array(dense)).head
   }
 
-  /** [[serveQuery]] for a SPARSE query vector. Sparse postings carry no
-    * attribute columns, but a resident conjunction can still serve by
-    * borrowing a dense sibling index's pass verdict (densePassVerdict —
-    * the hybrid keyword side's mechanism): dot/cosine keep their
-    * retrieval-mode contract under the mask, and Euclidean stays
-    * EXACT-or-decline — its proof bounds unseen rows by DISTANCE (norm
-    * order), which holds for masked rows identically. FACETS borrow a
-    * donor the same way (values by id from its scalar residency + tail
+  /** [[serveQuery]] and [[batchQuery]] for SPARSE query vectors: one
+    * answer per query, None = that query goes to the job path. Sparse
+    * postings carry no attribute columns, but a resident conjunction can
+    * still serve by borrowing a dense sibling index's pass verdict
+    * (densePassVerdict — the hybrid keyword side's mechanism): dot/cosine
+    * keep their retrieval-mode contract under the mask, and Euclidean
+    * stays EXACT-or-decline — its proof bounds unseen rows by DISTANCE
+    * (norm order), which holds for masked rows identically. FACETS borrow
+    * a donor the same way (values by id from its scalar residency + tail
     * sidecar — sparseFacetsJson). A declared recall floor: EUCLIDEAN
-    * sparse serving is exact-or-decline (servePointEuclid's norm-order
-    * truncation proof), so a served answer trivially honors any floor;
-    * DOT/COSINE serve it with the ZERO-GAP proof (round 12): every row
-    * outside the candidate walk shares no query dim, so its dot is
-    * EXACTLY 0 (cosine distance exactly 1) — if the k-th served score
-    * clears that constant by an fp margin, the candidates provably
-    * contain the true top-k and the answer is exact (any floor holds);
-    * otherwise decline (serveSparse checks per answer). */
-  private def serveSparseQuery(q: QueryRequest, o: JObject): Option[String] = {
+    * sparse serving is exact-or-decline (the norm-order truncation proof
+    * of `SparseIndex.serve`), so a served answer trivially honors any
+    * floor; DOT/COSINE serve it with the ZERO-GAP proof
+    * ([[provesZeroGap]]), checked per answer. */
+  private def serveSparseQueries(q: QueryRequest, queries: Array[SparseQuery])
+      : Array[Option[String]] = {
     val st = q.st
     val queryField = q.queryField
+    val declined = Array.fill[Option[String]](queries.length)(None)
+    if (!Files.exists(Paths.get(
+        s"$root/${st.schema.name}/spidx_$queryField/sp_meta.json")))
+      return declined
+    val idx = sparseIndex(st, queryField)
     def denseDonor(cols: Set[String]): Option[String] =
       st.schema.vectorFields.find { df =>
         !FieldType.isSparse(df.fieldType) &&
@@ -1379,36 +1379,55 @@ class GraftDb(val spark: SparkSession, val root: String,
           case None =>
             // sparse-ONLY: values from the sparse index's OWN scalar
             // residency + tail sidecar (round 12); undeclared → job
-            if (fcols.subsetOf(
-                sparseIndex(st, queryField).serveFilterColumns().toSet))
+            if (fcols.subsetOf(idx.serveFilterColumns().toSet))
               Some((None, q.facets))
-            else return None
+            else return declined
         }
       }
-    q.conds match {
-      case None => None // outside the serve sub-grammar
-      case Some(Nil) =>
-        serveSparse(st, queryField, o, q.limit,
-          facetDonor = facetDonor, recallTarget = q.recallTarget)
+    // verdict source, in preference order: a dense sibling whose
+    // DECLARED residency covers the conjunction's columns (values already
+    // resident, zero extra jobs), else — the sparse-ONLY case — the
+    // sparse index's OWN declaration (one cached pruned pass-set job,
+    // then warm); neither ⇒ job path
+    val filtered = q.conds match {
+      case None => return declined // outside the serve sub-grammar
+      case Some(Nil) => None
       case Some(cs) =>
-        // verdict source, in preference order: a dense sibling whose
-        // DECLARED residency covers the conjunction's columns (values
-        // already resident, zero extra jobs), else — the sparse-ONLY
-        // case — the sparse index's OWN declaration (one cached pruned
-        // pass-set job, then warm); neither ⇒ job path
-        denseDonor(cs.map(_.col).toSet) match {
-          case Some(dn) => serveSparse(st, queryField, o, q.limit,
-            filtered = Some((Some(dn), cs)), facetDonor = facetDonor,
-            recallTarget = q.recallTarget)
+        val cols = cs.map(_.col).toSet
+        denseDonor(cols) match {
+          case Some(dn) => Some((Some(dn), cs))
           case None =>
-            if (cs.map(_.col).toSet.subsetOf(
-                sparseIndex(st, queryField).serveFilterColumns().toSet))
-              serveSparse(st, queryField, o, q.limit,
-                filtered = Some((None, cs)), facetDonor = facetDonor,
-                recallTarget = q.recallTarget)
-            else None
+            if (cols.subsetOf(idx.serveFilterColumns().toSet)) Some((None, cs))
+            else return declined
         }
     }
+    serveSparse(st, idx, st.schema.field(queryField).metric, queries,
+        math.min(q.limit, maxRenderRows), () => sparseFreshTail(st, idx, queryField),
+        filtered, q.recallTarget) match {
+      case None => declined
+      case Some(ss) => ss.hits.map(_.flatMap(
+        sparseResponse(st, idx, ss, _, filtered.isDefined, facetDonor)))
+    }
+  }
+
+  /** A served sparse answer's response: [[servedJson]] with, when asked,
+    * facets over the served top-k — values from a dense donor's scalar
+    * residency + tail sidecar when one declares the columns, else from
+    * the sparse index's OWN values residency (id-keyed either way — a
+    * miss declines, never miscounts), same executor as the dense path.
+    * None = the facet source is unavailable: the query declines whole. */
+  private def sparseResponse(st: TableStore, idx: graft.index.SparseIndex,
+      ss: SparseServe, hits: Array[(Long, Double)], filtered: Boolean,
+      facetDonor: Option[(Option[String], Seq[Facet])]): Option[String] = {
+    val facetJson: String = facetDonor match {
+      case None => ""
+      case Some((Some(dn), fs)) =>
+        sparseFacetsJson(st, dn, hits, fs).getOrElse(return None)
+      case Some((None, fs)) =>
+        sparseSelfFacetsJson(st, idx, ss.pin, hits, ss.tail, fs)
+          .getOrElse(return None)
+    }
+    Some(servedJson(hits, filtered, facetJson))
   }
 
   /** The sparse index's scalar VALUES residency at a pin: ONE cached
@@ -1477,123 +1496,79 @@ class GraftDb(val spark: SparkSession, val root: String,
     }
   }
 
-  /** `"serve":true` for a SPARSE query: answered from the driver-resident
-    * per-dim posting cache. Cosine/DotProduct serve in RETRIEVAL mode
-    * (SparseIndex.servePointDot) — only rows sharing >= 1 dim with the
-    * query are candidates, ranked by dot product (the classic inverted-
-    * index serving contract); distances are the metric form of the dot
-    * (cosine: 1 - dot; dot-product: -dot). Euclidean serves EXACTLY
-    * (SparseIndex.servePointEuclid): overlap candidates score off posting-
-    * resident norms, non-overlap candidates fill from the resident
-    * min-norm list, and when exactness cannot be proven the query falls
-    * back to the job path. Fresh tail + tombstone masks mirror the dense
-    * serve path. */
-  private def serveSparse(st: TableStore, queryField: String,
-      o: JObject, limit: Int,
-      filtered: Option[(Option[String], Seq[graft.filter.SimpleConjuncts.Cond])] = None,
-      facetDonor: Option[(Option[String], Seq[Facet])] = None,
-      recallTarget: Option[Double] = None)
-      : Option[String] = {
-    val f = st.schema.field(queryField)
-    if (!Files.exists(Paths.get(
-        s"$root/${st.schema.name}/spidx_$queryField/sp_meta.json")))
-      return None
-    val idx = sparseIndex(st, queryField)
+  /** One sparse serve's answers (aligned with its queries) with the pin
+    * and the fresh tail they were served against — sparse-only facets
+    * read both. */
+  private final case class SparseServe(pin: Long, tail: SparseTail,
+      hits: Array[Option[Array[(Long, Double)]]])
+
+  /** The one sparse serve handshake, shared by single and batch sparse
+    * queries and the hybrid keyword side: the index postdates the last
+    * purge, then under one serving pin ([[pinCoherent]]) the fresh tail
+    * (`tail`; the frozen BM25 impacts take none), the tombstone mask, the
+    * filter's pass verdict, ONE `SparseIndex.serve` over all `queries`
+    * and the pin re-check. `filtered` = (the dense donor lending its pass
+    * verdict, or None for the sparse index's OWN declared columns; the
+    * conjunction). Answers are (`__row_id`, `@distance`) in the metric's
+    * form: dot/cosine in retrieval mode, Euclidean exact-or-decline. With
+    * a declared floor a dot/cosine answer must pass [[provesZeroGap]].
+    * None = the handshake itself declined (stale index, tail or
+    * tombstone mask over cap, no usable verdict, pin churn); a per-query
+    * None is that query's decline. */
+  private def serveSparse(st: TableStore, idx: graft.index.SparseIndex,
+      metric: MetricType.Value, queries: Array[SparseQuery], k: Int,
+      tail: () => Either[Unit, SparseTail],
+      filtered: Option[(Option[String], Seq[graft.filter.SimpleConjuncts.Cond])],
+      recallTarget: Option[Double]): Option[SparseServe] = {
     if (idx.indexedPurgeGen() < st.purgeGen()) return None // stale vs compact
-    val qIdx = (o \ "indices").asInstanceOf[JArray].arr.map(num(_).toInt).toArray
-    val qVal = (o \ "values").asInstanceOf[JArray].arr.map(num(_).toFloat).toArray
-    val k = math.min(limit, maxRenderRows)
-    // one attempt under `pin`: the pin, the hits, the tail they merged
-    // and the donor's post-sweep re-verify
-    def attempt(pin: Long, tailData: SparseTail)
-        : Option[(Long, Array[(Long, Double)], SparseTail, () => Boolean)] = {
-      val tail = tailData.byDim
-      val tailNorms = tailData.rowNorms
-      // pure cache hit: the tail probe refreshed the tombstone cache for
-      // this version inside its own (single) job; None = mask over cap
-      val tombs = tombstoneSet(st).getOrElse(return None)
-      // filtered retrieval: a complete pass verdict composes into the
-      // candidate walk — from a dense donor's scalar residency when one
-      // exists (pin re-verified next to the sparse pin), or from the sparse
-      // index's OWN declared columns on sparse-only tables (id-keyed
-      // immutable content: nothing to re-verify)
-      val (passes, verifyDonor): (Long => Boolean, () => Boolean) =
-        filtered match {
-          case None => ((_: Long) => true, () => true)
-          case Some((Some(df), cs)) =>
-            densePassVerdict(st, df, cs).getOrElse(return None)
+    pinCoherent(() => Some(idx.servingWatermark()), () => idx.indexedWatermark(),
+        () => idx.rebaseServing(), tail) { (pin, t) =>
+      // a sparse field's tail probe refreshed the tombstone cache for this
+      // version inside its own (single) job, so this is a cache hit there;
+      // None = mask over cap
+      tombstoneSet(st).flatMap { tombs =>
+        // filtered retrieval: a complete pass verdict composes into the
+        // candidate walk — from a dense donor's scalar residency (its pin
+        // re-verified next to the sparse pin), or from the sparse index's
+        // OWN declared columns on sparse-only tables (id-keyed immutable
+        // content: nothing to re-verify)
+        val verdict: Option[(Long => Boolean, () => Boolean)] = filtered match {
+          case None => Some(((_: Long) => true, () => true))
+          case Some((Some(donor), cs)) => densePassVerdict(st, donor, cs)
           case Some((None, cs)) =>
-            (sparseSelfVerdict(st, idx, pin, cs, tailData).getOrElse(return None),
-              () => true)
+            sparseSelfVerdict(st, idx, pin, cs, t).map(p => (p, () => true))
         }
-      val ex: Long => Boolean = id => tombs.contains(id) || !passes(id)
-      val hits: Array[(Long, Double)] =
-        if (f.metric == MetricType.Euclidean)
-          // None = exactness unprovable -> job path
-          idx.servePointEuclid(qIdx, qVal, k, exclude = ex,
-            tail = tail, tailNorms = tailNorms).getOrElse(return None)
-        else idx.servePointDot(qIdx, qVal, k, exclude = ex,
-          tail = tail) match {
-            case Some(h) => h.map { case (id, dot) =>
-              (id, if (f.metric == MetricType.Cosine) 1.0 - dot else -dot)
-            }
-            // probe set over the resident budget (cardinality
-            // pre-check declined before any collect) -> job path
-            case None => return None
-          }
-      // declared floor on DOT/COSINE: the ZERO-GAP proof. Every row the
-      // candidate walk never saw shares no query dim, so its raw dot is
-      // EXACTLY 0 — distance exactly 0.0 (dot) / 1.0 (cosine). If k hits
-      // came back and the k-th strictly clears that constant by an fp
-      // margin (the two engines may not sum the overlap products in the
-      // same order), no unseen row can enter the true top-k: the served
-      // answer IS exact and any floor holds. Fewer than k overlap
-      // candidates, or a k-th at/past the constant, proves nothing →
-      // decline to the exact job cut. (Euclidean's own serve path is
-      // already exact-or-decline.)
-      if (recallTarget.isDefined && f.metric != MetricType.Euclidean) {
-        val unseen = if (f.metric == MetricType.Cosine) 1.0 else 0.0
-        // fp margin scaled to the k-th hit's own magnitude: an absolute
-        // 1e-9 floor is blind to value scale — a raw dot accumulated from
-        // large sparse values carries absolute rounding error far above
-        // 1e-9, which would let a non-positive-dot candidate outrank an
-        // unseen exact-zero row (round-12 ADVICE). Cosine dots are
-        // normalized (|d| ≤ ~2) so the relative term is tiny there; raw
-        // dot distances grow with the data and the margin grows with
-        // them. Strictly larger margin than before → can only turn a
-        // serve into a decline, never the reverse.
-        // hits can legitimately be EMPTY (every candidate excluded by
-        // tombstones/filter, or no query dim has postings) — guard before
-        // touching hits.last or the margin computation itself throws and
-        // escapes query() instead of declining.
-        if (hits.isEmpty || hits.length < k) return None
-        val margin = 1e-9 * (1.0 + math.abs(hits.last._2))
-        if (hits.last._2 >= unseen - margin)
-          return None // k = 0 requests included: nothing provable
+        verdict.map { case (passes, verify) =>
+          val hits = idx.serve(queries.map(sq => (sq.indices, sq.values)), k,
+            metric, id => tombs.contains(id) || !passes(id), t.byDim, t.rowNorms)
+          (SparseServe(pin, t,
+            if (recallTarget.isEmpty) hits
+            else hits.map(_.filter(provesZeroGap(metric, k, _)))), verify)
+        }
       }
-      Some((pin, hits, tailData, verifyDonor))
-    }
-    // tail and resident postings share one pin; a sparse or donor pin
-    // that moved mid-serve retries
-    val (pin, hits, tailData, _) = pinCoherent(
-        () => Some(idx.servingWatermark()), () => idx.indexedWatermark(),
-        () => idx.rebaseServing(), () => sparseFreshTail(st, idx, queryField))(
-      attempt)((pin, a) => idx.servingWatermark() == pin && a._4())
-      .getOrElse(return None)
-    // facets aggregate the served top-k; values come from a dense donor's
-    // scalar residency + tail sidecar when one declares the columns, else
-    // from the sparse index's OWN values residency (id-keyed either way —
-    // a miss declines, never miscounts), same executor as the dense path
-    val facetJson: String = facetDonor match {
-      case None => ""
-      case Some((Some(dn), fs)) =>
-        sparseFacetsJson(st, dn, hits, fs).getOrElse(return None)
-      case Some((None, fs)) =>
-        sparseSelfFacetsJson(st, idx, pin, hits, tailData, fs)
-          .getOrElse(return None)
-    }
-    Some(servedJson(hits, filtered.isDefined, facetJson))
+    } { (pin, a) => idx.servingWatermark() == pin && a._2() }.map(_._1)
   }
+
+  /** The ZERO-GAP proof that lets a DOT/COSINE sparse answer honor a
+    * declared recall floor. Every row the candidate walk never saw shares
+    * no query dim, so its raw dot is EXACTLY 0 — distance exactly 0.0
+    * (dot) / 1.0 (cosine). If k hits came back and the k-th strictly
+    * clears that constant by an fp margin (the two engines may not sum
+    * the overlap products in the same order), no unseen row can enter the
+    * true top-k: the served answer IS exact and any floor holds. The
+    * margin scales with the k-th hit's own magnitude: an absolute 1e-9
+    * floor is blind to value scale, since a raw dot accumulated from large
+    * sparse values carries rounding error far above it (round-12 ADVICE).
+    * Fewer than k hits (none at all included: every candidate excluded,
+    * or no query dim has postings; and k = 0), or a k-th at/past the
+    * constant, proves nothing. Euclidean serving is exact-or-decline
+    * already. */
+  private def provesZeroGap(metric: MetricType.Value, k: Int,
+      hits: Array[(Long, Double)]): Boolean =
+    metric == MetricType.Euclidean || (hits.nonEmpty && hits.length >= k && {
+      val unseen = if (metric == MetricType.Cosine) 1.0 else 0.0
+      hits.last._2 < unseen - 1e-9 * (1.0 + math.abs(hits.last._2))
+    })
 
   /** Facet source for SPARSE-ONLY serves (no dense donor declares the
     * facet's columns): values by id from the sparse index's own scalar
@@ -1675,10 +1650,7 @@ class GraftDb(val spark: SparkSession, val root: String,
     }
     val qv: QueryVector = vector match {
       case JArray(vals) => DenseQuery(vals.map(num(_).toFloat).toArray)
-      case o: JObject =>
-        SparseQuery(
-          (o \ "indices").asInstanceOf[JArray].arr.map(num(_).toInt).toArray,
-          (o \ "values").asInstanceOf[JArray].arr.map(num(_).toFloat).toArray)
+      case o: JObject => q.sparseQueryOf(o)
       case _ => (req \ "query") match {
         // search-by-content (db_server.cpp:512-600): embed the query text
         // with the model of the queried field's embedding index
@@ -2015,8 +1987,8 @@ class GraftDb(val spark: SparkSession, val root: String,
         val tombs = if (stale) None else st.tombstoneIds()
         val liveIds = if (stale) Some(live.select(col(rowId))) else None
         val tailRows = live.filter(col(rowId) > idx.indexedWatermark())
-        val cut = idx.topKDistance(st.schema.field(queryField).metric,
-          qIdx, qVal, limit,
+        val cut = idx.search(st.schema.field(queryField).metric,
+          overlapOnly = false, qIdx, qVal, limit,
           tailPostings = Some(graft.index.SparseIndex.postingsOf(
             tailRows, queryField, rowId)),
           tailNorms = Some(graft.index.SparseIndex.normsOfColumn(
@@ -2148,7 +2120,7 @@ class GraftDb(val spark: SparkSession, val root: String,
   /** GET /statistics analog. Tables with built indexes also report the
     * index cardinality stats backing the serving guard (per-cluster rows /
     * per-dim postings, summarized): the observability face of the numbers
-    * `IvfIndex.serve`/`servePointDot` check before any cold collect. */
+    * `IvfIndex.serve`/`SparseIndex.serve` check before any cold collect. */
   // per-index cardinality fragment for statistics(), keyed on the index
   // freshness stamp: a polling monitor must read pure JVM state on repeat
   // calls, not run a Spark aggregation job per indexed field per call.

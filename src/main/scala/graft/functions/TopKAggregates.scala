@@ -68,6 +68,16 @@ final class TopKHeap(val k: Int) extends Serializable {
     }
   }
 
+  /** Whether the heap holds its k pairs. */
+  def full: Boolean = size >= k
+
+  /** The worst retained distance: the k-th smallest once `full` (k > 0). */
+  def worst: Double = ds(0)
+
+  /** Whether `offer(d, id)` would keep the pair. */
+  def admits(d: Double, id: Long): Boolean =
+    k > 0 && d == d && (size < k || before(d, id, ds(0), ids(0)))
+
   def mergeFrom(o: TopKHeap): Unit = {
     var j = 0
     while (j < o.size) { offer(o.ds(j), o.ids(j)); j += 1 }

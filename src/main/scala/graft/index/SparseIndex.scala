@@ -18,10 +18,11 @@ import graft.types.MetricType
   * query touching d dims prunes the scan to d partition directories at the
   * parquet-footer level, and the dim sort lets row-group stats skip
   * everything but the queried dims inside them — per-query cost is
-  * |postings of the query's dims|, independent of corpus size. This is the
-  * piece `SparseSearch.topKDot` (the per-query plan) deliberately leaves
-  * out: without it every search re-explodes the full corpus, a full scan
-  * at 100 TB.
+  * |postings of the query's dims|, independent of corpus size; without it
+  * every search would re-explode the full corpus, a full scan at 100 TB.
+  *
+  * The query surface is two methods, as on IvfIndex: `search`, the one
+  * job path, and `serve`, the one batch-native serve from resident postings.
   *
   * Lifecycle mirrors IvfIndex exactly:
   *  - `sp_meta.json` stamps (watermark, count, purge, buckets); every
@@ -39,8 +40,9 @@ import graft.types.MetricType
   * brute-force for ALL metrics — a row sharing no dim with the query has
   * dot 0 but still a finite distance, so the distance-mode search left-
   * joins candidates against the norms universe rather than returning
-  * overlap-only rows. Retrieval mode (`topKDot`) keeps the classic
-  * overlap-only inverted-index contract.
+  * overlap-only rows. Retrieval mode (`search(…, overlapOnly = true)`,
+  * and `serve` for dot and cosine) keeps the classic overlap-only
+  * inverted-index contract.
   */
 class SparseIndex(
     val spark: SparkSession,
@@ -303,81 +305,68 @@ class SparseIndex(
       base = SparseIndex.readBase(metaPath), gen = SparseIndex.readGen(metaPath))
   }
 
-  /** Retrieval-mode top-K: highest dot product first, ties by id — the
-    * classic inverted-index contract (only rows sharing >= 1 dim with the
-    * query can appear). One pruned scan + broadcast dim join + partial-
-    * aggregated groupBy(id) + TakeOrderedAndProject.
+  /** The one job path: top-`k` as `(idCol, @distance)` ascending, ties by
+    * id, with `@distance` in the metric's form (dot product `-dot`,
+    * cosine `1 - dot` against the normalized query, Euclidean squared
+    * L2). One pruned scan of the query's dims, a broadcast dim join and a
+    * partial-aggregated groupBy(id), then TakeOrderedAndProject.
     *
-    *  - `tailPostings`: (idCol, dim, v) of rows above the watermark,
-    *    unioned before scoring (rebuild-while-querying freshness);
+    *  - `overlapOnly` = retrieval mode, the classic inverted-index
+    *    contract: only rows sharing a dim with the query are candidates
+    *    (BM25 and dot retrieval). Otherwise distance mode, exact against
+    *    the reference's brute force: the overlap aggregate is LEFT-joined
+    *    from the norms universe, so a row sharing no dim scores dot 0 at
+    *    its finite distance. Euclidean needs that universe, so it never
+    *    runs in retrieval mode;
+    *  - `tailPostings` / `tailNorms`: (idCol, dim, v) and (idCol, norm2)
+    *    of rows above the watermark, unioned before scoring
+    *    (rebuild-while-querying freshness);
     *  - `excludeIds`: tombstoned ids, broadcast anti-join;
     *  - `restrictIds`: live ids semi-join (post-compact correctness, same
     *    contract as IvfIndex.search). */
-  def topKDot(qIdx: Array[Int], qVal: Array[Float], k: Int,
-      tailPostings: Option[DataFrame] = None,
-      excludeIds: Option[DataFrame] = None,
-      restrictIds: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val q = qIdx.zip(qVal).toSeq.toDF("dim", "qval")
-    val base = prunedPostings(qIdx).select(col(idCol), col("dim"), col("v"))
-    val withTail = tailPostings match {
-      case Some(t) => base.unionByName(t.select(col(idCol), col("dim"), col("v")))
-      case None => base
-    }
-    val masked = SparseIndex.mask(withTail, idCol, excludeIds, restrictIds)
-    // double-cast BEFORE the multiply: a float x float product rounds to
-    // float, while the row-major merge scan (SparseVec.merge) multiplies
-    // in double — near-tied rows would order differently between paths
-    masked
-      .join(broadcast(q), "dim")
-      .groupBy(col(idCol))
-      .agg(sum(col("v").cast("double") * col("qval").cast("double")).as("dot"))
-      .orderBy(col("dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Exact distance-mode top-K, `(idCol, @distance)` ascending: matches the
-    * reference's brute-force result for every metric, including rows that
-    * share NO dim with the query (dot 0, finite distance). Candidates are
-    * the pruned-overlap aggregate LEFT-joined from the norms universe —
-    * the norms scan is one slim (id, norm2) pass, ~1% of the posting
-    * bytes, and the join is an equi-join on id. Retrieval workloads that
-    * only want overlapping docs should use `topKDot`. */
-  def topKDistance(metric: MetricType.Value, qIdx: Array[Int],
-      qVal: Array[Float], k: Int,
+  def search(metric: MetricType.Value, overlapOnly: Boolean,
+      qIdx: Array[Int], qVal: Array[Float], k: Int,
       tailPostings: Option[DataFrame] = None,
       tailNorms: Option[DataFrame] = None,
       excludeIds: Option[DataFrame] = None,
       restrictIds: Option[DataFrame] = None): DataFrame = {
+    require(!(overlapOnly && metric == MetricType.Euclidean),
+      "Euclidean sparse search ranks every row: it has no overlap-only mode")
     import spark.implicits._
-    val q = qIdx.zip(qVal).toSeq.toDF("dim", "qval")
-    var qNorm = 0.0
-    qVal.foreach(v => qNorm += v.toDouble * v.toDouble)
+    val qv = SparseIndex.queryValues(metric, qVal)
+    val q = qIdx.zip(qv).toSeq.toDF("dim", "qval")
     val base = prunedPostings(qIdx).select(col(idCol), col("dim"), col("v"))
-    val withTail = tailPostings match {
-      case Some(t) => base.unionByName(t.select(col(idCol), col("dim"), col("v")))
-      case None => base
-    }
-    val overlap = withTail
+    val withTail = tailPostings.fold(base)(t =>
+      base.unionByName(t.select(col(idCol), col("dim"), col("v"))))
+    // retrieval masks the postings; distance mode masks the universe
+    val postings =
+      if (overlapOnly) SparseIndex.mask(withTail, idCol, excludeIds, restrictIds)
+      else withTail
+    // double-cast BEFORE the multiply: a float x float product rounds to
+    // float, while the row-major merge scan (SparseVec.merge) multiplies
+    // in double — near-tied rows would order differently between paths
+    val dots = postings
       .join(broadcast(q), "dim")
       .groupBy(col(idCol))
-      .agg(sum(col("v").cast("double") * col("qval").cast("double")).as("dot"))
-    val universe = tailNorms match {
-      case Some(t) => norms().unionByName(t.select(col(idCol), col("norm2")))
-      case None => norms()
-    }
-    val masked = SparseIndex.mask(universe, idCol, excludeIds, restrictIds)
-    val scored = masked
-      .join(overlap, Seq(idCol), "left")
-      .withColumn("__dot", coalesce(col("dot"), lit(0.0)))
+      .agg(sum(col("v").cast("double") * col("qval").cast("double")).as("__dot"))
+    val scored =
+      if (overlapOnly) dots
+      else {
+        val universe = tailNorms.fold(norms())(t =>
+          norms().unionByName(t.select(col(idCol), col("norm2"))))
+        SparseIndex.mask(universe, idCol, excludeIds, restrictIds)
+          .join(dots, Seq(idCol), "left")
+          .withColumn("__dot", coalesce(col("__dot"), lit(0.0)))
+      }
+    var qNorm = 0.0
+    qv.foreach(v => qNorm += v.toDouble * v.toDouble)
     val dist = metric match {
       case MetricType.Euclidean => col("norm2") - lit(2.0) * col("__dot") + lit(qNorm)
       case MetricType.Cosine => lit(1.0) - col("__dot")
       case MetricType.DotProduct => -col("__dot")
     }
     scored
-      .withColumn("@distance", dist)
-      .select(col(idCol), col("@distance"))
+      .select(col(idCol), dist.as("@distance"))
       .orderBy(col("@distance").asc, col(idCol).asc)
       .limit(k)
   }
@@ -393,7 +382,7 @@ class SparseIndex(
     * concurrent warm queries. The norm array rides along so Euclidean
     * serving can score overlap candidates without a second lookup. */
   @transient private var serveCache =
-    new java.util.LinkedHashMap[Int, (Array[Long], Array[Double], Array[Double])](64, 0.75f, true)
+    new java.util.LinkedHashMap[Int, SparseIndex.Postings](64, 0.75f, true)
   @transient private var servePostingsResident = 0L
 
   /** Serving cache budget in resident postings (id+value+norm = 24 bytes
@@ -613,7 +602,7 @@ class SparseIndex(
     * sentinel norm -1: dot serving ignores norms entirely, and Euclidean
     * serving DECLINES to the job path when it meets one — never a null
     * crash, never a silently wrong distance. */
-  protected def loadDimPostings(missing: Array[Int]): Map[Int, (Array[Long], Array[Double], Array[Double])] = {
+  protected def loadDimPostings(missing: Array[Int]): Map[Int, SparseIndex.Postings] = {
     val hasNorm = postings().columns.contains("norm2")
     // pack EXECUTOR-SIDE into primitive arrays: a posting Row is ~100 B of
     // object overhead around 28 B of data, so collecting Rows pays ~4x in
@@ -665,9 +654,9 @@ class SparseIndex(
     * The capacity check runs BEFORE the collect, against persisted per-dim
     * counts (or a pruned count probe on pre-stats layouts): a hot dim's
     * posting list larger than `maxServePostings` never reaches the driver. */
-  private def residentLists(qIdx: Array[Int]): Option[Array[(Array[Long], Array[Double], Array[Double])]] = {
+  private def residentLists(qIdx: Array[Int]): Option[Array[SparseIndex.Postings]] = {
     var attempts = 0
-    var lists: Array[(Array[Long], Array[Double], Array[Double])] = null
+    var lists: Array[SparseIndex.Postings] = null
     while (lists == null) {
       attempts += 1
       if (attempts > 8) return decline // thrash: degrade to the job path
@@ -683,9 +672,9 @@ class SparseIndex(
       // between the stamp read and the collect surfaces as a
       // FileNotFoundException from the job — that is one failed attempt
       // (the next pass re-reads the stamp and re-lists), NOT an exception
-      // out of servePointDot; persistent churn declines via the attempt
+      // out of serve; persistent churn declines via the attempt
       // bound, honoring the decline-instead-of-throw serving contract
-      var loaded: Map[Int, (Array[Long], Array[Double], Array[Double])] = null
+      var loaded: Map[Int, SparseIndex.Postings] = null
       try {
         if (missing.nonEmpty) {
           // cardinality pre-check: what would THIS query need resident? The
@@ -704,7 +693,7 @@ class SparseIndex(
           if (projected + retained > maxServePostings) return decline
         }
         loaded =
-          if (missing.isEmpty) Map.empty[Int, (Array[Long], Array[Double], Array[Double])]
+          if (missing.isEmpty) Map.empty[Int, SparseIndex.Postings]
           else loadDimPostings(missing) // outside the lock: a real Spark job
       } catch { case scala.util.control.NonFatal(_) => }
       if (loaded == null) {
@@ -741,28 +730,114 @@ class SparseIndex(
     Some(lists)
   }
 
-  /** Bounded top-k heap over (id, dist): keep the k SMALLEST distances,
-    * ties broken by smaller id. Returns entries ascending. */
-  private def smallestK(k: Int): SparseIndex.BoundedTopK =
-    new SparseIndex.BoundedTopK(k)
-
-  /** Low-latency top-K dot product answered on the DRIVER: probe the
-    * query's dims from the resident posting cache, accumulate per-id
-    * partial products in an open hash map, cut with a bounded heap.
-    * Ordering matches `topKDot` (dot desc, id asc). `exclude` masks
-    * known-dead ids; `tail` appends fresh postings packed as
-    * (ids, values, norms) per dim. None = the probe set exceeds the
-    * resident budget (cardinality pre-check) — caller uses the job path. */
-  def servePointDot(qIdx: Array[Int], qVal: Array[Float], k: Int,
-      exclude: Long => Boolean = _ => false,
-      tail: Map[Int, (Array[Long], Array[Double], Array[Double])] = Map.empty)
-      : Option[Array[(Long, Double)]] = {
-    val (hotDims, prefixCap) = planWand(qIdx) match {
-      case Some(p) => p
-      case None => return decline // stats unreadable under rebuild churn
+  /** The one resident serve: top-`k` for a batch of sparse queries
+    * from the resident per-dim posting cache, with no Spark job on the
+    * warm path. A single query is a batch of one. Each query gets
+    * `(id, @distance)` ascending, ties by smaller id, in the metric's form
+    * (dot product `-dot`, cosine `1 - dot` against the normalized query,
+    * Euclidean squared L2), or None: that query's decline, counted once,
+    * which the caller's job path answers.
+    *
+    *  - Dot product and cosine serve in RETRIEVAL mode, the classic
+    *    inverted-index contract and the order of `search(…, overlapOnly =
+    *    true)`: only rows sharing a dim with the query are candidates. A
+    *    dim whose full posting list does not fit the residency budget
+    *    serves from an impact-ordered prefix under the WAND proof
+    *    ([[retrievalCut]]).
+    *  - Euclidean is EXACT or declines ([[euclidCut]]): overlap rows score
+    *    off their posting-resident norms, rows sharing no dim fill from the
+    *    resident min-norm list. A query touching a dim over the budget
+    *    declines.
+    *
+    * `exclude` masks dead (or filtered-out) ids. `tail` holds the fresh
+    * rows' postings per dim as (ids, values, norms) and `tailNorms` the
+    * (id, norm2) of every fresh row, both above the serving pin. */
+  def serve(queries: Array[(Array[Int], Array[Float])], k: Int,
+      metric: MetricType.Value, exclude: Long => Boolean = _ => false,
+      tail: Map[Int, SparseIndex.Postings] = Map.empty,
+      tailNorms: Array[(Long, Double)] = Array.empty)
+      : Array[Option[Array[(Long, Double)]]] =
+    queries.map { case (qIdx, qVal) =>
+      if (k <= 0) Some(Array.empty[(Long, Double)])
+      else serveOne(qIdx, SparseIndex.queryValues(metric, qVal), k, metric,
+        exclude, tail, tailNorms)
     }
-    if (hotDims.isEmpty) servePointDotFull(qIdx, qVal, k, exclude, tail)
-    else servePointDotWand(qIdx, qVal, k, exclude, tail, hotDims, prefixCap)
+
+  private def serveOne(qIdx: Array[Int], qVal: Array[Float], k: Int,
+      metric: MetricType.Value, exclude: Long => Boolean,
+      tail: Map[Int, SparseIndex.Postings], tailNorms: Array[(Long, Double)])
+      : Option[Array[(Long, Double)]] = {
+    val euclid = metric == MetricType.Euclidean
+    // dims over the budget serve from a prefix; Euclidean has no prefix
+    // proof, so residentLists' own pre-check declines them
+    val (hotDims, prefixCap) =
+      if (euclid) (Array.empty[Int], 0)
+      else planWand(qIdx).getOrElse(return decline) // stats unreadable under churn
+    // the WAND proof needs PERSISTED magnitude bounds: a layout whose
+    // dim_stats predate the maxv column (or has none at all) has no
+    // certified ceiling on unseen postings and declines. The maintenance
+    // heal loop's forced rebuild upgrades such layouts.
+    val hotBounds: Array[Double] =
+      if (hotDims.isEmpty) Array.empty
+      else dimMaxAbsResident() match {
+        case Some((persisted, absent)) =>
+          val b = hotDims.map(d => persisted.getOrElse(d, absent))
+          if (b.contains(Double.MaxValue)) return decline
+          b
+        case None => return decline
+      }
+    val fullDims = qIdx.filterNot(hotDims.contains)
+    val lists =
+      if (fullDims.isEmpty && hotDims.nonEmpty) Array.empty[SparseIndex.Postings]
+      else residentLists(fullDims).getOrElse(return None) // counted there
+    // each hot dim's prefix, its tail bound tightened with the persisted
+    // per-dim max |v| (both ceil the excluded postings; take the smaller)
+    val prefixes: Map[Int, HotPrefix] =
+      if (hotDims.isEmpty) Map.empty
+      else {
+        val loaded = resolveHotPrefixes(hotDims, prefixCap)
+          .getOrElse(return decline) // churn raced every prefix load
+        hotDims.zip(hotBounds).map { case (d, b) =>
+          val p = loaded(d)
+          d -> (if (b < p.tailBound) p.copy(tailBound = b) else p)
+        }.toMap
+      }
+    // per-id (dot, norm2) over the full lists, the prefixes and the tail
+    val acc = new java.util.HashMap[java.lang.Long, Array[Double]](1024)
+    var missingNorms = false
+    def add(ids: Array[Long], vs: Array[Double], ns: Array[Double], w: Double): Unit = {
+      var i = 0
+      while (i < ids.length) {
+        if (!exclude(ids(i))) {
+          val key = java.lang.Long.valueOf(ids(i))
+          var cell = acc.get(key)
+          if (cell == null) {
+            cell = Array(0.0, if (ns == null) 0.0 else ns(i))
+            acc.put(key, cell)
+          }
+          if (euclid && ns(i) < 0) missingNorms = true // pre-norm2 layout row
+          cell(0) += vs(i) * w
+        }
+        i += 1
+      }
+    }
+    var li = 0
+    var di = 0
+    while (di < qIdx.length) {
+      val d = qIdx(di)
+      val w = qVal(di).toDouble
+      prefixes.get(d) match {
+        case Some(p) => add(p.ids, p.vs, null, w)
+        case None => val l = lists(li); li += 1; add(l._1, l._2, l._3, w)
+      }
+      tail.get(d).foreach { case (ids, vs, ns) => add(ids, vs, ns, w) }
+      di += 1
+    }
+    if (!euclid) retrievalCut(acc, k, metric, qIdx, qVal, hotDims, prefixes)
+    // rows written before norms rode in the postings cannot be scored
+    // exactly from resident state: decline until the next full rebuild
+    else if (missingNorms) decline
+    else euclidCut(acc, k, qVal, exclude, tailNorms)
   }
 
   /** Partition the query's dims: which must serve from an impact-ordered
@@ -801,68 +876,11 @@ class SparseIndex(
       }
   }
 
-  /** The classic full-residency serve: every query dim's complete posting
-    * list is (or can become) driver-resident. */
-  private def servePointDotFull(qIdx: Array[Int], qVal: Array[Float], k: Int,
-      exclude: Long => Boolean,
-      tail: Map[Int, (Array[Long], Array[Double], Array[Double])])
-      : Option[Array[(Long, Double)]] = {
-    val lists = residentLists(qIdx) match {
-      case Some(l) => l
-      case None => return None // residentLists counted the decline
-    }
-    val acc = new java.util.HashMap[java.lang.Long, java.lang.Double](1024)
-    var di = 0
-    while (di < qIdx.length) {
-      val w = qVal(di).toDouble
-      def add(ids: Array[Long], vs: Array[Double]): Unit = {
-        var i = 0
-        while (i < ids.length) {
-          if (!exclude(ids(i))) {
-            val key = java.lang.Long.valueOf(ids(i))
-            val cur = acc.get(key)
-            acc.put(key, (if (cur == null) 0.0 else cur.doubleValue) + vs(i) * w)
-          }
-          i += 1
-        }
-      }
-      val lst = lists(di)
-      add(lst._1, lst._2)
-      tail.get(qIdx(di)).foreach { case (ids, vs, _) => add(ids, vs) }
-      di += 1
-    }
-    // bounded heap: keep the k LARGEST dots (ties -> smaller id wins)
-    val heap = new java.util.PriorityQueue[(Long, Double)](math.max(1, k),
-      (a: (Long, Double), b: (Long, Double)) => {
-        val c = java.lang.Double.compare(a._2, b._2)
-        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
-      })
-    val it = acc.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val cand = (e.getKey.longValue, e.getValue.doubleValue)
-      if (heap.size < k) heap.add(cand)
-      else {
-        val worst = heap.peek()
-        if (cand._2 > worst._2 || (cand._2 == worst._2 && cand._1 < worst._1)) {
-          heap.poll(); heap.add(cand)
-        }
-      }
-    }
-    val out = new Array[(Long, Double)](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { out(i) = heap.poll(); i -= 1 }
-    Some(out)
-  }
-
-  /** Max-score/WAND-family serving for a query touching HOT dims (posting
-    * lists too big for the residency budget — the stop-word regime).
-    * Light dims score from their FULL resident lists; each hot dim scores
-    * from an impact-ordered resident PREFIX (top `maxServeHotPrefix`
-    * postings by |v|) plus a magnitude bound on its excluded tail, backed
-    * by the per-dim max |v| persisted in `dim_stats`. After scoring, the
-    * bounds prove — per query — whether any non-resident posting could
-    * have changed the top-k:
+  /** Retrieval-mode cut over the accumulated dots: the k largest, as
+    * distances. A query with hot dims must first pass the WAND proof
+    * (the max-score/WAND family, public knowledge, re-expressed for
+    * prefix-residency serving) that no posting left out of a prefix
+    * could change the top-k:
     *
     *  - a row with NO resident posting scores at most
     *    `B_out = Σ_hot |q_d|·tailBound_d`;
@@ -871,45 +889,13 @@ class SparseIndex(
     *    slack 0 have EXACT dots;
     *  - fresh rows (id > serving pin) are complete via the caller's tail.
     *
-    * Serve iff the k-th certain dot STRICTLY beats both ceilings (a tie is
-    * unresolvable without the tail postings); otherwise decline to the job
-    * path — the same exact-or-decline contract servePointEuclid's
-    * min-norm bound implements for L2. Upper-bound pruning is the classic
-    * WAND/max-score family (public knowledge), re-expressed for
-    * prefix-residency serving. */
-  private def servePointDotWand(qIdx: Array[Int], qVal: Array[Float], k: Int,
-      exclude: Long => Boolean,
-      tail: Map[Int, (Array[Long], Array[Double], Array[Double])],
-      hotDims: Array[Int], prefixCap: Int): Option[Array[(Long, Double)]] = {
-    // the proof requires PERSISTED magnitude bounds: a layout whose
-    // dim_stats predate the maxv column (or has none at all) has no
-    // certified ceiling on unseen postings — decline exactly as before
-    // the WAND path existed. The maintenance heal loop's forced rebuild
-    // upgrades such layouts to WAND-capable stats.
-    val (persistedMax, absentMax) = dimMaxAbsResident() match {
-      case Some(b) => b
-      case None => return decline
-    }
-    val hotBounds = hotDims.map(d => persistedMax.getOrElse(d, absentMax))
-    if (hotBounds.exists(_ == Double.MaxValue)) return decline
-    val hotSet = hotDims.toSet
-    val fullDims = qIdx.filterNot(hotSet.contains)
-    val fullMap: Map[Int, (Array[Long], Array[Double], Array[Double])] =
-      if (fullDims.isEmpty) Map.empty
-      else residentLists(fullDims) match {
-        case Some(ls) => fullDims.zip(ls).toMap
-        case None => return None // residentLists counted the decline
-      }
-    val loadedPrefixes = resolveHotPrefixes(hotDims, prefixCap) match {
-      case Some(p) => p
-      case None => return decline // churn raced every prefix load
-    }
-    // tighten each prefix's tail bound with the persisted per-dim max |v|
-    // (both are valid ceilings on excluded postings; take the smaller)
-    val prefixes: Map[Int, HotPrefix] = hotDims.zipWithIndex.map { case (d, hi) =>
-      val p = loadedPrefixes(d)
-      d -> (if (hotBounds(hi) < p.tailBound) p.copy(tailBound = hotBounds(hi)) else p)
-    }.toMap
+    * It serves iff the k-th certain dot STRICTLY beats both ceilings (a
+    * tie is unresolvable without the excluded postings); otherwise it
+    * declines to the job path. */
+  private def retrievalCut(acc: java.util.HashMap[java.lang.Long, Array[Double]],
+      k: Int, metric: MetricType.Value, qIdx: Array[Int], qVal: Array[Float],
+      hotDims: Array[Int], prefixes: Map[Int, HotPrefix])
+      : Option[Array[(Long, Double)]] = {
     val pin = serveWatermark
     // per-hot-dim |q| aligned with hotDims, and the no-resident-posting
     // score ceiling
@@ -924,82 +910,46 @@ class SparseIndex(
       }
       qi += 1
     }
-    val acc = new java.util.HashMap[java.lang.Long, java.lang.Double](1024)
-    def add(ids: Array[Long], vs: Array[Double], w: Double): Unit = {
-      var i = 0
-      while (i < ids.length) {
-        if (!exclude(ids(i))) {
-          val key = java.lang.Long.valueOf(ids(i))
-          val cur = acc.get(key)
-          acc.put(key, (if (cur == null) 0.0 else cur.doubleValue) + vs(i) * w)
-        }
-        i += 1
-      }
-    }
-    var di = 0
-    while (di < qIdx.length) {
-      val d = qIdx(di)
-      val w = qVal(di).toDouble
-      if (hotSet.contains(d)) { val p = prefixes(d); add(p.ids, p.vs, w) }
-      else { val l = fullMap(d); add(l._1, l._2, w) }
-      tail.get(d).foreach { case (ids, vs, _) => add(ids, vs, w) }
-      di += 1
-    }
-    // bounded heap over CERTAIN rows (slack 0: every hot dim either holds
-    // the row in its prefix or has no excluded tail); uncertain rows
-    // contribute only their ceiling
-    val heap = new java.util.PriorityQueue[(Long, Double)](math.max(1, k),
-      (a: (Long, Double), b: (Long, Double)) => {
-        val c = java.lang.Double.compare(a._2, b._2)
-        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
-      })
+    val hot = hotDims.map(prefixes)
+    // the heap holds CERTAIN rows (slack 0: every hot dim either holds the
+    // row in its prefix or has no excluded tail) keyed by -dot; uncertain
+    // rows contribute only their ceiling
+    val heap = new graft.functions.TopKHeap(k)
     var maxUncertainUpper = Double.NegativeInfinity
     val it = acc.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       val id = e.getKey.longValue
-      val dot = e.getValue.doubleValue
+      val dot = e.getValue()(0)
       var slack = 0.0
       if (id <= pin) {
         var hi = 0
-        while (hi < hotDims.length) {
-          val p = prefixes(hotDims(hi))
+        while (hi < hot.length) {
+          val p = hot(hi)
           if (p.tailBound > 0.0 &&
               java.util.Arrays.binarySearch(p.sortedIds, id) < 0)
             slack += hotAbsW(hi) * p.tailBound
           hi += 1
         }
       }
-      if (slack == 0.0) {
-        val cand = (id, dot)
-        if (heap.size < k) heap.add(cand)
-        else {
-          val worst = heap.peek()
-          if (cand._2 > worst._2 || (cand._2 == worst._2 && cand._1 < worst._1)) {
-            heap.poll(); heap.add(cand)
-          }
-        }
-      } else {
+      if (slack == 0.0) heap.offer(-dot, id)
+      else {
         val up = dot + slack
         if (up > maxUncertainUpper) maxUncertainUpper = up
       }
     }
-    def drain(): Array[(Long, Double)] = {
-      val out = new Array[(Long, Double)](heap.size)
-      var i = out.length - 1
-      while (i >= 0) { out(i) = heap.poll(); i -= 1 }
-      out
-    }
-    if (heap.size < k) {
-      // fewer than k certain candidates is exact ONLY when nothing was
-      // uncertain at all (then the candidate set truly is this small)
-      if (maxUncertainUpper == Double.NegativeInfinity && bOut == 0.0) Some(drain())
-      else decline
-    } else {
-      val theta = heap.peek()._2 // k-th best certain dot
-      if (theta > maxUncertainUpper && theta > bOut) Some(drain())
-      else decline
-    }
+    // fewer than k certain rows is exact ONLY when nothing was uncertain
+    // at all (then the candidate set truly is this small)
+    val proven = hotDims.isEmpty || (
+      if (!heap.full) maxUncertainUpper == Double.NegativeInfinity && bOut == 0.0
+      else {
+        val theta = -heap.worst // k-th best certain dot
+        theta > maxUncertainUpper && theta > bOut
+      })
+    if (!proven) decline
+    else Some(heap.sortedPairs.map { case (negDot, id) =>
+      (id, if (metric == MetricType.Cosine) 1.0 - (-negDot) else negDot)
+    })
   }
 
   // smallest-norm rows of the indexed universe, resident per meta stamp:
@@ -1060,95 +1010,55 @@ class SparseIndex(
     None // churn: rebuilds raced every attempt
   }
 
-  /** EXACT driver-side Euclidean top-K (ascending squared L2, ties by id),
-    * or None when exactness cannot be proven from resident state (caller
-    * falls back to the job path).
-    *
-    * Overlap candidates are scored exactly from the posting cache
-    * (`|x-q|² = norm2 − 2·dot + |q|²`); non-overlap candidates (dot 0)
-    * can only beat them with a small norm, so they are filled from the
-    * resident min-norm list in (norm2, id) order with early exit. The
-    * result is exact iff the list was not truncated, or the k-th distance
-    * strictly beats `maxListedNorm + |q|²` (any unlisted row is at least
-    * that far). `tail` carries fresh postings; `tailNorms` the (id, norm2)
-    * of ALL fresh rows — both bounded by the caller's tail cap. */
-  def servePointEuclid(qIdx: Array[Int], qVal: Array[Float], k: Int,
-      exclude: Long => Boolean = _ => false,
-      tail: Map[Int, (Array[Long], Array[Double], Array[Double])] = Map.empty,
-      tailNorms: Array[(Long, Double)] = Array.empty)
-      : Option[Array[(Long, Double)]] = {
-    val lists = residentLists(qIdx) match {
-      case Some(l) => l
-      case None => return None // residentLists counted the decline
-    }
+  /** Euclidean cut: the overlap rows accumulated in `acc` score
+    * `|x-q|² = norm2 − 2·dot + |q|²`; a row sharing no dim (dot 0) can
+    * only beat them with a small norm, so the non-overlap candidates fill
+    * from the resident min-norm list in (norm2, id) order with early exit,
+    * then from the fresh rows' norms. The answer is exact iff the list
+    * was not truncated, or the k-th distance strictly beats
+    * `maxListedNorm + |q|²` (any unlisted row is at least that far);
+    * otherwise it declines. */
+  private def euclidCut(acc: java.util.HashMap[java.lang.Long, Array[Double]],
+      k: Int, qVal: Array[Float], exclude: Long => Boolean,
+      tailNorms: Array[(Long, Double)]): Option[Array[(Long, Double)]] = {
     var qNorm = 0.0
     qVal.foreach(v => qNorm += v.toDouble * v.toDouble)
-    // per-id (dot, norm2) accumulation over the probed posting lists
-    val acc = new java.util.HashMap[java.lang.Long, Array[Double]](1024)
-    var missingNorms = false
-    var di = 0
-    while (di < qIdx.length) {
-      val w = qVal(di).toDouble
-      def add(ids: Array[Long], vs: Array[Double], ns: Array[Double]): Unit = {
-        var i = 0
-        while (i < ids.length) {
-          if (!exclude(ids(i))) {
-            if (ns(i) < 0) missingNorms = true // pre-norm2 layout row
-            val key = java.lang.Long.valueOf(ids(i))
-            var cell = acc.get(key)
-            if (cell == null) { cell = Array(0.0, ns(i)); acc.put(key, cell) }
-            cell(0) += vs(i) * w
-          }
-          i += 1
-        }
-      }
-      val lst = lists(di)
-      add(lst._1, lst._2, lst._3)
-      tail.get(qIdx(di)).foreach { case (ids, vs, ns) => add(ids, vs, ns) }
-      di += 1
-    }
-    // rows written before norms rode in the postings cannot be scored
-    // exactly from resident state: decline (exact-or-decline contract)
-    // until the next full rebuild writes the norm-bearing layout
-    if (missingNorms) return decline
-    val heap = smallestK(k)
+    val heap = new graft.functions.TopKHeap(k)
     val it = acc.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       val cell = e.getValue
-      heap.offer(e.getKey.longValue, cell(1) - 2.0 * cell(0) + qNorm)
+      heap.offer(cell(1) - 2.0 * cell(0) + qNorm, e.getKey.longValue)
     }
-    // non-overlap fills: resident min-norm list (sorted), then tail norms
     val (mins, truncated) = residentMinNorms() match {
       case Some(mn) => mn
       case None => return decline // rebuild churn: job path answers exactly
     }
     var mi = 0
-    var break = false
-    while (mi < mins.length && !break) {
+    var done = false
+    while (mi < mins.length && !done) {
       val (id, n2) = mins(mi)
       val dist = n2 + qNorm
-      if (heap.full && !heap.beatsWorst(id, dist)) break = true // sorted: no later entry can enter
+      // sorted by norm: once the full heap rejects one, it rejects the rest
+      if (heap.full && !heap.admits(dist, id)) done = true
       else if (!exclude(id) && !acc.containsKey(java.lang.Long.valueOf(id)))
-        heap.offer(id, dist)
+        heap.offer(dist, id)
       mi += 1
     }
     tailNorms.foreach { case (id, n2) =>
       if (!exclude(id) && !acc.containsKey(java.lang.Long.valueOf(id)))
-        heap.offer(id, n2 + qNorm)
+        heap.offer(n2 + qNorm, id)
     }
-    val out = heap.drain()
-    // exactness: a row absent from both acc and the min-norm list has
-    // norm2 >= the largest listed norm, hence dist >= that bound
-    if (truncated) {
-      val bound = mins.last._2 + qNorm
-      if (out.length < k || out.last._2 >= bound) return decline
-    }
-    // untruncated: the min-norm list IS the complete norms universe at the
-    // pin and tailNorms covers everything above it (disjoint id ranges),
-    // and the early exit only fires with a full heap — an under-filled
-    // heap means there are fewer than k live candidates, which is exact
-    Some(out)
+    val out = heap.sortedPairs.map { case (d, id) => (id, d) }
+    // truncated: a row absent from both acc and the min-norm list has
+    // norm2 >= the largest listed norm, hence dist >= that bound.
+    // Untruncated: the list IS the norms universe at the pin and
+    // tailNorms covers everything above it, and the early exit only fires
+    // with a full heap — an under-filled heap means fewer than k live
+    // candidates, which is exact
+    if (truncated && (out.length < k || out.last._2 >= mins.last._2 + qNorm))
+      decline
+    else Some(out)
   }
 }
 
@@ -1175,32 +1085,17 @@ object SparseIndex {
     * shatter into tiny files. */
   val DefaultBuckets = 64
 
-  /** Bounded min-k heap over (id, dist): keeps the k smallest distances,
-    * ties by smaller id; drains ascending. (java PriorityQueue with the
-    * WORST retained candidate at the head.) */
-  private[index] final class BoundedTopK(k: Int) {
-    private val heap = new java.util.PriorityQueue[(Long, Double)](math.max(1, k),
-      (a: (Long, Double), b: (Long, Double)) => {
-        val c = java.lang.Double.compare(b._2, a._2) // larger dist = worse = head
-        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
-      })
-    def full: Boolean = heap.size >= k
-    /** Would (id, dist) displace the current worst? (heap must be full) */
-    def beatsWorst(id: Long, dist: Double): Boolean = {
-      val w = heap.peek()
-      dist < w._2 || (dist == w._2 && id < w._1)
-    }
-    def offer(id: Long, dist: Double): Unit = {
-      if (heap.size < k) heap.add((id, dist))
-      else if (beatsWorst(id, dist)) { heap.poll(); heap.add((id, dist)); () }
-    }
-    def drain(): Array[(Long, Double)] = {
-      val out = new Array[(Long, Double)](heap.size)
-      var i = out.length - 1
-      while (i >= 0) { out(i) = heap.poll(); i -= 1 }
-      out
-    }
-  }
+  /** One dim's posting slice as the serve tier holds it: (ids, values,
+    * row norms), aligned. */
+  type Postings = (Array[Long], Array[Double], Array[Double])
+
+  /** The query values a metric scores with: cosine normalizes the query
+    * (stored rows are unit at ingest), the way the exact path's
+    * `QueryEngine.distanceColumn` does; the other metrics use it as sent. */
+  private[index] def queryValues(metric: MetricType.Value,
+      qVal: Array[Float]): Array[Float] =
+    if (metric == MetricType.Cosine) graft.query.QueryEngine.normalizeF(qVal)
+    else qVal
 
   /** Drift bound for ingest-time appends (see IvfIndex.MaxAppendFraction —
     * here buckets never drift, but each append lands one small file per
@@ -1287,12 +1182,15 @@ object SparseIndex {
       .write.mode(mode).partitionBy("dim_bkt").parquet(dest)
   }
 
-  /** Explode a sparse struct column into its (id, dim, v) postings —
-    * delegates to the query-plan helper so build and per-query tails share
-    * one definition. */
+  /** Explode a sparse struct column into its (idCol, dim, v) postings —
+    * a narrow explode, no shuffle. Build, append and the per-query fresh
+    * tails share this one definition. */
   def postingsOf(df: DataFrame, sparseCol: String, idCol: String): DataFrame =
-    graft.query.SparseSearch.postings(df, sparseCol, idCol)
-      .withColumnRenamed("id", idCol)
+    df.select(col(idCol),
+        explode(arrays_zip(
+          col(sparseCol).getField("indices").as("dim"),
+          col(sparseCol).getField("values").as("v"))).as("p"))
+      .select(col(idCol), col("p.dim").as("dim"), col("p.v").as("v"))
 
   /** Build from a posting relation (idCol, dim, v). One pass writes the
     * bucketed postings, one groupBy writes the norms universe. When

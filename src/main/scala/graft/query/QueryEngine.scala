@@ -89,7 +89,7 @@ object QueryEngine {
     }
   }
 
-  private def normalizeF(v: Array[Float]): Array[Float] = {
+  private[graft] def normalizeF(v: Array[Float]): Array[Float] = {
     var acc = 0.0; var i = 0
     while (i < v.length) { acc += v(i).toDouble * v(i).toDouble; i += 1 }
     if (acc == 0.0) v

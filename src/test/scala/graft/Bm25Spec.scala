@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.pipeline.Bm25
 import graft.index.SparseIndex
+import ServeCalls._
 
 /** BM25 retrieval: scoring parity with a driver-side reference
   * implementation, and the impact-postings formulation's parity through
@@ -67,7 +68,7 @@ class Bm25Spec extends SparkSpec {
     val idx = SparseIndex.buildFromPostings(spark, postings.withColumnRenamed("id", "doc_id"),
       "doc_id", tmpDir("bm25idx"), buckets = 8)
     val qd = Bm25.queryDims(qTerms)
-    val fromIndex = idx.topKDot(qd, qd.map(_ => 1.0f), 10).collect()
+    val fromIndex = idx.searchDot(qd, qd.map(_ => 1.0f), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val adHoc = Bm25.scoreTopK(d, "text", "doc_id", qTerms, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -83,9 +84,9 @@ class Bm25Spec extends SparkSpec {
     val idx = SparseIndex.buildFromPostings(spark, postings.withColumnRenamed("id", "doc_id"),
       "doc_id", tmpDir("bm25serve"), buckets = 8)
     val qd = Bm25.queryDims(qTerms)
-    val job = idx.topKDot(qd, qd.map(_ => 1.0f), 10).collect()
+    val job = idx.searchDot(qd, qd.map(_ => 1.0f), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val served = idx.servePointDot(qd, qd.map(_ => 1.0f), 10)
+    val served = idx.serveDot(qd, qd.map(_ => 1.0f), 10)
     assert(served.isDefined, "in-budget BM25 probe must serve, not decline")
     assert(served.get.map(_._1).toSeq == job.map(_._1))
     served.get.toSeq.zip(job).foreach { case ((_, g), (_, e)) =>
@@ -127,7 +128,7 @@ class Bm25Spec extends SparkSpec {
       .groupBy(col("id")).agg(sum(col("v").cast("double")).as("s"))
       .orderBy(col("s").desc, col("id").asc).limit(10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val got = idx.topKDot(qd, qd.map(_ => 1.0f), 10).collect()
+    val got = idx.searchDot(qd, qd.map(_ => 1.0f), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got.map(_._1) == expected.map(_._1))
     postings.unpersist()

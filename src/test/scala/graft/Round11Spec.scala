@@ -297,7 +297,7 @@ class Round11Spec extends SparkSpec {
     assert(db.rebuildIndex("S", "SV"))
     assert(db.rebuildIndex("S", "SE"))
     val qv = """{"indices":[3,10],"values":[1.0,1.0]}"""
-    // Euclidean: servePointEuclid is exact-or-decline, so a served
+    // Euclidean: SparseIndex.serve is exact-or-decline, so a served
     // answer trivially honors any declared floor — the envelope must
     // say served and the ids must equal the job path's exact cut
     val served = db.query(

@@ -29,7 +29,7 @@ class Round14Spec extends SparkSpec {
         |{"name":"SV","dataType":"SPARSE_VECTOR_FLOAT","dimensions":16,
         | "metricType":"DOT_PRODUCT"}]}""".stripMargin)
     // no row carries dim 3: a [3]-only query has NO postings to walk, so
-    // servePointDot returns Some(empty) and the floor check must decline
+    // SparseIndex.serve returns Some(empty) and the floor check must decline
     val rows = (0 until 600).map { i =>
       val dims = Seq(8 + i % 4, 12 + i % 4)
       Row(i.toLong, Row(dims.distinct.sorted, dims.distinct.map(_ => 1.0f)))

@@ -62,22 +62,22 @@ class Round8Spec extends SparkSpec {
     // prefix path — the FULL hot list is still never collected (the
     // impact-ordered prefix fits the remaining budget, and the persisted
     // magnitude bound proves the excluded tail cannot reach the top-k)
-    val servedHot = idx.servePointDot(Array(0, 15), Array(1f, 1f), 10)
+    val servedHot = idx.serveDot(Array(0, 15), Array(1f, 1f), 10)
     assert(servedHot.isDefined, "WAND-capable layout must serve the hot dim")
     assert(!loadedDims.contains(0),
       s"dim 0's full list was collected despite the guard: $loadedDims")
     assert(servedHot.get.toSeq == dotTopK(df, Array(0, 15), Array(1f, 1f), 10))
     // Euclidean serving has no WAND analog: still declines, still never
     // collects the hot dim
-    assert(idx.servePointEuclid(Array(0, 15), Array(1f, 1f), 10).isEmpty)
+    assert(idx.serveEuclid(Array(0, 15), Array(1f, 1f), 10).isEmpty)
     assert(!loadedDims.contains(0))
     // the job path answers the same query exactly (this is where the
     // declined Euclidean query lands)
-    val viaJob = idx.topKDot(Array(0, 15), Array(1f, 1f), 10).collect()
+    val viaJob = idx.searchDot(Array(0, 15), Array(1f, 1f), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(viaJob == dotTopK(df, Array(0, 15), Array(1f, 1f), 10))
     // a light-dim query still serves off full residency, exactly
-    val served = idx.servePointDot(Array(15, 20), Array(1f, 1f), 10)
+    val served = idx.serveDot(Array(15, 20), Array(1f, 1f), 10)
     assert(served.isDefined, "light dims fit the budget and must serve")
     assert(served.get.toSeq == dotTopK(df, Array(15, 20), Array(1f, 1f), 10))
   }
@@ -100,12 +100,12 @@ class Round8Spec extends SparkSpec {
     }
     assert(idx.dimStatsResident().isEmpty, "stats file deleted: dimStats must be None")
     idx.maxServePostings = 100
-    assert(idx.servePointDot(Array(0, 15), Array(1f, 1f), 10).isEmpty,
+    assert(idx.serveDot(Array(0, 15), Array(1f, 1f), 10).isEmpty,
       "pre-stats layout must still decline via the count probe")
     assert(!loadedDims.contains(0),
       s"dim 0 was collected despite the probe guard: $loadedDims")
     // light dims still serve off the probe-guarded path
-    assert(idx.servePointDot(Array(15, 20), Array(1f, 1f), 10).get.toSeq ==
+    assert(idx.serveDot(Array(15, 20), Array(1f, 1f), 10).get.toSeq ==
       dotTopK(df, Array(15, 20), Array(1f, 1f), 10))
   }
 
@@ -135,12 +135,12 @@ class Round8Spec extends SparkSpec {
     assert(cutoff == 12L, s"cutoff must be the smallest retained count: $cutoff")
     idx.maxServePostings = 100
     // absent light dims are charged the cutoff (2 x 12 = 24 <= 100): serves
-    assert(idx.servePointDot(Array(15, 20), Array(1f, 1f), 10).get.toSeq ==
+    assert(idx.serveDot(Array(15, 20), Array(1f, 1f), 10).get.toSeq ==
       dotTopK(df, Array(15, 20), Array(1f, 1f), 10))
     // the retained hot dim still declines once the WAND prefix is too
     // short to prove anything (tail bound ties the k-th certain score)
     idx.maxServeHotPrefix = 2
-    assert(idx.servePointDot(Array(0, 15), Array(1f, 1f), 10).isEmpty)
+    assert(idx.serveDot(Array(0, 15), Array(1f, 1f), 10).isEmpty)
   }
 
   /** Two blobs, one heavy (all rows but `light`) and one light — k-means
@@ -240,10 +240,10 @@ class Round8Spec extends SparkSpec {
         super.loadDimPostings(missing)
       }
     }
-    assert(idx.servePointDot(Array(15, 20), Array(1f, 1f), 10).isEmpty,
+    assert(idx.serveDot(Array(15, 20), Array(1f, 1f), 10).isEmpty,
       "perpetual churn must degrade to the job path, not throw")
     churn.set(false) // rebuilds stop: the same query serves again
-    assert(idx.servePointDot(Array(15, 20), Array(1f, 1f), 10).get.toSeq ==
+    assert(idx.serveDot(Array(15, 20), Array(1f, 1f), 10).get.toSeq ==
       dotTopK(df, Array(15, 20), Array(1f, 1f), 10))
   }
 

@@ -174,16 +174,16 @@ class Round9Spec extends SparkSpec {
     idx.maxServeHotPrefix = 200
     // mixed light+hot query: prefix (200 of 600, |v| desc) + tail bound 5
     // vs k-th certain score 7 -> provably exact, FULL list never collected
-    val served = idx.servePointDot(Array(0, 15), Array(1f, 1f), 10)
+    val served = idx.serveDot(Array(0, 15), Array(1f, 1f), 10)
     assert(served.isDefined, "prefix + magnitude bound must prove exactness here")
     assert(!loadedDims.contains(0),
       s"the hot dim's full list must never be collected: $loadedDims")
     assert(served.get.toSeq == dotTopK(df, Array(0, 15), Array(1f, 1f), 10))
     // single-hot-dim retrieval (the classic stop-word lookup)
-    assert(idx.servePointDot(Array(0), Array(1f), 10).get.toSeq ==
+    assert(idx.serveDot(Array(0), Array(1f), 10).get.toSeq ==
       dotTopK(df, Array(0), Array(1f), 10))
     // the job path agrees (the contract WAND must match)
-    assert(idx.topKDot(Array(0, 15), Array(1f, 1f), 10).collect()
+    assert(idx.searchDot(Array(0, 15), Array(1f, 1f), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       dotTopK(df, Array(0, 15), Array(1f, 1f), 10))
     // an UNPROVABLE case declines: a prefix this short leaves the tail
@@ -191,7 +191,7 @@ class Round9Spec extends SparkSpec {
     val declinesBefore = idx.serveDeclineCount()
     idx.maxServeHotPrefix = 20
     idx.rebaseServing() // flush the cached 200-posting prefix
-    assert(idx.servePointDot(Array(0, 15), Array(1f, 1f), 10).isEmpty)
+    assert(idx.serveDot(Array(0, 15), Array(1f, 1f), 10).isEmpty)
     assert(idx.serveDeclineCount() > declinesBefore)
   }
 
@@ -209,10 +209,10 @@ class Round9Spec extends SparkSpec {
     statsDf.coalesce(1).write.mode("overwrite").parquet(s"$path/dim_stats")
     val idx = new SparseIndex(spark, path, "id")
     idx.maxServePostings = 100
-    assert(idx.servePointDot(Array(0, 15), Array(1f, 1f), 10).isEmpty,
+    assert(idx.serveDot(Array(0, 15), Array(1f, 1f), 10).isEmpty,
       "no certified magnitude bound -> no WAND proof -> decline")
     // light dims still serve off full residency
-    assert(idx.servePointDot(Array(15, 20), Array(1f, 1f), 10).isDefined)
+    assert(idx.serveDot(Array(15, 20), Array(1f, 1f), 10).isDefined)
     assert(built.indexedCount() == 400L)
   }
 
@@ -523,7 +523,7 @@ class Round9Spec extends SparkSpec {
     val genBefore = gen()
     // manufacture a decline burst (budget below any posting list)
     idx.maxServePostings = 0
-    assert(idx.servePointDot(Array(15), Array(1f), 5).isEmpty)
+    assert(idx.serveDot(Array(15), Array(1f), 5).isEmpty)
     assert(idx.serveDeclineCount() >= 1L)
     idx.maxServePostings = 16L * 1024 * 1024
     val report = new graft.api.Maintenance(db).tick()
@@ -532,7 +532,7 @@ class Round9Spec extends SparkSpec {
     // the forced rebuild bumped the generation (fresh layout, fresh stats)
     assert(gen() == genBefore + 1)
     // and the index still answers exactly
-    val served = idx.servePointDot(Array(15), Array(1f), 5)
+    val served = idx.serveDot(Array(15), Array(1f), 5)
     assert(served.isDefined && served.get.nonEmpty)
   }
 
@@ -558,12 +558,12 @@ class Round9Spec extends SparkSpec {
     val maint = new graft.api.Maintenance(db)
     // a decline regime NO rebuild can fix: budget pinned to zero
     idx.maxServePostings = 0
-    assert(idx.servePointDot(Array(15), Array(1f), 5).isEmpty)
+    assert(idx.serveDot(Array(15), Array(1f), 5).isEmpty)
     assert(maint.tick().indexesHealed == 1, "first burst heals once")
     val genAfterHeal = gen()
     // declines persist at the healed generation -> ticks must STOP
     // scheduling full rebuilds and leave the counter visible
-    assert(idx.servePointDot(Array(15), Array(1f), 5).isEmpty)
+    assert(idx.serveDot(Array(15), Array(1f), 5).isEmpty)
     val declinesVisible = idx.serveDeclineCount()
     assert(declinesVisible >= 1L)
     (1 to 3).foreach { _ =>

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.functions._
 import graft.index.SparseIndex
 import graft.types.MetricType
+import ServeCalls._
 
 /** Persisted sparse inverted index: lifecycle + parity vs the exact sparse
   * distance scan (reference behaviors: sparse fields rebuilt and queryable
@@ -42,7 +43,7 @@ class SparseIndexSpec extends SparkSpec {
   test("topKDot from the persisted layout matches the exact overlap scan") {
     val df = corpus(200)
     val idx = SparseIndex.build(spark, df, "sv", "id", tmpDir("spidx"), buckets = 8)
-    val got = idx.topKDot(qIdx, qVal, 10).collect()
+    val got = idx.searchDot(qIdx, qVal, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == exactTopKDot(df, 10))
     // the pruned plan reads only the query's bucket partitions
@@ -60,7 +61,7 @@ class SparseIndexSpec extends SparkSpec {
       val exact = df.withColumn("@distance", distCol)
         .orderBy(col("@distance").asc, col("id").asc)
         .limit(15).select("id").collect().map(_.getLong(0)).toSeq
-      val got = idx.topKDistance(metric, qIdx, qVal, 15).collect()
+      val got = idx.search(metric, overlapOnly = false, qIdx, qVal, 15).collect()
         .map(_.getLong(0)).toSeq
       assert(got == exact, s"metric $metric")
     }
@@ -74,7 +75,7 @@ class SparseIndexSpec extends SparkSpec {
     val exact = df.withColumn("d", lit(1.0) - sparse_dot(col("sv"), qc))
       .orderBy(col("d").asc, col("id").asc).limit(10)
       .select("id").collect().map(_.getLong(0)).toSeq
-    val got = idx.topKDistance(MetricType.Cosine, qIdx, qVal, 10)
+    val got = idx.search(MetricType.Cosine, overlapOnly = false, qIdx, qVal, 10)
       .collect().map(_.getLong(0)).toSeq
     assert(got == exact)
   }
@@ -123,7 +124,7 @@ class SparseIndexSpec extends SparkSpec {
     val tail = corpus(150).filter(col("id") > 100)
     idx.append(SparseIndex.postingsOf(tail, "sv", "id"), newRows = 50, newMaxId = 150L)
     assert(idx.indexedWatermark() == 150L && idx.indexedCount() == 150L)
-    val got = idx.topKDot(qIdx, qVal, 10).collect()
+    val got = idx.searchDot(qIdx, qVal, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == exactTopKDot(corpus(150), 10))
   }
@@ -133,7 +134,7 @@ class SparseIndexSpec extends SparkSpec {
     val base = full.filter(col("id") <= 100)
     val idx = SparseIndex.build(spark, base, "sv", "id", tmpDir("spidx_tail"), buckets = 8)
     val tailRows = full.filter(col("id") > idx.indexedWatermark())
-    val got = idx.topKDot(qIdx, qVal, 10,
+    val got = idx.searchDot(qIdx, qVal, 10,
         tailPostings = Some(SparseIndex.postingsOf(tailRows, "sv", "id")))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == exactTopKDot(full, 10))
@@ -141,7 +142,7 @@ class SparseIndexSpec extends SparkSpec {
     val exact = full.withColumn("d", sparse_l2sqr_distance(col("sv"), qc))
       .orderBy(col("d").asc, col("id").asc).limit(12)
       .select("id").collect().map(_.getLong(0)).toSeq
-    val gotD = idx.topKDistance(MetricType.Euclidean, qIdx, qVal, 12,
+    val gotD = idx.search(MetricType.Euclidean, overlapOnly = false, qIdx, qVal, 12,
         tailPostings = Some(SparseIndex.postingsOf(tailRows, "sv", "id")),
         tailNorms = Some(SparseIndex.normsOfColumn(tailRows, "sv", "id")))
       .collect().map(_.getLong(0)).toSeq
@@ -154,13 +155,13 @@ class SparseIndexSpec extends SparkSpec {
     val full = exactTopKDot(df, 5)
     val dead = full.head._1
     import spark.implicits._
-    val masked = idx.topKDot(qIdx, qVal, 5,
+    val masked = idx.searchDot(qIdx, qVal, 5,
         excludeIds = Some(Seq(dead).toDF("id")))
       .collect().map(_.getLong(0)).toSeq
     assert(!masked.contains(dead))
     assert(masked == exactTopKDot(df.filter(col("id") =!= dead), 5).map(_._1))
     val live = df.filter(col("id") % 2 === 0).select("id")
-    val restricted = idx.topKDot(qIdx, qVal, 5, restrictIds = Some(live))
+    val restricted = idx.searchDot(qIdx, qVal, 5, restrictIds = Some(live))
       .collect().map(_.getLong(0)).toSeq
     assert(restricted == exactTopKDot(df.filter(col("id") % 2 === 0), 5).map(_._1))
   }
@@ -169,15 +170,15 @@ class SparseIndexSpec extends SparkSpec {
     val df = corpus(200)
     val idx = SparseIndex.build(spark, df, "sv", "id", tmpDir("spidx_serve"), buckets = 8)
     val expected = exactTopKDot(df, 10)
-    val served = idx.servePointDot(qIdx, qVal, 10).get.toSeq
+    val served = idx.serveDot(qIdx, qVal, 10).get.toSeq
     assert(served == expected)
     // warm re-serve: no job may start
-    val (warm, jobs) = countJobs(idx.servePointDot(qIdx, qVal, 10).get.toSeq)
+    val (warm, jobs) = countJobs(idx.serveDot(qIdx, qVal, 10).get.toSeq)
     assert(warm == expected)
     assert(jobs.n == 0, s"warm sparse serve ran ${jobs.n} Spark job(s)")
     // exclusion mask + fresh tail merge on the serve path
     val dead = expected.head._1
-    val servedMasked = idx.servePointDot(qIdx, qVal, 10, exclude = _ == dead).get.toSeq
+    val servedMasked = idx.serveDot(qIdx, qVal, 10, exclude = _ == dead).get.toSeq
     assert(servedMasked == exactTopKDot(df.filter(col("id") =!= dead), 10))
   }
 
@@ -189,7 +190,7 @@ class SparseIndexSpec extends SparkSpec {
     idx.maxServePostings = 64
     val expected = exactTopKDot(df, 10)
     (1 to 3).foreach { _ =>
-      assert(idx.servePointDot(qIdx, qVal, 10).get.toSeq == expected)
+      assert(idx.serveDot(qIdx, qVal, 10).get.toSeq == expected)
       assert(idx.servingResidentPostings() <= 64)
     }
     val q2Idx = Array(5, 20, 40)
@@ -201,11 +202,11 @@ class SparseIndexSpec extends SparkSpec {
       .orderBy(col("dot").desc, col("id").asc)
       .limit(10).select("id", "dot").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(idx.servePointDot(q2Idx, q2Val, 10).get.toSeq == expected2)
+    assert(idx.serveDot(q2Idx, q2Val, 10).get.toSeq == expected2)
     assert(idx.servingResidentPostings() <= 64,
       s"eviction must hold the budget: ${idx.servingResidentPostings()}")
     // the evicted first query reloads cold and still answers exactly
-    assert(idx.servePointDot(qIdx, qVal, 10).get.toSeq == expected)
+    assert(idx.serveDot(qIdx, qVal, 10).get.toSeq == expected)
   }
 
   test("servePointEuclid is exact incl. zero-overlap rows; warm path runs no Spark job") {
@@ -216,7 +217,7 @@ class SparseIndexSpec extends SparkSpec {
         .orderBy(col("d").asc, col("id").asc)
         .limit(k).select("id").collect().map(_.getLong(0)).toSeq
     // k large enough that zero-overlap rows (dot 0, small norm) must fill in
-    val served = idx.servePointEuclid(qIdx, qVal, 60)
+    val served = idx.serveEuclid(qIdx, qVal, 60)
     assert(served.isDefined, "untruncated min-norm list must serve exactly")
     assert(served.get.map(_._1).toSeq == exact(60))
     // distances match the expression-computed squared L2
@@ -228,12 +229,12 @@ class SparseIndexSpec extends SparkSpec {
     }
     // warm re-serve: no job may start
     val expectedWarm = exact(60)
-    val (warm, jobs) = countJobs(idx.servePointEuclid(qIdx, qVal, 60).get.map(_._1).toSeq)
+    val (warm, jobs) = countJobs(idx.serveEuclid(qIdx, qVal, 60).get.map(_._1).toSeq)
     assert(warm == expectedWarm)
     assert(jobs.n == 0, s"warm sparse Euclid serve ran ${jobs.n} Spark job(s)")
     // tombstone mask
     val dead = exact(5).head
-    val masked = idx.servePointEuclid(qIdx, qVal, 20, exclude = _ == dead)
+    val masked = idx.serveEuclid(qIdx, qVal, 20, exclude = _ == dead)
     assert(masked.get.map(_._1).toSeq == exact(20, col("id") =!= dead))
   }
 
@@ -241,20 +242,20 @@ class SparseIndexSpec extends SparkSpec {
     val df = corpus(200)
     val idx = SparseIndex.build(spark, df, "sv", "id", tmpDir("spidx_strunc"), buckets = 8)
     idx.maxServeMinNorm = 2 // truncated far below the non-overlap fills k needs
-    assert(idx.servePointEuclid(qIdx, qVal, 100).isEmpty,
+    assert(idx.serveEuclid(qIdx, qVal, 100).isEmpty,
       "k beyond the provable bound must fall back to the job path")
     idx.maxServeMinNorm = 4096
     // the stale-stamp refresh does not apply (stamp unchanged), so clear by
     // re-instantiating: a fresh instance re-reads the full list and serves
     val idx2 = new SparseIndex(spark, idx.path, "id")
-    val served = idx2.servePointEuclid(qIdx, qVal, 100)
+    val served = idx2.serveEuclid(qIdx, qVal, 100)
     assert(served.isDefined && served.get.length == 100)
   }
 
   test("servePointEuclid with k beyond the live universe returns the complete exact ordering") {
     val df = corpus(50)
     val idx = SparseIndex.build(spark, df, "sv", "id", tmpDir("spidx_kbig"), buckets = 4)
-    val served = idx.servePointEuclid(qIdx, qVal, 100)
+    val served = idx.serveEuclid(qIdx, qVal, 100)
     assert(served.isDefined, "untruncated universe + under-filled heap IS exact")
     val exact = df.withColumn("d", sparse_l2sqr_distance(col("sv"), qc))
       .orderBy(col("d").asc, col("id").asc)
@@ -275,15 +276,15 @@ class SparseIndexSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$path/sp_meta.json"),
       java.nio.file.Paths.get(s"$old/sp_meta.json"))
     val idxOld = new SparseIndex(spark, old, "id")
-    assert(idxOld.servePointDot(qIdx, qVal, 10).get.toSeq == exactTopKDot(df, 10),
+    assert(idxOld.serveDot(qIdx, qVal, 10).get.toSeq == exactTopKDot(df, 10),
       "dot serving never needed norms")
-    assert(idxOld.servePointEuclid(qIdx, qVal, 10).isEmpty,
+    assert(idxOld.serveEuclid(qIdx, qVal, 10).isEmpty,
       "missing norms must DECLINE, not serve wrong distances")
     // the job path still answers exactly off the norms side table
     val exact = df.withColumn("d", sparse_l2sqr_distance(col("sv"), qc))
       .orderBy(col("d").asc, col("id").asc).limit(10)
       .select("id").collect().map(_.getLong(0)).toSeq
-    assert(idxOld.topKDistance(MetricType.Euclidean, qIdx, qVal, 10)
+    assert(idxOld.search(MetricType.Euclidean, overlapOnly = false, qIdx, qVal, 10)
       .collect().map(_.getLong(0)).toSeq == exact)
   }
 
